@@ -591,7 +591,6 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 25,
-    spill_dir: str | None = None,
     mode: str = "min_label",
 ) -> DataFrame:
     """Connected components over near-dup candidate pairs: every doc gets the
@@ -616,16 +615,8 @@ def connected_components(
     plan, 10-17 s with high variance at sf0.1; checkpointed rounds are flat
     scans). Superseded round references are dropped so the ContextCleaner
     reclaims their blocks. On clusters with preemptible executors, prefer
-    ``spark.sparkContext.setCheckpointDir`` + reliable ``checkpoint`` (or a
-    one-shot parquet spill of the pairs) — localCheckpoint trades fault
-    tolerance for speed.
-
-    ``spill_dir`` opts into exactly that parquet spill: the deduplicated
-    edge set is written once and re-read, so every round's plan hangs off a
-    shallow file scan instead of localCheckpoint blocks. Same results,
-    slightly slower best case, much lower variance (no deep-lineage
-    re-analysis, no executor-memory block pressure) — the right trade for
-    benchmarks and for clusters with preemptible executors.
+    ``spark.sparkContext.setCheckpointDir`` + reliable ``checkpoint`` —
+    localCheckpoint trades fault tolerance for speed.
 
     Fixpoint detection: labels decrease monotonically, so for numeric ids an
     unchanged sum(label) IS the fixpoint (one tiny agg per round). For
@@ -651,21 +642,13 @@ def connected_components(
     # distinct over the small canonical frame, and the bidirectional form
     # is rebuilt by a cheap union over the SHALLOW materialized scan —
     # materializing the pre-built bidirectional set instead would double
-    # the checkpoint/spill volume and need a second distinct after the
+    # the checkpoint volume and need a second distinct after the
     # union (input orientation is caller-controlled, so dupes of both
     # orientations must collapse either way)
     canon = pairs.select(
         F.least(F.col(a_col), F.col(b_col)).alias("lo"),
         F.greatest(F.col(a_col), F.col(b_col)).alias("hi"),
-    ).distinct()
-    if spill_dir is not None:
-        import os
-
-        path = os.path.join(spill_dir, "cc_edges")
-        canon.write.mode("overwrite").parquet(path)
-        canon = pairs.sparkSession.read.parquet(path)
-    else:
-        canon = canon.localCheckpoint()
+    ).distinct().localCheckpoint()
     edges = canon.select(
         F.col("lo").alias("src"), F.col("hi").alias("dst")
     ).unionByName(canon.select(F.col("hi").alias("src"), F.col("lo").alias("dst")))
@@ -674,9 +657,9 @@ def connected_components(
     if mode != "min_label":
         raise ValueError(f"unknown cc mode {mode!r}: use 'min_label' or 'large_star'")
     # Seed labels with min(self, min neighbor) — the first propagation
-    # round done as one cheap groupBy over the (already checkpointed /
-    # spilled, hence SHALLOW) edge scan + a join against nodes, instead of
-    # a full edge⋈labels round. Star components are then correct at round
+    # round done as one cheap groupBy over the (already checkpointed,
+    # hence SHALLOW) edge scan + a join against nodes, instead of a full
+    # edge⋈labels round. Star components are then correct at round
     # 0, so the loop only has to CONFIRM convergence. (Round-1 NOTES
     # warned against seeding from edges — that was before the edge set was
     # materialized first; the deep-lineage hazard is gone.)

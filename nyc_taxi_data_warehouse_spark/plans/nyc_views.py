@@ -35,9 +35,11 @@ _TABLE_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every testdata table; applies runtime conf (UTC tz) first.
 
-    `events.ts` is parquet TIMESTAMP(NANOS): Spark reads it as long-ns (via
-    `nanosAsLong`), then `ts div 1000 → timestamp_micros` truncates exactly
-    like DuckDB's ns→µs conversion.
+    The shipped sf dirs store `events.ts` as parquet TIMESTAMP(MICROS),
+    which Spark reads as a timestamp directly.  An `events.ts` stored as
+    TIMESTAMP(NANOS) reads as long-ns instead (via `nanosAsLong`), and
+    `ts div 1000 → timestamp_micros` truncates exactly like DuckDB's ns→µs
+    conversion.
 
     The reader HANDLES are memoized per (session, sf_dir) — resolve each
     table once per session, the way a catalog-backed engine would (guide

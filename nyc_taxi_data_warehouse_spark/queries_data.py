@@ -3783,48 +3783,14 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup clustering: LSH candidate pairs → connected components → one
     canonical (min-id) representative per near-dup cluster. The iterative
     min-label propagation has no single-query SQL form; the oracle uses a
-    recursive CTE reaching the same unique fixpoint.
-
-    Set SPARK_GRAFT_CC_SPILL=1 to route the edge set through a one-shot
-    parquet spill (low-variance benchmark mode) instead of
-    localCheckpoint; results are identical. The spill lives in ONE fixed
-    per-process dir, overwritten on each invocation and removed at
-    interpreter exit — repeated bench runs reuse it instead of leaking a
-    fresh materialized edge set into /tmp per run."""
-    import os
-
+    recursive CTE reaching the same unique fixpoint."""
     corpus = _text_corpus(_docs(spark, sf_dir))
     sh = dedup.shingle_rows(corpus)
     # persisted: the capped pair generation consumes bands twice (hot-set
     # detection + the grouped collect); one short row per doc
     sig = dedup.minhash_signatures(sh, num_hashes=_NH).persist()
     pairs = dedup.lsh_candidate_pairs(dedup.lsh_bands(sig, num_hashes=_NH))
-    spill = (
-        _cc_spill_dir()
-        if os.environ.get("SPARK_GRAFT_CC_SPILL") == "1"
-        else None
-    )
-    # SPARK_GRAFT_CC_MODE=large_star opts into the O(log n) two-phase
-    # algorithm (chain-graph escape hatch); default min_label keeps the
-    # 2-3-round fast path for star/clique near-dup graphs AND the pinned
-    # driver hash (identical fixpoint, so the hash is mode-invariant —
-    # the env knob is for operational experimentation, not correctness)
-    return dedup.connected_components(
-        pairs,
-        corpus.select("doc_id"),
-        spill_dir=spill,
-        mode=os.environ.get("SPARK_GRAFT_CC_MODE", "min_label"),
-    )
-
-
-def _cc_spill_dir() -> str:
-    """Fixed per-process spill dir for q_dedup_cluster — see
-    :func:`.util.session_tmpdir` (the parquet write inside
-    connected_components uses mode=overwrite, so re-invocations reuse
-    the same path)."""
-    from .util import session_tmpdir
-
-    return session_tmpdir("cc_spill")
+    return dedup.connected_components(pairs, corpus.select("doc_id"))
 
 
 _SQL_DEDUP_CLUSTER = (
@@ -4390,25 +4356,13 @@ def q_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: the split is a pure map-side hash of the cluster key; the
     only extra cost over q_dedup_cluster is two tiny cluster-grain
     rollups."""
-    import os
-
     from .operators import sampling
 
     corpus = _text_corpus(_docs(spark, sf_dir))
     sh = dedup.shingle_rows(corpus)
     sig = dedup.minhash_signatures(sh, num_hashes=_NH).persist()
     pairs = dedup.lsh_candidate_pairs(dedup.lsh_bands(sig, num_hashes=_NH))
-    # honor the same low-variance benchmark knob as q_dedup_cluster: the
-    # edge set spills to one parquet scan instead of localCheckpoint
-    # blocks (results identical; see connected_components docstring)
-    spill = (
-        _cc_spill_dir()
-        if os.environ.get("SPARK_GRAFT_CC_SPILL") == "1"
-        else None
-    )
-    cl = dedup.connected_components(
-        pairs, corpus.select("doc_id"), spill_dir=spill
-    ).persist()
+    cl = dedup.connected_components(pairs, corpus.select("doc_id")).persist()
     d = sampling.train_val_test_split(cl, "cluster_id", salt="clsp")
     dd_ = sampling.train_val_test_split(cl, "doc_id", salt="clsp")
     leak = (

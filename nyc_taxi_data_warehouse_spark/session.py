@@ -81,8 +81,9 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
         )
     except Exception:
         pass  # static on some builds; only affects cached-plan task counts
-    # testdata events.parquet stores TIMESTAMP(NANOS) which Spark's reader
-    # rejects; read as long (ns) and convert in load_tables.
+    # Spark's reader rejects parquet TIMESTAMP(NANOS); read such columns as
+    # long (ns) and convert in load_tables.  The shipped sf dirs store
+    # events.ts as TIMESTAMP(MICROS), which needs no conversion.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
         spark.conf.set(

@@ -10,8 +10,7 @@ def session_tmpdir(name: str) -> str:
     created on first use and removed at interpreter exit. Callers that
     write with mode=overwrite (or clear it themselves) can reuse it across
     invocations instead of leaking a fresh mkdtemp per run — the pattern
-    behind the dedup-cluster benchmark spill and the streaming-query feed
-    staging."""
+    behind the store snapshots and the streaming-query feed staging."""
     if name not in _SESSION_TMPDIRS:
         import atexit
         import os

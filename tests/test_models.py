@@ -223,3 +223,30 @@ def test_docs_manifest_lineage_and_schemas(spark, trips, weather, tmp_path):
     assert json.load(open(jpath)) == manifest
     md = open(mpath).read()
     assert "## mart_trips_weather  `mart`" in md and "| hour_ts |" in md
+
+
+def test_load_tables_nanos_events_match_micros(spark, sf_dir, tmp_path):
+    """The TIMESTAMP(NANOS) branch of load_tables: the shipped sf dirs store
+    events.ts as MICROS, so a copy with ns timestamps (pyarrow format 2.6
+    keeps ns) must read back to the same ts values as the original."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for t in nyc_views.TABLES:
+        shutil.copy(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    i = ev.schema.get_field_index("ts")
+    ev = ev.set_column(i, "ts", ev["ts"].cast(pa.timestamp("ns")))
+    os.remove(tmp_path / "events.parquet")
+    pq.write_table(ev, tmp_path / "events.parquet", version="2.6")
+    assert pq.read_schema(tmp_path / "events.parquet").field("ts").type == pa.timestamp("ns")
+
+    def ts_rows(d):
+        e = nyc_views.load_tables(spark, str(d))["events"]
+        return sorted(e.select("event_id", F.col("ts").cast("string")).collect())
+
+    assert spark.read.parquet(str(tmp_path / "events.parquet")).dtypes[1] == ("ts", "bigint")
+    assert ts_rows(tmp_path) == ts_rows(sf_dir)

@@ -20,7 +20,6 @@ def main() -> None:
     sf_dir = "/root/testdata/sf0.1"
     if rest and not rest[0].startswith("q_"):
         sf_dir = rest.pop(0)
-    os.environ.setdefault("SPARK_GRAFT_CC_SPILL", "1")
     qs = entry_mod.queries()
     spark = get_spark("dump_plan")
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,2630 +1,240 @@
-"""Empirical scaling probe: run representative corpus operators at 1x/4x/8x
-synthetic corpus size and report wall-time growth factors.
+"""Growth and timing probe over the real registry queries.
 
-The point is to SHOW the complexity claims, not argue them: the linear
-operators (duplicated-n-gram coverage) should grow ~linearly, and the capped
-candidate generators (MinHash LSH, sparse cosine, prefix filter) should stay
-near-linear because their pair work is bounded per bucket/posting — a
-quadratic regression here means a cap stopped working.
+Grows a copy of an sf directory to each multiple, then times the real
+``__spark_entry__.queries()[name](spark, grown_dir)`` at every multiple,
+so every number is a number for the plan that ships.  Per run it reports
 
-Usage:  python tools/scale_probe.py [sf_dir] [op ...]
-        (default sf_dir /root/testdata/sf0.1; default ops: all)
-Prints one JSON line: {"op": {"1": s, "4": s, "8": s, "growth_8x": r}, ...}
+- ``build_s``: the callable itself (driver-side frame construction plus
+  any eager jobs the builder fires: stream drains, persists, collects);
+- ``exec_s``: the noop write of the returned frame;
+- ``jobs`` / ``stages``: what the two phases issued, read from the
+  status tracker through one job group per phase (a streaming drain's
+  micro-batches run on the stream's own thread and are not counted).
 
-Run on an idle host; shared-box contention distorts small multiples first.
+Before timing a multiple it makes one untimed warm call there, so the
+per-sf_dir memos (``load_tables`` handles, ``stream_feed`` staging, the
+ANN/PQ/store caches) are equally warm at 1x and at 8x.  Between runs
+the cache is cleared and both heaps are collected.
+
+Usage:  python tools/scale_probe.py [sf_dir] [--mults=1,4,8] [--runs=N] q_name ...
+        (defaults: /root/testdata/sf0.1, --mults=1,4,8, --runs=3)
+
+Prints one ``PROBE`` JSON line per (query, multiple) as it finishes, then
+one JSON summary: per query and multiple the run medians, and the growth
+of the last multiple over the first for build, execute and their total.
+The host load average is recorded per line; run on an idle host.
+
+Growth writes one copy of the whole directory per multiple under
+``<repo>/.probe_data/<source name>-<source path hash>/m<mult>`` and
+writes ``_COMPLETE`` last; a complete copy is reused.  Replica ``r`` of
+``mult``:
+
+- orders, lineitem: order key ``k`` becomes ``k*mult + r`` and the date
+  moves ``r`` days, so each replica is a disjoint order population
+  against the same dimensions (line numbers are kept as they are);
+- documents: ``doc_id*mult + r``, text shifted ``7r`` characters (and
+  ``n_chars`` recomputed), so the corpus grows in content; exact copies
+  would make every near-dup candidate set quadratic;
+- embeddings: ``vec_id*mult + r``, first coordinate nudged by ``0.01r``;
+- events: ``event_id`` and ``user_id`` become ``*mult + r`` and replica
+  ``r`` moves into its own time era (the source's span in whole days
+  times ``r``).  Jittering ``ts`` by seconds instead would densify the
+  same join windows, and temporal-join matches would grow with the
+  square of the multiple;
+- region, nation, customer, supplier, part: copied unchanged.
 """
 
 from __future__ import annotations
 
+import gc
+import hashlib
 import json
 import os
+import shutil
+import statistics
 import sys
 import time
+import uuid
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nyc_taxi_data_warehouse_spark.functions import text as T
-from nyc_taxi_data_warehouse_spark.operators import (
-    dedup,
-    drift,
-    pq,
-    selection,
-    sketches,
-    terms,
-)
-from nyc_taxi_data_warehouse_spark.plans.nyc_views import load_tables
+import __spark_entry__ as entry_mod
 from nyc_taxi_data_warehouse_spark.session import get_spark
 
+DIMENSIONS = ("region", "nation", "customer", "supplier", "part")
+FACTS = ("orders", "lineitem", "documents", "embeddings", "events")
+PROBE_ROOT = os.path.join(REPO, ".probe_data")
 
-def _docs_at(spark, sf_dir: str, mult: int):
-    d = load_tables(spark, sf_dir)["documents"].select("doc_id", "text")
+
+def dir_key(sf_dir: str, mult: int) -> str:
+    """Relative dir of the ``mult``x copy of ``sf_dir``: keyed by the
+    source's resolved path AND the multiple, so a run on one sf dir never
+    reuses a copy grown from another."""
+    src = os.path.realpath(sf_dir)
+    tag = hashlib.md5(src.encode()).hexdigest()[:10]
+    return os.path.join(f"{os.path.basename(src)}-{tag}", f"m{mult}")
+
+
+def grown_tables(spark: SparkSession, sf_dir: str, mult: int) -> dict[str, DataFrame]:
+    """The five fact tables at ``mult``x rows, same schemas and column order."""
+    rep = F.col("rep")
+
+    def grow(table: str, **cols) -> DataFrame:
+        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+        return df.select(
+            F.explode(F.sequence(F.lit(0), F.lit(mult - 1))).alias("rep"), "*"
+        ).select(*[cols[c].alias(c) if c in cols else F.col(c) for c in df.columns])
+
+    def key(c: str):
+        return F.col(c) * mult + rep
+
+    lo, hi = spark.read.parquet(f"{sf_dir}/events.parquet").agg(
+        F.min("ts"), F.max("ts")
+    ).first()
+    era_days = (hi - lo).days + 1
+    text = F.expr("substring(text, rep * 7 + 1)")
+    return {
+        "orders": grow(
+            "orders",
+            o_orderkey=key("o_orderkey"),
+            o_orderdate=F.timestamp_add("DAY", rep, F.col("o_orderdate")),
+        ),
+        "lineitem": grow(
+            "lineitem",
+            l_orderkey=key("l_orderkey"),
+            l_shipdate=F.timestamp_add("DAY", rep, F.col("l_shipdate")),
+        ),
+        "documents": grow(
+            "documents", doc_id=key("doc_id"), text=text,
+            n_chars=F.length(text).cast("long"),
+        ),
+        "embeddings": grow(
+            "embeddings",
+            vec_id=key("vec_id"),
+            embedding=F.concat(
+                F.array((F.element_at("embedding", 1) + rep * 0.01).cast("float")),
+                F.slice("embedding", 2, F.size("embedding") - 1),
+            ),
+        ),
+        "events": grow(
+            "events",
+            event_id=key("event_id"),
+            user_id=key("user_id"),
+            ts=F.col("ts") + F.make_interval(days=rep * era_days),
+        ),
+    }
+
+
+def grow_dir(
+    spark: SparkSession, sf_dir: str, mult: int, root: str = PROBE_ROOT
+) -> str:
+    """Path of the ``mult``x copy of ``sf_dir`` (``sf_dir`` itself at 1x),
+    written on first use."""
     if mult == 1:
-        out = d
-    else:
-        # m distinct pseudo-docs per source doc: suffix-shifted so the
-        # corpus grows in CONTENT, not just row count (pure duplication
-        # would make every dedup op's candidate set itself quadratic)
-        out = d.select(
-            F.explode(F.sequence(F.lit(0), F.lit(mult - 1))).alias("rep"),
-            "doc_id",
-            "text",
-        ).select(
-            (F.col("doc_id") * mult + F.col("rep")).alias("doc_id"),
-            F.expr("substring(text, rep * 7 + 1)").alias("text"),
-        )
-    target = spark.sparkContext.defaultParallelism
-    return out.repartition(target)
+        return sf_dir
+    out = os.path.join(root, dir_key(sf_dir, mult))
+    marker = os.path.join(out, "_COMPLETE")
+    if os.path.exists(marker):
+        return out
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    for t in DIMENSIONS:
+        shutil.copy(f"{sf_dir}/{t}.parquet", f"{out}/{t}.parquet")
+    for t, df in grown_tables(spark, sf_dir, mult).items():
+        df.write.parquet(f"{out}/{t}.parquet")
+    open(marker, "w").close()
+    return out
 
 
-def _docs_meta_at(spark, sf_dir: str, mult: int):
-    """(source, n_chars) at mult× rows — the PSI probe input.  Content
-    growth: replicas get length-shifted n_chars so the distinct-value
-    table (the quantile-bounds work set) grows with the corpus."""
-    d = load_tables(spark, sf_dir)["documents"].select("source", "n_chars")
-    if mult == 1:
-        out = d
-    else:
-        out = d.select(
-            F.explode(F.sequence(F.lit(0), F.lit(mult - 1))).alias("rep"),
-            "source",
-            "n_chars",
-        ).select("source", (F.col("n_chars") + F.col("rep") * 13).alias("n_chars"))
-    return out.repartition(spark.sparkContext.defaultParallelism)
-
-
-def _emb_at(spark, sf_dir: str, mult: int):
-    """Embeddings at mult× rows — the ANN probe corpus.  Replicas get a
-    deterministic per-replica perturbation of the first coordinate so
-    cell assignment sees genuinely distinct vectors."""
-    e = load_tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")
-    if mult == 1:
-        out = e
-    else:
-        out = e.select(
-            F.explode(F.sequence(F.lit(0), F.lit(mult - 1))).alias("rep"),
-            "vec_id",
-            "embedding",
-        ).select(
-            (F.col("vec_id") * mult + F.col("rep")).alias("vec_id"),
-            F.concat(
-                F.array(F.element_at("embedding", 1) + F.col("rep") * 0.01),
-                F.slice("embedding", 2, 63),
-            ).alias("embedding"),
-        )
-    return out.repartition(spark.sparkContext.defaultParallelism)
-
-
-def _events_at(spark, sf_dir: str, mult: int):
-    """Events at mult× rows — the behavioral/sketch probe stream.
-    Replicas get shifted ids and per-replica jittered user/ts so key
-    cardinality AND the time axis grow with the stream (pure row
-    duplication would leave every distinct/sketch op's state flat)."""
-    e = load_tables(spark, sf_dir)["events"].select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    if mult == 1:
-        out = e
-    else:
-        out = e.select(
-            F.explode(F.sequence(F.lit(0), F.lit(mult - 1))).alias("rep"),
-            "event_id", "ts", "user_id", "event_type", "value",
-        ).select(
-            (F.col("event_id") * mult + F.col("rep")).alias("event_id"),
-            (
-                F.col("ts") + F.make_interval(secs=F.col("rep") * 17)
-            ).alias("ts"),
-            (F.col("user_id") * mult + F.col("rep")).alias("user_id"),
-            "event_type",
-            "value",
-        )
-    return out.repartition(spark.sparkContext.defaultParallelism)
-
-
-def _time(fn) -> float:
+def _phase(spark: SparkSession, fn):
+    """Run ``fn`` under a fresh job group: (result, seconds, jobs, stages)."""
+    sc = spark.sparkContext
+    group = f"scale_probe_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
     t0 = time.perf_counter()
-    fn().write.mode("overwrite").format("noop").save()
-    return round(time.perf_counter() - t0, 3)
+    out = fn()
+    dt = time.perf_counter() - t0
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group) or []
+    infos = [tracker.getJobInfo(j) for j in jobs]
+    return out, dt, len(jobs), sum(len(i.stageIds) for i in infos if i is not None)
+
+
+def time_query(spark: SparkSession, fn, sf_dir: str) -> dict:
+    """One build + noop-execute of a registry callable, then cache clear
+    and GC on both sides so runs start from the same state."""
+    df, build_s, bj, bs = _phase(spark, lambda: fn(spark, sf_dir))
+    _, exec_s, xj, xs = _phase(
+        spark, lambda: df.write.mode("overwrite").format("noop").save()
+    )
+    spark.catalog.clearCache()
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    return {
+        "build_s": round(build_s, 3),
+        "exec_s": round(exec_s, 3),
+        "total_s": round(build_s + exec_s, 3),
+        "build_jobs": bj,
+        "exec_jobs": xj,
+        "stages": bs + xs,
+    }
+
+
+def probe(spark: SparkSession, fn, dirs: dict[int, str], runs: int):
+    """Yield ``(mult, record)`` per multiple: one warm call, then the
+    medians of ``runs`` timed runs (and the raw run totals).  Last yields
+    ``("growth", ratios)``: last multiple over first, per phase."""
+    report = {}
+    for m, d in dirs.items():
+        time_query(spark, fn, d)
+        samples = [time_query(spark, fn, d) for _ in range(runs)]
+        rec = {k: statistics.median(s[k] for s in samples) for k in samples[0]}
+        rec["runs_total_s"] = [s["total_s"] for s in samples]
+        rec["load1"] = round(os.getloadavg()[0], 2)
+        report[str(m)] = rec
+        yield m, rec
+    first, last = report[str(min(dirs))], report[str(max(dirs))]
+    yield "growth", {
+        f"{k}_growth": round(last[f"{k}_s"] / max(first[f"{k}_s"], 1e-3), 2)
+        for k in ("build", "exec", "total")
+    }
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    sf_dir, mults, runs, names = "/root/testdata/sf0.1", (1, 4, 8), 3, []
+    for a in sys.argv[1:]:
+        if a.startswith("--mults="):
+            mults = tuple(sorted({int(x) for x in a.split("=", 1)[1].split(",")}))
+        elif a.startswith("--runs="):
+            runs = int(a.split("=", 1)[1])
+        elif a.startswith("q_"):
+            names.append(a)
+        else:
+            sf_dir = a
+    qs = entry_mod.queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown or not names or runs < 1:
+        raise SystemExit(
+            "usage: scale_probe.py [sf_dir] [--mults=1,4,8] [--runs=N] q_name ..."
+            + (f"\nunknown queries: {unknown}" if unknown else "")
+        )
     spark = get_spark("scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(f"{sf_dir}/documents.parquet").count()  # warm
-
-    ops = {
-        "dup_ngram_coverage": lambda d: dedup.dup_ngram_coverage(d),
-        "minhash_lsh_pairs": lambda d: dedup.lsh_candidate_pairs(
-            dedup.lsh_bands(
-                dedup.minhash_signatures(dedup.shingle_rows(d)).persist()
-            )
-        ),
-        "sparse_cosine": lambda d: terms.sparse_cosine_pairs(d),
-        "prefix_filter": lambda d: dedup.prefix_filter_pairs(
-            dedup.shingle_rows(d)
-        ),
-        # the full clustering chain (pairs → min-label CC): growth should
-        # track the pair mass, with the iterative rounds adding only
-        # per-round fixed cost (diameter doesn't grow with corpus size on
-        # near-dup graphs)
-        "cc_min_label": lambda d: dedup.connected_components(
-            dedup.lsh_candidate_pairs(
-                dedup.lsh_bands(
-                    dedup.minhash_signatures(dedup.shingle_rows(d)).persist()
-                )
-            ),
-            d.select("doc_id"),
-        ),
-        # round-6 additions: portable sketches + DSIR — all token-stream
-        # scans folding to FIXED-size state (2^p registers / depth×width
-        # counters / num_buckets weights), so growth should be ~linear
-        # (the scan) with the shuffle constant-sized
-        "hll_estimate": lambda d: sketches.hll_estimate(
-            d.select(F.explode(T.tokens("text")).alias("token")), "token", p=9
-        ),
-        "cm_counters": lambda d: sketches.cm_counters(
-            d.select(F.explode(T.tokens("text")).alias("token"))
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("cnt")),
-            "token",
-            "cnt",
-        ),
-        "dsir_scores": lambda d: (
-            lambda tok: selection.dsir_scores(
-                tok, selection.dsir_bucket_weights(tok)
-            )
-        )(
-            d.select(
-                "doc_id",
-                (F.col("doc_id") % 5 == 0).alias("is_target"),
-                F.explode(T.tokens("text")).alias("__t"),
-            )
-            .select(
-                "doc_id",
-                "is_target",
-                selection.hashed_token_bucket("__t", 4096).alias("bucket"),
-            )
-            .persist()
-        ),
-    }
-    # round-5 additions (verdict ask): the PSI scorecard (boundary pass +
-    # one binning aggregation — should be ~linear) and the full IVFADC
-    # lifecycle (fit is corpus-linear per iteration, search is
-    # cell-pruned; the fixed codebook/action overhead should AMORTIZE,
-    # i.e. growth well UNDER linear at 8×)
-    meta_ops = {
-        "psi_by_group": (
-            lambda m: _docs_meta_at(spark, sf_dir, m),
-            lambda d: drift.psi_by_group(d, "source", "n_chars"),
-        ),
-        # round-7 additions: the divergence scorecard shares psi's one
-        # corpus aggregation (growth should track psi); exact KS is
-        # value-cardinality × groups work — the content-growth replicas
-        # shift n_chars, so the distinct-value axis grows with the
-        # corpus and the probe exercises the real scaling dimension
-        "divergence_by_group": (
-            lambda m: _docs_meta_at(spark, sf_dir, m),
-            lambda d: drift.divergence_by_group(d, "source", "n_chars"),
-        ),
-        "ks_by_group": (
-            lambda m: _docs_meta_at(spark, sf_dir, m),
-            lambda d: drift.ks_by_group(d, "source", "n_chars"),
-        ),
-        # FIXED-size query batch (always the 1x frame's % 50 sample):
-        # growing queries with the corpus would conflate query-count
-        # scaling with corpus scaling and the 8x ratio could not test
-        # the corpus-amortization claim
-        "ivfpq_search": (
-            lambda m: _emb_at(spark, sf_dir, m),
-            lambda d: pq.ivfpq_search(
-                _emb_at(spark, sf_dir, 1).where(F.col("vec_id") % 50 == 0),
-                d,
-                k_cells=8, m=4, k_codes=4, k=5,
-                coarse_iter=2, fine_iter=1, quant=1000,
-            ),
-        ),
-    }
-    # round-7 continuation additions over the events stream: the Poisson
-    # bootstrap is a B×-explode folding to B partial sums (linear scan,
-    # constant shuffle); KMV/MG fold to ≤k rows per group/shard (their
-    # windows sort only distinct-hash / key tables); the sliding HLL
-    # fans out REGISTER rows (≤7·512/day) never events; the watermark
-    # audit's bucketed running max is hour-parallel
-    from nyc_taxi_data_warehouse_spark import queries_data as _qd
-
-    def _boot(d):
-        rep = d.where(F.col("event_type") == "purchase").select(
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v_u"),
-            F.explode(F.array(*[F.lit(b) for b in range(32)])).alias("b"),
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("#", F.col("b"), F.col("event_id"))),
-                    1, 13,
-                ), 16, 10,
-            ).cast("long").alias("u"),
-        )
-        r = sum(
-            [F.when(F.col("u") >= F.lit(t), 1).otherwise(0) for t in _qd._BOOT_T],
-            F.lit(0),
-        ).cast("long")
-        return rep.select("b", "v_u", r.alias("r")).groupBy("b").agg(
-            F.sum(F.col("r") * F.col("v_u")).alias("s"), F.sum("r").alias("n")
-        )
-
-    events_ops = {
-        "poisson_bootstrap": (
-            lambda m: _events_at(spark, sf_dir, m),
-            _boot,
-        ),
-        "kmv_bottom_k": (
-            lambda m: _events_at(spark, sf_dir, m),
-            lambda d: sketches.kmv_estimate_from_bottom(
-                sketches.kmv_bottom_k(
-                    d.select(
-                        "event_type",
-                        F.concat_ws("#", "user_id", F.to_date("ts")).alias("v"),
-                    ),
-                    "v", ("event_type",), 64,
-                ),
-                ("event_type",), 64,
-            ),
-        ),
-        "mg_merge": (
-            lambda m: _events_at(spark, sf_dir, m),
-            lambda d: sketches.mg_merge(
-                sketches.mg_compress(
-                    d.select(
-                        F.pmod(F.crc32(F.col("event_id").cast("string")),
-                               F.lit(8)).alias("shard"),
-                        F.col("user_id").alias("key"),
-                    ).groupBy("shard", "key").agg(F.count("*").alias("cnt")),
-                    "key", "cnt", ("shard",), 16,
-                ).select("key", "weight"),
-                (), 16,
-            ),
-        ),
-        "sliding_hll": (
-            lambda m: _events_at(spark, sf_dir, m),
-            lambda d: (
-                lambda regs, days: sketches.hll_estimate_from_registers(
-                    regs.select(
-                        F.explode(
-                            F.sequence(F.col("day"), F.date_add("day", 6))
-                        ).alias("t_day"),
-                        "bucket", "rho",
-                    ).join(
-                        F.broadcast(days.select(F.col("day").alias("t_day"))),
-                        "t_day",
-                    ).groupBy("t_day", "bucket").agg(F.max("rho").alias("rho")),
-                    ("t_day",), 9,
-                )
-            )(
-                sketches.hll_registers(
-                    d.select(F.to_date("ts").alias("day"), "user_id"),
-                    "user_id", ("day",), 9,
-                ),
-                d.select(F.to_date("ts").alias("day")).distinct(),
-            ),
-        ),
-    }
-
-    # third-wave document/stream ops: CDC chunking is a position explode
-    # (linear in corpus BYTES, boundary filter map-side); phrase search is
-    # a term-filtered positional merge; the watermark audit's running max
-    # is hour-bucket-parallel with a tiny carry table
-    def _cdc(d):
-        c = d.where(F.length("text") >= 8)
-        pos = c.select(
-            "doc_id", "text",
-            F.explode(F.sequence(F.lit(1), F.length("text") - 7)).alias("p"),
-        )
-        bnd = pos.where(
-            F.conv(
-                F.substring(F.md5(F.expr("substring(text, p, 8)")), 1, 8),
-                16, 10,
-            ).cast("long") % 64 == 0
-        )
-        return bnd.groupBy("doc_id").count()
-
-    def _phrase(d):
-        pos = d.select(
-            "doc_id", F.posexplode(T.tokens("text")).alias("pos", "term")
-        ).where(F.col("term").isin("hash", "join"))
-        a = pos.where(F.col("term") == "hash").select(
-            "doc_id", F.col("pos").alias("p1")
-        )
-        b = pos.where(F.col("term") == "join").select(
-            F.col("doc_id").alias("doc_id"), F.col("pos").alias("p2")
-        )
-        return (
-            a.join(b, (a["doc_id"] == b["doc_id"]) & (b["p2"] == a["p1"] + 1))
-            .groupBy(a["doc_id"]).count()
-        )
-
-    def _wm(d):
-        jit = (
-            F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 15),
-                   16, 10).cast("long") % 1800
-        ) * F.lit(1_000_000)
-        t = F.unix_micros(F.col("ts").cast("timestamp"))
-        base = d.select("event_id", t.alias("t_us"), (t + jit).alias("arr_us"))
-        b = base.withColumn(
-            "bucket",
-            F.col("arr_us") - F.pmod(F.col("arr_us"), F.lit(3_600_000_000)),
-        )
-        from pyspark.sql import Window as W
-
-        w_in = (
-            W.partitionBy("bucket").orderBy("arr_us", "event_id")
-            .rowsBetween(W.unboundedPreceding, -1)
-        )
-        bmax = b.groupBy("bucket").agg(F.max("t_us").alias("bmax"))
-        carry = bmax.select(
-            "bucket",
-            F.max("bmax").over(
-                W.orderBy("bucket").rowsBetween(W.unboundedPreceding, -1)
-            ).alias("carry"),
-        )
-        hw = (
-            b.withColumn("in_max", F.max("t_us").over(w_in))
-            .join(F.broadcast(carry), "bucket")
-            .select("t_us", F.greatest("in_max", "carry").alias("hw_prev"))
-        )
-        return hw.agg(
-            F.sum(
-                (F.col("t_us") < F.col("hw_prev") - 60_000_000).cast("long")
-            )
-        )
-
-    third_ops = {
-        "cdc_boundaries": (lambda m: _docs_at(spark, sf_dir, m), _cdc),
-        "phrase_search": (lambda m: _docs_at(spark, sf_dir, m), _phrase),
-        "watermark_audit": (lambda m: _events_at(spark, sf_dir, m), _wm),
-    }
-
-    # round-8 ops: CUSUM is grain-sized windows after one corpus agg
-    # (linear scan, flat chart cost); the quantile summary is one CDF
-    # build + a kilobyte collect (distinct-value work grows with the
-    # jittered value axis); ER blocking is quadratic PER BLOCK with
-    # block count growing ∝ corpus (so linear overall); sequence mining
-    # is the user-partitioned lead window (linear in events)
-    def _cusum(d):
-        from pyspark.sql import Window as W
-
-        daily = d.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-            F.count(F.lit(1)).cast("long").alias("y")
-        )
-        tot = daily.groupBy("event_type").agg(
-            F.sum("y").cast("long").alias("total"),
-            F.count(F.lit(1)).cast("long").alias("n_days"),
-        )
-        base = daily.join(F.broadcast(tot), "event_type").select(
-            "event_type", "day", "y", "total",
-            F.expr("CAST(n_days * y - total - total div 10 AS BIGINT)")
-            .alias("dup"),
-        )
-        w = (
-            W.partitionBy("event_type").orderBy("day")
-            .rowsBetween(W.unboundedPreceding, 0)
-        )
-        pre = base.select(
-            "event_type", "day", "total",
-            F.sum("dup").over(w).alias("pup"),
-        )
-        return pre.select(
-            "event_type", "day",
-            (F.col("pup") - F.least(F.lit(0), F.min("pup").over(w)))
-            .alias("s_up"),
-        )
-
-    def _qsummary(d):
-        from nyc_taxi_data_warehouse_spark.operators.sampling import (
-            bucketed_value_cumsum,
-        )
-
-        rows = d.select(
-            (F.col("value") + (F.col("event_id") % 997) * 0.001).alias("v"),
-            F.pmod(F.crc32(F.col("event_id").cast("string")), F.lit(8))
-            .alias("shard"),
-        )
-        cdf = bucketed_value_cumsum(rows, "v", ("shard",))
-        nsh = cdf.groupBy("shard").agg(F.max("__cle").alias("n_s"))
-        return (
-            cdf.join(F.broadcast(nsh), "shard")
-            .where(
-                F.expr("(__cle * 32) div n_s")
-                > F.expr("((__cle - __c) * 32) div n_s")
-            )
-            .select("shard", "__v", "__cle")
-        )
-
-    def _er_blocking(d):
-        recs = d.select(
-            "doc_id",
-            F.concat(
-                F.lit("Entity#"), F.lpad(F.col("doc_id").cast("string"), 9, "0")
-            ).alias("name"),
-        )
-        twins = recs.where(F.col("doc_id") % 3 == 0).select(
-            (F.col("doc_id") + 100000000).alias("doc_id"),
-            F.expr("substring(name, 1, length(name) - 1)").alias("name"),
-        )
-        blocked = recs.unionByName(twins).withColumn(
-            "blk", F.substring("name", 11, 4)
-        )
-        a, b = blocked.alias("a"), blocked.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.blk") == F.col("b.blk"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .where(F.levenshtein(F.col("a.name"), F.col("b.name")) <= 2)
-            .groupBy(F.col("a.blk"))
-            .count()
-        )
-
-    def _freqseq(d):
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy("user_id").orderBy("ts", "event_id")
-        tri = d.select(
-            "user_id",
-            F.col("event_type").alias("e1"),
-            F.lead("event_type", 1).over(w).alias("e2"),
-            F.lead("event_type", 2).over(w).alias("e3"),
-        ).where(F.col("e2").isNotNull() & F.col("e3").isNotNull())
-        return tri.groupBy("e1", "e2", "e3").agg(
-            F.count(F.lit(1)).alias("support")
-        )
-
-    # the two rewrite transforms: both are one content-keyed shuffle
-    # (segment/span text) + an ordered re-aggregation — the exact-dedup
-    # shape, linear in corpus tokens
-    def _span_removal(d):
-        tok = d.select(
-            "doc_id", F.posexplode(T.tokens("text")).alias("pos", "tok")
-        )
-        span = tok.groupBy(
-            "doc_id", F.expr("pos div 5").alias("span_id")
-        ).agg(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-                    lambda s: s["tok"],
-                ),
-            ).alias("span_text")
-        ).persist()
-        first = span.groupBy("span_text").agg(
-            F.min(F.col("doc_id") * 1000 + F.col("span_id")).alias("__f")
-        )
-        return (
-            span.join(first, "span_text")
-            .where(F.col("doc_id") * 1000 + F.col("span_id") != F.col("__f"))
-            .groupBy("doc_id")
-            .count()
-        )
-
-    fourth_ops = {
-        "cusum_chart": (lambda m: _events_at(spark, sf_dir, m), _cusum),
-        "quantile_summary": (lambda m: _events_at(spark, sf_dir, m), _qsummary),
-        "er_blocking": (lambda m: _docs_at(spark, sf_dir, m), _er_blocking),
-        "frequent_sequences": (lambda m: _events_at(spark, sf_dir, m), _freqseq),
-        "span_removal": (lambda m: _docs_at(spark, sf_dir, m), _span_removal),
-    }
-
-    # round-9 probes: the remaining round-8 wave (stats + transforms +
-    # layout) plus the two round-8-tail additions.  Expected shapes:
-    # gaps/islands, BH-FDR, spearman and calibration are one corpus scan
-    # folding to a bounded frame (→ ~linear); Mann–Whitney and SLO grow
-    # along the distinct-value axis (the probe jitters values so that
-    # axis actually grows); the compaction plan's work set is the FILE
-    # list, so the probe replicates days (metadata growth, not fact
-    # growth); matryoshka recall is 4 exhaustive scans of a fixed query
-    # batch against the growing corpus (→ ~linear, amortizing fixed
-    # cost); the encoding advisor lags within (orderkey) partitions
-    # whose SIZE stays constant as the table grows (→ ~linear).
-    from pyspark.sql import Window as W9
-
-    from nyc_taxi_data_warehouse_spark.operators.sampling import (
-        bucketed_value_cumsum as _bvc,
-    )
-    from nyc_taxi_data_warehouse_spark.operators.similarity import (
-        brute_force_knn as _bfk,
-    )
-
-    def _gaps(d):
-        w_all = W9.partitionBy("user_id").orderBy("ts", "event_id")
-        w_typ = W9.partitionBy("user_id", "event_type").orderBy(
-            "ts", "event_id"
-        )
-        grp = d.select(
-            "user_id", "event_type",
-            (F.row_number().over(w_all) - F.row_number().over(w_typ))
-            .alias("__g"),
-        )
-        runs = grp.groupBy("user_id", "event_type", "__g").agg(
-            F.count(F.lit(1)).cast("long").alias("run_len")
-        )
-        return runs.groupBy("event_type", "run_len").count()
-
-    def _bh(d):
-        cells = d.select(
-            "event_type",
-            F.dayofweek("ts").alias("weekday"),
-            F.pmod(F.col("user_id"), F.lit(2)).cast("int").alias("va"),
-            F.round(F.col("value") * 100).cast("long").alias("x"),
-        ).groupBy("event_type", "weekday").agg(
-            F.sum(F.when(F.col("va") == 0, 1).otherwise(0)).alias("n_a"),
-            F.sum(F.when(F.col("va") == 0, F.col("x")).otherwise(0))
-            .alias("s_a"),
-            F.sum(F.when(F.col("va") == 1, 1).otherwise(0)).alias("n_b"),
-            F.sum(F.when(F.col("va") == 1, F.col("x")).otherwise(0))
-            .alias("s_b"),
-        )
-        w = W9.orderBy(F.desc("s_a")).rowsBetween(0, W9.unboundedFollowing)
-        return cells.select(
-            "event_type", "weekday",
-            F.min(F.col("s_a") - F.col("s_b")).over(w).alias("adj"),
-        )
-
-    def _mw(d):
-        base = d.select(
-            "event_type",
-            (F.col("value") + (F.col("event_id") % 997) * 0.001).alias("v"),
-            F.pmod(F.col("user_id"), F.lit(2)).cast("int").alias("va"),
-        )
-        cdf = _bvc(base, "v", ("event_type",)).select(
-            "event_type", "__v", "__c", "__cle"
-        )
-        ca = base.where(F.col("va") == 0).groupBy(
-            "event_type", F.col("v").alias("__v")
-        ).agg(F.count(F.lit(1)).cast("long").alias("c_a"))
-        per_v = cdf.join(ca, ["event_type", "__v"], "left")
-        return per_v.groupBy("event_type").agg(
-            F.sum(
-                F.coalesce("c_a", F.lit(0))
-                * (2 * F.col("__cle") - F.col("__c") + 1)
-            ).alias("two_r_a"),
-            F.sum(
-                F.col("__c") * F.col("__c") * F.col("__c") - F.col("__c")
-            ).alias("tsum"),
-            F.max("__cle").alias("n"),
-        )
-
-    def _slo(d):
-        base = d.select(
-            F.to_date("ts").alias("day"),
-            (F.col("value") + (F.col("event_id") % 997) * 0.001).alias("v"),
-        )
-        cdf = _bvc(base, "v", ("day",)).select("day", "__v", "__cle")
-        nd_ = cdf.groupBy("day").agg(F.max("__cle").alias("n_day"))
-        j = cdf.join(F.broadcast(nd_), "day")
-        daily = j.groupBy("day").agg(
-            F.min(
-                F.when(F.col("__cle") * 100 >= 95 * F.col("n_day"),
-                       F.col("__v"))
-            ).alias("p95"),
-        )
-        w7 = W9.orderBy("day").rowsBetween(-6, 0)
-        return daily.select(
-            "day",
-            F.sum((F.col("p95") > 150).cast("long")).over(w7).alias("v7"),
-        )
-
-    def _calib(d):
-        scored = d.select(
-            "doc_id",
-            (1 / (1 + F.exp(-(F.length("text") - 300) / 100.0))).alias("p"),
-        )
-        labels = d.select("doc_id", (F.length("text") >= 300).cast("long")
-                          .alias("y"))
-        j = scored.join(labels, "doc_id").select(
-            F.least(F.lit(9), F.floor(F.col("p") * 10)).alias("bin"),
-            F.round(F.col("p") * 1e6).cast("long").alias("pi"),
-            "y",
-        )
-        return j.groupBy("bin").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("pi").alias("sp"),
-            F.sum("y").alias("n_pos"),
-            F.sum((F.col("pi") - F.col("y") * 1000000)
-                  * (F.col("pi") - F.col("y") * 1000000)).alias("sb"),
-        )
-
-    def _boil_scrub(d):
-        tok = d.select(
-            "doc_id", F.posexplode(T.tokens("text")).alias("pos", "tok")
-        )
-        seg = tok.groupBy(
-            "doc_id", F.expr("pos div 3").alias("seg_id")
-        ).agg(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-                    lambda s: s["tok"],
-                ),
-            ).alias("seg_text")
-        ).persist()
-        stats = d.agg(F.count_distinct("doc_id").alias("n_docs"))
-        frequent = (
-            seg.select("doc_id", "seg_text").distinct()
-            .groupBy("seg_text").agg(F.count(F.lit(1)).alias("df"))
-            .crossJoin(F.broadcast(stats))
-            .where(F.col("df") * 20 >= F.col("n_docs"))
-            .select("seg_text", F.lit(1).alias("__b"))
-        )
-        marked = seg.join(F.broadcast(frequent), "seg_text", "left")
-        return marked.groupBy("doc_id").agg(
-            F.sum(F.coalesce(F.col("__b"), F.lit(0))).alias("n_removed"),
-            F.md5(
-                F.concat_ws(
-                    " ",
-                    F.transform(
-                        F.array_sort(F.collect_list(
-                            F.when(F.col("__b").isNull(),
-                                   F.struct("seg_id", "seg_text"))
-                        )),
-                        lambda s: s["seg_text"],
-                    ),
-                )
-            ).alias("clean_md5"),
-        )
-
-    def _compaction(d):
-        files = d.groupBy(F.to_date("ts").alias("day")).agg(
-            F.count(F.lit(1)).cast("long").alias("sz")
-        ).select(
-            F.date_add(
-                "day", (F.pmod(F.crc32(F.col("day").cast("string")),
-                               F.lit(731))).cast("int")
-            ).alias("day"),
-            "sz",
-        )
-        w = W9.orderBy("day").rowsBetween(W9.unboundedPreceding, 0)
-        tot = files.agg(F.sum("sz").cast("long").alias("total"))
-        packed = files.crossJoin(F.broadcast(tot)).select(
-            "day", "sz", "total",
-            (F.sum("sz").over(w) - F.col("sz")).alias("__before"),
-        ).select(
-            "day", "sz",
-            F.expr("CAST(__before div ((total + 15) div 16) AS BIGINT)")
-            .alias("bin_id"),
-        )
-        return packed.groupBy("bin_id").agg(
-            F.count(F.lit(1)).alias("n_files"), F.sum("sz").alias("bin_rows")
-        )
-
-    def _spear(d):
-        daily = d.groupBy(F.to_date("ts").alias("day")).agg(
-            F.sum((F.col("event_type") == "view").cast("long")).alias("x"),
-            F.sum(
-                F.when(F.col("event_type") == "purchase",
-                       F.round(F.col("value") * 100).cast("long"))
-                .otherwise(0)
-            ).alias("y"),
-        ).persist()
-
-        def midrank2(col):
-            cum = _bvc(daily.select(col), col)
-            return cum.select(
-                F.col("__v").alias(col),
-                (2 * F.col("__cle") - F.col("__c") + 1).alias(f"r_{col}"),
-            )
-
-        j = daily.join(midrank2("x"), "x").join(midrank2("y"), "y")
-        return j.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("r_x") * F.col("r_y")).alias("sab"),
-            F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        )
-
-    def _mrl(d):
-        queries = _emb_at(spark, sf_dir, 1).where(F.col("vec_id") % 50 == 0)
-        full = _bfk(queries, d, k=10).select(
-            "query_id", "neighbor_id", F.lit(1).alias("__hit")
-        ).persist()
-        out = None
-        for m in (8, 16, 32):
-            qm_ = queries.select(
-                "vec_id", F.slice("embedding", 1, m).alias("embedding")
-            )
-            cm_ = d.select(
-                "vec_id", F.slice("embedding", 1, m).alias("embedding")
-            )
-            pref = _bfk(qm_, cm_, k=10).select("query_id", "neighbor_id")
-            st = pref.join(full, ["query_id", "neighbor_id"], "left").agg(
-                F.lit(m).alias("prefix_dims"),
-                F.sum(F.coalesce(F.col("__hit"), F.lit(0))).alias("n_hits"),
-            )
-            out = st if out is None else out.unionByName(st)
-        return out
-
-    def _lineitem_at(m):
-        li = load_tables(spark, sf_dir)["lineitem"].select(
-            "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
-            "l_quantity", "l_returnflag", "l_linestatus",
-            "l_extendedprice", "l_tax",
-        )
-        if m > 1:
-            li = li.select(
-                F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("rep"),
-                *li.columns,
-            ).select(
-                (F.col("l_orderkey") * m + F.col("rep")).alias("l_orderkey"),
-                *[c for c in li.columns if c != "l_orderkey"],
-            )
-        return li.repartition(spark.sparkContext.defaultParallelism)
-
-    def _encoding(li):
-        cols = ["l_quantity", "l_returnflag", "l_linestatus",
-                "l_extendedprice", "l_tax"]
-        w = W9.partitionBy("l_orderkey").orderBy(
-            "l_linenumber", *cols, "l_partkey"
-        )
-        runs = li.select(
-            "*",
-            *[(F.col(c) == F.lag(c, 1).over(w)).cast("long")
-              .alias(f"__r_{c}") for c in cols],
-        )
-        aggs = []
-        for c in cols:
-            aggs.append(F.count(c).alias(f"n_{c}"))
-            aggs.append(F.count_distinct(c).alias(f"d_{c}"))
-            aggs.append(F.sum(F.coalesce(F.col(f"__r_{c}"), F.lit(0)))
-                        .alias(f"r_{c}"))
-        return runs.agg(*aggs)
-
-    fifth_ops = {
-        "gaps_islands": (lambda m: _events_at(spark, sf_dir, m), _gaps),
-        "bh_fdr": (lambda m: _events_at(spark, sf_dir, m), _bh),
-        "mannwhitney": (lambda m: _events_at(spark, sf_dir, m), _mw),
-        "slo_burn": (lambda m: _events_at(spark, sf_dir, m), _slo),
-        "calibration": (lambda m: _docs_at(spark, sf_dir, m), _calib),
-        "boilerplate_scrub": (
-            lambda m: _docs_at(spark, sf_dir, m), _boil_scrub,
-        ),
-        "compaction_plan": (lambda m: _events_at(spark, sf_dir, m),
-                            _compaction),
-        "spearman": (lambda m: _events_at(spark, sf_dir, m), _spear),
-        "matryoshka_recall": (lambda m: _emb_at(spark, sf_dir, m), _mrl),
-        "encoding_advisor": (_lineitem_at, _encoding),
-    }
-
-    # round-9 wave probes: the eval trio folds over the score CDF (one
-    # corpus scan + distinct-lattice work → ~linear); Kruskal–Wallis is
-    # the pooled-CDF shape; Kendall/Theil–Sen pair mass is CALENDAR-
-    # bounded so growth should be ~flat beyond the daily aggregation;
-    # the z-order A/B is two stacked scans to a 128-row stats table;
-    # FK audit is distinct-key anti-joins (~linear in child rows);
-    # RTBF is one day-grain aggregation per table; pseudonymize is a
-    # pure map (the zero-shuffle floor); nDCG re-ranks a fixed query
-    # set against the growing corpus (two-stage top-k caps the sort).
-    from nyc_taxi_data_warehouse_spark import queries_eval as _qe
-
-    def _docs_table_at(m):
-        """documents-shaped frame at m× for queries that load_tables
-        themselves can't take — rebuild the (doc_id, text, source,
-        n_chars) shape with content growth."""
-        d = load_tables(spark, sf_dir)["documents"].select(
-            "doc_id", "text", "source", "n_chars"
-        )
-        if m > 1:
-            d = d.select(
-                F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("rep"),
-                "doc_id", "text", "source", "n_chars",
-            ).select(
-                (F.col("doc_id") * m + F.col("rep")).alias("doc_id"),
-                F.expr("substring(text, rep * 7 + 1)").alias("text"),
-                "source",
-                (F.col("n_chars") + F.col("rep") * 13).alias("n_chars"),
-            )
-        return d.repartition(spark.sparkContext.defaultParallelism)
-
-    def _scored_at(d):
-        from nyc_taxi_data_warehouse_spark.queries_data import (
-            _quality_logit_z,
-        )
-
-        t = d.select(
-            "doc_id", "text", "source", "n_chars",
-            T.tokens("text").alias("__w"),
-        )
-        z = _quality_logit_z(
-            T.word_count_from_tokens("__w"),
-            T.type_token_ratio_from_tokens("__w"),
-            T.punct_ratio("text"),
-            T.stopword_ratio_from_tokens("__w", "en"),
-        )
-        p_keep = F.round(
-            F.lit(1.0) / (F.lit(1.0) + F.exp(-z)) + F.lit(1e-9), 6
-        )
-        return t.select(
-            "source",
-            F.round(p_keep * 1000000).cast("long").alias("pi"),
-            (F.col("n_chars") >= 300).cast("long").alias("y"),
-        )
-
-    def _auc(d):
-        base = _scored_at(d).persist()
-        cdf = _bvc(base.select("source", "pi"), "pi", ("source",))
-        cpos = base.groupBy("source", F.col("pi").alias("__v")).agg(
-            F.sum("y").cast("long").alias("c_pos")
-        )
-        return cdf.join(cpos, ["source", "__v"]).groupBy("source").agg(
-            F.max("__cle").alias("n"),
-            F.sum("c_pos").alias("n_pos"),
-            F.sum(
-                F.col("c_pos") * (2 * F.col("__cle") - F.col("__c") + 1)
-            ).alias("two_r"),
-        )
-
-    def _kw(d):
-        base = d.select(
-            "event_type",
-            F.round(F.col("value") * 100).cast("long").alias("x"),
-        ).where(F.col("event_type").isNotNull())
-        cdf = _bvc(base.select("x"), "x")
-        cg = base.groupBy(F.col("x").alias("__v"), "event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("c_g")
-        )
-        return cdf.join(cg, "__v").groupBy("event_type").agg(
-            F.sum("c_g").alias("n_g"),
-            F.sum(
-                F.col("c_g") * (2 * F.col("__cle") - F.col("__c") + 1)
-            ).alias("two_r"),
-        )
-
-    def _kendall(d):
-        daily = d.groupBy(F.to_date("ts").alias("day")).agg(
-            F.sum((F.col("event_type") == "view").cast("long")).alias("x"),
-            F.sum(
-                F.when(F.col("event_type") == "purchase",
-                       F.round(F.col("value") * 100).cast("long"))
-                .otherwise(0)
-            ).alias("y"),
-        ).persist()
-        a, b = daily.alias("a"), daily.alias("b")
-        return a.join(b, F.col("a.day") < F.col("b.day")).agg(
-            F.count(F.lit(1)).alias("n0"),
-            F.sum(
-                ((F.col("a.x") - F.col("b.x"))
-                 * (F.col("a.y") - F.col("b.y")) > 0).cast("long")
-            ).alias("nc"),
-        )
-
-    def _zorder_ab(li):
-        from nyc_taxi_data_warehouse_spark.operators import zorder as _zo
-
-        bounds = li.agg(
-            F.min("l_partkey").alias("__xlo"),
-            F.max("l_partkey").alias("__xhi"),
-            F.min("l_suppkey").alias("__ylo"),
-            F.max("l_suppkey").alias("__yhi"),
-        )
-        g = li.crossJoin(F.broadcast(bounds)).select(
-            "l_partkey", "l_suppkey",
-            _zo.grid_expr("l_partkey", F.col("__xlo"), F.col("__xhi"), 8)
-            .alias("xg"),
-            _zo.grid_expr("l_suppkey", F.col("__ylo"), F.col("__yhi"), 8)
-            .alias("yg"),
-        )
-        z = g.select(
-            "l_partkey", "l_suppkey",
-            F.shiftright("xg", 2).alias("f_lin"),
-            F.shiftright(
-                _zo.interleave_expr(F.col("xg"), F.col("yg"), 8), 10
-            ).alias("f_z"),
-        )
-        return z.select(
-            F.expr("stack(2, 'linear', f_lin, 'zorder', f_z)"
-                   " AS (layout, file_id)"),
-            "l_partkey", "l_suppkey",
-        ).groupBy("layout", "file_id").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("l_partkey").alias("min_pk"),
-            F.max("l_partkey").alias("max_pk"),
-            F.min("l_suppkey").alias("min_sk"),
-            F.max("l_suppkey").alias("max_sk"),
-        )
-
-    def _fk(li):
-        ck = li.select(F.col("l_orderkey").alias("k"))
-        kd = ck.where(F.col("k").isNotNull()).groupBy("k").agg(
-            F.count(F.lit(1)).alias("rows")
-        )
-        parent = load_tables(spark, sf_dir)["orders"].select(
-            F.col("o_orderkey").alias("k")
-        ).distinct()
-        return kd.join(parent, "k", "left_anti").agg(
-            F.count(F.lit(1)).alias("orphan_keys"),
-            F.coalesce(F.sum("rows"), F.lit(0)).alias("orphan_rows"),
-        )
-
-    def _rtbf(d):
-        per_part = d.groupBy(F.to_date("ts").alias("part")).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum((F.pmod(F.col("user_id"), F.lit(97)) == 0).cast("long"))
-            .alias("n_del"),
-        )
-        return per_part.agg(
-            F.sum("n_rows").alias("total_rows"),
-            F.sum("n_del").alias("rows_to_delete"),
-            F.sum(F.when(F.col("n_del") > 0, F.col("n_rows")).otherwise(0))
-            .alias("rows_rewritten"),
-        )
-
-    def _pseudo(d):
-        return d.select(
-            "doc_id",
-            F.expr(
-                "CAST(size(filter(__w, t -> t IN ('customer','user','key',"
-                "'order'))) AS BIGINT)"
-            ).alias("n_replaced"),
-            F.md5(
-                F.expr(
-                    "concat_ws(' ', transform(__w, t -> CASE WHEN t IN"
-                    " ('customer','user','key','order')"
-                    " THEN concat('ENT_', substring(md5(t), 1, 8))"
-                    " ELSE t END))"
-                )
-            ).alias("pseudo_md5"),
-        ).select(F.sum("n_replaced"), F.count("pseudo_md5"))
-
-    def _ndcg(d):
-        tok = d.select("doc_id", T.tokens("text").alias("__w")).persist()
-        dl = tok.select("doc_id", F.size("__w").cast("long").alias("dl"))
-        terms = ["fast", "hash", "join", "merge", "query", "scan",
-                 "sort", "stream", "table", "window"]
-        tf = (
-            tok.select("doc_id", F.explode("__w").alias("term"))
-            .where(F.col("term").isin(*terms))
-            .groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-        )
-        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        stats = dl.agg(F.count(F.lit(1)).alias("n_docs"),
-                       F.avg("dl").alias("avgdl"))
-        contrib = (
-            F.log((F.col("n_docs") - F.col("df") + 0.5)
-                  / (F.col("df") + 0.5) + 1.0)
-            * (F.col("tf") * 2.2)
-            / (F.col("tf") + 1.2 * (0.25 + 0.75 * F.col("dl")
-                                    / F.col("avgdl")))
-        )
-        per_term = (
-            tf.join(F.broadcast(dfreq), "term").join(dl, "doc_id")
-            .crossJoin(F.broadcast(stats))
-            .select("doc_id", "term",
-                    F.round(contrib * 1e6).cast("long").alias("c_micro"))
-        )
-        queries = spark.createDataFrame(
-            [(1, "hash", "join"), (2, "table", "scan"), (3, "sort", "merge"),
-             (4, "stream", "window"), (5, "fast", "query")],
-            "qid int, t1 string, t2 string",
-        )
-        cand = per_term.join(
-            F.broadcast(queries),
-            (F.col("term") == F.col("t1")) | (F.col("term") == F.col("t2")),
-        ).groupBy("qid", "doc_id").agg(
-            F.sum("c_micro").alias("score_micro"),
-            F.count(F.lit(1)).alias("rel"),
-        )
-        from pyspark.sql import Window as W
-
-        w_shard = W.partitionBy(
-            "qid", F.pmod(F.col("doc_id"), F.lit(32))
-        ).orderBy(F.desc("score_micro"), F.asc("doc_id"))
-        surv = cand.withColumn("__r", F.row_number().over(w_shard)).where(
-            F.col("__r") <= 10
-        )
-        w_q = W.partitionBy("qid").orderBy(
-            F.desc("score_micro"), F.asc("doc_id")
-        )
-        return surv.withColumn("rank", F.row_number().over(w_q)).where(
-            F.col("rank") <= 10
-        ).groupBy("qid").agg(F.sum("rel"))
-
-    sixth_ops = {
-        "roc_auc": (_docs_table_at, _auc),
-        "kruskal_wallis": (lambda m: _events_at(spark, sf_dir, m), _kw),
-        "kendall_pairs": (lambda m: _events_at(spark, sf_dir, m), _kendall),
-        "zorder_effect": (_lineitem_at, _zorder_ab),
-        "fk_audit_edge": (_lineitem_at, _fk),
-        "rtbf_plan": (lambda m: _events_at(spark, sf_dir, m), _rtbf),
-        "pseudonymize": (
-            lambda m: _docs_at(spark, sf_dir, m).select(
-                "doc_id", T.tokens("text").alias("__w")
-            ),
-            _pseudo,
-        ),
-        "ndcg_topk": (lambda m: _docs_at(spark, sf_dir, m), _ndcg),
-    }
-
-    # round-10 wave (verdict r9 #2): the nine round-9 ops without a probe.
-    # Expected shapes — survival_km: per-user agg + day-grain curve
-    # (~linear corpus scan; user cardinality grows with the stream);
-    # kcore: one corpus aggregation to the zone-pair table, then a FIXED
-    # 8-round peel over the ≤40-node backbone (growth = the agg);
-    # theil_sen: daily agg is corpus-linear, the pair join is CALENDAR-
-    # bounded (the replicas jitter ts by seconds, so the day axis — and
-    # the pair mass — stays flat: growth should track the agg alone);
-    # pr_curve: ONE map-side 39-sum aggregate (the zero-extra-shuffle
-    # floor); lift_table: score-CDF work, distinct-lattice-bounded;
-    # vacuum_plan: day-grain metadata join (replicas shift dates a year
-    # apart so the metadata axis genuinely grows); dp_histogram /
-    # bloom_sizing: one corpus agg to cell/NDV tables (~linear);
-    # knn_classify: fold×train exhaustive scorer — the fold is 10% of
-    # the corpus, so growth is ~m² BY DESIGN (the documented recall
-    # anchor; the 100 TB serving path is IVF/PQ — q_ann_ivf's probe).
-    def _km(d):
-        per_user = (
-            d.where(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
-            .groupBy("user_id")
-            .agg(
-                F.min(F.when(F.col("event_type") == "view",
-                             F.to_date("ts"))).alias("fv"),
-                F.min(F.when(F.col("event_type") == "purchase",
-                             F.to_date("ts"))).alias("fb"),
-            )
-            .where(F.col("fv").isNotNull())
-        )
-        horizon = d.agg(F.max(F.to_date("ts")).alias("__h"))
-        dur = per_user.crossJoin(F.broadcast(horizon)).select(
-            F.when(F.col("fb") >= F.col("fv"), F.datediff("fb", "fv"))
-            .otherwise(F.datediff(F.col("__h"), F.col("fv")))
-            .cast("long")
-            .alias("t"),
-            (F.col("fb").isNotNull() & (F.col("fb") >= F.col("fv")))
-            .cast("long")
-            .alias("event"),
-        )
-        per_t = dur.groupBy("t").agg(
-            F.count(F.lit(1)).cast("long").alias("n_at"),
-            F.sum("event").cast("long").alias("d"),
-        )
-        w = W9.orderBy("t").rowsBetween(W9.unboundedPreceding, 0)
-        return per_t.select("t", "d", F.sum("n_at").over(w).alias("cum"))
-
-    def _kcore_probe(d):
-        pz = (F.col("user_id") * 17 + F.col("event_id")) % 40 + 1
-        dz = (
-            F.col("user_id") * 31 + F.floor(F.col("value")).cast("long")
-        ) % 40 + 1
-        cnt = (
-            d.select(F.least(pz, dz).alias("a"), F.greatest(pz, dz).alias("b"))
-            .where(F.col("a") != F.col("b"))
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        )
-        tot = cnt.agg(F.sum("cnt").alias("__tc"), F.count(F.lit(1)).alias("__ne"))
-        e = (
-            cnt.crossJoin(F.broadcast(tot))
-            .where(F.col("cnt") * F.col("__ne") > F.col("__tc"))
-            .select("a", "b")
-        )
-        und = e.select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        ).distinct()
-        both = und.unionByName(
-            und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).localCheckpoint()
-        nodes = both.select(F.col("a").alias("node")).distinct()
-        for _ in range(_qe._KCORE_ROUNDS):
-            deg = (
-                both.join(F.broadcast(nodes.select(F.col("node").alias("a"))), "a")
-                .join(F.broadcast(nodes.select(F.col("node").alias("b"))), "b")
-                .groupBy("a")
-                .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-            )
-            nodes = deg.where(F.col("deg") >= _qe._KCORE_K).select(
-                F.col("a").alias("node")
-            ).localCheckpoint()
-        return (
-            both.join(F.broadcast(nodes.select(F.col("node").alias("a"))), "a")
-            .join(F.broadcast(nodes.select(F.col("node").alias("b"))), "b")
-            .groupBy("a")
-            .agg(F.count(F.lit(1)).alias("core_degree"))
-        )
-
-    def _theil(d):
-        daily = (
-            d.groupBy(F.to_date("ts").alias("day"))
-            .agg(
-                F.sum(
-                    F.when(F.col("event_type") == "purchase",
-                           F.round(F.col("value") * 100).cast("long"))
-                    .otherwise(0)
-                ).alias("y")
-            )
-            .select(
-                F.datediff(F.col("day"), F.lit("1970-01-01")).cast("long")
-                .alias("t"),
-                "y",
-            )
-            .persist()
-        )
-        a, b = daily.alias("a"), daily.alias("b")
-        slopes = a.join(b, F.col("a.t") < F.col("b.t")).select(
-            F.round(
-                (F.col("b.y") - F.col("a.y"))
-                / (F.col("b.t") - F.col("a.t")).cast("double")
-                + F.lit(1e-9),
-                9,
-            ).alias("s")
-        ).persist()
-        np_ = slopes.agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-        scdf = _bvc(slopes, "s").crossJoin(F.broadcast(np_))
-        return scdf.where(2 * F.col("__cle") >= F.col("n_pairs")).agg(
-            F.min("__v").alias("slope")
-        )
-
-    def _pr(d):
-        base = _scored_at(d)
-        aggs = [F.sum("y").cast("long").alias("n_pos")]
-        for i in _qe._PR_STEPS:
-            t = i * 50000
-            aggs.append(
-                F.sum(F.when(F.col("pi") >= t, F.col("y")).otherwise(0))
-                .alias(f"tp_{i}")
-            )
-            aggs.append(
-                F.sum(F.when(F.col("pi") >= t, 1 - F.col("y")).otherwise(0))
-                .alias(f"fp_{i}")
-            )
-        return base.agg(*aggs)
-
-    def _lift(d):
-        base = _scored_at(d).persist()
-        cdf = _bvc(base.select("pi"), "pi")
-        cpos = base.groupBy(F.col("pi").alias("__v")).agg(
-            F.sum("y").cast("long").alias("c_pos")
-        )
-        tot = base.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("y").cast("long").alias("n_pos"),
-        )
-        per_v = cdf.join(cpos, "__v").crossJoin(F.broadcast(tot))
-        return per_v.groupBy(
-            F.expr("CAST(((n - __cle) * 10) div n AS INT)").alias("decile")
-        ).agg(
-            F.sum("__c").cast("long").alias("n_d"),
-            F.sum("c_pos").cast("long").alias("pos_d"),
-        )
-
-    def _orders_at(m):
-        o = load_tables(spark, sf_dir)["orders"].select(
-            "o_orderkey", "o_orderdate"
-        )
-        if m > 1:
-            o = o.select(
-                F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("rep"),
-                "o_orderkey", "o_orderdate",
-            ).select(
-                (F.col("o_orderkey") * m + F.col("rep")).alias("o_orderkey"),
-                F.date_add(
-                    F.col("o_orderdate").cast("date"), F.col("rep") * 366
-                ).alias("o_orderdate"),
-            )
-        return o.repartition(spark.sparkContext.defaultParallelism)
-
-    def _vacuum(o):
-        files = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-            F.count(F.lit(1)).cast("long").alias("sz")
-        )
-        snaps = files.select(
-            F.date_trunc("week", "day").cast("date").alias("snap_day")
-        ).distinct()
-        head = files.agg(F.max("day").alias("__head"))
-        refs = files.join(
-            snaps,
-            (F.col("snap_day") >= F.col("day"))
-            & (F.col("snap_day") < F.date_add(F.col("day"), 21)),
-            "left",
-        )
-        per_file = refs.groupBy("day", "sz").agg(
-            F.count("snap_day").cast("long").alias("n_refs"),
-            F.max("snap_day").alias("last_ref"),
-        )
-        return per_file.crossJoin(F.broadcast(head)).select(
-            "day", "sz", "n_refs", "last_ref",
-            ((F.col("n_refs") > 0)
-             & (F.col("last_ref") < F.date_sub(F.col("__head"), 28)))
-            .cast("int").alias("deletable"),
-        )
-
-    def _dp(d):
-        cells = d.where(F.col("event_type").isNotNull()).groupBy(
-            "event_type"
-        ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-        hv = F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("dpn#"), F.col("event_type"))), 1, 8
-            ), 16, 10,
-        ).cast("long")
-        hv2 = F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("dps#"), F.col("event_type"))), 1, 8
-            ), 16, 10,
-        ).cast("long")
-        noised = cells.select(
-            "event_type", "n", hv.alias("hv"), hv2.alias("hv2")
-        ).select("event_type", "n", F.expr(_qe._DP_NOISE).alias("noise"))
-        return noised.select(
-            "event_type", "n",
-            F.greatest(F.lit(0), F.col("n") + F.col("noise")).alias("noisy_n"),
-        )
-
-    def _bloomsz(d):
-        ndv = d.agg(
-            F.count_distinct("user_id").cast("long").alias("user_id"),
-            F.count_distinct("event_type").cast("long").alias("event_type"),
-            F.count_distinct(F.to_date("ts")).cast("long").alias("day"),
-        )
-        cols = ndv.select(
-            F.expr(
-                "stack(3, 'user_id', user_id, 'event_type', event_type,"
-                " 'day', day) AS (key_col, n)"
-            )
-        )
-        grid = spark.createDataFrame(
-            [(1, 0.01), (2, 0.001)], "fpp_id int, p double"
-        )
-        m_txt = (
-            "CAST(ceil(-(CAST(n AS DOUBLE)) * ln(p) / (ln(2.0) * ln(2.0)))"
-            " AS BIGINT)"
-        )
-        return cols.crossJoin(F.broadcast(grid)).select(
-            "key_col", "n", "fpp_id", "p", F.expr(m_txt).alias("m_bits")
-        )
-
-    def _knnc(d):
-        from nyc_taxi_data_warehouse_spark.operators.similarity import (
-            brute_force_knn,
-        )
-
-        fold = d.where(F.pmod(F.col("vec_id"), F.lit(_qe._KNN_FOLD)) == 0)
-        train = d.where(F.pmod(F.col("vec_id"), F.lit(_qe._KNN_FOLD)) != 0)
-        knn = brute_force_knn(fold, train, k=_qe._KNN_K)
-        votes = knn.groupBy(
-            "query_id",
-            F.pmod(F.col("neighbor_id"), F.lit(_qe._KNN_CLASSES))
-            .alias("pred"),
-        ).agg(F.count(F.lit(1)).alias("cnt"))
-        w = W9.partitionBy("query_id").orderBy(F.desc("cnt"), F.asc("pred"))
-        picked = votes.withColumn("__r", F.row_number().over(w)).where(
-            F.col("__r") == 1
-        )
-        return picked.groupBy(
-            F.pmod(F.col("query_id"), F.lit(_qe._KNN_CLASSES))
-            .alias("true_label")
-        ).agg(F.count(F.lit(1)).alias("n_queries"))
-
-    seventh_ops = {
-        "survival_km": (lambda m: _events_at(spark, sf_dir, m), _km),
-        "kcore": (lambda m: _events_at(spark, sf_dir, m), _kcore_probe),
-        "theil_sen": (lambda m: _events_at(spark, sf_dir, m), _theil),
-        "pr_curve": (_docs_table_at, _pr),
-        "lift_table": (_docs_table_at, _lift),
-        "vacuum_plan": (_orders_at, _vacuum),
-        "dp_histogram": (lambda m: _events_at(spark, sf_dir, m), _dp),
-        "bloom_sizing": (lambda m: _events_at(spark, sf_dir, m), _bloomsz),
-        "knn_classify": (lambda m: _emb_at(spark, sf_dir, m), _knnc),
-    }
-
-    # round-10 wave: the seven round-10 queries.  Expected shapes —
-    # asof_multi: union-sort-ffill windows PARTITIONED by series (4
-    # cities), work ~linear in rows per series; priority_sample: map-side
-    # key + two-stage top-k (~linear scan, fixed k); target_encode: one
-    # source-grain agg broadcast back (~linear); isotonic: corpus scan to
-    # ≤41 bins then bin-grain metadata (growth = the scan);
-    # interpolate: hourly agg is corpus-linear, spine/grid fixed by the
-    # calendar (replicas jitter seconds); sax: daily agg linear, segment
-    # work fixed; mmr_rerank: BM25 candidate generation corpus-linear,
-    # greedy rounds candidate-grain fixed.
-    def _asof_multi(d):
-        obs = d.where(F.col("event_type").isin("view", "click")).select(
-            (F.pmod(F.col("user_id"), F.lit(4))).alias("city"),
-            F.col("ts").alias("__ts"),
-            F.lit(1).alias("__is_obs"),
-            (F.col("value") * 0.6 - 40.0).alias("__v"),
-        )
-        prb = d.where(F.col("event_type") == "purchase").select(
-            (F.pmod(F.col("event_id"), F.lit(4))).alias("city"),
-            F.col("ts").alias("__ts"),
-            F.lit(0).alias("__is_obs"),
-            F.lit(None).cast("double").alias("__v"),
-        )
-        u = obs.unionByName(prb)
-        w = (
-            W9.partitionBy("city")
-            .orderBy(F.asc("__ts"), F.desc("__is_obs"))
-            .rowsBetween(W9.unboundedPreceding, 0)
-        )
-        return (
-            u.select(
-                "city", "__ts", "__is_obs",
-                F.last("__v", ignorenulls=True).over(w).alias("m"),
-            )
-            .where(F.col("__is_obs") == 0)
-            .groupBy("city")
-            .agg(F.count(F.lit(1)).alias("n"), F.avg("m").alias("avg_m"))
-        )
-
-    def _priority(d):
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("es#"))),
-                1, 8,
-            ), 16, 10,
-        ).cast("long")
-        keyed = d.select(
-            "doc_id",
-            F.length("text").alias("w"),
-        ).where(F.col("w") > 0).select(
-            "doc_id",
-            (F.log((h + F.lit(1)) / F.lit(4294967296.0)) / F.col("w"))
-            .alias("key"),
-        )
-        ws = W9.partitionBy(F.pmod(F.col("doc_id"), F.lit(32))).orderBy(
-            F.desc("key"), F.asc("doc_id")
-        )
-        surv = keyed.withColumn("__r", F.row_number().over(ws)).where(
-            F.col("__r") <= 100
-        )
-        wa = W9.orderBy(F.desc("key"), F.asc("doc_id"))
-        return surv.withColumn("rank", F.row_number().over(wa)).where(
-            F.col("rank") <= 100
-        )
-
-    def _tenc(d):
-        base = d.select(
-            "doc_id", "source", (F.col("n_chars") >= 300).cast("long").alias("y")
-        )
-        g = base.groupBy("source").agg(
-            F.count(F.lit(1)).cast("long").alias("n_g"),
-            F.sum("y").cast("long").alias("sy_g"),
-        )
-        prior = base.agg(
-            (F.sum("y") / F.count(F.lit(1)).cast("double")).alias("prior")
-        )
-        return base.join(F.broadcast(g), "source").crossJoin(
-            F.broadcast(prior)
-        ).select(
-            "doc_id",
-            F.expr(
-                "CASE WHEN n_g <= 1 THEN NULL"
-                " ELSE (sy_g - y) / CAST(n_g - 1 AS DOUBLE) END"
-            ).alias("te"),
-        )
-
-    def _iso(d):
-        base = _scored_at(d)
-        bins = base.groupBy(
-            F.expr("CAST(pi div 25000 AS BIGINT)").alias("b")
-        ).agg(
-            F.count(F.lit(1)).cast("long").alias("n_b"),
-            F.sum("y").cast("long").alias("sy_b"),
-        )
-        w = W9.orderBy("b").rowsBetween(W9.unboundedPreceding, 0)
-        cum = bins.select(
-            "b", "n_b", "sy_b",
-            F.sum("n_b").over(w).cast("long").alias("cn"),
-            F.sum("sy_b").over(w).cast("long").alias("cy"),
-        ).persist()
-        i, j = cum.alias("i"), cum.alias("j")
-        pairs = i.join(j, F.col("i.b") <= F.col("j.b")).select(
-            F.col("i.b").alias("lo"), F.col("j.b").alias("hi"),
-            ((F.col("j.cy") - F.col("i.cy") + F.col("i.sy_b"))
-             / (F.col("j.cn") - F.col("i.cn") + F.col("i.n_b"))
-             .cast("double")).alias("a"),
-        )
-        ks = cum.select(F.col("b").alias("k"))
-        t1 = pairs.join(
-            ks, (F.col("lo") <= F.col("k")) & (F.col("k") <= F.col("hi"))
-        ).groupBy("lo", "k").agg(F.min("a").alias("m"))
-        return t1.groupBy("k").agg(F.max("m").alias("iso"))
-
-    def _interp(d):
-        from nyc_taxi_data_warehouse_spark.operators.timeseries import (
-            resample_interpolate,
-        )
-
-        w = d.where(F.col("event_type").isin("view", "click")).select(
-            (F.pmod(F.col("user_id"), F.lit(4))).cast("string").alias("city"),
-            F.col("ts").alias("observed_at"),
-            (F.col("value") * 0.6 - 40.0).alias("temp_f"),
-        )
-        return resample_interpolate(
-            w, "observed_at", ["city"], "temp_f"
-        ).groupBy("city").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg("temp_f_interp").alias("avg_t"),
-        )
-
-    def _sax(d):
-        daily = d.groupBy(F.to_date("ts").alias("day")).agg(
-            F.sum(
-                F.when(F.col("event_type") == "purchase",
-                       F.round(F.col("value") * 100).cast("long"))
-                .otherwise(0)
-            ).cast("long").alias("y")
-        )
-        d0 = daily.agg(F.min("day").alias("d0"))
-        seg = daily.crossJoin(F.broadcast(d0)).select(
-            F.expr("CAST(datediff(day, d0) div 8 AS BIGINT)").alias("seg"),
-            "y",
-        )
-        tot = seg.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("y").cast("long").alias("sy"),
-            F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        )
-        return seg.groupBy("seg").agg(
-            F.count(F.lit(1)).alias("n_days"), F.sum("y").alias("sy_seg")
-        ).crossJoin(F.broadcast(tot))
-
-    def _mmr(d):
-        from nyc_taxi_data_warehouse_spark import queries_eval as qe2
-
-        tok = d.select("doc_id", T.tokens("text").alias("__w")).persist()
-        dl = tok.select("doc_id", F.size("__w").cast("long").alias("dl"))
-        terms = sorted({t for _, a, b in qe2._IR_QUERIES for t in (a, b)})
-        tf = (
-            tok.select("doc_id", F.explode("__w").alias("term"))
-            .where(F.col("term").isin(*terms))
-            .groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-        )
-        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        stats = dl.agg(F.count(F.lit(1)).alias("n_docs"),
-                       F.avg("dl").alias("avgdl"))
-        contrib = (
-            F.log((F.col("n_docs") - F.col("df") + 0.5)
-                  / (F.col("df") + 0.5) + 1.0)
-            * (F.col("tf") * 2.2)
-            / (F.col("tf") + 1.2 * (0.25 + 0.75 * F.col("dl")
-                                    / F.col("avgdl")))
-        )
-        per_term = (
-            tf.join(F.broadcast(dfreq), "term").join(dl, "doc_id")
-            .crossJoin(F.broadcast(stats))
-            .select("doc_id", "term",
-                    F.round(contrib * 1e6).cast("long").alias("c"))
-        )
-        qrows = spark.createDataFrame(
-            list(qe2._IR_QUERIES), "qid int, t1 string, t2 string"
-        )
-        cand = per_term.join(
-            F.broadcast(qrows),
-            (F.col("term") == F.col("t1")) | (F.col("term") == F.col("t2")),
-        ).groupBy("qid", "doc_id").agg(F.sum("c").alias("s"))
-        ws = W9.partitionBy("qid", F.pmod(F.col("doc_id"), F.lit(32))).orderBy(
-            F.desc("s"), F.asc("doc_id")
-        )
-        surv = cand.withColumn("__r", F.row_number().over(ws)).where(
-            F.col("__r") <= 15
-        )
-        wq = W9.partitionBy("qid").orderBy(F.desc("s"), F.asc("doc_id"))
-        return surv.withColumn("rk", F.row_number().over(wq)).where(
-            F.col("rk") <= 15
-        ).groupBy("qid").agg(F.count(F.lit(1)).alias("n"))
-
-    def _cv(d):
-        base = _scored_at(d).select(
-            F.pmod(
-                F.conv(
-                    F.substring(F.md5(F.concat(F.col("pi").cast("string"),
-                                               F.lit("cv"))), 1, 8),
-                    16, 10,
-                ).cast("long"),
-                F.lit(5),
-            ).alias("fold"),
-            "pi",
-            "y",
-        ).persist()  # the query's own persist: 3 consumers of the scored base
-        cdf = _bvc(base.select("fold", "pi"), "pi", ("fold",))
-        cpos = base.groupBy("fold", F.col("pi").alias("__v")).agg(
-            F.sum("y").cast("long").alias("c_pos")
-        )
-        return cdf.join(cpos, ["fold", "__v"]).groupBy("fold").agg(
-            F.max("__cle").alias("n"),
-            F.sum(
-                F.col("c_pos") * (2 * F.col("__cle") - F.col("__c") + 1)
-            ).alias("two_r"),
-        )
-
-    def _qnorm(d):
-        docs = d.select("doc_id", "source", "n_chars")
-        scdf = _bvc(docs.select("source", "n_chars"), "n_chars", ("source",))
-        ng = scdf.groupBy("source").agg(F.max("__cle").alias("n_g"))
-        pcts = scdf.join(F.broadcast(ng), "source").select(
-            F.col("source").alias("__src"),
-            F.col("__v").alias("__val"),
-            F.expr(
-                "CAST(least(99, (100 * (2 * __cle - __c + 1))"
-                " div (2 * n_g)) AS INT)"
-            ).alias("pct"),
-        )
-        gcdf = _bvc(docs.select("n_chars"), "n_chars")
-        ntot = docs.agg(F.count(F.lit(1)).cast("long").alias("N"))
-        grid = spark.range(0, 100).select(F.col("id").cast("int").alias("p"))
-        ref = (
-            gcdf.crossJoin(F.broadcast(ntot))
-            .crossJoin(F.broadcast(grid))
-            .where(200 * F.col("__cle") >= (2 * F.col("p") + 1) * F.col("N"))
-            .groupBy("p")
-            .agg(F.min("__v").alias("v_ref"))
-        )
-        return (
-            docs.join(
-                pcts,
-                (F.col("source") == F.col("__src"))
-                & (F.col("n_chars") == F.col("__val")),
-            )
-            .join(F.broadcast(ref), F.col("pct") == F.col("p"))
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("n"), F.avg("v_ref").alias("a"))
-        )
-
-    def _binseg(d):
-        daily = d.groupBy(F.to_date("ts").alias("day")).agg(
-            F.sum(
-                F.when(F.col("event_type") == "purchase",
-                       F.round(F.col("value") * 100).cast("long"))
-                .otherwise(0)
-            ).cast("long").alias("y")
-        )
-        w = W9.orderBy("day").rowsBetween(W9.unboundedPreceding, 0)
-        idx = daily.select(
-            "day", "y",
-            F.count(F.lit(1)).over(w).cast("long").alias("k"),
-            F.sum("y").over(w).cast("long").alias("cy"),
-            F.sum(F.col("y") * F.col("y")).over(w).cast("long").alias("cyy"),
-        )
-        tot = daily.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("y").cast("long").alias("sy"),
-            F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        )
-        cost = (
-            "(cyy - (CAST(cy AS DOUBLE) * cy) / k)"
-            " + ((syy - cyy) - (CAST(sy - cy AS DOUBLE) * (sy - cy))"
-            " / (n - k))"
-        )
-        sp = idx.crossJoin(F.broadcast(tot)).where(F.col("k") < F.col("n"))
-        wb = W9.orderBy(F.expr(cost).asc(), F.col("k").asc())
-        return sp.withColumn("__r", F.row_number().over(wb)).where(
-            F.col("__r") == 1
-        )
-
-    def _simpson(d):
-        daily = d.where(F.col("ts").isNotNull()).groupBy(
-            "event_type", F.to_date("ts").alias("day")
-        ).agg(F.count(F.lit(1)).cast("long").alias("y"))
-        d0 = daily.agg(F.min("day").alias("d0"))
-        xy = daily.crossJoin(F.broadcast(d0)).select(
-            "event_type",
-            F.datediff("day", "d0").cast("long").alias("x"),
-            "y",
-        ).persist()
-        g = xy.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("x").alias("sx"),
-            F.sum("y").alias("sy"),
-            F.sum(F.col("x") * F.col("y")).alias("sxy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        )
-        p = xy.groupBy("x").agg(F.sum("y").alias("y")).agg(
-            F.count(F.lit(1)).alias("pn"), F.sum("x").alias("psx"),
-            F.sum("y").alias("psy"),
-            F.sum(F.col("x") * F.col("y")).alias("psxy"),
-            F.sum(F.col("x") * F.col("x")).alias("psxx"),
-        )
-        return g.crossJoin(F.broadcast(p))
-
-    eighth_ops = {
-        "changepoint_binseg": (lambda m: _events_at(spark, sf_dir, m), _binseg),
-        "simpson_trends": (lambda m: _events_at(spark, sf_dir, m), _simpson),
-        "cv_auc": (_docs_table_at, _cv),
-        "quantile_normalize": (_docs_table_at, _qnorm),
-        "asof_multi": (lambda m: _events_at(spark, sf_dir, m), _asof_multi),
-        "priority_sample": (lambda m: _docs_at(spark, sf_dir, m), _priority),
-        "target_encode": (_docs_table_at, _tenc),
-        "isotonic_calibration": (_docs_table_at, _iso),
-        "interpolate": (lambda m: _events_at(spark, sf_dir, m), _interp),
-        "sax_symbols": (lambda m: _events_at(spark, sf_dir, m), _sax),
-        "mmr_candidates": (lambda m: _docs_at(spark, sf_dir, m), _mmr),
-    }
-
-    # round-11 wave probes: incremental near-dup is banded/bucketed like
-    # the corpus-wide LSH (cost = co-bucketed cross pairs); CDC apply and
-    # ANOVA are one key-hash exchange / one group agg; the concurrency
-    # sweep is the bucketed-cumsum primitive over 2 boundaries/row; RAKE
-    # is doc-grain windows + a vocab-grain join back; clustering depth is
-    # calendar-metadata after one day-grain agg; ANN serve/append run
-    # against a saved index built UNTIMED in the mk() phase (serving =
-    # cell-pruned join over codes; append = two narrow encode maps +
-    # insert-only commit, history untouched)
-    from pyspark.sql import Window as W11
-
-    from nyc_taxi_data_warehouse_spark.operators import pq as pq11
-    from nyc_taxi_data_warehouse_spark.operators.merge import apply_changelog
-    from nyc_taxi_data_warehouse_spark.operators.sampling import (
-        bucketed_value_cumsum as _bvc11,
-    )
-
-    def _incr_neardup(d):
-        hist = d.where(F.col("doc_id") % 3 != 0).select("doc_id", "text")
-        batch = d.where(F.col("doc_id") % 3 == 0).select("doc_id", "text")
-        store = dedup.signature_records(hist)
-        report, _merged = dedup.incremental_neardup(batch, store)
-        return report
-
-    def _cdc_apply(d):
-        log = d.select(
-            "user_id", "ts", "event_id",
-            (F.col("event_type") == "error").alias("is_delete"), "value",
-        ).withColumn(
-            "n_ops",
-            F.count(F.lit(1)).over(W11.partitionBy("user_id")).cast("long"),
-        )
-        return apply_changelog(
-            log, key=["user_id"], order_by=["ts", "event_id"],
-            delete_col="is_delete",
-        )
-
-    def _anova(d):
-        base = d.where(
-            F.col("value").isNotNull() & F.col("event_type").isNotNull()
-        ).select(
-            "event_type", F.round(F.col("value") * 100).cast("long").alias("x")
-        )
-        return base.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n_g"),
-            F.sum("x").cast("long").alias("s_g"),
-            F.sum(F.col("x") * F.col("x")).cast("long").alias("q_g"),
-        )
-
-    def _concurrency(d):
-        # the probe feed's ts may surface as TIMESTAMP_NTZ (raw parquet
-        # path); unix_micros needs TIMESTAMP — normalize first
-        d = d.withColumn("ts", F.col("ts").cast("timestamp"))
-        t = d.where(F.col("ts").isNotNull()).select(
-            "ts",
-            F.timestamp_add(
-                "MINUTE",
-                (F.floor("value").cast("long") % 200 + 1).cast("int"),
-                "ts",
-            ).alias("te"),
-        )
-        b = t.select(
-            (F.unix_micros("ts") * 2 + 1).alias("enc"),
-            F.lit(1).alias("delta"),
-        ).unionByName(
-            t.select(
-                (F.unix_micros("te") * 2).alias("enc"),
-                F.lit(-1).alias("delta"),
-            )
-        )
-        run = _bvc11(b, "enc", weight_col="delta")
-        return run.select(
-            F.to_date(F.timestamp_micros(F.expr("__v div 2"))).alias("day"),
-            F.col("__cle").alias("r"),
-        ).groupBy("day").agg(F.max("r").cast("long").alias("max_concurrent"))
-
-    def _rake(d):
-        words = d.select("doc_id", T.tokens("text").alias("ws")).select(
-            "doc_id", F.posexplode("ws").alias("pos", "word")
-        )
-        stop = F.col("word").isin("a", "the")
-        ph = words.select(
-            "doc_id", "pos", "word", stop.alias("stop"),
-            F.sum(stop.cast("int"))
-            .over(W11.partitionBy("doc_id").orderBy("pos"))
-            .alias("pid"),
-        )
-        members = ph.where(~F.col("stop")).persist()
-        plen = members.groupBy("doc_id", "pid").agg(
-            F.count(F.lit(1)).cast("long").alias("len")
-        )
-        wscore = (
-            members.join(plen, ["doc_id", "pid"])
-            .groupBy("word")
-            .agg(
-                F.sum("len").cast("long").alias("deg"),
-                F.count(F.lit(1)).cast("long").alias("freq"),
-            )
-            .select(
-                "word",
-                F.expr("CAST(round(deg * 1000000.0 / freq) AS BIGINT)")
-                .alias("score_micro"),
-            )
-        )
-        phr = members.join(F.broadcast(wscore), "word").groupBy(
-            "doc_id", "pid"
-        ).agg(F.sum("score_micro").cast("long").alias("sm"))
-        return phr.orderBy(F.desc("sm"), "doc_id", "pid").limit(10)
-
-    def _cdepth(d):
-        files = d.groupBy(F.to_date("ts").alias("day")).agg(
-            F.min("user_id").cast("long").alias("min_k"),
-            F.max("user_id").cast("long").alias("max_k"),
-        )
-        a, b = files.alias("a"), files.alias("b")
-        return a.join(
-            b,
-            (F.col("a.min_k") <= F.col("b.max_k"))
-            & (F.col("b.min_k") <= F.col("a.max_k")),
-        ).groupBy(F.col("a.day").alias("day")).agg(
-            F.count(F.lit(1)).cast("long").alias("depth")
-        )
-
-    import uuid as _uuid11
-
-    def _ann_store_at(m, twogen: bool):
-        """UNTIMED build+save of the persisted index over m× embeddings;
-        returns (path, queries, corpus) for the timed serve/append op."""
-        e = _emb_at(spark, sf_dir, m)
-        path = os.path.join(
-            "/tmp", f"probe_ann_{m}_{_uuid11.uuid4().hex[:8]}"
-        )
-        base = e.where(F.col("vec_id") % 10 != 0) if twogen else e
-        idx = pq11.ivfpq_build(base, k_cells=8, m=4, k_codes=4,
-                               coarse_iter=2, fine_iter=1, quant=1000)
-        pq11.ivfpq_save(spark, idx, path)
-        return path, e.where(F.col("vec_id") % 50 == 0), e
-
-    def _ann_serve(t):
-        path, qs, corpus = t
-        idx = pq11.ivfpq_load(spark, path)
-        return pq11.ivfpq_search(
-            qs, corpus, k_cells=8, m=4, k_codes=4, k=5, quant=1000,
-            index=idx,
-        )
-
-    def _ann_append(t):
-        path, _qs, corpus = t
-        ver = pq11.ivfpq_append(
-            spark, path, corpus.where(F.col("vec_id") % 10 == 0)
-        )
-        return pq11.ivfpq_load(spark, path, version=ver).codes
-
-    def _wfunnel(d):
-        d = d.withColumn("ts", F.col("ts").cast("timestamp"))
-        v = d.where(F.col("event_type") == "view").groupBy("user_id").agg(
-            F.min("ts").alias("t0")
-        )
-        c = (
-            d.where(F.col("event_type") == "click")
-            .join(v, "user_id")
-            .where(F.col("ts") > F.col("t0"))
-            .groupBy("user_id")
-            .agg(F.min("ts").alias("t1"))
-        )
-        p = (
-            d.where(F.col("event_type") == "purchase")
-            .join(c, "user_id")
-            .where(F.col("ts") > F.col("t1"))
-            .groupBy("user_id")
-            .agg(F.min("ts").alias("t2"))
-        )
-        base = v.join(c, "user_id", "left").join(p, "user_id", "left")
-        lvl2 = F.col("t1") <= F.timestamp_add("HOUR", F.lit(24), F.col("t0"))
-        lvl3 = lvl2 & (
-            F.col("t2") <= F.timestamp_add("HOUR", F.lit(24), F.col("t0"))
-        )
-        return base.agg(
-            F.count(F.lit(1)).alias("n1"),
-            F.sum(F.when(lvl2, 1).otherwise(0)).alias("n2"),
-            F.sum(F.when(lvl3, 1).otherwise(0)).alias("n3"),
-        )
-
-    def _lpa(d):
-        d = d.withColumn("ts", F.col("ts").cast("timestamp"))
-        # zone analog: bucket users into 64 pseudo-zones; the graph stays
-        # domain-bounded while the edge-count aggregation scans mult× rows
-        pz = d.select(
-            (F.col("user_id") % 64).alias("za"),
-            (F.col("event_id") % 64).alias("zb"),
-        ).where(F.col("za") != F.col("zb"))
-        cnt = pz.select(
-            F.least("za", "zb").alias("a"), F.greatest("za", "zb").alias("b")
-        ).groupBy("a", "b").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        und = cnt.orderBy(F.desc("cnt"), "a", "b").limit(40).select("a", "b")
-        both = und.unionByName(
-            und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).localCheckpoint()
-        labels = both.select(F.col("a").alias("node")).distinct().select(
-            "node", F.col("node").alias("lab")
-        ).localCheckpoint()
-        w = W11.partitionBy("node").orderBy(F.desc("c"), F.asc("lab"))
-        for _ in range(4):
-            labels = (
-                both.join(
-                    labels.select(F.col("node").alias("b"), "lab"), "b"
-                )
-                .groupBy(F.col("a").alias("node"), "lab")
-                .agg(F.count(F.lit(1)).cast("long").alias("c"))
-                .withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .select("node", "lab")
-                .localCheckpoint()
-            )
-        return labels.groupBy("lab").agg(F.count(F.lit(1)).alias("n"))
-
-    def _mk_sig_store(m):
-        """The STORE-scaling axis (verdict r11 item 6): materialize an
-        m×-grown signature store to parquet UNTIMED (production pays the
-        signature pass at each past ingest, not at today's), so the
-        timed op measures exactly what a daily ingest pays — reading
-        history's kilobyte-scale signatures + the capped cross band
-        join — with the BATCH fixed at 1×."""
-        import os as _o
-
-        from nyc_taxi_data_warehouse_spark.util import session_tmpdir
-
-        p = _o.path.join(session_tmpdir("probe_sigstore"), f"m{m}")
-        dedup.signature_records(
-            _docs_at(spark, sf_dir, m)
-        ).write.mode("overwrite").parquet(p)
-        return spark.read.parquet(p)
-
-    def _incr_neardup_store(store):
-        batch = (
-            load_tables(spark, sf_dir)["documents"]
-            .select((F.col("doc_id") + 10_000_000).alias("doc_id"), "text")
-        )
-        report, _merged = dedup.incremental_neardup(batch, store)
-        return report
-
-
-    def _mk_bucketed_store(m):
-        """Bucketed-layout generation of the store-scaling axis
-        (verdict r12 item 3 follow-through): initialize the CATALOG
-        bucketed store from an m×-grown corpus UNTIMED, so the timed op
-        is exactly a daily ingest against m× history — whose plan has
-        ZERO store-side Exchange (sigs clustered by content_hash, bands
-        by (band, bh)); only the fixed 1× batch shuffles."""
-        import shutil as _sh
-
-        name = f"probe_ndb_m{m}"
-        wh = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        ).removeprefix("file:")
-        for t in dedup.bucketed_store_tables(name):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            _sh.rmtree(f"{wh}/{t}", ignore_errors=True)
-        dedup.bucketed_store_ingest(
-            spark, name, _docs_at(spark, sf_dir, m), buckets=8
-        )
-        return name
-
-    def _bucketed_ingest(name):
-        batch = (
-            load_tables(spark, sf_dir)["documents"]
-            .select((F.col("doc_id") + 20_000_000).alias("doc_id"), "text")
-        )
-        return dedup.bucketed_store_ingest(spark, name, batch, buckets=8)
-
-    ninth_ops = {
-        "incremental_neardup": (
-            lambda m: _docs_at(spark, sf_dir, m), _incr_neardup,
-        ),
-        "incremental_neardup_store": (_mk_sig_store, _incr_neardup_store),
-        "window_funnel": (lambda m: _events_at(spark, sf_dir, m), _wfunnel),
-        "label_propagation": (lambda m: _events_at(spark, sf_dir, m), _lpa),
-        # near-dup-aware split = the CC pipeline (probed separately as
-        # dedup_cluster) + a map-side cluster-hash split + two
-        # cluster-grain rollups — probed end-to-end for the record
-        "cluster_split": (
-            lambda m: _docs_at(spark, sf_dir, m),
-            lambda d: (lambda cl: __import__(
-                "nyc_taxi_data_warehouse_spark.operators.sampling",
-                fromlist=["train_val_test_split"],
-            ).train_val_test_split(cl, "cluster_id", salt="clsp")
-             .groupBy("split").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct("cluster_id").alias("nc"),
-            ))(dedup.connected_components(
-                dedup.lsh_candidate_pairs(dedup.lsh_bands(
-                    dedup.minhash_signatures(
-                        dedup.shingle_rows(d), num_hashes=8
-                    ).persist(), num_hashes=8)),
-                d.select("doc_id"),
-            )),
-        ),
-        "cdc_apply": (lambda m: _events_at(spark, sf_dir, m), _cdc_apply),
-        "anova_f": (lambda m: _events_at(spark, sf_dir, m), _anova),
-        "concurrency": (
-            lambda m: _events_at(spark, sf_dir, m), _concurrency,
-        ),
-        "rake_keywords": (lambda m: _docs_at(spark, sf_dir, m), _rake),
-        "clustering_depth": (
-            lambda m: _events_at(spark, sf_dir, m), _cdepth,
-        ),
-        "ann_index_serve": (lambda m: _ann_store_at(m, False), _ann_serve),
-        "ann_index_append": (lambda m: _ann_store_at(m, True), _ann_append),
-    }
-
-    # round-12 wave probes: the stats quartet is one corpus aggregation
-    # each (welch/did/ips single-pass conditional cells; permutation pays
-    # 32 md5s/row but still one pass); the spatial/graph trio aggregates
-    # the corpus to a domain-bounded backbone then works on metadata;
-    # item-CF's pair join is bounded by the item domain per user; the
-    # PII scan is a map-side regex pass; the store lifecycle probes pay
-    # their commits by design (the ingest bill), while time travel reads
-    # a prebuilt store (mk is untimed).
-    def _welch(d):
-        base = d.where(
-            F.col("value").isNotNull()
-            & F.col("event_type").isin("purchase", "view")
-        ).select(
-            "event_type",
-            F.round(F.col("value") * 100).cast("long").alias("x"),
-        )
-        return base.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n_g"),
-            F.sum("x").cast("long").alias("s_g"),
-            F.sum(F.col("x") * F.col("x")).cast("long").alias("q_g"),
-        )
-
-    def _did(d):
-        d = d.withColumn("ts", F.col("ts").cast("timestamp"))
-        base = d.where(
-            F.col("value").isNotNull()
-            & F.col("ts").isNotNull()
-            & F.col("event_type").isin("purchase", "view")
-        ).select(
-            (F.col("event_type") == "purchase").alias("treated"),
-            (F.dayofmonth("ts") > 15).alias("post"),
-            F.round(F.col("value") * 100).cast("long").alias("y"),
-        )
-        return base.groupBy("treated", "post").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("y").cast("long").alias("s"),
-        )
-
-    def _ips(d):
-        base = d.where(
-            F.col("value").isNotNull() & F.col("user_id").isNotNull()
-            & F.col("event_type").isNotNull()
-        ).select(
-            "event_type",
-            F.round(F.col("value") * 100).cast("long").alias("r"),
-            F.when(F.col("user_id") % 2 == 0, "purchase")
-            .otherwise("click").alias("pi_a"),
-        )
-        return base.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n_a"),
-            F.sum(
-                F.when(F.col("event_type") == F.col("pi_a"), 1).otherwise(0)
-            ).cast("long").alias("m_a"),
-            F.sum(
-                F.when(
-                    F.col("event_type") == F.col("pi_a"), F.col("r")
-                ).otherwise(0)
-            ).cast("long").alias("sr_a"),
-        )
-
-    def _perm(d):
-        base = d.where(
-            F.col("value").isNotNull()
-            & F.col("event_type").isin("purchase", "view")
-            & F.col("event_id").isNotNull()
-        ).select(
-            (F.col("event_type") == "purchase").alias("is_a"),
-            F.round(F.col("value") * 100).cast("long").alias("x"),
-            "event_id",
-        )
-        aggs = [F.count(F.lit(1)).cast("long").alias("n")]
-        for r in range(32):
-            b = (
-                f"CAST(conv(substr(md5(CAST(event_id AS STRING) ||"
-                f" '#perm{r}'), 1, 15), 16, 10) AS BIGINT) % 1000000"
-            )
-            aggs.append(
-                F.sum(F.expr(f"CASE WHEN {b} < 500000 THEN x ELSE 0 END"))
-                .cast("long").alias(f"sa{r}")
-            )
-        return base.agg(*aggs)
-
-    def _pseudo_backbone(d, k):
-        pz = d.select(
-            (F.col("user_id") % 64).alias("za"),
-            (F.col("event_id") % 64).alias("zb"),
-        ).where(F.col("za") != F.col("zb"))
-        cnt = pz.select(
-            F.least("za", "zb").alias("a"), F.greatest("za", "zb").alias("b")
-        ).groupBy("a", "b").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        und = cnt.orderBy(F.desc("cnt"), "a", "b").limit(k).select("a", "b")
-        return und.unionByName(
-            und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).localCheckpoint()
-
-    def _morans(d):
-        both = _pseudo_backbone(d, 40)
-        nodes = both.select(F.col("a").alias("zone")).distinct()
-        x = d.groupBy((F.col("user_id") % 64).alias("zone")).agg(
-            F.count(F.lit(1)).cast("long").alias("x")
-        )
-        nx = nodes.join(x, "zone", "left").select(
-            "zone", F.coalesce("x", F.lit(0)).cast("long").alias("x")
-        )
-        tot = nx.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("x").cast("long").alias("s"),
-        )
-        dev = nx.crossJoin(F.broadcast(tot)).select(
-            "zone", (F.col("n") * F.col("x") - F.col("s")).alias("d")
-        ).localCheckpoint()
-        da = dev.select(F.col("zone").alias("a"), F.col("d").alias("da"))
-        db = dev.select(F.col("zone").alias("b"), F.col("d").alias("db"))
-        return both.join(da, "a").join(db, "b").agg(
-            F.sum(F.col("da") * F.col("db")).alias("num"),
-            F.count(F.lit(1)).alias("w"),
-        )
-
-    def _linkpred(d):
-        both = _pseudo_backbone(d, 300)
-        deg = both.groupBy(F.col("a").alias("zone")).agg(
-            F.count(F.lit(1)).cast("long").alias("deg")
-        )
-        e1 = both.select(F.col("a").alias("i"), F.col("b").alias("k"))
-        e2 = both.select(F.col("a").alias("j"), F.col("b").alias("k"))
-        degk = deg.select(F.col("zone").alias("k"), F.col("deg").alias("dk"))
-        return (
-            e1.join(e2, "k").where(F.col("i") < F.col("j"))
-            .join(F.broadcast(degk), "k")
-            .groupBy("i", "j")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("cn"),
-                F.sum(
-                    F.round(
-                        F.lit(1e6) / F.log(F.col("dk").cast("double"))
-                    ).cast("long")
-                ).alias("aa"),
-            )
-            .orderBy(F.desc("aa"), "i", "j").limit(20)
-        )
-
-    def _itemcf(d):
-        inter = d.where(
-            F.col("user_id").isNotNull() & (F.col("event_id") % 53 != 0)
-        ).select(
-            F.col("user_id").alias("u"),
-            ((F.col("user_id") * 17 + F.col("event_id")) % 40 + 1)
-            .cast("long").alias("item"),
-        ).distinct()
-        i1 = inter.select("u", F.col("item").alias("i"))
-        i2 = inter.select("u", F.col("item").alias("j"))
-        return (
-            i1.join(i2, "u").where(F.col("i") < F.col("j"))
-            .groupBy("i", "j")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_ij"))
-        )
-
-    def _pii(d):
-        from nyc_taxi_data_warehouse_spark.queries_data import (
-            _PII_EMAIL, _PII_PHONE, _PII_SSN,
-        )
-
-        red = F.regexp_replace(
-            F.regexp_replace(
-                F.regexp_replace(
-                    F.col("text"), F.lit(_PII_EMAIL), F.lit("[EMAIL]")
-                ),
-                F.lit(_PII_SSN), F.lit("[SSN]"),
-            ),
-            F.lit(_PII_PHONE), F.lit("[PHONE]"),
-        )
-        return d.select(
-            "doc_id",
-            F.regexp_count("text", F.lit(_PII_EMAIL)).cast("long").alias("e"),
-            F.md5(red).alias("h"),
-        )
-
-    _STORE_SEQ = [0]
-
-    def _store_roundtrip(d):
-        import os as _o
-
-        from nyc_taxi_data_warehouse_spark.util import session_tmpdir
-
-        _STORE_SEQ[0] += 1
-        p = _o.path.join(
-            session_tmpdir("probe_store_rt"), f"s{_STORE_SEQ[0]}"
-        )
-        g1 = d.where(F.col("doc_id") % 3 == 1)
-        g2 = d.where(F.col("doc_id") % 3 == 2)
-        g3 = d.where(F.col("doc_id") % 3 == 0)
-        dedup.neardup_store_ingest(spark, p, g1)
-        r2, _ = dedup.neardup_store_ingest(spark, p, g2)
-        r3, _ = dedup.neardup_store_ingest(spark, p, g3)
-        return r2.unionByName(r3)
-
-    def _mk_tt_store(m):
-        import os as _o
-
-        from nyc_taxi_data_warehouse_spark.util import session_tmpdir
-
-        p = _o.path.join(session_tmpdir("probe_tt_store"), f"m{m}")
-        import shutil
-
-        shutil.rmtree(p, ignore_errors=True)
-        d = _docs_at(spark, sf_dir, m)
-        dedup.neardup_store_ingest(spark, p, d.where(F.col("doc_id") % 3 == 1))
-        dedup.neardup_store_ingest(spark, p, d.where(F.col("doc_id") % 3 == 2))
-        return p
-
-    def _tt_read(p):
-        from nyc_taxi_data_warehouse_spark.sources.manifest import (
-            ManifestTable,
-        )
-
-        tbl = ManifestTable(p)
-        v0 = tbl.read(spark, version=0).select("doc_id", "content_hash")
-        v1 = tbl.read(spark, version=1).select("doc_id", "content_hash")
-        delta = v1.join(v0.select("doc_id"), "doc_id", "left_anti")
-        return v0.withColumn("fv", F.lit(0)).unionByName(
-            delta.withColumn("fv", F.lit(1))
-        )
-
-    tenth_ops = {
-        "welch_ttest": (lambda m: _events_at(spark, sf_dir, m), _welch),
-        "diff_in_diff": (lambda m: _events_at(spark, sf_dir, m), _did),
-        "ips_eval": (lambda m: _events_at(spark, sf_dir, m), _ips),
-        "permutation_test": (lambda m: _events_at(spark, sf_dir, m), _perm),
-        "morans_i": (lambda m: _events_at(spark, sf_dir, m), _morans),
-        "link_prediction": (lambda m: _events_at(spark, sf_dir, m), _linkpred),
-        "item_cf": (lambda m: _events_at(spark, sf_dir, m), _itemcf),
-        "pii_scan": (lambda m: _docs_at(spark, sf_dir, m), _pii),
-        "neardup_store_roundtrip": (
-            lambda m: _docs_at(spark, sf_dir, m), _store_roundtrip,
-        ),
-        "store_time_travel": (_mk_tt_store, _tt_read),
-    }
-
-    # round-12 late wave: consistent hashing and the PII/feature-hash
-    # scans are map-side passes; time decay is one user-grain agg;
-    # modularity adds backbone-metadata joins after the corridor agg;
-    # gdpr grows the FACT side only (subjects/orders fixed) — the two
-    # broadcast key sets mean the grown scan never shuffles.
-    def _rdv(d):
-        key = "CAST(doc_id AS STRING)"
-        hs = [
-            F.expr(
-                f"CAST(conv(substr(md5({key} || '#shard{s}'), 1, 15),"
-                " 16, 10) AS BIGINT)"
-            ).alias(f"h{s}")
-            for s in range(9)
-        ]
-        w = d.select(*hs)
-
-        def sc(n):
-            m9 = F.greatest(*[F.col(f"h{s}") for s in range(n)])
-            c = F.when(F.col("h0") == m9, 0)
-            for s in range(1, n):
-                c = c.when(F.col(f"h{s}") == m9, s)
-            return c.cast("long")
-
-        return (
-            w.select(sc(8).alias("s8"), sc(9).alias("s9"))
-            .groupBy("s9")
-            .agg(
-                F.sum(F.when(F.col("s8") != F.col("s9"), 1).otherwise(0))
-                .alias("moved"),
-                F.count(F.lit(1)).alias("n"),
-            )
-        )
-
-    def _fhash(d):
-        toks = d.select(
-            F.explode(T.tokens(F.col("text"))).alias("tok")
-        ).distinct()
-        return toks.select(
-            F.expr(
-                "pmod(CAST(conv(substr(md5(tok), 1, 15), 16, 10)"
-                " AS BIGINT), 4096)"
-            ).alias("b")
-        ).groupBy("b").agg(F.count(F.lit(1)).alias("c"))
-
-    def _tdecay(d):
-        d = d.withColumn("ts", F.col("ts").cast("timestamp"))
-        ev = d.where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
-        ref = ev.agg(F.max(F.to_date("ts")).alias("__ref"))
-        return (
-            ev.crossJoin(F.broadcast(ref))
-            .select(
-                "user_id",
-                F.datediff(F.col("__ref"), F.to_date("ts")).alias("age"),
-            )
-            .groupBy("user_id")
-            .agg(
-                F.sum(
-                    F.when(
-                        F.col("age") <= 40,
-                        F.expr(
-                            "shiftleft(CAST(1 AS BIGINT),"
-                            " CAST(40 - age AS INT))"
-                        ),
-                    ).otherwise(0)
-                ).alias("score_u")
-            )
-            .orderBy(F.desc("score_u"), "user_id")
-            .limit(20)
-        )
-
-    def _modularity(d):
-        both = _pseudo_backbone(d, 40)
-        from nyc_taxi_data_warehouse_spark.operators.graph import (
-            label_propagation,
-        )
-
-        labels = label_propagation(both, rounds=4, src="a", dst="b")
-        la = labels.select(F.col("node").alias("a"), F.col("lab").alias("lab_a"))
-        return (
-            both.join(F.broadcast(la), "a")
-            .groupBy("lab_a")
-            .agg(F.count(F.lit(1)).alias("d_sum"))
-        )
-
-    def _gdpr(li):
-        t = load_tables(spark, sf_dir)
-        subj = t["customer"].where(F.col("c_custkey") % 97 == 7).select(
-            F.col("c_custkey").alias("subject_key")
-        )
-        okeys = t["orders"].join(
-            F.broadcast(subj), F.col("o_custkey") == F.col("subject_key")
-        ).select("subject_key", "o_orderkey")
-        return (
-            li.join(
-                F.broadcast(okeys),
-                F.col("l_orderkey") == F.col("o_orderkey"),
-            )
-            .groupBy("subject_key")
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-        )
-
-    eleventh_ops = {
-        "consistent_hash": (lambda m: _docs_at(spark, sf_dir, m), _rdv),
-        "feature_hash_audit": (lambda m: _docs_at(spark, sf_dir, m), _fhash),
-        "time_decay": (lambda m: _events_at(spark, sf_dir, m), _tdecay),
-        "graph_modularity": (
-            lambda m: _events_at(spark, sf_dir, m), _modularity,
-        ),
-        "gdpr_export": (_lineitem_at, _gdpr),
-    }
-
-
-    # round-13 wave: levene/cuped are one-or-two corpus aggregations to
-    # tiny frames; sprt/holt fold a calendar-bounded day series; shapley
-    # collapses users to ≤16 coalition masks; dbscan's lattice grows with
-    # the user universe (the dimension _events_at grows); hilbert is a
-    # map-side integer fold + one rollup.
-    def _levene(d):
-        ev = d.where(F.col("value").isNotNull())
-        med = ev.groupBy("event_type").agg(
-            F.expr("percentile(value, 0.5)").alias("med")
-        )
-        z = ev.join(F.broadcast(med), "event_type").select(
-            "event_type",
-            F.round(F.abs(F.col("value") - F.col("med")) * 1e6)
-            .cast("long").alias("z"),
-        )
-        return z.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_g"),
-            F.sum("z").alias("s_g"),
-            F.sum(F.col("z").cast("decimal(19,0)")
-                  * F.col("z").cast("decimal(19,0)")).alias("q_g"),
-        )
-
-    def _cuped(d):
-        ev = d.where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
-        rng = ev.agg(
-            F.min(F.to_date("ts")).alias("d0"),
-            F.max(F.to_date("ts")).alias("d1"),
-        ).select(
-            F.date_add(F.col("d0"),
-                       (F.datediff("d1", "d0") / 2).cast("int")).alias("dmid")
-        )
-        users = ev.crossJoin(F.broadcast(rng)).groupBy("user_id").agg(
-            F.sum(F.when(F.to_date("ts") < F.col("dmid"), 1).otherwise(0))
-            .cast("long").alias("x"),
-            F.sum(F.when((F.to_date("ts") >= F.col("dmid"))
-                         & (F.col("event_type") == "purchase"), 1)
-                  .otherwise(0)).cast("long").alias("y"),
-        )
-        return users.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("x").alias("sx"),
-            F.sum("y").alias("sy"), F.sum(F.col("x") * F.col("y")).alias("sxy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        )
-
-    def _sprt_probe(d):
-        daily = d.where(F.col("ts").isNotNull()).groupBy(
-            F.to_date("ts").alias("day")
-        ).agg(
-            F.count(F.lit(1)).cast("long").alias("t"),
-            F.sum((F.col("event_type") == "purchase").cast("long")).alias("s"),
-        )
-        from pyspark.sql import Window as W
-        lr = ("CAST(s AS DOUBLE) * ln(0.25 / 0.2)"
-              " + CAST(t - s AS DOUBLE) * ln(0.75 / 0.8)")
-        dd = daily.withColumn("m", F.expr(f"CAST(round(({lr}) * 1e6) AS BIGINT)"))
-        return dd.withColumn(
-            "cum", F.sum("m").over(W.orderBy("day")
-                                   .rowsBetween(W.unboundedPreceding, 0))
-        )
-
-    def _shapley(d):
-        ev = d.where(F.col("user_id").isNotNull())
-        chans = [("view", 1), ("click", 2), ("signup", 4), ("error", 8)]
-        bits = [F.max(F.when(F.col("event_type") == c, 1).otherwise(0)) * b
-                for c, b in chans]
-        users = ev.groupBy("user_id").agg(
-            sum(bits[1:], bits[0]).cast("int").alias("mask"),
-            F.max(F.when((F.col("event_type") == "purchase")
-                         & (F.col("value") > 150), 1).otherwise(0))
-            .alias("conv"),
-        )
-        msets = users.where(F.col("conv") == 1).groupBy("mask").agg(
-            F.count(F.lit(1)).cast("long").alias("n_conv")
-        )
-        subsets = spark.range(16).select(F.col("id").cast("int").alias("s"))
-        return subsets.join(
-            F.broadcast(msets), F.expr("(mask & s) = mask"), "left"
-        ).groupBy("s").agg(F.coalesce(F.sum("n_conv"), F.lit(0)).alias("v"))
-
-    def _holt(d):
-        daily = d.where(F.col("ts").isNotNull()).groupBy(
-            F.to_date("ts").alias("day")
-        ).agg(F.count(F.lit(1)).cast("long").alias("y"))
-        arr = daily.agg(
-            F.sort_array(F.collect_list(F.struct("day", "y"))).alias("s")
-        )
-        fold = F.aggregate(
-            F.slice(F.col("s"), 2, F.size("s") - 1),
-            F.struct(
-                F.element_at("s", 1)["y"].cast("double").alias("l"),
-                (F.element_at("s", 2)["y"] - F.element_at("s", 1)["y"])
-                .cast("double").alias("b"),
-                F.expr("CAST(array() AS array<double>)").alias("out"),
-            ),
-            lambda acc, x: F.struct(
-                (F.lit(0.3) * x["y"].cast("double")
-                 + F.lit(0.7) * (acc["l"] + acc["b"])).alias("l"),
-                (F.lit(0.1) * ((F.lit(0.3) * x["y"].cast("double")
-                                + F.lit(0.7) * (acc["l"] + acc["b"]))
-                               - acc["l"])
-                 + F.lit(0.9) * acc["b"]).alias("b"),
-                F.concat(acc["out"],
-                         F.array(acc["l"] + acc["b"])).alias("out"),
-            ),
-        )
-        return arr.select(F.explode(fold["out"]).alias("fhat"))
-
-    def _dbscan_probe(d):
-        ev = d.where(F.col("user_id").isNotNull() & F.col("value").isNotNull())
-        pts = (
-            ev.groupBy("user_id").agg(
-                F.count(F.lit(1)).cast("long").alias("x"),
-                F.sum(F.floor(F.col("value") * 100).cast("long"))
-                .cast("long").alias("sv"),
-            )
-            .select("x", F.expr("sv div (100 * x)").cast("long").alias("y"))
-            .groupBy("x", "y").agg(F.count(F.lit(1)).cast("long").alias("w"))
-        ).localCheckpoint()
-        pid = (F.col("x") * 1000000 + F.col("y")).cast("long")
-        p = pts.select(pid.alias("pid"), "x", "y", "w")
-        offs = spark.range(9).select(
-            (F.col("id") % 3 - 1).cast("long").alias("dx"),
-            ((F.col("id") / 3).cast("long") - 1).alias("dy"),
-        )
-        left = p.crossJoin(F.broadcast(offs)).select(
-            F.col("pid").alias("pid_a"), F.col("x").alias("xa"),
-            F.col("y").alias("ya"),
-            (F.expr("x div 2") + F.col("dx")).alias("cx"),
-            (F.expr("y div 2") + F.col("dy")).alias("cy"),
-        )
-        right = p.select(
-            F.col("pid").alias("pid_b"), F.col("x").alias("xb"),
-            F.col("y").alias("yb"), F.col("w").alias("wb"),
-            F.expr("x div 2").alias("cx"), F.expr("y div 2").alias("cy"),
-        )
-        nbr = left.join(right, ["cx", "cy"]).where(
-            (F.abs(F.col("xa") - F.col("xb")) <= 2)
-            & (F.abs(F.col("ya") - F.col("yb")) <= 2)
-            & (F.col("pid_a") != F.col("pid_b"))
-        )
-        return nbr.groupBy("pid_a").agg(F.sum("wb").alias("w_nbr"))
-
-    def _hilbert(li):
-        from nyc_taxi_data_warehouse_spark.operators import zorder as _zo
-
-        bounds = li.agg(
-            F.min("l_partkey").alias("__xlo"), F.max("l_partkey").alias("__xhi"),
-            F.min("l_suppkey").alias("__ylo"), F.max("l_suppkey").alias("__yhi"),
-        )
-        cells = (
-            li.crossJoin(F.broadcast(bounds))
-            .select(
-                _zo.grid_expr("l_partkey", F.col("__xlo"), F.col("__xhi"))
-                .alias("xg"),
-                _zo.grid_expr("l_suppkey", F.col("__ylo"), F.col("__yhi"))
-                .alias("yg"),
-                "l_partkey",
-            )
-            .groupBy("xg", "yg")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.min("l_partkey").alias("mn"), F.max("l_partkey").alias("mx"))
-        )
-        h = _zo.hilbert_expr(F.col("xg"), F.col("yg"))
-        return (
-            cells.withColumn("h", h)
-            .groupBy(F.shiftright(F.col("h"), 6).alias("c"))
-            .agg(F.sum("n").alias("n"), F.min("mn").alias("mn"),
-                 F.max("mx").alias("mx"))
-        )
-
-
-    def _att(d):
-        ev = d.where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
-        rng = ev.agg(
-            F.min(F.to_date("ts")).alias("d0"),
-            F.max(F.to_date("ts")).alias("d1"),
-        ).select(
-            F.date_add(F.col("d0"),
-                       (F.datediff("d1", "d0") / 2).cast("int")).alias("dmid")
-        )
-        users = ev.crossJoin(F.broadcast(rng)).groupBy("user_id").agg(
-            F.sum(F.when(F.to_date("ts") < F.col("dmid"), 1).otherwise(0))
-            .cast("long").alias("x"),
-            F.sum(F.when((F.to_date("ts") >= F.col("dmid"))
-                         & (F.col("event_type") == "purchase"), 1)
-                  .otherwise(0)).cast("long").alias("y"),
-        ).select(
-            F.pmod(F.col("user_id"), F.lit(2)).cast("int").alias("t"),
-            F.least(F.expr("x div 5"), F.lit(9)).cast("int").alias("s"),
-            "y",
-        )
-        return users.groupBy("s").agg(
-            F.sum(F.when(F.col("t") == 1, 1).otherwise(0)).alias("n1"),
-            F.sum(F.when(F.col("t") == 1, F.col("y")).otherwise(0)).alias("sy1"),
-            F.sum(F.when(F.col("t") == 0, 1).otherwise(0)).alias("n0"),
-            F.sum(F.when(F.col("t") == 0, F.col("y")).otherwise(0)).alias("sy0"),
-        )
-
-    def _closeness(d):
-        li = __import__(
-            "nyc_taxi_data_warehouse_spark.plans.staging",
-            fromlist=["stg_taxi_trips"],
-        ).stg_taxi_trips(__import__(
-            "nyc_taxi_data_warehouse_spark.plans.nyc_views",
-            fromlist=["trips_from_events"],
-        ).trips_from_events(d))
-        from nyc_taxi_data_warehouse_spark.queries_eval import (
-            _corridor_backbone,
-        )
-        _und, both = _corridor_backbone(li, 40)
-        dist = both.select(
-            F.col("a").alias("src"), F.col("a").alias("node"),
-            F.lit(0).cast("int").alias("d"),
-        ).distinct().localCheckpoint()
-        for _r in range(4):
-            step = dist.join(
-                both.select(F.col("a").alias("node"), F.col("b").alias("nxt")),
-                "node",
-            ).select("src", F.col("nxt").alias("node"),
-                     (F.col("d") + 1).cast("int").alias("d"))
-            dist = dist.unionByName(step).groupBy("src", "node").agg(
-                F.min("d").cast("int").alias("d")
-            ).localCheckpoint()
-        return dist.where(F.col("d") > 0).groupBy("src").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-
-    def _fertility(d):
-        from nyc_taxi_data_warehouse_spark.operators import bpe as _bpe
-
-        mt = _bpe.bpe_train(d, 6)
-        merges = [(r["lhs"], r["rhs"]) for r in mt.collect()]
-        tok = _bpe.apply_merges(d, merges).select(
-            "doc_id", F.size("tokens").cast("long").alias("n_bpe")
-        )
-        words = _bpe._clean_words(
-            d.select("doc_id", F.explode(T.tokens("text")).alias("word"))
-        ).groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_words"))
-        return words.join(tok, "doc_id").agg(
-            F.sum("n_bpe"), F.sum("n_words")
-        )
-
-    twelfth_ops = {
-        "levene": (lambda m: _events_at(spark, sf_dir, m), _levene),
-        "cuped": (lambda m: _events_at(spark, sf_dir, m), _cuped),
-        "sprt": (lambda m: _events_at(spark, sf_dir, m), _sprt_probe),
-        "shapley_attribution": (
-            lambda m: _events_at(spark, sf_dir, m), _shapley,
-        ),
-        "holt_linear": (lambda m: _events_at(spark, sf_dir, m), _holt),
-        "dbscan": (lambda m: _events_at(spark, sf_dir, m), _dbscan_probe),
-        "hilbert_cells": (_lineitem_at, _hilbert),
-        "bucketed_store_ingest": (_mk_bucketed_store, _bucketed_ingest),
-        "att_stratified": (lambda m: _events_at(spark, sf_dir, m), _att),
-        "closeness_centrality": (
-            lambda m: _events_at(spark, sf_dir, m), _closeness,
-        ),
-        "tokenizer_fertility": (lambda m: _docs_at(spark, sf_dir, m), _fertility),
-    }
-
-    all_ops = {n: (lambda m: _docs_at(spark, sf_dir, m), op) for n, op in ops.items()}
-    all_ops.update(meta_ops)
-    all_ops.update(events_ops)
-    all_ops.update(third_ops)
-    all_ops.update(fourth_ops)
-    all_ops.update(fifth_ops)
-    all_ops.update(sixth_ops)
-    all_ops.update(seventh_ops)
-    all_ops.update(eighth_ops)
-    all_ops.update(ninth_ops)
-    all_ops.update(tenth_ops)
-    all_ops.update(eleventh_ops)
-    all_ops.update(twelfth_ops)
-    args = sys.argv[2:]
-    mults = (1, 4, 8)
-    shuffle_scale = False
-    only = []
-    for a in args:
-        if a.startswith("--mults="):
-            # e.g. --mults=1,8,16,32 — the 16x/32x extension runs for the
-            # steepest growers (verdict r9 #5) without paying 5 multiples
-            # for every op
-            mults = tuple(int(x) for x in a.split("=", 1)[1].split(","))
-        elif a == "--shuffle-scale":
-            # scale spark.sql.shuffle.partitions WITH the data multiple —
-            # the dial a real cluster turns as data grows, so shuffle
-            # partition SIZE stays constant instead of partition count
-            # alone growing within a fixed 32-partition budget (verdict
-            # r10 item 4: isolate page-cache effects from plan growth)
-            shuffle_scale = True
-        else:
-            only.append(a)
-    if only:
-        unknown = [n for n in only if n not in all_ops]
-        if unknown:
-            raise SystemExit(f"unknown ops {unknown}; have {sorted(all_ops)}")
-        all_ops = {n: all_ops[n] for n in only}
-    report: dict[str, dict] = {}
-    for name, (mk, op) in all_ops.items():
-        # throwaway m=1 run: the first execution of each op pays JVM JIT /
-        # codegen / Python-worker warmup that would masquerade as 1x cost
-        _time(lambda: op(mk(1)))
-        spark.catalog.clearCache()
-        times: dict[str, float] = {}
-        base_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        for m in mults:
-            if shuffle_scale:
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(base_parts * m)
-                )
-            d = mk(m)
-            times[str(m)] = _time(lambda: op(d))
-            if shuffle_scale:
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(base_parts)
-                )
-            # ops persist intermediate frames (signature self-join lesson);
-            # drop them between multiples or earlier runs' cached blocks
-            # pressure the later runs and skew the very ratios we report
-            spark.catalog.clearCache()
-        times[f"growth_{mults[-1]}x"] = round(
-            times[str(mults[-1])] / times[str(mults[0])], 2
-        )
-        report[name] = times
-        # incremental line so a later op's crash can't lose this result
-        print(f"PROBE {name} {json.dumps(times)}", flush=True)
-    print(json.dumps(report))
+    dirs = {m: grow_dir(spark, sf_dir, m) for m in mults}
+    summary: dict = {}
+    for name in names:
+        summary[name] = {}
+        for m, rec in probe(spark, qs[name], dirs, runs):
+            summary[name][str(m)] = rec
+            print("PROBE " + json.dumps({"query": name, "mult": m, **rec}), flush=True)
+    print(json.dumps({
+        "sf_dir": sf_dir, "mults": list(mults), "runs": runs,
+        "load_avg": [round(x, 2) for x in os.getloadavg()], "results": summary,
+    }))
 
 
 if __name__ == "__main__":
