@@ -81,8 +81,14 @@ def train(features: DataFrame) -> TrainResult:
 
 def forecast_7day(spark: SparkSession, features: DataFrame, model) -> DataFrame:
     """Recursive 7-day forecast: lag7←lag1, lag1←prediction each step
-    (`dags/fare_forecasting_dag.py:58-82`). Driver loop over 7 tiny rows."""
-    from pyspark.ml.feature import VectorAssembler
+    (`dags/fare_forecasting_dag.py:58-82`).
+
+    Two collects fetch the last feature row and the trailing fares; the
+    7 steps then run on the driver with ``model.predict`` on one dense
+    vector each, as the reference's sklearn loop does.  No step fires a
+    Spark job or ships the model; the prediction is the one a one-row
+    ``transform`` returns (the same tree walk on the same doubles)."""
+    from pyspark.ml.linalg import Vectors
 
     last = _prepare(features).orderBy(F.desc("trip_date")).limit(1).collect()[0]
     state = {c: float(last[c]) for c in FEATURE_COLS}
@@ -91,7 +97,6 @@ def forecast_7day(spark: SparkSession, features: DataFrame, model) -> DataFrame:
         float(r[TARGET])
         for r in features.orderBy(F.desc("trip_date")).limit(7).collect()
     ][::-1]
-    assembler = VectorAssembler(inputCols=FEATURE_COLS, outputCol="features")
     rows = []
     cur_date = last["trip_date"]
     for step in range(1, 8):
@@ -99,12 +104,7 @@ def forecast_7day(spark: SparkSession, features: DataFrame, model) -> DataFrame:
         dow_weekend = cur_date.weekday() in (5, 6)  # E17 numbering
         state["weekend_trip_count"] = state["trip_count"] if dow_weekend else 0.0
         state["weekday_trip_count"] = 0.0 if dow_weekend else state["trip_count"]
-        one = spark.createDataFrame(
-            [tuple(state[c] for c in FEATURE_COLS)], FEATURE_COLS
-        )
-        pred = float(
-            model.transform(assembler.transform(one)).collect()[0]["prediction"]
-        )
+        pred = float(model.predict(Vectors.dense([state[c] for c in FEATURE_COLS])))
         rows.append((cur_date, pred, MODEL_VERSION))
         # roll features forward
         state["avg_fare_lag7"] = state["avg_fare_lag1"]

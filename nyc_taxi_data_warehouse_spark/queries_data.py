@@ -21,7 +21,7 @@ from .functions import text as T
 from .functions import vectors as V
 from .operators import dedup, similarity
 from .plans.nyc_views import load_tables
-from .util import stream_state_partitions
+from .streaming.weather_stream import drain_available_now
 
 
 _KMEANS_QUANT = 1000  # embedding quantization lattice (SRP lesson)
@@ -1407,22 +1407,7 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _INGEST_SINK_SEQ[0] += 1
     name = f"q_stream_ingest_dedup_sink_{_INGEST_SINK_SEQ[0]}"
-    with stream_state_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_ingest_dedup: availableNow drain timed out after "
-            "300s — refusing to compare a partial sink against the oracle"
-        )
-    return spark.table(name)
+    return drain_available_now(agg, name)
 
 
 _SQL_STREAM_INGEST_DEDUP = """
@@ -2308,22 +2293,7 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _CDC_STREAM_SINK_SEQ[0] += 1
     name = f"q_stream_cdc_sink_{_CDC_STREAM_SINK_SEQ[0]}"
-    with stream_state_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_cdc: availableNow drain timed out after 300s — "
-            "refusing to compare a partial sink against the oracle"
-        )
-    sink = spark.table(name)
+    sink = drain_available_now(agg, name)
     return sink.where(~F.col("w.is_delete")).select(
         "user_id",
         F.col("w.ts").alias("last_ts"),
@@ -7901,22 +7871,7 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits = rows.groupBy("win", "bit").agg(F.max(F.lit(1)).alias("__set"))
     _BLOOM_SINK_SEQ[0] += 1
     name = f"q_stream_bloom_sink_{_BLOOM_SINK_SEQ[0]}"
-    with stream_state_partitions(spark, 8):
-        q = (
-            bits.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_bloom: availableNow drain timed out after 300s — "
-            "refusing to compare a partially-filled sink against the oracle"
-        )
-    sink = spark.table(name).select(
+    sink = drain_available_now(bits, name).select(
         F.col("win.start").alias("day"), "bit", "__set"
     )
 
@@ -8057,22 +8012,7 @@ def q_stream_cm(spark: SparkSession, sf_dir: str) -> DataFrame:
     counters = sketches.cm_counters(tok, "token", "cnt")
     _CM_SINK_SEQ[0] += 1
     name = f"q_stream_cm_sink_{_CM_SINK_SEQ[0]}"
-    with stream_state_partitions(spark, 8):
-        q = (
-            counters.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_cm: availableNow drain timed out after 300s — "
-            "refusing to compare a partially-filled sink against the oracle"
-        )
-    sink = spark.table(name).select("j", "slot", "c")
+    sink = drain_available_now(counters, name).select("j", "slot", "c")
 
     tok_b = _docs(spark, sf_dir).select(
         F.explode(T.tokens("text")).alias("token")
@@ -9118,22 +9058,7 @@ def q_stream_mg_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = mg_topk_stream(stream, k=_MG_K)
     _MG_STREAM_SINK_SEQ[0] += 1
     name = f"q_stream_mg_topk_sink_{_MG_STREAM_SINK_SEQ[0]}"
-    with stream_state_partitions(spark, 8):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_mg_topk: availableNow drain timed out after 300s — "
-            "refusing to compare a partial sink against the oracle"
-        )
-    sink = spark.table(name)
+    sink = drain_available_now(out, name, "update")
     # max-seq per shard via a window (a sink self-join trips Catalyst's
     # conflicting-reference check on the memory view); shard domain is 8
     final_keys = (
@@ -10929,22 +10854,7 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _OHLC_SINK_SEQ[0] += 1
     name = f"q_stream_ohlc_sink_{_OHLC_SINK_SEQ[0]}"
-    with stream_state_partitions(spark, 8):
-        q = (
-            bars.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_ohlc: availableNow drain timed out after 300s — "
-            "refusing to compare a partially-filled sink against the oracle"
-        )
-    sink = spark.table(name)
+    sink = drain_available_now(bars, name)
     return sink.select(
         "hour_ts",
         "n_trades",
@@ -11555,22 +11465,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _SLIDE_SINK_SEQ[0] += 1
     name = f"q_stream_sliding_sink_{_SLIDE_SINK_SEQ[0]}"
-    with stream_state_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_sliding: availableNow drain timed out after 300s — "
-            "refusing to compare a partially-filled sink against the oracle"
-        )
-    sink = spark.table(name)
+    sink = drain_available_now(agg, name)
     return sink.select(
         F.col("win.start").alias("win_start"),
         F.col("win.end").alias("win_end"),
@@ -12242,22 +12137,7 @@ def q_stream_kmins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _KMINS_SINK_SEQ[0] += 1
     name = f"q_stream_kmins_sink_{_KMINS_SINK_SEQ[0]}"
-    with stream_state_partitions(spark, 8):
-        q = (
-            mins.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_kmins: availableNow drain timed out after 300s — "
-            "refusing to compare a partially-filled sink against the oracle"
-        )
-    sink = spark.table(name).select(
+    sink = drain_available_now(mins, name).select(
         F.to_date(F.col("win.start")).alias("day"),
         *[F.col(f"m{j}") for j in range(_KMINS_K)],
     )

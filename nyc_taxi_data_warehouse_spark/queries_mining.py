@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from .operators.monitor import cusum_columns, p2_formula
 from .operators.sampling import bucketed_value_cumsum
 from .plans.nyc_views import load_tables
-from .util import stream_state_partitions
+from .streaming.weather_stream import drain_available_now
 
 
 def _rnd(c, n: int):
@@ -170,26 +170,11 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _CUSUM_SINK_SEQ[0] += 1
     name = f"q_stream_cusum_sink_{_CUSUM_SINK_SEQ[0]}"
-    with stream_state_partitions(spark, 8):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_cusum: availableNow drain timed out after 300s — "
-            "refusing to compare a partially-filled sink against the oracle"
-        )
     # localCheckpoint the (days × types)-sized drained grain: daily
     # self-joins against its own aggregate, and two lazy reads of the
     # same memory-sink view collide on attribute ids (conflicting-
     # references analyzer error); the materialized grain is tiny
-    daily = spark.table(name).select(
+    daily = drain_available_now(counts, name).select(
         "event_type",
         F.col("win.start").alias("day"),
         F.col("y").cast("long").alias("y"),

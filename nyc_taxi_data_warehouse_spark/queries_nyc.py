@@ -28,7 +28,6 @@ from .plans.marts import (
 )
 from .plans.nyc_views import SQL_TRIPS, SQL_WEATHER, SQL_ZONES
 from .plans.staging import SQL_STG_TRIPS, SQL_STG_WEATHER
-from .util import stream_state_partitions
 
 
 def _with(*fragments: str, select: str) -> str:
@@ -2039,16 +2038,7 @@ def q_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"q_stream_hourly_sink_{_STREAM_SINK_SEQ[0]}"
     stream = weather_stream.read_weather_stream(spark, src)
     agg = weather_stream.hourly_weather_stream(stream)
-    with stream_state_partitions(spark, 8):
-        q = weather_stream.run_available_now(agg, name)
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_hourly: availableNow drain timed out after 300s — "
-            "refusing to compare a partially-filled sink against the oracle"
-        )
-    return spark.table(name).select(
+    return weather_stream.drain_available_now(agg, name).select(
         "observation_hour",
         "city",
         _r4("avg_temperature_fahrenheit"),
@@ -2094,16 +2084,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ded = dedup_stream.dedup_within_watermark(
         stream, ["obs_id"], "observed_at", delay="3650 days"
     )
-    with stream_state_partitions(spark, 8):
-        q = weather_stream.run_available_now(ded, name, output_mode="append")
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_dedup: availableNow drain timed out after 300s — "
-            "refusing to compare a partially-filled sink against the oracle"
-        )
-    return spark.table(name).select(
+    return weather_stream.drain_available_now(ded, name, "append").select(
         "obs_id", "observed_at", "city", "temp_f", "weather_desc",
         "humidity_pct",
     )
@@ -2247,16 +2228,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id bigint, ts timestamp, value double"
     ).parquet(src)
     sess = sessionize.sessionize_stream(stream, gap_minutes=30)
-    with stream_state_partitions(spark, 8):
-        q = weather_stream.run_available_now(sess, name, output_mode="update")
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_sessions: availableNow drain timed out after 300s — "
-            "refusing to compare a partially-filled sink against the oracle"
-        )
-    return spark.table(name).select(
+    return weather_stream.drain_available_now(sess, name, "update").select(
         "user_id",
         "session_start",
         "session_end",
@@ -2338,16 +2310,7 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _STREAM_SINK_SEQ[0] += 1
     name = f"q_stream_asof_sink_{_STREAM_SINK_SEQ[0]}"
-    with stream_state_partitions(spark, 8):
-        q = weather_stream.run_available_now(joined, name, output_mode="append")
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_asof: availableNow drain timed out after 300s — "
-            "refusing to compare a partially-filled sink against the oracle"
-        )
-    return spark.table(name)
+    return weather_stream.drain_available_now(joined, name, "append")
 
 
 _SQL_STREAM_ASOF = """
@@ -2438,16 +2401,9 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _STREAM_SINK_SEQ[0] += 1
     name = f"q_stream_join_sink_{_STREAM_SINK_SEQ[0]}"
-    with stream_state_partitions(spark, 8):
-        q = weather_stream.run_available_now(j, name, output_mode="append")
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_join: availableNow drain timed out after 300s — "
-            "refusing to compare a partially-filled sink against the oracle"
-        )
-    return spark.table(name).select("event_id", "obs_id", "ts", "observed_at")
+    return weather_stream.drain_available_now(j, name, "append").select(
+        "event_id", "obs_id", "ts", "observed_at"
+    )
 
 
 _SQL_STREAM_JOIN_SELECT = """
@@ -2921,16 +2877,7 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     regs = rows.groupBy("win", "bucket").agg(F.max("__rho").alias("rho"))
-    with stream_state_partitions(spark, 8):
-        q = weather_stream.run_available_now(regs, name)
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_hll: availableNow drain timed out after 300s — "
-            "refusing to compare a partially-filled sink against the oracle"
-        )
-    sink = spark.table(name).select(
+    sink = weather_stream.drain_available_now(regs, name).select(
         F.col("win.start").alias("day"), "bucket", "rho"
     )
     est = sketches.hll_estimate_from_registers(sink, ("day",), p=9)
@@ -2998,16 +2945,7 @@ def q_stream_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("win", "bin")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    with stream_state_partitions(spark, 8):
-        q = weather_stream.run_available_now(regs, name)
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_histogram: availableNow drain timed out after 300s"
-            " — refusing to compare a partially-filled sink"
-        )
-    sink = spark.table(name).select(
+    sink = weather_stream.drain_available_now(regs, name).select(
         F.col("win.start").alias("day"), "bin", "cnt"
     )
     w = Window.partitionBy("day").orderBy("bin")
@@ -3167,16 +3105,7 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("win", "bin")
         .agg(F.count(F.lit(1)).alias("c_g"))
     )
-    with stream_state_partitions(spark, 8):
-        q = weather_stream.run_available_now(counts, name)
-        drained = q.awaitTermination(300)
-    q.stop()
-    if not drained:
-        raise RuntimeError(
-            "q_stream_psi: availableNow drain timed out after 300s — "
-            "refusing to compare a partially-filled sink against the oracle"
-        )
-    sink = spark.table(name).select(
+    sink = weather_stream.drain_available_now(counts, name).select(
         F.col("win.start").alias("grp"), "bin", "c_g"
     )
     out = drift.psi_from_grid(drift.grid_from_counts(sink, 10), "day")

@@ -9,6 +9,14 @@ The streaming-native equivalent: file-source stream → 2h watermark (the
 reference's warn SLA) → 1h tumbling window reproducing int_weather_hourly
 (A1). `Trigger.AvailableNow` gives exactly the hourly-batch cadence while
 keeping incremental state; the same code runs continuous.
+
+:func:`run_available_now` is the one place the engine starts a
+memory-sink drain (the DAG's weather drain and every `q_stream_*` query),
+and it starts each one with 8 state partitions instead of the session's
+batch setting (32 by default).  At kilobyte state every micro-batch
+still commits one state file per store per partition, so those files are
+pure fixed cost: at 32 partitions the weather drain ran 2×64 state-store
+tasks to aggregate a few hundred rows.
 """
 
 from __future__ import annotations
@@ -24,6 +32,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from ..util import stream_state_partitions
 
 WEATHER_STREAM_SCHEMA = StructType(
     [
@@ -92,11 +102,36 @@ def run_available_now(
 ):
     """Drain everything currently in the source (hourly-batch cadence),
     results to an in-memory sink for inspection/tests. ``complete`` for
-    windowed aggregations; ``append`` for row streams (dedup, filters)."""
-    return (
+    windowed aggregations; ``append`` for row streams (dedup, filters).
+
+    Only ``start()`` runs inside the 8-partition
+    :func:`~nyc_taxi_data_warehouse_spark.util.stream_state_partitions`
+    scope: the stream clones the session conf when it starts and its
+    checkpoint then fixes the state-partition count, so restoring the
+    session conf once ``start()`` returns does not reach the running
+    stream, and the wait for the drain needs no scope."""
+    writer = (
         agg.writeStream.format("memory")
         .queryName(query_name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
-        .start()
     )
+    with stream_state_partitions(agg.sparkSession, 8):
+        return writer.start()
+
+
+def drain_available_now(
+    agg: DataFrame, query_name: str, output_mode: str = "complete"
+) -> DataFrame:
+    """:func:`run_available_now`, wait up to 300 s for the drain, and
+    return the filled sink table.  A drain that does not finish raises
+    instead of handing a partially-filled sink to the caller."""
+    q = run_available_now(agg, query_name, output_mode)
+    drained = q.awaitTermination(300)
+    q.stop()
+    if not drained:
+        raise RuntimeError(
+            f"{query_name}: availableNow drain timed out after 300s"
+            " — refusing to read a partially-filled sink"
+        )
+    return agg.sparkSession.table(query_name)

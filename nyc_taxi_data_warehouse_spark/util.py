@@ -49,6 +49,9 @@ def stream_feed(df, name: str, key: str, n_files: int = 16) -> str:
 
 
 import contextlib
+import threading
+
+_SHUFFLE_CONF_LOCK = threading.Lock()
 
 
 @contextlib.contextmanager
@@ -65,10 +68,17 @@ def stream_state_partitions(spark, n: int = 8):
     conf restores on exit, so the memory-sink table the drain leaves
     behind is consumed batch-side under the session's normal setting.
     At cluster scale the dial goes UP with real state volume; the
-    point is that it is a per-query knob, not a session constant."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    point is that it is a per-query knob, not a session constant.
+
+    The save/set/restore runs under one process-wide lock, so two
+    threads starting streams at once cannot interleave and leave the
+    session at ``n`` for good.  The conf itself is session-wide: a batch
+    query planned on another thread while the scope is open (the few
+    milliseconds of a ``start()``) still sees ``n`` partitions."""
+    with _SHUFFLE_CONF_LOCK:
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)

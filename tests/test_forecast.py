@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -37,6 +39,63 @@ def test_forecast_7day_rolls_features_forward(spark, features):
     assert len({r.forecast_date for r in rows}) == 7  # consecutive distinct days
     assert all(r.model_version == "rf_v1" for r in rows)
     assert all(r.predicted_avg_fare is not None for r in rows)
+
+
+def test_forecast_7day_fires_only_its_two_input_collects(spark, features):
+    """The 7 recursive steps predict on the driver: the only Spark jobs
+    are the last-row and trailing-fare collects."""
+    model = forecast.train(features).model
+    features.count()  # the cache fills outside the counted group
+    sc = spark.sparkContext
+    group = f"forecast_7day_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        forecast.forecast_7day(spark, features, model)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+def test_forecast_7day_predict_matches_transform_bit_for_bit(spark, features):
+    """Rebuild the 7 rolled feature states from the forecast and score
+    them through VectorAssembler → ``transform``, the path the driver-side
+    ``predict`` replaced (one frame of 7 rows: ``transform`` scores each
+    row on its own): the floats agree exactly."""
+    from pyspark.ml.feature import VectorAssembler
+
+    model = forecast.train(features).model
+    fc = sorted(
+        forecast.forecast_7day(spark, features, model).collect(),
+        key=lambda r: r.forecast_date,
+    )
+    last = forecast._prepare(features).orderBy(F.desc("trip_date")).first()
+    state = {c: float(last[c]) for c in forecast.FEATURE_COLS}
+    tail = [
+        float(r.avg_fare)
+        for r in features.orderBy(F.desc("trip_date")).limit(7).collect()
+    ][::-1]
+    states = []
+    for r in fc:
+        weekend = r.forecast_date.weekday() in (5, 6)
+        state["weekend_trip_count"] = state["trip_count"] if weekend else 0.0
+        state["weekday_trip_count"] = 0.0 if weekend else state["trip_count"]
+        states.append((r.forecast_date, *(state[c] for c in forecast.FEATURE_COLS)))
+        state["avg_fare_lag7"] = state["avg_fare_lag1"]
+        state["avg_fare_lag1"] = r.predicted_avg_fare
+        tail = (tail + [r.predicted_avg_fare])[-7:]
+        state["avg_fare_ma7"] = sum(tail) / len(tail)
+
+    rolled = spark.createDataFrame(states, ["d", *forecast.FEATURE_COLS])
+    assembler = VectorAssembler(inputCols=forecast.FEATURE_COLS, outputCol="features")
+    via_transform = {
+        r.d: r.prediction
+        for r in model.transform(assembler.transform(rolled)).collect()
+    }
+    assert len(fc) == 7
+    for r in fc:
+        assert r.predicted_avg_fare == via_transform[r.forecast_date]
 
 
 def test_hindcast_eval_shape(spark, features):

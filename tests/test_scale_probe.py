@@ -106,6 +106,16 @@ def test_registry_query_runs_on_grown_dir(spark, grown, name):
     assert rec["exec_jobs"] >= 1 and rec["total_s"] > 0
 
 
+def test_stream_micro_batch_jobs_are_counted(spark, sf_dir):
+    """A drain's micro-batches run under the stream's own job group; the
+    probe still counts them toward the build phase."""
+    import __spark_entry__ as entry_mod
+
+    rec = sp.time_query(spark, entry_mod.queries()["q_stream_hourly"], sf_dir)
+    assert rec["stream_jobs"] > 0
+    assert rec["build_jobs"] >= rec["stream_jobs"]
+
+
 @pytest.mark.parametrize(
     "path", sorted(glob.glob(os.path.join(TOOLS, "*.py"))), ids=os.path.basename
 )

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from nyc_taxi_data_warehouse_spark.plans import nyc_views
 from nyc_taxi_data_warehouse_spark.streaming.merge_sink import foreach_batch_merge
+from nyc_taxi_data_warehouse_spark.streaming.weather_stream import drain_available_now
 
 
 def test_stream_static_join_matches_batch(spark, sf_dir, tmp_path):
@@ -27,19 +28,11 @@ def test_stream_static_join_matches_batch(spark, sf_dir, tmp_path):
     enriched = stream.join(
         F.broadcast(zones), stream.pickup_zone_id == zones.location_id, "left"
     )
-    q = (
-        enriched.groupBy("borough")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .writeStream.format("memory")
-        .queryName("ssj_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    sink = drain_available_now(
+        enriched.groupBy("borough").agg(F.count(F.lit(1)).alias("n")), "ssj_test"
     )
-    q.awaitTermination(120)
-    q.stop()
 
-    got = {r.borough: r.n for r in spark.table("ssj_test").collect()}
+    got = {r.borough: r.n for r in sink.collect()}
     want = {
         r.borough: r.n
         for r in trips.join(
@@ -113,15 +106,7 @@ def test_streaming_dedup_within_watermark_drops_redelivery(spark, tmp_path):
         .parquet(src)
     )
     deduped = dedup_within_watermark(stream, ["event_id"], "ts", "2 hours")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("sdedup_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
+    sink = drain_available_now(deduped, "sdedup_test", "append")
 
-    rows = spark.table("sdedup_test").collect()
+    rows = sink.collect()
     assert sorted(r.event_id for r in rows) == list(range(30))  # each id once

@@ -10,17 +10,39 @@ from nyc_taxi_data_warehouse_spark.sources import multimodal
 from nyc_taxi_data_warehouse_spark.streaming import weather_stream
 
 
-def test_streaming_hourly_agg_matches_batch(spark, sf_dir, tmp_path):
+def _weather_feed(spark, sf_dir, src):
     weather = nyc_views.weather_from_events(
         nyc_views.load_tables(spark, sf_dir)["events"]
     )
-    src = str(tmp_path / "weather_feed")
     weather.write.mode("overwrite").parquet(src)
+    return weather
 
-    stream = weather_stream.read_weather_stream(spark, src)
-    agg = weather_stream.hourly_weather_stream(stream)
-    q = weather_stream.run_available_now(agg, "wh_test")
-    q.awaitTermination(120)
+
+def _hourly(spark, src):
+    return weather_stream.hourly_weather_stream(
+        weather_stream.read_weather_stream(spark, src)
+    )
+
+
+def _state_partitions(q):
+    ops = q.lastProgress["stateOperators"]
+    assert ops, "the hourly drain has stateful operators"
+    return {op["numShufflePartitions"] for op in ops}
+
+
+def test_streaming_hourly_agg_matches_batch(spark, sf_dir, tmp_path):
+    """The drain matches the batch model; its state stores run 8
+    partitions whatever the session's batch setting, and the session
+    setting is back afterwards."""
+    src = str(tmp_path / "weather_feed")
+    weather = _weather_feed(spark, sf_dir, src)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert before != "8"
+
+    q = weather_stream.run_available_now(_hourly(spark, src), "wh_test")
+    assert q.awaitTermination(120)
+    assert _state_partitions(q) == {8}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
     got = spark.table("wh_test")
     batch = intermediate.int_weather_hourly(staging.stg_weather(weather))
@@ -30,6 +52,47 @@ def test_streaming_hourly_agg_matches_batch(spark, sf_dir, tmp_path):
     b = {tuple(r) for r in batch.select(*cols).collect()}
     assert g == b
     q.stop()
+
+
+def test_concurrent_stream_starts_restore_the_session_conf(spark, sf_dir, tmp_path):
+    """More threads than cores start streams at once: each stream gets 8
+    state partitions, and no interleaved save/restore leaves the session
+    at 8."""
+    import sys
+    import threading
+
+    src = str(tmp_path / "weather_feed")
+    _weather_feed(spark, sf_dir, src)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    frames = [_hourly(spark, src) for _ in range(6)]
+    gate = threading.Barrier(len(frames))
+    started, errors = {}, []
+
+    def start(i):
+        try:
+            gate.wait()
+            started[i] = weather_stream.run_available_now(frames[i], f"wh_thread_{i}")
+        except Exception as e:  # surfaced below, not lost in the thread
+            errors.append(e)
+
+    threads = [threading.Thread(target=start, args=(i,)) for i in range(len(frames))]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert len(started) == len(frames)
+    for q in started.values():
+        assert q.awaitTermination(120)
+        q.stop()
+        assert _state_partitions(q) == {8}
 
 
 def test_multimodal_decode_stub_contract(spark):
@@ -151,20 +214,13 @@ def test_stateful_sessionize_gap_splits_and_state_survives_batches(spark, tmp_pa
         .option("maxFilesPerTrigger", 1)  # force two micro-batches
         .parquet(src)
     )
-    q = (
-        sessionize.sessionize_stream(stream, gap_minutes=30)
-        .writeStream.format("memory")
-        .queryName("sess_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    sink = weather_stream.drain_available_now(
+        sessionize.sessionize_stream(stream, gap_minutes=30), "sess_test", "update"
     )
-    q.awaitTermination(120)
-    q.stop()
 
     got = {
         (r.user_id, r.session_start.minute, r.session_end.minute, r.n_events)
-        for r in spark.table("sess_test").collect()
+        for r in sink.collect()
     }
     # closed: user1 minutes 0-10 (3 events); user2 minutes 0-20 (2 events).
     # open tails (user1 50-55, user2 at 200) are not emitted.
@@ -186,52 +242,3 @@ def test_multimodal_resize_stub_contract(spark):
     if not multimodal._pil_available():
         with pytest.raises(NotImplementedError):
             multimodal.resize_image_batch(df, 4, 4, use_fake=False)
-
-
-def test_transformwithstate_sessionize_matches_legacy(spark, tmp_path):
-    """The Spark-4 StatefulProcessor port must reproduce the
-    applyInPandasWithState sessionizer exactly on a two-micro-batch
-    replay (gap split + state survival across batches).
-
-    transformWithStateInPandas talks to the state store over protobuf;
-    skip where google.protobuf is absent (this container) — the legacy
-    applyInPandasWithState test above still covers the semantics."""
-    pytest.importorskip("google.protobuf")
-    from datetime import datetime
-
-    from nyc_taxi_data_warehouse_spark.streaming import sessionize_tws
-
-    def ev(uid, minute, val=1.0):
-        return (uid, datetime(2026, 1, 1, 10 + minute // 60, minute % 60), val)
-
-    src = str(tmp_path / "sess_tws_feed")
-    spark.createDataFrame(
-        [ev(1, 0), ev(1, 5), ev(1, 10), ev(1, 50), ev(2, 0), ev(2, 20)],
-        "user_id long, ts timestamp, value double",
-    ).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(
-        [ev(1, 55), ev(2, 200)],
-        "user_id long, ts timestamp, value double",
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        sessionize_tws.sessionize_stream_tws(stream, gap_minutes=30)
-        .writeStream.format("memory")
-        .queryName("sess_tws_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-
-    got = {
-        (r.user_id, r.session_start.minute, r.session_end.minute, r.n_events)
-        for r in spark.table("sess_tws_test").collect()
-    }
-    assert got == {(1, 0, 10, 3), (2, 0, 20, 2)}

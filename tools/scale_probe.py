@@ -8,8 +8,11 @@ so every number is a number for the plan that ships.  Per run it reports
   any eager jobs the builder fires: stream drains, persists, collects);
 - ``exec_s``: the noop write of the returned frame;
 - ``jobs`` / ``stages``: what the two phases issued, read from the
-  status tracker through one job group per phase (a streaming drain's
-  micro-batches run on the stream's own thread and are not counted).
+  status tracker through one job group per phase.  A streaming drain's
+  micro-batches run on the stream's own thread under a job group named
+  by the query's ``runId``; a listener collects the run ids each phase
+  starts and their jobs count toward that phase (``stream_jobs`` is
+  their share).
 
 Before timing a multiple it makes one untimed warm call there, so the
 per-sf_dir memos (``load_tables`` handles, ``stream_feed`` staging, the
@@ -61,6 +64,7 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 import __spark_entry__ as entry_mod
 from nyc_taxi_data_warehouse_spark.session import get_spark
@@ -150,25 +154,51 @@ def grow_dir(
     return out
 
 
+class _StreamRuns(StreamingQueryListener):
+    """Collects the ``runId`` of every streaming query started while it is
+    registered; a stream's micro-batch jobs run under that job group."""
+
+    def __init__(self):
+        self.run_ids: list[str] = []
+
+    def onQueryStarted(self, event):
+        self.run_ids.append(str(event.runId))
+
+    def onQueryProgress(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
+
+
 def _phase(spark: SparkSession, fn):
-    """Run ``fn`` under a fresh job group: (result, seconds, jobs, stages)."""
+    """Run ``fn`` under a fresh job group: (result, seconds, jobs, stages,
+    stream jobs), counting the micro-batch jobs of streams it starts."""
     sc = spark.sparkContext
     group = f"scale_probe_{uuid.uuid4().hex}"
+    streams = _StreamRuns()
+    spark.streams.addListener(streams)
     sc.setJobGroup(group, group)
-    t0 = time.perf_counter()
-    out = fn()
-    dt = time.perf_counter() - t0
+    try:
+        t0 = time.perf_counter()
+        out = fn()
+        dt = time.perf_counter() - t0
+    finally:
+        spark.streams.removeListener(streams)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group) or []
+    stream_jobs = [j for r in streams.run_ids for j in tracker.getJobIdsForGroup(r)]
+    jobs = (tracker.getJobIdsForGroup(group) or []) + stream_jobs
     infos = [tracker.getJobInfo(j) for j in jobs]
-    return out, dt, len(jobs), sum(len(i.stageIds) for i in infos if i is not None)
+    stages = sum(len(i.stageIds) for i in infos if i is not None)
+    return out, dt, len(jobs), stages, len(stream_jobs)
 
 
 def time_query(spark: SparkSession, fn, sf_dir: str) -> dict:
     """One build + noop-execute of a registry callable, then cache clear
     and GC on both sides so runs start from the same state."""
-    df, build_s, bj, bs = _phase(spark, lambda: fn(spark, sf_dir))
-    _, exec_s, xj, xs = _phase(
+    df, build_s, bj, bs, b_stream = _phase(spark, lambda: fn(spark, sf_dir))
+    _, exec_s, xj, xs, x_stream = _phase(
         spark, lambda: df.write.mode("overwrite").format("noop").save()
     )
     spark.catalog.clearCache()
@@ -180,6 +210,7 @@ def time_query(spark: SparkSession, fn, sf_dir: str) -> dict:
         "total_s": round(build_s + exec_s, 3),
         "build_jobs": bj,
         "exec_jobs": xj,
+        "stream_jobs": b_stream + x_stream,
         "stages": bs + xs,
     }
 
