@@ -12,7 +12,6 @@ in the oracle SQL.
 from __future__ import annotations
 
 import math
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -21,15 +20,11 @@ from .functions import text as T
 from .functions import vectors as V
 from .operators import dedup, similarity
 from .plans.nyc_views import load_tables
+from .queries_nyc import _rnd
 from .streaming.weather_stream import drain_available_now
 
 
 _KMEANS_QUANT = 1000  # embedding quantization lattice (SRP lesson)
-
-
-def _rnd(c, n: int):
-    """Epsilon-shifted rounding (see queries_nyc._rnd)."""
-    return F.round(c + F.lit(1e-9), n)
 
 
 # --- corpora ---------------------------------------------------------------
@@ -11767,41 +11762,10 @@ _LSH_J_NUM, _LSH_J_DEN = 1, 2  # truth threshold J >= 1/2, as a rational
 # skews toward twins — precision/recall are still consistent ratio
 # estimators WITHIN each pair class, and the S-curve ordering across band
 # configs is preserved, but the mixture differs from the full-truth run.
-# Override for a full-truth run with SPARK_GRAFT_LSH_TUNE_PCT=100.
-#
-# The env var is validated here but a BAD value must not poison the whole
-# module import (280+ unrelated queries live here) — parse failures defer
-# to q_lsh_tuning call time, which fails loud with the parse error.  The
-# oracle SQL embeds the import-time value, so changing the env var after
-# import is an ERROR q_lsh_tuning raises on (never silently ignored):
-# Spark and DuckDB would otherwise sample different truth sets.
-import os as _os
-
+# The oracle SQL embeds the same rate, so Spark and DuckDB sample the
+# same truth set.
+_LSH_TUNE_PCT = 50
 _LSH_TUNE_SALT = "lshtune"
-
-
-def _parse_lsh_tune_pct() -> int:
-    raw = _os.environ.get("SPARK_GRAFT_LSH_TUNE_PCT", "50")
-    try:
-        pct = int(raw)
-    except ValueError:
-        raise ValueError(
-            "SPARK_GRAFT_LSH_TUNE_PCT must be an integer in [1, 100], got "
-            f"{raw!r}"
-        ) from None
-    if not 1 <= pct <= 100:
-        raise ValueError(
-            f"SPARK_GRAFT_LSH_TUNE_PCT must be in [1, 100], got {pct}"
-        )
-    return pct
-
-
-try:
-    _LSH_TUNE_PCT = _parse_lsh_tune_pct()
-    _LSH_TUNE_IMPORT_ERR: str | None = None
-except ValueError as _e:
-    _LSH_TUNE_PCT = 50  # placeholder so the module still imports
-    _LSH_TUNE_IMPORT_ERR = str(_e)
 
 
 def q_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11817,28 +11781,17 @@ def q_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles, so the truth set is complete without an all-pairs scan.
 
     The truth set is evaluated on a deterministic content-hash sample of
-    the base docs (default 50%, `SPARK_GRAFT_LSH_TUNE_PCT`): doc-level
-    sampling bounds the exact-truth join quadratically (0.25× work at the
-    50% default). Twin pairs survive at rate p, cross-doc pairs at p² —
-    the sampled S-curve preserves the band-config ordering but shifts the
-    truth-set mix toward planted twins (see the module-level note)."""
+    the base docs (50%, `_LSH_TUNE_PCT`): doc-level sampling bounds the
+    exact-truth join quadratically (0.25× work). Twin pairs survive at
+    rate p, cross-doc pairs at p² — the sampled S-curve preserves the
+    band-config ordering but shifts the truth-set mix toward planted
+    twins (see the module-level note)."""
     from .operators import dedup as dd
     from .operators import sampling
 
-    if _LSH_TUNE_IMPORT_ERR is not None:
-        raise ValueError(_LSH_TUNE_IMPORT_ERR)
-    cur = _parse_lsh_tune_pct()
-    if cur != _LSH_TUNE_PCT:
-        raise RuntimeError(
-            "SPARK_GRAFT_LSH_TUNE_PCT changed after import "
-            f"({_LSH_TUNE_PCT} -> {cur}): the DuckDB oracle embedded the "
-            "import-time value; restart the process to change the rate"
-        )
-    base = _docs(spark, sf_dir)
-    if _LSH_TUNE_PCT < 100:
-        base = sampling.hash_sample(
-            base, "doc_id", _LSH_TUNE_PCT, salt=_LSH_TUNE_SALT
-        )
+    base = sampling.hash_sample(
+        _docs(spark, sf_dir), "doc_id", _LSH_TUNE_PCT, salt=_LSH_TUNE_SALT
+    )
     sh = dd.shingle_rows(_text_corpus(base)).persist()
     sig = dd.minhash_signatures(sh, num_hashes=_NH).persist()
     # grouped-array pair counts (dd.cooccur_pair_counts): one shuffle of
@@ -13136,188 +13089,6 @@ SELECT g.dow, g.hour, g.n_events,
             AS INTEGER) AS rank_in_dow
 FROM grid g, tot t"""
 
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q_dedup_exact": q_dedup_exact,
-    "q_dedup_cluster": q_dedup_cluster,
-    "q_cc_two_phase": q_cc_two_phase,
-    "q_global_index": q_global_index,
-    "q_boilerplate": q_boilerplate,
-    "q_dup_rate_by_source": q_dup_rate_by_source,
-    "q_multimodal_features": q_multimodal_features,
-    "q_frame_sample": q_frame_sample,
-    "q_top_terms": q_top_terms,
-    "q_edit_distance": q_edit_distance,
-    "q_lm_score": q_lm_score,
-    "q_decontaminate": q_decontaminate,
-    "q_array_ops": q_array_ops,
-    "q_text_scrub": q_text_scrub,
-    "q_sample_hash": q_sample_hash,
-    "q_epoch_shuffle": q_epoch_shuffle,
-    "q_sample_stratified": q_sample_stratified,
-    "q_percentiles": q_percentiles,
-    "q_percentiles_approx": q_percentiles_approx,
-    "q_repetition": q_repetition,
-    "q_length_histogram": q_length_histogram,
-    "q_split_assign": q_split_assign,
-    "q_dedup_keep_best": q_dedup_keep_best,
-    "q_kmeans_cells": q_kmeans_cells,
-    "q_pq_codebook": q_pq_codebook,
-    "q_pq_search": q_pq_search,
-    "q_pq_recall": q_pq_recall,
-    "q_ivfpq_search": q_ivfpq_search,
-    "q_ivfpq_recall": q_ivfpq_recall,
-    "q_ivfpq_multiprobe": q_ivfpq_multiprobe,
-    "q_ann_index_persist": q_ann_index_persist,
-    "q_ann_index_append": q_ann_index_append,
-    "q_bpe_merges": q_bpe_merges,
-    "q_bpe_tokenize": q_bpe_tokenize,
-    "q_tokenizer_fertility": q_tokenizer_fertility,
-    "q_chunk_docs": q_chunk_docs,
-    "q_pack_sequences": q_pack_sequences,
-    "q_cross_corpus_neardup": q_cross_corpus_neardup,
-    "q_incremental_neardup": q_incremental_neardup,
-    "q_neardup_store_roundtrip": q_neardup_store_roundtrip,
-    "q_neardup_store_bucketed": q_neardup_store_bucketed,
-    "q_store_time_travel": q_store_time_travel,
-    "q_pii_scan": q_pii_scan,
-    "q_stream_cdc": q_stream_cdc,
-    "q_consistent_hash": q_consistent_hash,
-    "q_feature_hash_audit": q_feature_hash_audit,
-    "q_gdpr_export": q_gdpr_export,
-    "q_stream_ingest_dedup": q_stream_ingest_dedup,
-    "q_rake_keywords": q_rake_keywords,
-    "q_cluster_split": q_cluster_split,
-    "q_schema_evolution": q_schema_evolution,
-    "q_filter_funnel": q_filter_funnel,
-    "q_mixture_sample": q_mixture_sample,
-    "q_mixture_plan": q_mixture_plan,
-    "q_semdedup": q_semdedup,
-    "q_hll_distinct": q_hll_distinct,
-    "q_kmv_distinct": q_kmv_distinct,
-    "q_mg_topk": q_mg_topk,
-    "q_stream_mg_topk": q_stream_mg_topk,
-    "q_trend_ols": q_trend_ols,
-    "q_benford": q_benford,
-    "q_bootstrap_ci": q_bootstrap_ci,
-    "q_ewma_anomaly": q_ewma_anomaly,
-    "q_markov_transitions": q_markov_transitions,
-    "q_ab_test": q_ab_test,
-    "q_watermark_audit": q_watermark_audit,
-    "q_sliding_distinct": q_sliding_distinct,
-    "q_rrf_fusion": q_rrf_fusion,
-    "q_rank_functions": q_rank_functions,
-    "q_set_ops": q_set_ops,
-    "q_dp_budget": q_dp_budget,
-    "q_cohort_ltv": q_cohort_ltv,
-    "q_skyline": q_skyline,
-    "q_weighted_median": q_weighted_median,
-    "q_zipf_fit": q_zipf_fit,
-    "q_rfm_segments": q_rfm_segments,
-    "q_stream_ohlc": q_stream_ohlc,
-    "q_kmv_jaccard": q_kmv_jaccard,
-    "q_embedding_drift": q_embedding_drift,
-    "q_time_to_convert": q_time_to_convert,
-    "q_graph_degree": q_graph_degree,
-    "q_microagg": q_microagg,
-    "q_stream_sliding": q_stream_sliding,
-    "q_phrase_search": q_phrase_search,
-    "q_cdc_chunking": q_cdc_chunking,
-    "q_lsh_tuning": q_lsh_tuning,
-    "q_cumulative_distinct": q_cumulative_distinct,
-    "q_stream_kmins": q_stream_kmins,
-    "q_seasonal_anomaly": q_seasonal_anomaly,
-    "q_grouping_sets": q_grouping_sets,
-    "q_autocorrelation": q_autocorrelation,
-    "q_gini": q_gini,
-    "q_crosscorrelation": q_crosscorrelation,
-    "q_pareto_share": q_pareto_share,
-    "q_tukey_outliers": q_tukey_outliers,
-    "q_stickiness": q_stickiness,
-    "q_power_analysis": q_power_analysis,
-    "q_new_vs_returning": q_new_vs_returning,
-    "q_heatmap": q_heatmap,
-    "q_countmin_topk": q_countmin_topk,
-    "q_stream_cm": q_stream_cm,
-    "q_bloom_portable": q_bloom_portable,
-    "q_histogram_quantiles": q_histogram_quantiles,
-    "q_seasonal_decompose": q_seasonal_decompose,
-    "q_holt_linear": q_holt_linear,
-    "q_dbscan": q_dbscan,
-    "q_stream_bloom": q_stream_bloom,
-    "q_split_leakage": q_split_leakage,
-    "q_pca_power": q_pca_power,
-    "q_market_basket": q_market_basket,
-    "q_mixture_temperature": q_mixture_temperature,
-    "q_key_skew": q_key_skew,
-    "q_ohlc_bars": q_ohlc_bars,
-    "q_attribution": q_attribution,
-    "q_gopher_rules": q_gopher_rules,
-    "q_dsir_select": q_dsir_select,
-    "q_hll_union": q_hll_union,
-    "q_hll_overlap": q_hll_overlap,
-    "q_k_anonymity": q_k_anonymity,
-    "q_l_diversity": q_l_diversity,
-    "q_t_closeness": q_t_closeness,
-    "q_cm_join_size": q_cm_join_size,
-    "q_srp_lsh": q_srp_lsh,
-    "q_cell_quality": q_cell_quality,
-    "q_ann_recall": q_ann_recall,
-    "q_srp_near_pairs": q_srp_near_pairs,
-    "q_minhash_lsh": q_minhash_lsh,
-    "q_ngram_jaccard": q_ngram_jaccard,
-    "q_lsh_hot_buckets": q_lsh_hot_buckets,
-    "q_containment": q_containment,
-    "q_normalize_dedup": q_normalize_dedup,
-    "q_dedup_plan": q_dedup_plan,
-    "q_dup_ngram_coverage": q_dup_ngram_coverage,
-    "q_sparse_cosine": q_sparse_cosine,
-    "q_source_overlap": q_source_overlap,
-    "q_feature_binning": q_feature_binning,
-    "q_psi_drift": q_psi_drift,
-    "q_divergence_drift": q_divergence_drift,
-    "q_ks_drift": q_ks_drift,
-    "q_snapshot_diff": q_snapshot_diff,
-    "q_prefix_filter_pairs": q_prefix_filter_pairs,
-    "q_crosstab_independence": q_crosstab_independence,
-    "q_iceberg_diff": q_iceberg_diff,
-    "q_cdc_classify": q_cdc_classify,
-    "q_cdc_apply": q_cdc_apply,
-    "q_delta_roundtrip": q_delta_roundtrip,
-    "q_iceberg_roundtrip": q_iceberg_roundtrip,
-    "q_orc_roundtrip": q_orc_roundtrip,
-    "q_simhash": q_simhash,
-    "q_simhash_near": q_simhash_near,
-    "q_text_quality": q_text_quality,
-    "q_quality_model": q_quality_model,
-    "q_char_entropy": q_char_entropy,
-    "q_profile_columns": q_profile_columns,
-    "q_curation_pipeline": q_curation_pipeline,
-    "q_token_count": q_token_count,
-    "q_lang_id": q_lang_id,
-    "q_embedding_stats": q_embedding_stats,
-    "q_preference_pairs": q_preference_pairs,
-    "q_negative_samples": q_negative_samples,
-    "q_shard_checksums": q_shard_checksums,
-    "q_langid_eval": q_langid_eval,
-    "q_fingerprint": q_fingerprint,
-    "q_knn_bruteforce": q_knn_bruteforce,
-    "q_ann_ivf": q_ann_ivf,
-    "q_centroid_assign": q_centroid_assign,
-    "q_embedding_neardup": q_embedding_neardup,
-    "q_inverted_index": q_inverted_index,
-    "q_embedding_quantize": q_embedding_quantize,
-    "q_lsh_recall": q_lsh_recall,
-    "q_cube": q_cube,
-    "q_weighted_sample": q_weighted_sample,
-    "q_priority_sample": q_priority_sample,
-    "q_target_encode": q_target_encode,
-    "q_sax_symbols": q_sax_symbols,
-    "q_quantile_normalize": q_quantile_normalize,
-    "q_bm25": q_bm25,
-    "q_winsorize": q_winsorize,
-    "q_pmi": q_pmi,
-}
 
 ORACLES: dict[str, str] = {
     "q_dedup_exact": _SQL_DEDUP_EXACT,

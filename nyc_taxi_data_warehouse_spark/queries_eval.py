@@ -22,8 +22,6 @@ double is epsilon-shift rounded on BOTH sides.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -32,11 +30,7 @@ from .operators import graph
 from .operators.monitor import p2_formula
 from .operators.sampling import bucketed_value_cumsum
 from .plans.nyc_views import load_tables
-
-
-def _rnd(c, n: int):
-    """Epsilon-shifted rounding (see queries_nyc._rnd)."""
-    return F.round(c + F.lit(1e-9), n)
+from .queries_nyc import _rnd
 
 
 # --- shared scored-documents base (the q_quality_model inference path) --------
@@ -5205,50 +5199,6 @@ GROUP BY 1""")
     return "".join(parts)
 
 
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q_roc_auc": q_roc_auc,
-    "q_pr_curve": q_pr_curve,
-    "q_lift_table": q_lift_table,
-    "q_kruskal_wallis": q_kruskal_wallis,
-    "q_anova_f": q_anova_f,
-    "q_welch_ttest": q_welch_ttest,
-    "q_morans_i": q_morans_i,
-    "q_link_prediction": q_link_prediction,
-    "q_permutation_test": q_permutation_test,
-    "q_diff_in_diff": q_diff_in_diff,
-    "q_getis_ord": q_getis_ord,
-    "q_mcnemar": q_mcnemar,
-    "q_wilcoxon_signed_rank": q_wilcoxon_signed_rank,
-    "q_time_decay": q_time_decay,
-    "q_graph_modularity": q_graph_modularity,
-    "q_ips_eval": q_ips_eval,
-    "q_kendall_tau": q_kendall_tau,
-    "q_theil_sen": q_theil_sen,
-    "q_fk_audit": q_fk_audit,
-    "q_partition_advisor": q_partition_advisor,
-    "q_pseudonymize": q_pseudonymize,
-    "q_dp_histogram": q_dp_histogram,
-    "q_zorder_effect": q_zorder_effect,
-    "q_vacuum_plan": q_vacuum_plan,
-    "q_clustering_depth": q_clustering_depth,
-    "q_bloom_sizing": q_bloom_sizing,
-    "q_ndcg_mrr": q_ndcg_mrr,
-    "q_rtbf_plan": q_rtbf_plan,
-    "q_knn_classify": q_knn_classify,
-    "q_survival_km": q_survival_km,
-    "q_kcore": q_kcore,
-    "q_label_propagation": q_label_propagation,
-    "q_isotonic_calibration": q_isotonic_calibration,
-    "q_mmr_rerank": q_mmr_rerank,
-    "q_cv_auc": q_cv_auc,
-    "q_levene": q_levene,
-    "q_cuped": q_cuped,
-    "q_sprt": q_sprt,
-    "q_shapley_attribution": q_shapley_attribution,
-    "q_att_stratified": q_att_stratified,
-    "q_closeness_centrality": q_closeness_centrality,
-}
 
 ORACLES: dict[str, str] = {
     "q_roc_auc": _sql_roc_auc(),

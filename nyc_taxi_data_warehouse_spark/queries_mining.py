@@ -13,20 +13,14 @@ sides.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators.monitor import cusum_columns, p2_formula
 from .operators.sampling import bucketed_value_cumsum
 from .plans.nyc_views import load_tables
+from .queries_nyc import _rnd
 from .streaming.weather_stream import drain_available_now
-
-
-def _rnd(c, n: int):
-    """Epsilon-shifted rounding (see queries_nyc._rnd)."""
-    return F.round(c + F.lit(1e-9), n)
 
 
 # --- CUSUM changepoint ------------------------------------------------------
@@ -2260,28 +2254,6 @@ SELECT i AS item, j AS neighbor, ni AS n_item, n_ij AS n_both,
 FROM ranked WHERE rank <= 5"""
     )
 
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q_item_cf": q_item_cf,
-    "q_cusum_changepoint": q_cusum_changepoint,
-    "q_stream_cusum": q_stream_cusum,
-    "q_quantile_summary": q_quantile_summary,
-    "q_entity_resolution": q_entity_resolution,
-    "q_frequent_sequences": q_frequent_sequences,
-    "q_gaps_islands": q_gaps_islands,
-    "q_compaction_plan": q_compaction_plan,
-    "q_bh_fdr": q_bh_fdr,
-    "q_mannwhitney": q_mannwhitney,
-    "q_slo_burn": q_slo_burn,
-    "q_calibration": q_calibration,
-    "q_boilerplate_scrub": q_boilerplate_scrub,
-    "q_dup_span_removal": q_dup_span_removal,
-    "q_encoding_advisor": q_encoding_advisor,
-    "q_matryoshka_recall": q_matryoshka_recall,
-    "q_spearman": q_spearman,
-    "q_changepoint_binseg": q_changepoint_binseg,
-    "q_simpson_trends": q_simpson_trends,
-}
 
 ORACLES: dict[str, str] = {
     "q_item_cf": _sql_item_cf(),

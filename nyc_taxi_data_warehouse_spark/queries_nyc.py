@@ -9,8 +9,6 @@ summation-order noise. Ints/strings/timestamps are compared exactly.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -3150,83 +3148,6 @@ FROM (
     CROSS JOIN n_all
 )
 GROUP BY day, n_g"""
-
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q_backfill_synthetic": q_backfill_synthetic,
-    "q_quality_report": q_quality_report,
-    "q_pivot": q_pivot,
-    "q_rollup": q_rollup,
-    "q_gapfill": q_gapfill,
-    "q_interpolate": q_interpolate,
-    "q_sessions": q_sessions,
-    "q_topk_per_group": q_topk_per_group,
-    "q_asof_join": q_asof_join,
-    "q_asof_multi": q_asof_multi,
-    "q_stream_asof": q_stream_asof,
-    "q_interval_join": q_interval_join,
-    "q_concurrency": q_concurrency,
-    "q_semi_join": q_semi_join,
-    "q_bloom_join": q_bloom_join,
-    "q_window_stats": q_window_stats,
-    "q_dropna": q_dropna,
-    "q_limit": q_limit,
-    "q_scd2_check": q_scd2_check,
-    "q_scd2_timestamp": q_scd2_timestamp,
-    "q_stg_trips": q_stg_trips,
-    "q_stg_weather": q_stg_weather,
-    "q_enrich": q_enrich,
-    "q_weather_hourly": q_weather_hourly,
-    "q_stream_hourly": q_stream_hourly,
-    "q_stream_dedup": q_stream_dedup,
-    "q_trips_weather": q_trips_weather,
-    "q_daily": q_daily,
-    "q_zone_analysis": q_zone_analysis,
-    "q_zone_demand": q_zone_demand,
-    "q_anomaly_mad": q_anomaly_mad,
-    "q_rolling_median": q_rolling_median,
-    "q_zone_dim": q_zone_dim,
-    "q_antijoin": q_antijoin,
-    "q_distinct_hours": q_distinct_hours,
-    "q_minmax": q_minmax,
-    "q_precip_day": q_precip_day,
-    "q_fare_daily_features": q_fare_daily_features,
-    "q_lag_ma": q_lag_ma,
-    "q_top1": q_top1,
-    "q_eval_metrics": q_eval_metrics,
-    "q_forecast_eval": q_forecast_eval,
-    "q_union_summary": q_union_summary,
-    "q_merge_dedup": q_merge_dedup,
-    "q_star_join": q_star_join,
-    "q_stream_hll": q_stream_hll,
-    "q_stream_histogram": q_stream_histogram,
-    "q_stream_psi": q_stream_psi,
-    "q_tpch_q1": q_tpch_q1,
-    "q_tpch_q3": q_tpch_q3,
-    "q_tpch_q5": q_tpch_q5,
-    "q_tpch_q6": q_tpch_q6,
-    "q_zorder_cells": q_zorder_cells,
-    "q_hilbert_cells": q_hilbert_cells,
-    "q_pagerank_zones": q_pagerank_zones,
-    "q_shortest_path": q_shortest_path,
-    "q_triangle_count": q_triangle_count,
-    "q_skew_agg": q_skew_agg,
-    "q_skew_join": q_skew_join,
-    "q_incremental_agg": q_incremental_agg,
-    "q_merge_upsert": q_merge_upsert,
-    "q_freshness": q_freshness,
-    "q_conversion_funnel": q_conversion_funnel,
-    "q_window_funnel": q_window_funnel,
-    "q_retention_cohort": q_retention_cohort,
-    "q_project": q_project,
-    "q_json_extract": q_json_extract,
-    "q_variant_json": q_variant_json,
-    "q_stream_sessions": q_stream_sessions,
-    "q_event_paths": q_event_paths,
-    "q_stream_join": q_stream_join,
-    "q_demand_corr": q_demand_corr,
-    "q_surrogate_key": q_surrogate_key,
-}
 
 
 ORACLES: dict[str, str] = {

@@ -45,17 +45,11 @@ or on the aggregate's own group key.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .plans import nyc_views
-
-
-def _rnd(c, n: int):
-    """Epsilon-shifted rounding (see queries_nyc._rnd)."""
-    return F.round(c + F.lit(1e-9), n)
+from .queries_nyc import _rnd
 
 
 def _ts(s: str):
@@ -1040,27 +1034,6 @@ GROUP BY 1
 ORDER BY numwait DESC, s_name ASC
 LIMIT 20"""
 
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q_tpch_q2": q_tpch_q2,
-    "q_tpch_q9": q_tpch_q9,
-    "q_tpch_q11": q_tpch_q11,
-    "q_tpch_q16": q_tpch_q16,
-    "q_tpch_q20": q_tpch_q20,
-    "q_tpch_q21": q_tpch_q21,
-    "q_tpch_q4": q_tpch_q4,
-    "q_tpch_q7": q_tpch_q7,
-    "q_tpch_q8": q_tpch_q8,
-    "q_tpch_q10": q_tpch_q10,
-    "q_tpch_q12": q_tpch_q12,
-    "q_tpch_q13": q_tpch_q13,
-    "q_tpch_q14": q_tpch_q14,
-    "q_tpch_q15": q_tpch_q15,
-    "q_tpch_q17": q_tpch_q17,
-    "q_tpch_q18": q_tpch_q18,
-    "q_tpch_q19": q_tpch_q19,
-    "q_tpch_q22": q_tpch_q22,
-}
 
 ORACLES: dict[str, str] = {
     "q_tpch_q2": _SQL_TPCH_Q2,

@@ -26,15 +26,11 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 def get_spark(
     app_name: str = "nyc-taxi-dw-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
 ) -> SparkSession:
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-        )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -87,8 +83,7 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
         spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(DEFAULT_SHUFFLE_PARTITIONS)),
+            "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
         )
     except Exception:
         pass  # not runtime-settable on some builds; AQE coalescing covers it
