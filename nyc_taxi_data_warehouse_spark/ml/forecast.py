@@ -18,6 +18,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import timedelta
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -87,7 +88,11 @@ def forecast_7day(spark: SparkSession, features: DataFrame, model) -> DataFrame:
     7 steps then run on the driver with ``model.predict`` on one dense
     vector each, as the reference's sklearn loop does.  No step fires a
     Spark job or ships the model; the prediction is the one a one-row
-    ``transform`` returns (the same tree walk on the same doubles)."""
+    ``transform`` returns (the same tree walk on the same doubles).
+
+    The 7 rows come back as a frame built from an Arrow table, which plans
+    as a ``LocalTableScan``.  A frame built from a Python list plans as a
+    scan over a Python RDD, and writing it forks Python workers."""
     from pyspark.ml.linalg import Vectors
 
     last = _prepare(features).orderBy(F.desc("trip_date")).limit(1).collect()[0]
@@ -97,7 +102,7 @@ def forecast_7day(spark: SparkSession, features: DataFrame, model) -> DataFrame:
         float(r[TARGET])
         for r in features.orderBy(F.desc("trip_date")).limit(7).collect()
     ][::-1]
-    rows = []
+    dates, preds = [], []
     cur_date = last["trip_date"]
     for step in range(1, 8):
         cur_date = cur_date + timedelta(days=1)
@@ -105,14 +110,22 @@ def forecast_7day(spark: SparkSession, features: DataFrame, model) -> DataFrame:
         state["weekend_trip_count"] = state["trip_count"] if dow_weekend else 0.0
         state["weekday_trip_count"] = 0.0 if dow_weekend else state["trip_count"]
         pred = float(model.predict(Vectors.dense([state[c] for c in FEATURE_COLS])))
-        rows.append((cur_date, pred, MODEL_VERSION))
+        dates.append(cur_date)
+        preds.append(pred)
         # roll features forward
         state["avg_fare_lag7"] = state["avg_fare_lag1"]
         state["avg_fare_lag1"] = pred
         tail = (tail + [pred])[-7:]
         state["avg_fare_ma7"] = sum(tail) / len(tail)
+    table = pa.table(
+        {
+            "forecast_date": dates,
+            "predicted_avg_fare": preds,
+            "model_version": [MODEL_VERSION] * len(dates),
+        }
+    )
     return spark.createDataFrame(
-        rows, "forecast_date date, predicted_avg_fare double, model_version string"
+        table, "forecast_date date, predicted_avg_fare double, model_version string"
     )
 
 

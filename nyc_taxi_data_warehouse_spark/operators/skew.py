@@ -54,6 +54,11 @@ def salted_agg(
     return phase1.groupBy(*keys).agg(*aggs)
 
 
+# join types whose right side Spark cannot broadcast, spelled as Spark's
+# JoinType parser normalizes them (lower case, no underscores)
+_NO_RIGHT_BROADCAST = frozenset({"right", "rightouter", "outer", "full", "fullouter"})
+
+
 def salted_broadcast_join(
     fact: DataFrame,
     dim: DataFrame,
@@ -74,7 +79,16 @@ def salted_broadcast_join(
     the hint the fact side is never shuffled at all; the salt then only
     matters for DOWNSTREAM keyed ops, and the broadcast join is
     hot-key-immune by construction.  Results are identical either way —
-    every fact row still meets exactly one dim replica."""
+    every fact row still meets exactly one dim replica.
+
+    Precondition: ``n_salts`` × the dim's rows must fit a broadcast.
+    ``how`` must keep the fact side as the streamed side; a right or full
+    outer join cannot broadcast its right side, so the hint would be a
+    silent no-op and those joins raise ``ValueError``."""
+    if how.lower().replace("_", "") in _NO_RIGHT_BROADCAST:
+        raise ValueError(
+            f"salted_broadcast_join cannot broadcast the dim for how={how!r}"
+        )
     f = fact.withColumn("__salt", (F.rand(seed=42) * n_salts).cast("int"))
     d = dim.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))

@@ -168,12 +168,21 @@ def run_snapshots(
 
 def run_forecast_chain(spark: SparkSession, run: ModelRun):
     """The three forecasting DAGs (§3.3) end-to-end: train → 7-day recursive
-    forecast → hindcast eval. Returns (TrainResult, forecast_df, eval_df)."""
+    forecast → hindcast eval. Returns (TrainResult, forecast_df, eval_df).
+
+    The reference DAGs load FARE_DAILY_FEATURES once and work on that copy;
+    here the daily-grain feature table is materialized once with an eager
+    ``localCheckpoint`` and all three stages read it.  Left lazy, every
+    count, fit pass, collect and write re-derives it from
+    ``mart_daily_metrics`` plus a raw weather scan.  The outputs do not
+    change: ``train``'s unpartitioned window sorts by ``trip_date``, so the
+    forest fits the same rows in one partition either way."""
     from ..ml import forecast
 
-    tr = forecast.train(run.fare_daily_features)
-    fc = forecast.forecast_7day(spark, run.fare_daily_features, tr.model)
-    ev = forecast.hindcast_eval(run.fare_daily_features, tr.model)
+    feats = run.fare_daily_features.localCheckpoint()
+    tr = forecast.train(feats)
+    fc = forecast.forecast_7day(spark, feats, tr.model)
+    ev = forecast.hindcast_eval(feats, tr.model)
     return tr, fc, ev
 
 

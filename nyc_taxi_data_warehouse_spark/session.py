@@ -23,14 +23,28 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def default_cpus() -> str:
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def default_driver_mem() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else 16g capped at half the host's
+    physical memory (the other half is left to the OS and Python)."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, host_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "nyc-taxi-dw-spark",
     master: str | None = None,
     shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
 ) -> SparkSession:
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{default_cpus()}]"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -55,7 +69,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_mem())
     )
     return builder.getOrCreate()
 

@@ -12,14 +12,32 @@ from nyc_taxi_data_warehouse_spark.plans import nyc_views, pipeline
 
 
 @pytest.fixture(scope="module")
-def features(spark, sf_dir):
+def run(spark, sf_dir):
     tabs = nyc_views.load_tables(spark, sf_dir)
-    run = pipeline.run_models(
+    return pipeline.run_models(
         nyc_views.trips_from_events(tabs["events"]),
         nyc_views.weather_from_events(tabs["events"]),
         run_quality=False,
     )
+
+
+@pytest.fixture(scope="module")
+def features(run):
     return run.fare_daily_features.cache()
+
+
+def _jobs_in_group(spark, fn) -> int:
+    """Spark jobs fired by ``fn()``, counted in a job group of their own."""
+    sc = spark.sparkContext
+    group = f"jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_train_produces_bounded_mae(spark, features):
@@ -46,16 +64,54 @@ def test_forecast_7day_fires_only_its_two_input_collects(spark, features):
     are the last-row and trailing-fare collects."""
     model = forecast.train(features).model
     features.count()  # the cache fills outside the counted group
-    sc = spark.sparkContext
-    group = f"forecast_7day_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
+    n = _jobs_in_group(spark, lambda: forecast.forecast_7day(spark, features, model))
+    assert 1 <= n <= 2
+
+
+def test_forecast_7day_frame_is_a_local_table_with_the_same_schema(spark, features):
+    """The 7 rows plan as a LocalTableScan, not a scan over a Python RDD
+    (writing that forks Python workers); the schema, nullability included,
+    is the one the DDL string declares."""
+    from pyspark.sql.types import (
+        DateType,
+        DoubleType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    fc = forecast.forecast_7day(spark, features, forecast.train(features).model)
+    assert fc.schema == StructType(
+        [
+            StructField("forecast_date", DateType(), True),
+            StructField("predicted_avg_fare", DoubleType(), True),
+            StructField("model_version", StringType(), True),
+        ]
+    )
+    fc.write.mode("overwrite").format("noop").save()
+    plan = fc._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+def test_forecast_chain_fires_a_pinned_job_count(spark, run, features):
+    """The chain materializes the feature table once and trains, rolls
+    forward and hindcasts on that copy: 27 jobs at sf0.001 for the chain
+    plus collecting its forecast and eval frames (63 when every stage
+    re-derived the lazy table).  The enriched-trips cache fills outside
+    the counted group, and the module's cached copy of the feature table
+    is dropped for the count, so the chain derives the table itself."""
+    run.enriched.count()
+    features.unpersist(blocking=True)
     try:
-        forecast.forecast_7day(spark, features, model)
+
+        def chain():
+            _tr, fc, ev = pipeline.run_forecast_chain(spark, run)
+            fc.collect()
+            ev.collect()
+
+        assert _jobs_in_group(spark, chain) == 27
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+        features.cache()
 
 
 def test_forecast_7day_predict_matches_transform_bit_for_bit(spark, features):

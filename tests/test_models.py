@@ -179,6 +179,31 @@ def test_pipeline_snapshots_and_forecast_chain(spark, trips, weather):
     assert tr.mae >= 0.0
 
 
+def test_forecast_chain_on_materialized_features_matches_lazy(spark, trips, weather):
+    """`run_forecast_chain` trains, forecasts and hindcasts on a
+    checkpointed copy of the feature table; the stages run on the lazy
+    `run.fare_daily_features` return exactly the same numbers."""
+    from nyc_taxi_data_warehouse_spark.ml import forecast
+
+    run = pipeline.run_models(trips, weather, run_quality=False)
+    tr, fc, ev = pipeline.run_forecast_chain(spark, run)
+    lazy = run.fare_daily_features
+    tr_lazy = forecast.train(lazy)
+    fc_lazy = forecast.forecast_7day(spark, lazy, tr_lazy.model)
+    ev_lazy = forecast.hindcast_eval(lazy, tr_lazy.model)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    assert (tr.mae, tr.n_train, tr.n_test) == (
+        tr_lazy.mae,
+        tr_lazy.n_train,
+        tr_lazy.n_test,
+    )
+    assert rows(fc) == rows(fc_lazy) and len(rows(fc)) == 7
+    assert rows(ev) == rows(ev_lazy) and len(rows(ev)) == 8
+
+
 def test_sql_surface_over_registered_views(spark, trips, weather):
     run = pipeline.run_models(trips, weather, run_quality=False)
     names = pipeline.register_views(spark, run)

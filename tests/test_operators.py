@@ -5,6 +5,7 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_warehouse_spark.functions import vectors as V
@@ -982,6 +983,17 @@ def test_salted_broadcast_join_matches_plain_join(spark, sf_dir):
     assert got.where(F.col("p_name").isNull()).count() == plain.where(
         F.col("p_name").isNull()
     ).count()
+
+
+@pytest.mark.parametrize("how", ["right", "right_outer", "full", "FullOuter", "outer"])
+def test_salted_broadcast_join_rejects_joins_that_cannot_broadcast_the_dim(
+    spark, how
+):
+    from nyc_taxi_data_warehouse_spark.operators import skew
+
+    df = spark.createDataFrame([(1,)], "k int")
+    with pytest.raises(ValueError, match="cannot broadcast"):
+        skew.salted_broadcast_join(df, df, "k", how=how)
 
 
 # --- sampling --------------------------------------------------------------
