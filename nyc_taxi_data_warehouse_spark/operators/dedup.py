@@ -200,7 +200,6 @@ def cooccur_pair_counts(
     elements: DataFrame,
     id_col: str = "doc_id",
     el_col: str = "shingle",
-    hot_threshold: int | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, n_common) for every id pair sharing ≥1 element —
     the shared intersection-count core of :func:`jaccard_pairs`,
@@ -215,38 +214,13 @@ def cooccur_pair_counts(
     (id, element) — both callers build them via ``array_distinct`` —
     so the per-pair row count IS the intersection size.
 
-    HARD PRECONDITION (``hot_threshold=None``, the default): every
-    element's member list is collected into ONE non-spilling aggregation
-    buffer and its O(k²) pairs explode from ONE task — the caller must
-    bound per-element membership (all in-repo callers feed sampled or
-    corpus-bounded inputs; the LSH path bounds it with ``max_bucket``).
-    For uncapped inputs pass ``hot_threshold``: elements with more than
-    that many members are routed through a distributed element
-    self-join instead — detection is a map-side-combined count, the
-    (rare-by-construction) hot set broadcasts, and the self-join
-    spreads the O(k²) pair rows across tasks where one agg task would
-    have held k ids and exploded k² rows alone (AQE skew-join splits a
-    join's oversized partitions; it cannot split an agg bucket).  Both
-    legs feed the SAME final count, so results are identical for ANY
-    threshold (tests/test_skew_torture.py floods one element to 20% of
-    the corpus and asserts routed == unrouted).  The guard is opt-in
-    because its detection pass shuffles (element, count) rows — mostly
-    distinct at every scale, so comparable bytes to the main grouped
-    shuffle: measured 1.5→3.1 s on q_ngram_jaccard at sf0.1, i.e. it
-    re-buys the self-join's second shuffle as the price of the bound."""
-    cold = elements
-    if hot_threshold is not None:
-        # one shared hot-set subtree: the anti- and semi-join sides are
-        # plan-identical, so exchange reuse broadcasts it once
-        hot_set = (
-            elements.groupBy(el_col)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > hot_threshold)
-            .select(el_col)
-        )
-        cold = elements.join(F.broadcast(hot_set), [el_col], "left_anti")
-    g = cold.groupBy(el_col).agg(F.collect_list(id_col).alias("__ids"))
-    cold_rows = (
+    HARD PRECONDITION: every element's member list is collected into ONE
+    non-spilling aggregation buffer and its O(k²) pairs explode from ONE
+    task — the caller must bound per-element membership (all in-repo
+    callers feed sampled or corpus-bounded inputs; the LSH path bounds
+    it with ``max_bucket``)."""
+    g = elements.groupBy(el_col).agg(F.collect_list(id_col).alias("__ids"))
+    rows = (
         g.select(F.explode("__ids").alias("doc_a"), "__ids")
         .select(
             "doc_a",
@@ -255,36 +229,20 @@ def cooccur_pair_counts(
             ).alias("doc_b"),
         )
     )
-    rows = cold_rows
-    if hot_threshold is not None:
-        hot = elements.join(F.broadcast(hot_set), [el_col], "semi")
-        a = hot.select(F.col(el_col), F.col(id_col).alias("doc_a"))
-        b = hot.select(F.col(el_col), F.col(id_col).alias("doc_b"))
-        hot_rows = (
-            a.join(b, [el_col])
-            .where(F.col("doc_b") > F.col("doc_a"))
-            .select("doc_a", "doc_b")
-        )
-        rows = cold_rows.unionByName(hot_rows)
     return rows.groupBy("doc_a", "doc_b").agg(
         F.count(F.lit(1)).alias("n_common")
     )
 
 
-def jaccard_pairs(
-    shingles: DataFrame,
-    id_col: str = "doc_id",
-    hot_threshold: int | None = None,
-) -> DataFrame:
+def jaccard_pairs(shingles: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Exact shingle-set Jaccard for every pair sharing ≥1 shingle.
 
     O(pairs-with-overlap) not O(n²): co-occurrence grouping only
     materializes co-occurring pairs. Use on LSH candidates or samples at
-    scale; ``hot_threshold`` forwards to :func:`cooccur_pair_counts` for
-    uncapped inputs (same results, bounded agg state).
+    scale (:func:`cooccur_pair_counts`' membership precondition).
     """
     sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    inter = cooccur_pair_counts(shingles, id_col, hot_threshold=hot_threshold)
+    inter = cooccur_pair_counts(shingles, id_col)
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
     return (
@@ -301,11 +259,7 @@ def jaccard_pairs(
     )
 
 
-def containment_pairs(
-    shingles: DataFrame,
-    id_col: str = "doc_id",
-    hot_threshold: int | None = None,
-) -> DataFrame:
+def containment_pairs(shingles: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Asymmetric shingle-set containment |A∩B| / |A| (and /|B|) for every
     pair sharing ≥1 shingle — the quote/subset detector Jaccard misses: a
     short doc wholly embedded in a long one has high containment but low
@@ -315,10 +269,9 @@ def containment_pairs(
 
     Same O(pairs-with-overlap) shape as :func:`jaccard_pairs` (the
     shared :func:`cooccur_pair_counts` core); run on LSH candidates or
-    samples at scale — ``hot_threshold`` forwards to the core for
-    uncapped inputs."""
+    samples at scale."""
     sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    inter = cooccur_pair_counts(shingles, id_col, hot_threshold=hot_threshold)
+    inter = cooccur_pair_counts(shingles, id_col)
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
     return (

@@ -29,11 +29,7 @@ TRIP_KEY = [
 ]
 
 
-def ingest_trips(
-    raw_month: DataFrame,
-    fact: DataFrame | None,
-    row_cap: int | None = None,
-) -> DataFrame:
+def ingest_trips(raw_month: DataFrame, fact: DataFrame | None) -> DataFrame:
     """Hourly ingest (§3.1): project/filter the raw month slice, then
     dedup-MERGE into the fact table on the 6-col natural key
     (`dags/etl_spark_historical.py:178-195,349-380`). No CSV détour, no
@@ -41,8 +37,6 @@ def ingest_trips(
     cleaned = raw_month.na.drop(
         subset=["pickup_datetime", "dropoff_datetime", "pickup_zone_id", "dropoff_zone_id"]
     ).where((F.col("trip_distance") > 0) & (F.col("total_amount") > 0))
-    if row_cap:
-        cleaned = cleaned.limit(row_cap)
     if fact is None:
         return cleaned
     return merge_insert_only(fact, cleaned, TRIP_KEY)
@@ -76,7 +70,6 @@ def run_models(
     trips: DataFrame,
     weather: DataFrame,
     run_quality: bool = True,
-    cache_enriched: bool = True,
     run_freshness: bool = True,
     freshness_as_of: str | None = None,
 ) -> ModelRun:
@@ -94,9 +87,7 @@ def run_models(
     build)."""
     st = staging.stg_taxi_trips(trips)
     sw = staging.stg_weather(weather)
-    enr = intermediate.int_trips_enriched(st)
-    if cache_enriched:
-        enr = enr.cache()
+    enr = intermediate.int_trips_enriched(st).cache()
     wh = intermediate.int_weather_hourly(sw)
     mtw = marts.mart_trips_weather(enr, wh)
     mdm = marts.mart_daily_metrics(enr, wh)

@@ -117,9 +117,6 @@ SELECT event_type, day, y, cusum_up,
 FROM cus"""
 
 
-_CUSUM_SINK_SEQ = [0]
-
-
 def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9 × changepoint: the STREAMING form of the CUSUM chart — the
     event feed replays through the file source into a
@@ -162,13 +159,11 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("win", "event_type")
         .agg(F.count(F.lit(1)).alias("y"))
     )
-    _CUSUM_SINK_SEQ[0] += 1
-    name = f"q_stream_cusum_sink_{_CUSUM_SINK_SEQ[0]}"
     # localCheckpoint the (days × types)-sized drained grain: daily
     # self-joins against its own aggregate, and two lazy reads of the
     # same memory-sink view collide on attribute ids (conflicting-
     # references analyzer error); the materialized grain is tiny
-    daily = drain_available_now(counts, name).select(
+    daily = drain_available_now(counts, "q_stream_cusum_sink").select(
         "event_type",
         F.col("win.start").alias("day"),
         F.col("y").cast("long").alias("y"),

@@ -2010,9 +2010,6 @@ SELECT CAST(pickup_datetime AS DATE) AS trip_date,
 FROM stg_trips GROUP BY 1"""
 
 
-_STREAM_SINK_SEQ = [0]
-
-
 def q_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9: Structured Streaming parity for the A1 hourly rollup, as a
     driver-gated query (previously test-only).
@@ -2029,14 +2026,12 @@ def q_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .util import stream_feed
 
     # memoized SHARED weather feed: hourly/hll/psi replay identical
-    # content, so all three stage it once per (process, sf_dir)
+    # content, so all three stage it once per (session, sf_dir)
     src = stream_feed(_weather(spark, sf_dir), "weather_feed", sf_dir, n_files=2)
 
-    _STREAM_SINK_SEQ[0] += 1
-    name = f"q_stream_hourly_sink_{_STREAM_SINK_SEQ[0]}"
     stream = weather_stream.read_weather_stream(spark, src)
     agg = weather_stream.hourly_weather_stream(stream)
-    return weather_stream.drain_available_now(agg, name).select(
+    return weather_stream.drain_available_now(agg, "q_stream_hourly_sink").select(
         "observation_hour",
         "city",
         _r4("avg_temperature_fahrenheit"),
@@ -2068,7 +2063,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .util import stream_feed
 
     w = _weather(spark, sf_dir)
-    # originals + every-5th duplicate staged once per (process, sf_dir)
+    # originals + every-5th duplicate staged once per (session, sf_dir)
     src = stream_feed(
         w.unionByName(w.where(F.col("obs_id") % 5 == 0)),
         "dedup_feed",
@@ -2076,13 +2071,13 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_files=2,
     )
 
-    _STREAM_SINK_SEQ[0] += 1
-    name = f"q_stream_dedup_sink_{_STREAM_SINK_SEQ[0]}"
     stream = weather_stream.read_weather_stream(spark, src)
     ded = dedup_stream.dedup_within_watermark(
         stream, ["obs_id"], "observed_at", delay="3650 days"
     )
-    return weather_stream.drain_available_now(ded, name, "append").select(
+    return weather_stream.drain_available_now(
+        ded, "q_stream_dedup_sink", "append"
+    ).select(
         "obs_id", "observed_at", "city", "temp_f", "weather_desc",
         "humidity_pct",
     )
@@ -2220,13 +2215,13 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t["events"].select("user_id", "ts", "value")
     src = stream_feed(ev, "sessions_feed", sf_dir, n_files=4)
 
-    _STREAM_SINK_SEQ[0] += 1
-    name = f"q_stream_sessions_sink_{_STREAM_SINK_SEQ[0]}"
     stream = spark.readStream.schema(
         "user_id bigint, ts timestamp, value double"
     ).parquet(src)
     sess = sessionize.sessionize_stream(stream, gap_minutes=30)
-    return weather_stream.drain_available_now(sess, name, "update").select(
+    return weather_stream.drain_available_now(
+        sess, "q_stream_sessions_sink", "update"
+    ).select(
         "user_id",
         "session_start",
         "session_end",
@@ -2306,9 +2301,7 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         _rnd(F.col("temp_f_filled"), 4).alias("temp_f_filled"),
     )
-    _STREAM_SINK_SEQ[0] += 1
-    name = f"q_stream_asof_sink_{_STREAM_SINK_SEQ[0]}"
-    return weather_stream.drain_available_now(joined, name, "append")
+    return weather_stream.drain_available_now(joined, "q_stream_asof_sink", "append")
 
 
 _SQL_STREAM_ASOF = """
@@ -2397,9 +2390,7 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.expr("observed_at > ts - interval 30 minutes AND observed_at <= ts"),
         "inner",
     )
-    _STREAM_SINK_SEQ[0] += 1
-    name = f"q_stream_join_sink_{_STREAM_SINK_SEQ[0]}"
-    return weather_stream.drain_available_now(j, name, "append").select(
+    return weather_stream.drain_available_now(j, "q_stream_join_sink", "append").select(
         "event_id", "obs_id", "ts", "observed_at"
     )
 
@@ -2839,8 +2830,6 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shares q_stream_hourly's memoized weather feed
     src = stream_feed(_weather(spark, sf_dir), "weather_feed", sf_dir, n_files=2)
 
-    _STREAM_SINK_SEQ[0] += 1
-    name = f"q_stream_hll_sink_{_STREAM_SINK_SEQ[0]}"
     val = F.concat_ws(
         "|",
         F.floor(F.col("temp_f") * 10 + F.lit(0.5)).cast("long"),
@@ -2875,7 +2864,7 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     regs = rows.groupBy("win", "bucket").agg(F.max("__rho").alias("rho"))
-    sink = weather_stream.drain_available_now(regs, name).select(
+    sink = weather_stream.drain_available_now(regs, "q_stream_hll_sink").select(
         F.col("win.start").alias("day"), "bucket", "rho"
     )
     est = sketches.hll_estimate_from_registers(sink, ("day",), p=9)
@@ -2922,8 +2911,6 @@ def q_stream_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # shares q_stream_hourly's memoized weather feed
     src = stream_feed(_weather(spark, sf_dir), "weather_feed", sf_dir, n_files=2)
-    _STREAM_SINK_SEQ[0] += 1
-    name = f"q_stream_histogram_sink_{_STREAM_SINK_SEQ[0]}"
     stream = weather_stream.read_weather_stream(spark, src)
     regs = (
         stream.withWatermark("observed_at", "2 hours")
@@ -2943,7 +2930,7 @@ def q_stream_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("win", "bin")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    sink = weather_stream.drain_available_now(regs, name).select(
+    sink = weather_stream.drain_available_now(regs, "q_stream_histogram_sink").select(
         F.col("win.start").alias("day"), "bin", "cnt"
     )
     w = Window.partitionBy("day").orderBy("bin")
@@ -3090,8 +3077,6 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # shares q_stream_hourly's memoized weather feed
     src = stream_feed(_weather(spark, sf_dir), "weather_feed", sf_dir, n_files=2)
-    _STREAM_SINK_SEQ[0] += 1
-    name = f"q_stream_psi_sink_{_STREAM_SINK_SEQ[0]}"
     stream = weather_stream.read_weather_stream(spark, src)
     counts = (
         stream.withWatermark("observed_at", "2 hours")
@@ -3103,7 +3088,7 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("win", "bin")
         .agg(F.count(F.lit(1)).alias("c_g"))
     )
-    sink = weather_stream.drain_available_now(counts, name).select(
+    sink = weather_stream.drain_available_now(counts, "q_stream_psi_sink").select(
         F.col("win.start").alias("grp"), "bin", "c_g"
     )
     out = drift.psi_from_grid(drift.grid_from_counts(sink, 10), "day")

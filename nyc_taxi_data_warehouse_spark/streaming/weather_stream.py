@@ -33,7 +33,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..util import stream_state_partitions
+from ..util import stream_state_partitions, unique_name
 
 WEATHER_STREAM_SCHEMA = StructType(
     [
@@ -121,17 +121,21 @@ def run_available_now(
 
 
 def drain_available_now(
-    agg: DataFrame, query_name: str, output_mode: str = "complete"
+    agg: DataFrame, prefix: str, output_mode: str = "complete"
 ) -> DataFrame:
-    """:func:`run_available_now`, wait up to 300 s for the drain, and
-    return the filled sink table.  A drain that does not finish raises
-    instead of handing a partially-filled sink to the caller."""
-    q = run_available_now(agg, query_name, output_mode)
+    """:func:`run_available_now` into a sink named ``<prefix>_<n>`` by
+    :func:`~nyc_taxi_data_warehouse_spark.util.unique_name`, wait up to
+    300 s for the drain, and return the filled sink table.  Every call
+    gets a fresh sink, so repeated or concurrent runs of one query never
+    share a table.  A drain that does not finish raises instead of
+    handing a partially-filled sink to the caller."""
+    name = unique_name(prefix)
+    q = run_available_now(agg, name, output_mode)
     drained = q.awaitTermination(300)
     q.stop()
     if not drained:
         raise RuntimeError(
-            f"{query_name}: availableNow drain timed out after 300s"
+            f"{name}: availableNow drain timed out after 300s"
             " — refusing to read a partially-filled sink"
         )
-    return agg.sparkSession.table(query_name)
+    return agg.sparkSession.table(name)

@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import concurrent.futures
+import contextlib
+import itertools
+import threading
+
 _SESSION_TMPDIRS: dict[str, str] = {}
 
 
@@ -24,32 +29,77 @@ def session_tmpdir(name: str) -> str:
     return _SESSION_TMPDIRS[name]
 
 
-_STREAM_FEEDS: set[tuple[str, str]] = set()
+_BUILDS: dict[tuple, concurrent.futures.Future] = {}
+_BUILDS_LOCK = threading.Lock()
+
+
+def session_memo(spark, key: tuple, build):
+    """``build()`` once per ``(applicationId, *key)``; later calls in the
+    same session return the built value.  The engine's one memo: reader
+    handles, fitted indexes, committed store paths, staged stream feeds
+    and partition-count probes all live here, keyed on the session so a
+    new SparkContext in the same process rebuilds instead of serving
+    frames bound to a stopped one.
+
+    Concurrent callers of one key run ``build()`` once: the first caller
+    puts a ``Future`` under the lock and builds OUTSIDE it, the rest wait
+    on that Future, so a build that itself calls ``session_memo`` for
+    another key (``_ann_store`` → ``_ivfpq_index`` → ``load_tables``)
+    never blocks unrelated keys.  A build that raises drops its entry:
+    the waiters see the error and the next call builds again.  ``key``
+    must name its memo (``("load_tables", sf_dir)``) and capture every
+    input the value depends on; a build must not ask for its own key."""
+    k = (spark.sparkContext.applicationId, *key)
+    with _BUILDS_LOCK:
+        fut = _BUILDS.get(k)
+        owner = fut is None
+        if owner:
+            fut = _BUILDS[k] = concurrent.futures.Future()
+    if owner:
+        try:
+            fut.set_result(build())
+        except BaseException as e:
+            with _BUILDS_LOCK:
+                del _BUILDS[k]
+            fut.set_exception(e)
+            raise
+    return fut.result()
+
+
+_NAMES = itertools.count(1)
+
+
+def unique_name(prefix: str) -> str:
+    """``<prefix>_<n>``, ``n`` drawn from one process-wide counter, so no
+    two calls in a process return the same name, from any thread.  The
+    memory-sink tables and the fresh per-invocation store paths take
+    their names from here."""
+    return f"{prefix}_{next(_NAMES)}"
 
 
 def stream_feed(df, name: str, key: str, n_files: int = 16) -> str:
     """Memoized streaming-feed staging: write ``df`` (n_files-way
     parallel — a single-split scan would serialize the write AND hand
-    the file-source one input split) to a per-process dir ONCE per
-    (name, key) and return the same dir on every later call.  The feed
-    content is a pure function of (query, sf_dir), so re-writing it per
-    invocation was pure fixed cost: under the bench's 5-run protocol and
-    across a family of stream queries sharing a session, runs 2..n now
-    replay the already-staged files.  ``key`` MUST capture everything
-    the feed content depends on (the sf_dir) — a new key re-stages.
-    Dirs are session_tmpdir-owned (removed at interpreter exit)."""
+    the file-source one input split) to a per-process dir once per
+    (session, name, key) through :func:`session_memo`, and return the
+    same dir on every later call.  The feed content is a pure function
+    of (query, sf_dir), so re-writing it per invocation was pure fixed
+    cost: under the bench's 5-run protocol and across a family of stream
+    queries sharing a session, runs 2..n now replay the already-staged
+    files.  ``key`` MUST capture everything the feed content depends on
+    (the sf_dir) — a new key re-stages.  Dirs are session_tmpdir-owned
+    (removed at interpreter exit)."""
     import hashlib
 
     tag = hashlib.md5(key.encode()).hexdigest()[:10]
     d = session_tmpdir(f"feed_{name}_{tag}")
-    if (name, key) not in _STREAM_FEEDS:
+
+    def build() -> str:
         df.repartition(n_files).write.mode("overwrite").parquet(d)
-        _STREAM_FEEDS.add((name, key))
-    return d
+        return d
 
+    return session_memo(df.sparkSession, ("stream_feed", name, key), build)
 
-import contextlib
-import threading
 
 _SHUFFLE_CONF_LOCK = threading.Lock()
 

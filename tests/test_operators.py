@@ -2604,6 +2604,43 @@ def test_lsh_tuning_s_curve_monotonicity(spark, sf_dir):
     assert rows[0].recall > 0.9  # r=1 is near-exhaustive on twin pairs
 
 
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_lsh_tuning_oracle_buckets_stay_under_the_spark_cap(sf_dir, sf):
+    """q_lsh_tuning's Spark side drops (config, band, bh) buckets larger
+    than _MAX_BUCKET; its DuckDB oracle self-joins every bucket uncapped.
+    The two agree only while no bucket exceeds the cap, so pin that on
+    the shipped data, measured on the oracle's own band CTEs."""
+    import os
+
+    import duckdb
+
+    from nyc_taxi_data_warehouse_spark.queries_data import (
+        _LSH_BAND_SIZES,
+        _MAX_BUCKET,
+        _sql_lsh_tuning,
+    )
+
+    d = os.path.join(os.path.dirname(sf_dir), sf)
+    if not os.path.isdir(d):
+        pytest.skip(f"{d} not present")
+    sql = _sql_lsh_tuning()
+    ctes = sql[: sql.rindex("\nSELECT rows_per_band")]
+    sizes = "\nUNION ALL\n".join(
+        f"SELECT count(*) AS n FROM bands{bs} GROUP BY band, bh"
+        for bs in _LSH_BAND_SIZES
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{d}/documents.parquet')"
+    )
+    n_buckets, biggest = con.execute(
+        f"{ctes}\nSELECT count(*), max(n) FROM ({sizes})"
+    ).fetchone()
+    assert n_buckets > 0
+    assert biggest <= _MAX_BUCKET
+
+
 def test_cumulative_distinct_equals_direct_count(spark, sf_dir):
     """The first-seen running sum must equal COUNT(DISTINCT) over the
     growing prefix, checked directly on the last day and one mid day."""
@@ -2912,3 +2949,106 @@ def test_stream_feed_memoizes_per_key(spark, tmp_path):
     assert spark.read.parquet(d1).count() == 100
     d3 = util.stream_feed(df, "ut_feed", "k2", n_files=2)
     assert d3 != d1
+
+
+def test_session_memo_builds_once_under_concurrent_callers(spark, monkeypatch):
+    """Four threads asking for one PQ codebook at the same moment share
+    ONE fit and get the same object back (a check-then-set cache would
+    run the fit once per thread)."""
+    import threading
+    import time
+    import uuid
+
+    from nyc_taxi_data_warehouse_spark import queries_data
+    from nyc_taxi_data_warehouse_spark.operators import pq
+
+    fits = []
+    lock = threading.Lock()
+
+    def slow_fit(emb, **kw):
+        with lock:
+            fits.append(emb)
+        time.sleep(0.3)
+        return [[len(fits)]]
+
+    monkeypatch.setattr(pq, "pq_fit", slow_fit)
+    monkeypatch.setattr(queries_data, "_emb", lambda spark, sf_dir: "emb")
+    key = f"race-{uuid.uuid4().hex}"
+    barrier = threading.Barrier(4)
+    got = [None] * 4
+
+    def ask(i):
+        barrier.wait()
+        got[i] = queries_data._pq_codebook(spark, key)
+
+    threads = [threading.Thread(target=ask, args=(i,)) for i in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(fits) == 1
+    assert all(g is got[0] for g in got) and got[0] == [[1]]
+
+
+def test_session_memo_retries_a_build_that_raised(spark):
+    """A failed build leaves no entry: the next call builds again, and
+    once a build succeeds later calls return its value unbuilt."""
+    import uuid
+
+    from nyc_taxi_data_warehouse_spark import util
+
+    key = ("ut_retry", uuid.uuid4().hex)
+
+    def boom():
+        raise ValueError("first build fails")
+
+    with pytest.raises(ValueError):
+        util.session_memo(spark, key, boom)
+    assert util.session_memo(spark, key, lambda: 42) == 42
+    assert util.session_memo(spark, key, boom) == 42
+
+
+def test_drain_available_now_names_a_fresh_sink_per_call(spark, tmp_path):
+    """Two drains with one prefix fill two distinct sink tables, and the
+    first stays readable after the second; names stay unique across
+    threads."""
+    import threading
+
+    from nyc_taxi_data_warehouse_spark import util
+    from nyc_taxi_data_warehouse_spark.streaming.weather_stream import (
+        drain_available_now,
+    )
+
+    src = str(tmp_path / "feed")
+    spark.range(10).selectExpr("id % 3 AS k").write.parquet(src)
+
+    def sinks():
+        return {
+            t.name for t in spark.catalog.listTables()
+            if t.name.startswith("same_prefix_")
+        }
+
+    def drain():
+        stream = spark.readStream.schema("k long").parquet(src)
+        return drain_available_now(stream.groupBy("k").count(), "same_prefix")
+
+    before = sinks()
+    s1 = drain()
+    s2 = drain()
+    new = sinks() - before
+    assert len(new) == 2
+    want = {(0, 4), (1, 3), (2, 3)}
+    for df in [s1, s2] + [spark.table(n) for n in new]:
+        assert {(r.k, r["count"]) for r in df.collect()} == want
+
+    names = []
+
+    def draw():
+        names.extend(util.unique_name("p") for _ in range(1000))
+
+    threads = [threading.Thread(target=draw) for _ in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(set(names)) == 8000

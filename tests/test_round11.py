@@ -329,10 +329,13 @@ def test_stream_mg_topk_bounds_and_heavy_guarantee(spark):
     assert {0, 1} <= heavy
     # bounds on the final per-shard counters (read the LAST sink emitted
     # by the query run above)
-    sink_name = [
-        t.name for t in spark.catalog.listTables()
-        if t.name.startswith("q_stream_mg_topk_sink_")
-    ][-1]
+    sink_name = max(
+        (
+            t.name for t in spark.catalog.listTables()
+            if t.name.startswith("q_stream_mg_topk_sink_")
+        ),
+        key=lambda n: int(n.rsplit("_", 1)[1]),
+    )
     sink = spark.table(sink_name)
     from pyspark.sql import Window
 

@@ -111,58 +111,3 @@ def test_salted_agg_correct_under_torture_skew(spark):
     }
     assert salted == plain
     assert plain[1][0] >= int(_N * _HOT_SHARE * 0.99)  # the key really is hot
-
-
-def test_cooccur_hot_element_routing_exact_and_bounded(spark):
-    """Flood one element to ~20% of the corpus (a boilerplate shingle):
-    with `hot_threshold` far below the flood size, the grouped-array leg
-    must never see the hot element (its collect_list buffers stay
-    bounded by the threshold) while results stay EXACTLY equal to the
-    unrouted formulation — the routing is a memory-placement choice,
-    not a semantic one (round-13 VERDICT item 5 / ADVICE)."""
-    from nyc_taxi_data_warehouse_spark.operators import dedup
-
-    n_docs, flood = 1_500, 300  # flood = 20% of docs share one element
-    docs = spark.range(n_docs).select(F.col("id").alias("doc_id"))
-    cold = docs.select(
-        "doc_id", F.concat(F.lit("el_"), (F.col("doc_id") % 50)).alias("shingle")
-    )
-    hot = docs.where(F.col("doc_id") < flood).select(
-        "doc_id", F.lit("BOILERPLATE").alias("shingle")
-    )
-    elements = cold.unionByName(hot)
-
-    threshold = 100
-    routed = {
-        (r.doc_a, r.doc_b): r.n_common
-        for r in dedup.cooccur_pair_counts(
-            elements, hot_threshold=threshold
-        ).collect()
-    }
-    unrouted = {
-        (r.doc_a, r.doc_b): r.n_common
-        for r in dedup.cooccur_pair_counts(
-            elements, hot_threshold=None
-        ).collect()
-    }
-    assert routed == unrouted
-    # the flood really exceeded the threshold (the hot leg was exercised)
-    assert flood > threshold
-    # bounded agg state: after hot routing no grouped element exceeds the
-    # threshold, so every collect_list buffer on the cold leg is <= it
-    hot_set = (
-        elements.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > threshold)
-        .select("shingle")
-    )
-    max_cold = (
-        elements.join(F.broadcast(hot_set), ["shingle"], "left_anti")
-        .groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n"))
-        .collect()[0][0]
-    )
-    assert max_cold <= threshold
-    # and the flooded pairs are present with the right intersection size
-    assert routed[(0, 1)] >= 1  # docs 0,1 share BOILERPLATE (+ maybe el_)

@@ -15,8 +15,9 @@ so every number is a number for the plan that ships.  Per run it reports
   their share).
 
 Before timing a multiple it makes one untimed warm call there, so the
-per-sf_dir memos (``load_tables`` handles, ``stream_feed`` staging, the
-ANN/PQ/store caches) are equally warm at 1x and at 8x.  Between runs
+per-sf_dir ``session_memo`` entries (``load_tables`` handles,
+``stream_feed`` staging, the ANN/PQ indexes and stores) are equally warm
+at 1x and at 8x.  Between runs
 the cache is cleared and both heaps are collected.
 
 Usage:  python tools/scale_probe.py [sf_dir] [--mults=1,4,8] [--runs=N] q_name ...
