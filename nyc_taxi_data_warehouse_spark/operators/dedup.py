@@ -124,7 +124,7 @@ def lsh_candidate_pairs(
     drop observable. ``None`` disables the cap — then a mega-bucket's
     member array must fit in one task's memory, which is exactly the
     regime the cap exists to prevent."""
-    g = _drop_hot(bands, max_bucket).groupBy("band", "bh").agg(
+    g = drop_hot_buckets(bands, max_bucket).groupBy("band", "bh").agg(
         F.collect_list(id_col).alias("__ids")
     )
     return (
@@ -137,7 +137,7 @@ def lsh_candidate_pairs(
     )
 
 
-def _drop_hot(
+def drop_hot_buckets(
     bands: DataFrame, max_bucket: int | None, keys: tuple[str, ...] = ("band", "bh")
 ) -> DataFrame:
     """Remove over-cap buckets BEFORE any ``collect_list``, so a
@@ -185,7 +185,7 @@ def lsh_cross_candidates(
             F.col(id_col).alias("__id"), "band", "bh", F.lit("r").alias("__side")
         )
     )
-    g = _drop_hot(u, max_bucket).groupBy("band", "bh").agg(
+    g = drop_hot_buckets(u, max_bucket).groupBy("band", "bh").agg(
         F.collect_list(F.when(F.col("__side") == "l", F.col("__id"))).alias("__l"),
         F.collect_list(F.when(F.col("__side") == "r", F.col("__id"))).alias("__r"),
     )
@@ -405,9 +405,9 @@ def prefix_filter_pairs(
         F.col("rn")
         <= F.col("sz") - F.ceil(F.col("sz") * F.lit(threshold) - F.lit(1e-9)) + 1
     )
-    # cap BEFORE collect_list (via _drop_hot) so a boilerplate prefix
+    # cap BEFORE collect_list (via drop_hot_buckets) so a boilerplate prefix
     # element never materializes its mega-bucket array in an agg buffer
-    postings = _drop_hot(prefix, max_bucket, keys=("tok",)).groupBy("tok").agg(
+    postings = drop_hot_buckets(prefix, max_bucket, keys=("tok",)).groupBy("tok").agg(
         F.collect_list(id_col).alias("ids")
     )
     cand = (
@@ -869,7 +869,7 @@ def simhash_near_pairs(
             f"max_hamming={max_hamming} breaks the {SIMHASH_BANDS}-band "
             "pigeonhole recall guarantee (needs max_hamming < bands)"
         )
-    bands = _drop_hot(
+    bands = drop_hot_buckets(
         simhash_bands(hashes, id_col), max_bucket, keys=("band", "bkey")
     )
     g = bands.groupBy("band", "bkey").agg(

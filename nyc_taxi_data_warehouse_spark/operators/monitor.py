@@ -11,7 +11,7 @@ every chart value and alarm is bit-reproducible against a SQL oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -71,7 +71,3 @@ def p2_formula(z: str) -> str:
     pdf = f"(exp(-({az} * {az}) / 2.0) * 0.3989422804014327)"
     return f"least(1.0, 2.0 * {pdf} * {poly})"
 
-
-def p2_column(z_col: str) -> Column:
-    """:func:`p2_formula` as a Spark Column over an existing column."""
-    return F.expr(p2_formula(z_col))

@@ -38,6 +38,8 @@ IVF/LSH/SimHash.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -520,22 +522,17 @@ def ivfpq_search(
 # a crash leaves at most an orphan data dir (never a corrupt version).
 
 _INDEX_FORMAT = 1
+_INDEX_COMMIT_RE = re.compile(r"^(\d+)\.json$")
 
 
-def _index_versions(path: str) -> list[int]:
+def _latest_index_version(path: str) -> int:
+    """Newest committed index version, 0 when none (versions start at 1)."""
     import os as _o
 
-    cdir = _o.path.join(path, "_commits")
-    if not _o.path.isdir(cdir):
-        return []
-    out = []
-    for f in _o.listdir(cdir):
-        if f.endswith(".json") and ".tmp." not in f:
-            try:
-                out.append(int(f[: -len(".json")]))
-            except ValueError:
-                continue
-    return sorted(out)
+    from ..sources.manifest import list_versions
+
+    vs = list_versions(_o.path.join(path, "_commits"), _INDEX_COMMIT_RE)
+    return vs[-1] if vs else 0
 
 
 def _codebook_to_rows(cb: Codebook) -> list[tuple[int, int, list[int]]]:
@@ -558,15 +555,16 @@ def _rows_to_codebook(rows) -> Codebook:
 
 def _write_index_version(
     spark, path: str, coarse: Codebook, fine: Codebook, codes: DataFrame,
-    quant: int | None, id_col: str, max_retries: int = 20,
+    quant: int | None, id_col: str,
 ) -> int:
     import json as _json
     import os as _o
     import uuid as _u
 
-    from ..sources.manifest import CommitConflictError, _put_if_absent
+    from ..sources.manifest import commit_next
 
-    _o.makedirs(_o.path.join(path, "_commits"), exist_ok=True)
+    cdir = _o.path.join(path, "_commits")
+    _o.makedirs(cdir, exist_ok=True)
     dname = f"d_{_u.uuid4().hex}"
     ddir = _o.path.join(path, dname)
     spark.createDataFrame(
@@ -584,15 +582,12 @@ def _write_index_version(
             "id_col": id_col,
         }
     )
-    vs = _index_versions(path)
-    ver = (vs[-1] if vs else 0) + 1
-    for _ in range(max_retries):
-        if _put_if_absent(
-            _o.path.join(path, "_commits", f"{ver}.json"), payload
-        ):
-            return ver
-        ver += 1
-    raise CommitConflictError(path)
+    return commit_next(
+        lambda: _latest_index_version(path),
+        lambda v: _o.path.join(cdir, f"{v}.json"),
+        lambda _head: payload,
+        path,
+    )
 
 
 def ivfpq_save(spark, index: "IvfPqIndex", path: str) -> int:
@@ -610,10 +605,10 @@ def ivfpq_load(spark, path: str, version: int | None = None) -> "IvfPqIndex":
     import json as _json
     import os as _o
 
-    vs = _index_versions(path)
-    if not vs:
+    latest = _latest_index_version(path)
+    if not latest:
         raise FileNotFoundError(f"no committed index versions at {path}")
-    ver = version if version is not None else vs[-1]
+    ver = version if version is not None else latest
     with open(_o.path.join(path, "_commits", f"{ver}.json")) as f:
         meta = _json.load(f)
     if meta.get("format") != _INDEX_FORMAT:

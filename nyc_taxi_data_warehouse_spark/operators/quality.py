@@ -56,10 +56,6 @@ def accepted_range(
     return df.where(c.isNotNull() & cond)
 
 
-def accepted_values(df: DataFrame, col: str, values: list) -> DataFrame:
-    return df.where(F.col(col).isNotNull() & ~F.col(col).isin(values))
-
-
 def freshness(
     df: DataFrame,
     ts_col: str,

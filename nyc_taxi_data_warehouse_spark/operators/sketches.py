@@ -45,27 +45,6 @@ def _h60(c: Column) -> Column:
 
 # --- HyperLogLog -----------------------------------------------------------
 
-def hll_bucket(c: Column, p: int = 9) -> Column:
-    """Register index: the low p bits of the 60-bit hash."""
-    return _h60(c).bitwiseAND((1 << p) - 1).cast("int")
-
-
-def hll_rho(c: Column, p: int = 9) -> Column:
-    """rho = position of the first 1-bit in the remaining (60-p)-bit word
-    (1-based; all-zero word → 60-p+1, the Flajolet convention).  Computed
-    from the LENGTH of the minimal binary rendering (`conv(w,10,2)` /
-    DuckDB `bin(w)`) — exact integer logic, no float log2 whose boundary
-    rounding could disagree between engines.  NOTE both engines render 0
-    as '0' (length 1), so the w=0 case must stay explicit."""
-    bits = _HASH_BITS - p
-    w = F.shiftright(_h60(c), p)  # non-negative: arithmetic == logical shift
-    return (
-        F.when(w == 0, F.lit(bits + 1))
-        .otherwise(F.lit(bits + 1) - F.length(F.conv(w, 10, 2)))
-        .cast("int")
-    )
-
-
 def hll_registers(
     df: DataFrame, col: str, group_cols: tuple[str, ...] = (), p: int = 9
 ) -> DataFrame:
@@ -73,10 +52,17 @@ def hll_registers(
 
     groupBy(bucket).max(rho) IS the whole shuffle: at most 2^p rows per
     group leave the map side no matter how many input rows there are.
-    The same `hll_bucket`/`hll_rho` expressions work on a streaming
-    DataFrame (max is a streaming-supported aggregate, and the sketch is
-    re-delivery-insensitive by construction — a duplicate row can never
-    raise a register).
+    ``bucket`` is the low p bits of the 60-bit hash; ``rho`` is the
+    1-based position of the first 1-bit in the remaining (60-p)-bit word
+    (all-zero word → 60-p+1, the Flajolet convention), computed from the
+    LENGTH of the minimal binary rendering (`conv(w,10,2)` / DuckDB
+    `bin(w)`) — exact integer logic, no float log2 whose boundary
+    rounding could disagree between engines.  Both engines render 0 as
+    '0' (length 1), so the w=0 case stays explicit.  The same
+    expressions work on a streaming DataFrame (max is a
+    streaming-supported aggregate, and the sketch is re-delivery-
+    insensitive by construction — a duplicate row can never raise a
+    register).
     """
     if not 4 <= p <= 16:
         raise ValueError(f"p must be in [4, 16], got {p}")

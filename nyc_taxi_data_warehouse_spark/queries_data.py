@@ -6294,7 +6294,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     media = multimodal.attach_media_metadata(media)
-    feats = multimodal.decode_image_batch(media, use_fake=True)
+    feats = multimodal.decode_image_batch(media)
     return feats.select(
         "media_id",
         "n_bytes",
@@ -11770,7 +11770,7 @@ def q_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         bands = b if bands is None else bands.unionByName(b)
     keys = ("rows_per_band", "band", "bh")
-    g = dd._drop_hot(bands, _MAX_BUCKET, keys=keys).groupBy(*keys).agg(
+    g = dd.drop_hot_buckets(bands, _MAX_BUCKET, keys=keys).groupBy(*keys).agg(
         F.collect_list("doc_id").alias("__ids")
     )
     cands = (

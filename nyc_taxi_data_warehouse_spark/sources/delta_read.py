@@ -35,6 +35,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .manifest import commit_next, list_versions
+
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 _CHECKPOINT_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
 
@@ -51,29 +53,11 @@ def is_delta_table(path: str) -> bool:
     return os.path.isdir(_log_dir(path))
 
 
-def _commit_versions(log_dir: str) -> list[int]:
-    out = []
-    for name in os.listdir(log_dir):
-        m = _COMMIT_RE.match(name)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
-def _checkpoint_versions(log_dir: str) -> list[int]:
-    out = []
-    for name in os.listdir(log_dir):
-        m = _CHECKPOINT_RE.match(name)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
 def latest_delta_version(path: str) -> int:
     """Highest committed version, or -1 if the log is empty."""
-    vs = _commit_versions(_log_dir(path))
-    cps = _checkpoint_versions(_log_dir(path))
-    return max(vs + cps) if (vs or cps) else -1
+    log_dir = _log_dir(path)
+    vs = list_versions(log_dir, _COMMIT_RE) + list_versions(log_dir, _CHECKPOINT_RE)
+    return max(vs) if vs else -1
 
 
 def _check_protocol(action: dict) -> None:
@@ -148,7 +132,7 @@ def delta_snapshot(
     live: dict[str, dict] = {}
     meta: list[dict] = []
     start = 0
-    cps = [c for c in _checkpoint_versions(log_dir) if c <= v]
+    cps = [c for c in list_versions(log_dir, _CHECKPOINT_RE) if c <= v]
     if cps:
         cp = cps[-1]
         _replay_checkpoint(
@@ -156,7 +140,7 @@ def delta_snapshot(
         )
         start = cp + 1
     needed = list(range(start, v + 1))
-    have = [cv for cv in _commit_versions(log_dir) if start <= cv <= v]
+    have = [cv for cv in list_versions(log_dir, _COMMIT_RE) if start <= cv <= v]
     if have != needed:
         # log cleanup removed commits below the newest checkpoint: the
         # requested version cannot be reconstructed — raising beats
@@ -303,8 +287,6 @@ def write_delta(df: DataFrame, path: str, mode: str = "append") -> int:
     import time
     import uuid
 
-    from .manifest import CommitConflictError, _put_if_absent
-
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     spark = df.sparkSession
@@ -329,11 +311,10 @@ def write_delta(df: DataFrame, path: str, mode: str = "append") -> int:
         if f.endswith(".parquet")
     ]
 
-    for attempt in range(20):
-        head = latest_delta_version(path)
-        reschema = False
+    def commit_payload(head: int) -> str:
+        reschema, live = False, []
         if head >= 0:
-            _, _, meta_action = delta_snapshot(spark, path, head)
+            _, live, meta_action = delta_snapshot(spark, path, head)
             declared = meta_action.get("schemaString")
             if declared and declared != df.schema.json():
                 if mode == "append":
@@ -348,23 +329,11 @@ def write_delta(df: DataFrame, path: str, mode: str = "append") -> int:
                 # schema is sound (protocol: last metaData wins)
                 reschema = True
         actions: list[dict] = []
-        if reschema:
-            actions.append(
-                {
-                    "metaData": {
-                        "id": uuid.uuid4().hex,
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": df.schema.json(),
-                        "partitionColumns": [],
-                        "configuration": {},
-                        "createdTime": now_ms,
-                    }
-                }
-            )
         if head < 0:
             actions.append(
                 {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
             )
+        if head < 0 or reschema:
             actions.append(
                 {
                     "metaData": {
@@ -377,8 +346,7 @@ def write_delta(df: DataFrame, path: str, mode: str = "append") -> int:
                     }
                 }
             )
-        if mode == "overwrite" and head >= 0:
-            _, live, _ = delta_snapshot(spark, path, head)
+        if mode == "overwrite":
             actions.extend(
                 {
                     "remove": {
@@ -390,9 +358,11 @@ def write_delta(df: DataFrame, path: str, mode: str = "append") -> int:
                 for f in live
             )
         actions.extend(adds)
-        payload = "\n".join(json.dumps(a) for a in actions) + "\n"
-        target = os.path.join(log_dir, f"{head + 1:020d}.json")
-        if _put_if_absent(target, payload):
-            return head + 1
-        time.sleep(0.01 * (attempt + 1))  # lost the commit race; re-resolve
-    raise CommitConflictError(f"{path}: lost 20 delta commit races")
+        return "\n".join(json.dumps(a) for a in actions) + "\n"
+
+    return commit_next(
+        lambda: latest_delta_version(path),
+        lambda v: os.path.join(log_dir, f"{v:020d}.json"),
+        commit_payload,
+        path,
+    )

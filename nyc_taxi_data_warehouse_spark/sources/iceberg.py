@@ -9,8 +9,10 @@ Layout recap (spec §"Table Metadata" / §"Manifests"):
 
 - ``metadata/v{N}.metadata.json`` — the table root document: schema,
   snapshots, current snapshot pointer; ``version-hint.text`` names the
-  current N. A new metadata file per commit, put-if-absent = the commit
-  atomicity point (the same O_EXCL boundary the Delta writer uses).
+  current N. A new metadata file per commit, published with
+  :func:`.manifest.put_if_absent` = the commit atomicity point (the same
+  primitive the Delta writer uses), so a crashed writer never leaves a
+  partial metadata file behind.
 - each snapshot points at a **manifest list** (Avro, one row per
   manifest with partition/row stats) which points at **manifests**
   (Avro, one row per data file: status, path, format, counts).
@@ -44,6 +46,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from . import avro_io
+from .manifest import list_versions, put_if_absent
 
 _VMETA_RE = re.compile(r"^v(\d+)\.metadata\.json$")
 
@@ -57,19 +60,7 @@ def _meta_dir(path: str) -> str:
 
 
 def is_iceberg_table(path: str) -> bool:
-    d = _meta_dir(path)
-    return os.path.isdir(d) and any(
-        _VMETA_RE.match(n) for n in os.listdir(d)
-    )
-
-
-def _metadata_versions(path: str) -> list[int]:
-    d = _meta_dir(path)
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(m.group(1)) for n in os.listdir(d) if (m := _VMETA_RE.match(n))
-    )
+    return bool(list_versions(_meta_dir(path), _VMETA_RE))
 
 
 def _current_version(path: str) -> int:
@@ -78,10 +69,22 @@ def _current_version(path: str) -> int:
     put-if-absent commit, so a crash in between leaves it one behind
     (Iceberg's own HadoopTableOperations probes past the hint the same
     way)."""
-    versions = _metadata_versions(path)
+    versions = list_versions(_meta_dir(path), _VMETA_RE)
     if not versions:
         raise IcebergProtocolError(f"{path}: no metadata/v*.metadata.json")
     return versions[-1]
+
+
+def _commit_metadata(path: str, version: int, meta: dict) -> None:
+    """Publish ``v{version}.metadata.json`` put-if-absent (the commit
+    point), then point ``version-hint.text`` at it. A rival that already
+    committed ``version`` makes this raise FileExistsError."""
+    meta_d = _meta_dir(path)
+    target = os.path.join(meta_d, f"v{version}.metadata.json")
+    if not put_if_absent(target, json.dumps(meta)):
+        raise FileExistsError(f"{target}: a rival committed this version")
+    with open(os.path.join(meta_d, "version-hint.text"), "w") as f:
+        f.write(str(version))
 
 
 def _load_metadata(path: str, version: int | None = None) -> dict:
@@ -334,17 +337,7 @@ def expire_snapshots(path: str, keep_last: int = 1) -> list[str]:
     new_meta["snapshot-log"] = [
         e for e in meta.get("snapshot-log", []) if e["snapshot-id"] in kept_ids
     ]
-    meta_d = _meta_dir(path)
-    target = os.path.join(meta_d, f"v{base_version + 1}.metadata.json")
-    fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(new_meta, f)
-    except BaseException:
-        os.unlink(target)
-        raise
-    with open(os.path.join(meta_d, "version-hint.text"), "w") as f:
-        f.write(str(base_version + 1))
+    _commit_metadata(path, base_version + 1, new_meta)
     # files only after the commit: a crash before this point leaves
     # orphans (re-runnable), never a corrupt table
     for fp in dead:
@@ -554,10 +547,10 @@ def write_iceberg(
 ) -> int:
     """Append or overwrite an unpartitioned Iceberg v2 table; returns the
     new snapshot id. Each call writes an immutable parquet batch dir, a
-    manifest, a manifest list, and commits ``v{N}.metadata.json`` with
-    O_EXCL put-if-absent — racing writers: exactly one wins, the loser
-    raises FileExistsError and can retry on the new base (same contract
-    as the Delta writer and the manifest table).
+    manifest, a manifest list, and commits ``v{N}.metadata.json``
+    put-if-absent — racing writers: exactly one wins, the loser raises
+    FileExistsError and can retry on the new base (the same commit
+    primitive as the Delta writer and the manifest table).
 
     The base version is resolved ONCE (or pinned via ``base_version``)
     and the commit targets base+1, so a rival that commits base+1 first
@@ -568,7 +561,7 @@ def write_iceberg(
     meta_d = _meta_dir(path)
     os.makedirs(meta_d, exist_ok=True)
     if base_version is None:
-        versions = _metadata_versions(path)
+        versions = list_versions(meta_d, _VMETA_RE)
         base_version = versions[-1] if versions else None
     prev = _load_metadata(path, base_version) if base_version else None
     if prev and mode == "append":
@@ -738,15 +731,5 @@ def write_iceberg(
         ],
         "metadata-log": [],
     }
-    version = (base_version + 1) if base_version else 1
-    target = os.path.join(meta_d, f"v{version}.metadata.json")
-    fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)  # commit point
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(meta, f)
-    except BaseException:
-        os.unlink(target)
-        raise
-    with open(os.path.join(meta_d, "version-hint.text"), "w") as f:
-        f.write(str(version))
+    _commit_metadata(path, (base_version + 1) if base_version else 1, meta)
     return snapshot_id

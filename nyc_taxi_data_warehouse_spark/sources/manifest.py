@@ -19,9 +19,14 @@ enough for a Delta/Iceberg-style commit protocol:
   manifest's files: a consistent snapshot regardless of in-flight writes,
   because nothing a committed manifest references is ever mutated.
 
-Locally the put-if-absent is ``O_CREAT|O_EXCL`` — the same atomicity
-contract, so every code path here runs identically against a real object
-store with the open/put swapped behind one function.
+Locally the put-if-absent is :func:`put_if_absent` (temp file, fsync,
+``os.link``) — the same all-or-nothing contract, so every code path here
+runs identically against a real object store with the put swapped behind
+one function.  It is the engine's only commit primitive: the Delta
+writer, the Iceberg writer, the IVF-PQ index store and
+:class:`.sinks.WriterLease` publish through it too, and the versioned
+ones share :func:`commit_next` (the optimistic loop) and
+:func:`list_versions` (the head listing).
 
 Orphans (data written by a writer that crashed before committing, or
 files dropped by an ``overwrite``) are invisible to readers and reclaimed
@@ -34,20 +39,24 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 _COMMITS = "_commits"
 _DATA = "data"
+_VERSION_RE = re.compile(r"^v(\d+)\.json$")
+_MAX_COMMIT_RACES = 20
 
 
 class CommitConflictError(RuntimeError):
-    """Lost the optimistic-commit race more times than ``max_retries``."""
+    """Lost the optimistic-commit race more times than allowed."""
 
 
-def _put_if_absent(path: str, payload: str) -> bool:
+def put_if_absent(path: str, payload: str) -> bool:
     """Atomic create-if-not-exists with COMPLETE content — the object-store
     conditional PUT. Locally: write a private temp file, fsync, then
     ``os.link`` it into place (EEXIST if the key exists). The two-step
@@ -74,8 +83,45 @@ def _put_if_absent(path: str, payload: str) -> bool:
             pass
 
 
+def list_versions(directory: str, pattern: re.Pattern) -> list[int]:
+    """Sorted versions of the files in ``directory`` whose names match
+    ``pattern`` (group 1 is the version); ``[]`` if the directory does
+    not exist. Patterns are anchored, so in-flight ``*.tmp.*`` files of
+    :func:`put_if_absent` never count."""
+    if not os.path.isdir(directory):
+        return []
+    return sorted(
+        int(m.group(1)) for n in os.listdir(directory) if (m := pattern.match(n))
+    )
+
+
+def commit_next(
+    head: Callable[[], int],
+    target: Callable[[int], str],
+    build: Callable[[int], str | None],
+    table: str,
+    max_retries: int = _MAX_COMMIT_RACES,
+) -> int:
+    """The optimistic-commit loop every versioned writer shares: resolve
+    the head, ``build`` the payload against it, :func:`put_if_absent` it
+    at ``target(head + 1)``; on a lost race back off (linear) and
+    re-resolve. ``build`` returns ``None`` when its base vanished under
+    it (the head has moved on), which counts as a lost race. Returns the
+    committed version; raises :class:`CommitConflictError` after
+    ``max_retries`` losses."""
+    for attempt in range(max_retries):
+        base = head()
+        payload = build(base)
+        if payload is not None and put_if_absent(target(base + 1), payload):
+            return base + 1
+        time.sleep(0.01 * (attempt + 1))
+    raise CommitConflictError(
+        f"{table}: lost {max_retries} optimistic-commit races"
+    )
+
+
 class ManifestTable:
-    def __init__(self, path: str, max_retries: int = 20):
+    def __init__(self, path: str, max_retries: int = _MAX_COMMIT_RACES):
         self.path = path.rstrip("/")
         self.commits_dir = os.path.join(self.path, _COMMITS)
         self.data_dir = os.path.join(self.path, _DATA)
@@ -85,19 +131,9 @@ class ManifestTable:
 
     # -- versions -----------------------------------------------------------
 
-    def _versions(self) -> list[int]:
-        out = []
-        for name in os.listdir(self.commits_dir):
-            if name.startswith("v") and name.endswith(".json"):
-                try:
-                    out.append(int(name[1:-5]))
-                except ValueError:
-                    continue
-        return sorted(out)
-
     def latest_version(self) -> int:
         """Highest committed version, or -1 for an empty table."""
-        vs = self._versions()
+        vs = list_versions(self.commits_dir, _VERSION_RE)
         return vs[-1] if vs else -1
 
     def _manifest(self, version: int) -> dict:
@@ -143,27 +179,11 @@ class ManifestTable:
 
     # -- write --------------------------------------------------------------
 
-    def _write_batch(self, df: DataFrame, rebalance: bool = False) -> list[str]:
+    def _write_batch(self, df: DataFrame) -> list[str]:
         """One immutable uniquely-named batch directory per write — never a
-        rename, never an overwrite of an existing key.
-
-        ``rebalance`` adds an AQE REBALANCE hint so the write inherits
-        advisory-size file coalescing (guide §6 small-files).  It is OFF
-        by default: a write input whose plan ends in a shuffle (groupBy,
-        join — every signature-store append does) is ALREADY
-        advisory-sized by AQE partition coalescing, and since round 14
-        that includes persisted frames (`canChangeCachedPlanOutputPartitioning`),
-        so the hint there only adds a redundant Exchange per commit —
-        A/B at sf0.1: identical file counts (3 vs 3 across the
-        three-generation lifecycle) and ~0.6 s saved per lifecycle
-        without it; the round-13 unconditional hint was the likely cause
-        of that round's ingest regression.  Pass ``rebalance=True`` for
-        frames whose plan does NOT end in a shuffle (e.g. a narrow map
-        over a many-split scan), where nothing else sizes the output
-        files."""
+        rename, never an overwrite of an existing key."""
         batch = os.path.join(self.data_dir, f"batch-{uuid.uuid4().hex}")
-        w = df.hint("rebalance") if rebalance else df
-        w.write.parquet(batch)
+        df.write.parquet(batch)
         return sorted(
             os.path.join(batch, f)
             for f in os.listdir(batch)
@@ -171,21 +191,20 @@ class ManifestTable:
         )
 
     def _commit(self, build_files, op: str) -> int:
-        """Optimistic-commit loop: compute the file list against the current
-        head, try put-if-absent at head+1, retry on conflict. ``build_files``
-        maps the loser's refreshed base file list → the new full list, so
-        concurrent appends compose instead of clobbering."""
-        for attempt in range(self.max_retries):
-            base_version = self.latest_version()
+        """Commit the file list :func:`commit_next` builds against the
+        current head. ``build_files`` maps the loser's refreshed base file
+        list → the new full list, so concurrent appends compose instead of
+        clobbering."""
+
+        def payload(base_version: int) -> str | None:
             try:
-                base = self.files(base_version) if base_version >= 0 else []
+                base = self.files(base_version)
             except FileNotFoundError:
                 # a concurrent vacuum deleted the base manifest between the
                 # head listing and the read — the head has necessarily moved
                 # on; re-resolve and retry instead of crashing the committer
-                time.sleep(0.01 * (attempt + 1))
-                continue
-            payload = json.dumps(
+                return None
+            return json.dumps(
                 {
                     "version": base_version + 1,
                     "op": op,
@@ -193,25 +212,24 @@ class ManifestTable:
                     "committed_at": time.time(),
                 }
             )
-            target = os.path.join(self.commits_dir, f"v{base_version + 1}.json")
-            if _put_if_absent(target, payload):
-                return base_version + 1
-            time.sleep(0.01 * (attempt + 1))  # lost the race; linear backoff
-        raise CommitConflictError(
-            f"{self.path}: lost {self.max_retries} optimistic-commit races"
+
+        return commit_next(
+            self.latest_version,
+            lambda v: os.path.join(self.commits_dir, f"v{v}.json"),
+            payload,
+            self.path,
+            self.max_retries,
         )
 
-    def overwrite(self, df: DataFrame, rebalance: bool = False) -> int:
-        """Full-table replace. Returns the committed version.
-        ``rebalance``: see :meth:`_write_batch`."""
-        new = self._write_batch(df, rebalance=rebalance)
+    def overwrite(self, df: DataFrame) -> int:
+        """Full-table replace. Returns the committed version."""
+        new = self._write_batch(df)
         return self._commit(lambda base: new, "overwrite")
 
-    def append(self, df: DataFrame, rebalance: bool = False) -> int:
+    def append(self, df: DataFrame) -> int:
         """Append a batch. Concurrent appends both land (the loser's retry
-        recomputes against the winner's manifest). Returns the version.
-        ``rebalance``: see :meth:`_write_batch`."""
-        new = self._write_batch(df, rebalance=rebalance)
+        recomputes against the winner's manifest). Returns the version."""
+        new = self._write_batch(df)
         return self._commit(lambda base: base + new, "append")
 
     # -- maintenance --------------------------------------------------------
@@ -235,11 +253,10 @@ class ManifestTable:
         keeps the common path collision-free). Size it above the longest
         write job; tests pass 0 for immediacy."""
         import shutil
-        import time
 
         if keep_versions < 1:
             raise ValueError("keep_versions must be >= 1")
-        vs = self._versions()
+        vs = list_versions(self.commits_dir, _VERSION_RE)
         cutoff = time.time() - retention_seconds
         # decide the surviving manifest set FIRST, then keep every file any
         # survivor references: a superseded manifest inside the retention

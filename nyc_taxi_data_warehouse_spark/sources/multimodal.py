@@ -4,12 +4,11 @@ Spark-side contract (real and tested): binary payload + typed metadata
 struct, Arrow-batched `mapInPandas` for decode/feature-extraction, schema
 declared up front so downstream plans bind without executing Python.
 
-Codecs are optional plug-ins: when Pillow is importable,
-`decode_image_batch`/`resize_image_batch` run a REAL decode inside the
-same Arrow-batched `mapInPandas` (never a per-row Python UDF); without it
-they raise NotImplementedError naming the missing dependency, and the
-deterministic fake decoder behind `use_fake=True` exercises the identical
-Spark plumbing — partitioning, UDF signature, batch shapes — codec-free.
+No image codec ships with the engine: `decode_image_batch` /
+`resize_image_batch` are deterministic stand-ins (byte statistics,
+truncate/pad to the pixel budget) that exercise the real Spark plumbing —
+partitioning, UDF signature, Arrow batch shapes — codec-free. A real
+codec slots into the same `mapInPandas` function bodies.
 """
 
 from __future__ import annotations
@@ -49,75 +48,12 @@ def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFr
     return df.withColumn("n_bytes", F.length(F.col(payload_col)).cast("int"))
 
 
-def _pil_available() -> bool:
-    try:
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def decode_image_batch(df: DataFrame, use_fake: bool = False) -> DataFrame:
-    """Decode/feature-extract images via Arrow-batched mapInPandas.
-
-    With Pillow importable (optional dependency), the REAL decode runs:
-    width/height from the image header, mean grayscale pixel value, and an
-    md5 over the decoded pixel bytes — still batch-wise inside mapInPandas,
-    never a per-row Python UDF. Without Pillow this raises
-    NotImplementedError; `use_fake=True` selects the deterministic
-    stand-in (byte statistics) that exercises the identical Spark
-    plumbing — schema contract, Arrow batch shape, per-partition
-    batching — with no codec.
-    """
-    if not use_fake:
-        if not _pil_available():
-            raise NotImplementedError(
-                "image codec not available (pip install Pillow for real "
-                "decode); pass use_fake=True for the deterministic stand-in"
-            )
-
-        def decode_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import hashlib
-            import io
-
-            import numpy as np
-            from PIL import Image
-
-            for pdf in batches:
-                ids, nb, ws, hs, means, hashes = [], [], [], [], [], []
-                for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                    raw = bytes(b or b"")
-                    ids.append(mid)
-                    nb.append(len(raw))
-                    # a NULL/corrupt payload yields NULL features instead of
-                    # failing the task (one bad row must not abort the job);
-                    # filter on width IS NULL downstream to audit them
-                    try:
-                        img = Image.open(io.BytesIO(raw))
-                        gray = np.asarray(img.convert("L"), dtype=np.uint8)
-                    except Exception:
-                        ws.append(None)
-                        hs.append(None)
-                        means.append(None)
-                        hashes.append(None)
-                        continue
-                    ws.append(img.width)
-                    hs.append(img.height)
-                    means.append(float(gray.sum(dtype=np.int64) / gray.size))
-                    hashes.append(hashlib.md5(gray.tobytes()).hexdigest())
-                yield pd.DataFrame(
-                    {
-                        "media_id": ids,
-                        "n_bytes": pd.Series(nb, dtype="int32"),
-                        "width": pd.Series(ws, dtype="Int32"),
-                        "height": pd.Series(hs, dtype="Int32"),
-                        "mean_byte": pd.Series(means, dtype="float64"),
-                        "feature_hash": hashes,
-                    }
-                )
-
-        return df.mapInPandas(decode_real, IMAGE_FEATURES_SCHEMA)
+def decode_image_batch(df: DataFrame) -> DataFrame:
+    """Feature-extract images via Arrow-batched mapInPandas (never a
+    per-row Python UDF): byte count, declared width/height, mean byte
+    value and an md5 of the payload — the deterministic stand-in for a
+    codec decode, with the same schema contract and per-partition
+    batching."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
@@ -154,50 +90,11 @@ def decode_image_batch(df: DataFrame, use_fake: bool = False) -> DataFrame:
 RESIZE_SCHEMA = "media_id string, width int, height int, payload binary"
 
 
-def resize_image_batch(
-    df: DataFrame, target_w: int, target_h: int, use_fake: bool = False
-) -> DataFrame:
+def resize_image_batch(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
     """Resize images via Arrow-batched mapInPandas — same plumbing contract
-    as :func:`decode_image_batch`: real Pillow resize (PNG re-encode) when
-    the optional codec is importable, NotImplementedError when not; the
-    fake path rewrites metadata and truncates/pads the payload to the
-    target pixel budget so batch shapes and schema binding are exercised
-    without a codec."""
-    if not use_fake:
-        if not _pil_available():
-            raise NotImplementedError(
-                "image codec not available (pip install Pillow for real "
-                "resize); pass use_fake=True for the deterministic stand-in"
-            )
-
-        def resize_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import io
-
-            from PIL import Image
-
-            for pdf in batches:
-                payloads = []
-                for b in pdf["payload"]:
-                    # NULL/corrupt payloads pass through as NULL (one bad
-                    # row must not abort the job)
-                    try:
-                        img = Image.open(io.BytesIO(bytes(b or b"")))
-                        buf = io.BytesIO()
-                        img.resize((target_w, target_h)).save(buf, format="PNG")
-                        payloads.append(buf.getvalue())
-                    except Exception:
-                        payloads.append(None)
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["media_id"],
-                        "width": pd.Series([target_w] * len(pdf), dtype="int32"),
-                        "height": pd.Series([target_h] * len(pdf), dtype="int32"),
-                        "payload": payloads,
-                    }
-                )
-
-        return df.mapInPandas(resize_real, RESIZE_SCHEMA)
-
+    as :func:`decode_image_batch`: rewrites the metadata and truncates/pads
+    the payload to the target pixel budget, so batch shapes and schema
+    binding are exercised without a codec."""
     budget = target_w * target_h
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

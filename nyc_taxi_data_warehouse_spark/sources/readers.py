@@ -1,6 +1,7 @@
 """Source readers (SURVEY §2.1).
 
-- S1: parquet scan — `spark.read.parquet` (identical to reference's
+- S1: parquet scan — plain `spark.read.parquet` in
+  `plans/nyc_views.py::load_tables` (identical to reference's
   `dags/etl_spark_historical.py:178`).
 - S5/S15: CSV with the reference's Snowflake file-format options
   (`SKIP_HEADER=1, FIELD_OPTIONALLY_ENCLOSED_BY='"', NULL_IF ('','NULL','null')`,
@@ -18,10 +19,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def read_csv_snowflake_format(

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .manifest import put_if_absent
+
 
 def write_partitioned_by_date(
     df: DataFrame,
@@ -109,20 +111,20 @@ class WriterLease:
     :func:`atomic_overwrite`):
 
     - acquire: the lease payload ``{token, owner, pid, expires_at}`` is
-      written to a private temp file and published with ``os.link`` —
-      link fails with EEXIST if the lease exists, so creation is atomic
-      AND the file is complete the instant it is visible (a crash can
-      never leave an empty/corrupt lease that wedges the table).  A loser
+      published with :func:`.manifest.put_if_absent` (temp file, fsync,
+      ``os.link``) — the link fails if the lease exists, so creation is
+      atomic AND the file is complete the instant it is visible (a crash
+      can never leave an empty/corrupt lease that wedges the table).  A loser
       whose rival's lease is still live raises :class:`LeaseHeldError`
       cleanly, having touched nothing.
     - stale takeover: a lease past ``expires_at`` (writer crashed mid-swap)
       is broken under a short-lived BREAKER lock (``.__lease.breaker``,
-      same link-create protocol): the breaker holder re-reads the lease,
+      same put-if-absent protocol): the breaker holder re-reads the lease,
       verifies it is STILL the same expired lease it first observed, and
       only then removes it.  Serializing takeovers closes the classic
       TOCTOU where two breakers both judge the lease stale and the slower
       one destroys the faster one's freshly-acquired LIVE lease.  An
-      unparseable lease (should be impossible under link-create; covers
+      unparseable lease (should be impossible under put-if-absent; covers
       manual tampering) is treated as expired.
     - release: also under the breaker lock — re-read, unlink only if the
       file still carries OUR token (we may have been timed out and taken
@@ -161,32 +163,6 @@ class WriterLease:
         except ValueError:
             return None
 
-    @staticmethod
-    def _link_create(path: str, payload: str) -> bool:
-        """Atomic create-if-absent with COMPLETE content: write a private
-        temp file, fsync, then `os.link` it into place (fails with EEXIST
-        if present). A crash can never leave a partial file at `path`."""
-        import os
-        import uuid
-
-        tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-        fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        try:
-            with os.fdopen(fd, "w") as f:
-                f.write(payload)
-                f.flush()
-                os.fsync(f.fileno())
-            try:
-                os.link(tmp, path)
-                return True
-            except FileExistsError:
-                return False
-        finally:
-            try:
-                os.unlink(tmp)
-            except FileNotFoundError:
-                pass
-
     def _payload(self) -> str:
         import json
         import os
@@ -206,7 +182,7 @@ class WriterLease:
         The breaker has its own short TTL so a crashed breaker can't wedge
         takeovers; it is itself removed by expiry-then-unlink (a benign
         unlink race: both racers observe expiry, the second unlink ENOENTs,
-        and link-create picks exactly one next breaker)."""
+        and put-if-absent picks exactly one next breaker)."""
         import json
         import os
         import time
@@ -216,7 +192,7 @@ class WriterLease:
         btoken = uuid.uuid4().hex
         deadline = time.time() + max(self.ttl, 30.0)
         while True:
-            if self._link_create(
+            if put_if_absent(
                 breaker,
                 json.dumps(
                     {
@@ -268,7 +244,7 @@ class WriterLease:
         import time
 
         while True:
-            if self._link_create(self.lock_path, self._payload()):
+            if put_if_absent(self.lock_path, self._payload()):
                 self._held = True
                 return self
             first = self._read()
@@ -276,7 +252,7 @@ class WriterLease:
                 time.sleep(0.005)  # holder released mid-look; retry
                 continue
             # unparseable (None) is treated as expired — impossible under
-            # link-create, covers manual tampering
+            # put-if-absent, covers manual tampering
             if first is not None and first.get("expires_at", 0) > time.time():
                 raise LeaseHeldError(
                     f"{self.lock_path} held by {first.get('owner')} "

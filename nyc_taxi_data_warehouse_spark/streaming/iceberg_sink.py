@@ -18,7 +18,7 @@ table's own transaction, so a replayed batch is recognized and skipped:
 foreachBatch invocations of one query are serial, so the read-then-
 commit pair needs no extra locking; a rogue concurrent writer still
 cannot corrupt anything because one of the two colliding commits fails
-on the O_EXCL metadata file.
+on the put-if-absent metadata file.
 """
 
 from __future__ import annotations

@@ -247,6 +247,40 @@ def test_commit_is_put_if_absent(spark, tmp_path):
     assert iceberg.read_iceberg(spark, t, snapshot_id=s_rival).count() == 13
 
 
+_CRASH_MID_COMMIT = """
+import json, os, sys
+from nyc_taxi_data_warehouse_spark.sources import iceberg
+
+def _die(*_a, **_k):
+    os._exit(86)
+
+json.dump = os.fsync = _die  # the process dies while publishing metadata
+iceberg.expire_snapshots(sys.argv[1], keep_last=1)
+"""
+
+
+def test_crash_mid_commit_leaves_table_readable(spark, tmp_path):
+    """A writer killed while writing the next metadata file must leave
+    no visible partial ``v{N}.metadata.json``: readers keep serving the
+    last committed snapshot and the next writer commits past it."""
+    import subprocess
+    import sys
+
+    t = str(tmp_path / "tbl")
+    iceberg.write_iceberg(spark.range(3).select(F.col("id")), t)
+    iceberg.write_iceberg(spark.range(3, 5).select(F.col("id")), t, mode="append")
+    before = _rows(iceberg.read_iceberg(spark, t))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.run(
+        [sys.executable, "-c", _CRASH_MID_COMMIT, t],
+        cwd=repo, capture_output=True, text=True, timeout=120,
+    )
+    assert child.returncode == 86, child.stderr  # died at the commit point
+    assert _rows(iceberg.read_iceberg(spark, t)) == before
+    iceberg.write_iceberg(spark.range(5, 6).select(F.col("id")), t, mode="append")
+    assert _rows(iceberg.read_iceberg(spark, t)) == before + [(5,)]
+
+
 def test_unsupported_predicate_op_raises(spark, tmp_path):
     t = str(tmp_path / "tbl")
     iceberg.write_iceberg(spark.range(5).select(F.col("id")), t)

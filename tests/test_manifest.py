@@ -49,7 +49,7 @@ def test_concurrent_appends_both_land(spark, tmp_path):
     assert t._commit(lambda b: b + files_a, "append") == 1
     # writer B's first attempt at v1 must LOSE (key exists) and its retry
     # must rebuild on A's manifest — simulate via the public append path
-    assert not M._put_if_absent(
+    assert not M.put_if_absent(
         os.path.join(t.commits_dir, "v1.json"), "{}"
     )
     assert t._commit(lambda b: b + files_b, "append") == 2
@@ -92,7 +92,7 @@ def test_commit_conflict_exhaustion_raises(spark, tmp_path):
 
     def always_lose(base):
         # simulate a rival winning every observed head: pre-take the slot
-        M._put_if_absent(
+        M.put_if_absent(
             os.path.join(t.commits_dir, f"v{t.latest_version() + 1}.json"),
             '{"version": -1, "op": "rival", "files": []}',
         )

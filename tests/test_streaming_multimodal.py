@@ -101,79 +101,12 @@ def test_multimodal_decode_stub_contract(spark):
         ("m2", "image", bytearray(b""), 0, 0, None),
     ]
     df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = multimodal.decode_image_batch(
-        multimodal.attach_media_metadata(df), use_fake=True
-    )
+    out = multimodal.decode_image_batch(multimodal.attach_media_metadata(df))
     got = {r.media_id: r for r in out.collect()}
     assert got["m1"].n_bytes == 4
     assert got["m1"].mean_byte == pytest.approx(2.5)
     assert len(got["m1"].feature_hash) == 32
     assert got["m2"].mean_byte == 0.0
-
-
-@pytest.mark.skipif(
-    multimodal._pil_available(), reason="Pillow present: real decode active"
-)
-def test_multimodal_real_decode_is_explicitly_stubbed_without_pillow(spark):
-    df = spark.createDataFrame([], multimodal.MEDIA_SCHEMA)
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image_batch(df, use_fake=False)
-
-
-def _png_bytes(w, h, value):
-    """A real w×h grayscale PNG via Pillow (callers importorskip first)."""
-    import io
-
-    from PIL import Image
-
-    buf = io.BytesIO()
-    Image.new("L", (w, h), value).save(buf, format="PNG")
-    return buf.getvalue()
-
-
-def test_multimodal_real_decode_with_pillow(spark):
-    pytest.importorskip("PIL")
-    rows = [
-        ("m1", "image", bytearray(_png_bytes(8, 6, 200)), None, None, None),
-        ("m2", "image", bytearray(_png_bytes(3, 3, 0)), None, None, None),
-        ("m3", "image", None, None, None, None),  # NULL payload
-        ("m4", "image", bytearray(b"not an image"), None, None, None),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = {
-        r.media_id: r
-        for r in multimodal.decode_image_batch(df, use_fake=False).collect()
-    }
-    assert (got["m1"].width, got["m1"].height) == (8, 6)
-    assert got["m1"].mean_byte == pytest.approx(200.0)
-    assert got["m2"].mean_byte == pytest.approx(0.0)
-    assert len(got["m1"].feature_hash) == 32
-    # decode-derived hash: uniform 8×6 and uniform 3×3 differ
-    assert got["m1"].feature_hash != got["m2"].feature_hash
-    # NULL/corrupt payloads yield NULL features, not a task failure
-    for bad in ("m3", "m4"):
-        assert got[bad].width is None and got[bad].feature_hash is None
-    assert got["m3"].n_bytes == 0 and got["m4"].n_bytes == 12
-
-
-def test_multimodal_real_resize_with_pillow(spark):
-    pytest.importorskip("PIL")
-    df = spark.createDataFrame(
-        [("m1", "image", bytearray(_png_bytes(16, 16, 128)), None, None, None)],
-        multimodal.MEDIA_SCHEMA,
-    )
-    out = multimodal.resize_image_batch(df, 4, 4, use_fake=False).collect()[0]
-    assert (out.width, out.height) == (4, 4)
-    # round-trip: the resized payload decodes to a 4×4 image
-    feats = multimodal.decode_image_batch(
-        spark.createDataFrame(
-            [("m1", "image", bytearray(out.payload), None, None, None)],
-            multimodal.MEDIA_SCHEMA,
-        ),
-        use_fake=False,
-    ).collect()[0]
-    assert (feats.width, feats.height) == (4, 4)
-    assert feats.mean_byte == pytest.approx(128.0, abs=2.0)
 
 
 def test_frame_sample_plan_shape(spark):
@@ -234,11 +167,8 @@ def test_multimodal_resize_stub_contract(spark):
     ]
     df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
     out = {r.media_id: r for r in multimodal.resize_image_batch(
-        df, target_w=4, target_h=4, use_fake=True
+        df, target_w=4, target_h=4
     ).collect()}
     assert out["m1"].width == 4 and out["m1"].height == 4
     assert len(out["m1"].payload) == 16  # truncated to the pixel budget
     assert len(out["m2"].payload) == 16  # padded to the pixel budget
-    if not multimodal._pil_available():
-        with pytest.raises(NotImplementedError):
-            multimodal.resize_image_batch(df, 4, 4, use_fake=False)
