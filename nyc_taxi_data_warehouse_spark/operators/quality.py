@@ -6,8 +6,12 @@ humidity, plus source-freshness SLAs (`models/staging/schema.yml`,
 `models/marts/schema.yml`, `models/staging/sources.yml:13-15,37-39`).
 
 Each check compiles to a violation query (rows>0 = fail), exactly dbt's
-failure semantics. Checks return lazy DataFrames; `run_checks` executes them
-in one pass and returns structured results.
+failure semantics. A row-level check (`not_null`, `accepted_range`) is a
+:class:`RowCheck`, a predicate over its table; a grouped check (`unique`)
+is a lazy DataFrame of violating groups. `violation_report` evaluates a
+suite as ONE report, fusing the row checks of each table into one
+aggregate, and `run_checks` collects that report once and returns
+structured results.
 """
 
 from __future__ import annotations
@@ -15,8 +19,11 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime, timedelta
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# violation counts are capped like dbt's `limit`ed failure query
+VIOLATION_CAP = 1001
 
 
 @dataclass
@@ -27,8 +34,21 @@ class CheckResult:
     detail: str = ""
 
 
-def not_null(df: DataFrame, col: str) -> DataFrame:
-    return df.where(F.col(col).isNull())
+@dataclass(frozen=True, eq=False)
+class RowCheck:
+    """A row-level check: the rows of ``table`` where ``predicate`` holds
+    violate it."""
+
+    table: DataFrame
+    predicate: Column
+
+    def violations(self) -> DataFrame:
+        """The violating rows (dbt's compiled test query)."""
+        return self.table.where(self.predicate)
+
+
+def not_null(df: DataFrame, col: str) -> RowCheck:
+    return RowCheck(df, F.col(col).isNull())
 
 
 def unique(df: DataFrame, *cols: str) -> DataFrame:
@@ -45,7 +65,7 @@ def accepted_range(
     min_value: float | None = None,
     max_value: float | None = None,
     inclusive: bool = True,
-) -> DataFrame:
+) -> RowCheck:
     """dbt_utils.accepted_range: violating rows outside [min, max]."""
     c = F.col(col)
     cond = F.lit(False)
@@ -53,7 +73,7 @@ def accepted_range(
         cond = cond | (c < min_value if inclusive else c <= min_value)
     if max_value is not None:
         cond = cond | (c > max_value if inclusive else c >= max_value)
-    return df.where(c.isNotNull() & cond)
+    return RowCheck(df, c.isNotNull() & cond)
 
 
 def freshness(
@@ -144,55 +164,72 @@ def freshness_report(
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
-def run_checks(named_checks: dict[str, DataFrame]) -> list[CheckResult]:
-    """Execute violation queries; rows > 0 → fail (dbt semantics)."""
-    out = []
-    for name, df in named_checks.items():
-        n = df.limit(1001).count()  # cap the violation count scan
-        out.append(CheckResult(name, "pass" if n == 0 else "fail", n))
-    return out
-
-
 def fused_violation_counts(
-    df: DataFrame, predicates: dict[str, F.Column]
+    df: DataFrame, predicates: dict[str, Column]
 ) -> DataFrame:
-    """All row-predicate checks of ONE table in ONE scan: conditional sums
-    in a single aggregate, unpivoted to (check_name, violations).
-
-    `violation_report` runs one job per check (dbt's model — composable,
-    but N full scans for N checks); at warehouse scale the quality suite
-    should cost one pass per table, which is exactly this. `unique`-style
-    grouped checks still need their own aggregation.
-    """
-    aggs = [
-        F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias(name)
-        for name, cond in predicates.items()
+    """All row-predicate checks of ONE table in ONE scan: conditional
+    counts in a single aggregate, unpivoted to (check_name, violations).
+    An empty table counts 0 violations per check. `unique`-style grouped
+    checks still need their own aggregation."""
+    counts = df.agg(
+        *[
+            F.count(F.when(cond, 1)).alias(f"v{i}")
+            for i, cond in enumerate(predicates.values())
+        ]
+    )
+    pairs = [
+        x for i, name in enumerate(predicates) for x in (F.lit(name), F.col(f"v{i}"))
     ]
-    one_row = df.agg(*aggs)
-    stack_expr = ", ".join(f"'{name}', `{name}`" for name in predicates)
-    return one_row.selectExpr(
-        f"stack({len(predicates)}, {stack_expr}) AS (check_name, violations)"
+    return counts.select(
+        F.stack(F.lit(len(predicates)), *pairs).alias("check_name", "violations")
     )
 
 
-def violation_report(named_checks: dict[str, DataFrame]) -> DataFrame:
+def violation_report(named_checks: dict[str, RowCheck | DataFrame]) -> DataFrame:
     """One DataFrame of (check_name, violations) — the dbt-test result table
-    as a relational output (oracle-checkable, persistable as an audit mart)."""
+    as a relational output (oracle-checkable, persistable as an audit mart).
+
+    The :class:`RowCheck` s on one table (the same DataFrame object) fuse
+    into one :func:`fused_violation_counts` aggregate, each grouped check
+    (a DataFrame of violating groups) counts on its own, and the parts
+    union into one plan."""
     from functools import reduce
 
-    parts = [
+    tables: dict[int, tuple[DataFrame, dict[str, Column]]] = {}
+    grouped: dict[str, DataFrame] = {}
+    for name, check in named_checks.items():
+        if isinstance(check, RowCheck):
+            preds = tables.setdefault(id(check.table), (check.table, {}))[1]
+            preds[name] = check.predicate
+        else:
+            grouped[name] = check
+    parts = [fused_violation_counts(t, preds) for t, preds in tables.values()]
+    parts += [
         df.agg(F.count(F.lit(1)).alias("violations")).select(
             F.lit(name).alias("check_name"), "violations"
         )
-        for name, df in named_checks.items()
+        for name, df in grouped.items()
     ]
     return reduce(lambda a, b: a.unionByName(b), parts)
+
+
+def run_checks(named_checks: dict[str, RowCheck | DataFrame]) -> list[CheckResult]:
+    """Execute the suite with one collect of its :func:`violation_report`;
+    rows > 0 → fail (dbt semantics). Results follow ``named_checks``' order
+    and counts are capped at ``VIOLATION_CAP``, as a per-check
+    ``limit(VIOLATION_CAP).count()`` reports them."""
+    counts = dict(map(tuple, violation_report(named_checks).collect()))
+    out = []
+    for name in named_checks:
+        n = min(counts[name], VIOLATION_CAP)
+        out.append(CheckResult(name, "pass" if n == 0 else "fail", n))
+    return out
 
 
 def reference_check_suite(
     stg_trips: DataFrame, stg_weather: DataFrame, mart_trips_weather: DataFrame,
     mart_daily: DataFrame,
-) -> dict[str, DataFrame]:
+) -> dict[str, RowCheck | DataFrame]:
     """The reference's declarative test suite, ported 1:1."""
     return {
         # models/staging/schema.yml:9-41

@@ -65,7 +65,8 @@ def generate_manifest(run: ModelRun) -> dict:
         entry: dict = {"layer": layer, "depends_on": upstream}
         attr = _RUN_ATTRS.get(name)
         if attr is not None:
-            df = getattr(run, attr)
+            # the lazy plan, so documenting a run materializes nothing
+            df = run.plans[attr] if attr in run.plans else getattr(run, attr)
             entry["columns"] = [
                 {"name": f.name, "type": f.dataType.simpleString()}
                 for f in df.schema.fields

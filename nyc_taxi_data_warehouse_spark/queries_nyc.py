@@ -1178,35 +1178,28 @@ def q_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _trips(spark, sf_dir)
     w = _weather(spark, sf_dir)
-    # row-predicate checks fuse into ONE scan per table (see
-    # quality.fused_violation_counts); only the grouped `unique` check
-    # needs its own aggregation
-    trips_part = quality.fused_violation_counts(
-        t,
+    # the row checks of each table fuse into ONE scan (see
+    # quality.violation_report); only the grouped `unique` check needs its
+    # own aggregation
+    return quality.violation_report(
         {
-            "trips.pickup_not_null": F.col("pickup_datetime").isNull(),
-            "trips.dropoff_not_null": F.col("dropoff_datetime").isNull(),
-            "trips.pickup_zone_not_null": F.col("pickup_zone_id").isNull(),
-            "trips.distance_range": F.col("trip_distance").isNotNull()
-            & (F.col("trip_distance") <= 0),
-            "trips.amount_range": F.col("total_amount").isNotNull()
-            & (F.col("total_amount") <= 0),
-        },
+            "trips.pickup_not_null": quality.not_null(t, "pickup_datetime"),
+            "trips.dropoff_not_null": quality.not_null(t, "dropoff_datetime"),
+            "trips.pickup_zone_not_null": quality.not_null(t, "pickup_zone_id"),
+            "trips.distance_range": quality.accepted_range(
+                t, "trip_distance", min_value=0, inclusive=False
+            ),
+            "trips.amount_range": quality.accepted_range(
+                t, "total_amount", min_value=0, inclusive=False
+            ),
+            "weather.temp_not_null": quality.not_null(w, "temp_f"),
+            "weather.humidity_range": quality.accepted_range(w, "humidity_pct", 0, 100),
+            "weather.desc_accepted": quality.RowCheck(
+                w, F.col("weather_desc").isNotNull() & ~F.col("weather_desc").isin("view")
+            ),
+            "weather.obs_key_unique": quality.unique(w, "city", "observed_at"),
+        }
     )
-    weather_part = quality.fused_violation_counts(
-        w,
-        {
-            "weather.temp_not_null": F.col("temp_f").isNull(),
-            "weather.humidity_range": F.col("humidity_pct").isNotNull()
-            & ((F.col("humidity_pct") < 0) | (F.col("humidity_pct") > 100)),
-            "weather.desc_accepted": F.col("weather_desc").isNotNull()
-            & ~F.col("weather_desc").isin("view"),
-        },
-    )
-    unique_part = quality.violation_report(
-        {"weather.obs_key_unique": quality.unique(w, "city", "observed_at")}
-    )
-    return trips_part.unionByName(weather_part).unionByName(unique_part)
 
 
 _SQL_QUALITY_REPORT = """

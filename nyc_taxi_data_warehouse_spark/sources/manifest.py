@@ -28,8 +28,9 @@ writer, the Iceberg writer, the IVF-PQ index store and
 ones share :func:`commit_next` (the optimistic loop) and
 :func:`list_versions` (the head listing).
 
-Orphans (data written by a writer that crashed before committing, or
-files dropped by an ``overwrite``) are invisible to readers and reclaimed
+Orphans (data written by a writer that crashed before committing, files
+dropped by an ``overwrite``, and the ``*.tmp.*`` file of a commit that
+crashed before its final unlink) are invisible to readers and reclaimed
 by :meth:`ManifestTable.vacuum`, which keeps the trailing ``keep_versions``
 manifests for time-travel/slow readers — mirroring Delta's VACUUM
 retention contract.
@@ -250,8 +251,10 @@ class ManifestTable:
         this vacuum may still be about to read an old manifest, so only
         manifests older than the retention window are dropped (they retry
         against the new head regardless — see :meth:`files` — but the gate
-        keeps the common path collision-free). Size it above the longest
-        write job; tests pass 0 for immediacy."""
+        keeps the common path collision-free). It gates the ``_commits``
+        temp files a crashed :func:`put_if_absent` left behind as well: a
+        younger one may belong to a commit in flight. Size it above the
+        longest write job; tests pass 0 for immediacy."""
         import shutil
 
         if keep_versions < 1:
@@ -290,4 +293,11 @@ class ManifestTable:
                 shutil.rmtree(bdir)
         for v in doomed:
             os.unlink(os.path.join(self.commits_dir, f"v{v}.json"))
+        for name in os.listdir(self.commits_dir):
+            tmp = os.path.join(self.commits_dir, name)
+            try:
+                if ".tmp." in name and os.path.getmtime(tmp) <= cutoff:
+                    os.unlink(tmp)
+            except FileNotFoundError:  # its commit finished meanwhile
+                pass
         return sorted(deleted)

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -26,20 +24,6 @@ def features(run):
     return run.fare_daily_features.cache()
 
 
-def _jobs_in_group(spark, fn) -> int:
-    """Spark jobs fired by ``fn()``, counted in a job group of their own."""
-    sc = spark.sparkContext
-    group = f"jobs_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_train_produces_bounded_mae(spark, features):
     res = forecast.train(features)
     assert res.n_train > 0 and res.n_test > 0
@@ -59,12 +43,12 @@ def test_forecast_7day_rolls_features_forward(spark, features):
     assert all(r.predicted_avg_fare is not None for r in rows)
 
 
-def test_forecast_7day_fires_only_its_two_input_collects(spark, features):
+def test_forecast_7day_fires_only_its_two_input_collects(spark, features, jobs_in):
     """The 7 recursive steps predict on the driver: the only Spark jobs
     are the last-row and trailing-fare collects."""
     model = forecast.train(features).model
     features.count()  # the cache fills outside the counted group
-    n = _jobs_in_group(spark, lambda: forecast.forecast_7day(spark, features, model))
+    n = jobs_in(lambda: forecast.forecast_7day(spark, features, model))
     assert 1 <= n <= 2
 
 
@@ -93,14 +77,14 @@ def test_forecast_7day_frame_is_a_local_table_with_the_same_schema(spark, featur
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan
 
 
-def test_forecast_chain_fires_a_pinned_job_count(spark, run, features):
-    """The chain materializes the feature table once and trains, rolls
-    forward and hindcasts on that copy: 27 jobs at sf0.001 for the chain
-    plus collecting its forecast and eval frames (63 when every stage
-    re-derived the lazy table).  The enriched-trips cache fills outside
-    the counted group, and the module's cached copy of the feature table
-    is dropped for the count, so the chain derives the table itself."""
-    run.enriched.count()
+def test_forecast_chain_fires_a_pinned_job_count(spark, run, features, jobs_in):
+    """The chain trains, rolls forward and hindcasts on the run's one
+    materialized feature table, which the module fixture's first read of
+    ``run.fare_daily_features`` made: 19 jobs at sf0.001 for the chain
+    plus collecting its forecast and eval frames (27 when the chain
+    checkpointed a copy of its own, 63 when every stage re-derived the
+    lazy table).  The module's cache over the feature table is dropped
+    for the count, so the chain reads the checkpointed copy."""
     features.unpersist(blocking=True)
     try:
 
@@ -109,7 +93,7 @@ def test_forecast_chain_fires_a_pinned_job_count(spark, run, features):
             fc.collect()
             ev.collect()
 
-        assert _jobs_in_group(spark, chain) == 27
+        assert jobs_in(chain) == 19
     finally:
         features.cache()
 

@@ -213,3 +213,27 @@ def test_vacuum_retention_gates_manifest_deletion(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         t._manifest(0)
     assert _ids(t.read(spark)) == list(range(5))
+
+
+def test_vacuum_reclaims_crashed_commit_temp_files(spark, tmp_path):
+    """A commit that died between its temp write and the final unlink
+    leaves ``v{N}.json.tmp.<hex>`` in ``_commits``. Vacuum removes such a
+    file once it is older than the retention window and keeps a younger
+    one, which may belong to a commit in flight; the head does not move."""
+    import time
+
+    t = M.ManifestTable(str(tmp_path / "t"))
+    t.overwrite(spark.range(3))
+    old = os.path.join(t.commits_dir, "v1.json.tmp.0123abcd")
+    fresh = os.path.join(t.commits_dir, "v1.json.tmp.4567cdef")
+    for path in (old, fresh):
+        with open(path, "w") as f:
+            f.write("{}")
+    hour_ago = time.time() - 3600
+    os.utime(old, (hour_ago, hour_ago))
+    head = t.latest_version()
+    t.vacuum(retention_seconds=60)
+    assert not os.path.exists(old)
+    assert os.path.exists(fresh)
+    assert t.latest_version() == head
+    assert _ids(t.read(spark)) == list(range(3))

@@ -3,12 +3,16 @@ declarative suite ported to assertions (SURVEY §5a) + pipeline wiring."""
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta
+from datetime import date, datetime, timedelta
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
 
+from nyc_taxi_data_warehouse_spark.operators import quality
 from nyc_taxi_data_warehouse_spark.plans import (
+    docs,
+    features,
     intermediate,
     marts,
     nyc_views,
@@ -179,29 +183,206 @@ def test_pipeline_snapshots_and_forecast_chain(spark, trips, weather):
     assert tr.mae >= 0.0
 
 
-def test_forecast_chain_on_materialized_features_matches_lazy(spark, trips, weather):
-    """`run_forecast_chain` trains, forecasts and hindcasts on a
-    checkpointed copy of the feature table; the stages run on the lazy
-    `run.fare_daily_features` return exactly the same numbers."""
-    from nyc_taxi_data_warehouse_spark.ml import forecast
+def _lazy_dag(trips, weather):
+    """The model DAG rebuilt from `staging`/`intermediate`/`marts`/`features`
+    with every frame lazy: the stand-in for a `ModelRun` that the snapshot
+    and forecast stages read, without `run_models`' materialization."""
+    st = staging.stg_taxi_trips(trips)
+    sw = staging.stg_weather(weather)
+    enr = intermediate.int_trips_enriched(st)
+    wh = intermediate.int_weather_hourly(sw)
+    mdm = marts.mart_daily_metrics(enr, wh)
+    return SimpleNamespace(
+        stg_weather=sw,
+        mart_trips_weather=marts.mart_trips_weather(enr, wh),
+        mart_daily_metrics=mdm,
+        mart_zone_analysis=marts.mart_zone_analysis(enr),
+        fare_daily_features=features.fare_daily_features(
+            mdm, features.daily_weather_forecast(weather)
+        ),
+    )
 
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_forecast_chain_on_materialized_features_matches_lazy(spark, trips, weather):
+    """`run_forecast_chain` trains, forecasts and hindcasts on the run's
+    materialized feature table; the chain over the lazy DAG rebuilt from
+    `marts`/`features` returns exactly the same numbers."""
     run = pipeline.run_models(trips, weather, run_quality=False)
     tr, fc, ev = pipeline.run_forecast_chain(spark, run)
-    lazy = run.fare_daily_features
-    tr_lazy = forecast.train(lazy)
-    fc_lazy = forecast.forecast_7day(spark, lazy, tr_lazy.model)
-    ev_lazy = forecast.hindcast_eval(lazy, tr_lazy.model)
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()), key=repr)
-
+    tr_lazy, fc_lazy, ev_lazy = pipeline.run_forecast_chain(
+        spark, _lazy_dag(trips, weather)
+    )
     assert (tr.mae, tr.n_train, tr.n_test) == (
         tr_lazy.mae,
         tr_lazy.n_train,
         tr_lazy.n_test,
     )
-    assert rows(fc) == rows(fc_lazy) and len(rows(fc)) == 7
-    assert rows(ev) == rows(ev_lazy) and len(rows(ev)) == 8
+    assert _rows(fc) == _rows(fc_lazy) and len(_rows(fc)) == 7
+    assert _rows(ev) == _rows(ev_lazy) and len(_rows(ev)) == 8
+
+
+def test_materialized_run_matches_lazy_dag(spark, trips, weather):
+    """The materialized copies change no result: every mart, the feature
+    table, the freshness report and both snapshots over two successive runs (the first on half the
+    trips and weather, so the second closes and inserts rows) equal the
+    lazy DAG's. The forecast chain's equality is the test above."""
+    as_of = "2024-01-01 00:00:00"
+
+    def runs(t, w):
+        run = pipeline.run_models(t, w, run_quality=False, freshness_as_of=as_of)
+        return run, _lazy_dag(t, w)
+
+    half = (
+        trips.where(F.minute("pickup_datetime") % 2 == 0),
+        weather.where(F.minute("observed_at") % 2 == 0),
+    )
+    first, first_lazy = runs(*half)
+    run, lazy = runs(trips, weather)
+    for name in (
+        "mart_trips_weather",
+        "mart_daily_metrics",
+        "mart_zone_analysis",
+        "fare_daily_features",
+    ):
+        assert _rows(getattr(run, name)) == _rows(getattr(lazy, name)), name
+    # (at sf0.001 no zone pair reaches mart_zone_analysis' 10-trip floor)
+    assert _rows(run.mart_trips_weather) and _rows(run.fare_daily_features)
+    assert run.freshness_results == quality.freshness_report(
+        [
+            ("raw_taxi_trips", trips, "pickup_datetime", 24, 48),
+            ("raw_weather", weather, "observed_at", 2, 4),
+        ],
+        as_of=as_of,
+    ).collect()
+
+    prev = pipeline.run_snapshots(first, None, None, datetime(2026, 1, 1))
+    prev_lazy = pipeline.run_snapshots(first_lazy, None, None, datetime(2026, 1, 1))
+    snaps = pipeline.run_snapshots(run, *prev, datetime(2026, 1, 2))
+    snaps_lazy = pipeline.run_snapshots(lazy, *prev_lazy, datetime(2026, 1, 2))
+    for got, want in zip(prev + snaps, prev_lazy + snaps_lazy):
+        assert _rows(got) == _rows(want)
+    closed = snaps[1].where(F.col("dbt_valid_to").isNotNull())
+    assert closed.count() > 0  # the second run changed daily metrics
+
+
+def test_concurrent_first_reads_share_one_copy(trips, weather):
+    """Eight threads reading a fresh run's `mart_daily_metrics` at once
+    (with a short switch interval) all get the one copy: the first read
+    checkpoints under the run's lock and no thread checkpoints again."""
+    import sys
+    import threading
+
+    run = pipeline.run_models(trips, weather, run_quality=False, run_freshness=False)
+    got = []
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=lambda: got.append(run.mart_daily_metrics))
+            for _ in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 8
+    assert all(df is run.mart_daily_metrics for df in got)
+
+
+def test_fused_quality_runner_matches_per_check_counts(spark):
+    """`run_checks` evaluates the whole reference suite in one collect:
+    one aggregate per table plus the grouped `unique` check. On dirty
+    input (nulls, out-of-range values, a duplicate `trip_date`, and 1500
+    violations of one check) its results equal a per-check
+    `limit(1001).count()`, names, order and the 1001 cap included."""
+    ids = spark.range(1500)
+    stg_trips = ids.select(
+        F.when(F.col("id") % 7 != 0, F.timestamp_seconds(F.col("id") * 60)).alias(
+            "pickup_datetime"
+        ),
+        F.when(F.col("id") % 11 != 0, F.timestamp_seconds(F.col("id") * 60 + 600)).alias(
+            "dropoff_datetime"
+        ),
+        (F.col("id") % 50).alias("pickup_zone_id"),
+        F.when(F.col("id") % 13 != 0, F.col("id") % 40).alias("dropoff_zone_id"),
+        F.lit(-1.0).alias("trip_distance"),
+        F.when(F.col("id") % 5 != 0, (F.col("id") % 3 - 1).cast("double")).alias(
+            "total_amount"
+        ),
+    )
+    ts = datetime(2024, 1, 1, 10)
+    stg_weather = spark.createDataFrame(
+        [(ts, 50.0, 40.0), (None, 60.0, 50.0), (ts, None, 50.0), (ts, 200.0, -5.0)],
+        "observed_at timestamp, temperature_fahrenheit double, humidity_percent double",
+    )
+    mart_trips_weather = spark.createDataFrame([(ts,), (None,)], "hour_ts timestamp")
+    mart_daily = spark.createDataFrame(
+        [(date(2024, 1, 1),), (date(2024, 1, 1),), (date(2024, 1, 2),), (None,)],
+        "trip_date date",
+    )
+    suite = quality.reference_check_suite(
+        stg_trips, stg_weather, mart_trips_weather, mart_daily
+    )
+    want = []
+    for name, check in suite.items():
+        rows = check.violations() if isinstance(check, quality.RowCheck) else check
+        n = rows.limit(1001).count()
+        want.append(quality.CheckResult(name, "pass" if n == 0 else "fail", n))
+    got = quality.run_checks(suite)
+    assert got == want
+    got_by_name = {r.name: r for r in got}
+    assert got_by_name["stg_trips.distance_range"].violations == 1001
+    assert got_by_name["stg_trips.pickup_zone_not_null"].status == "pass"
+    assert got_by_name["mart_daily.trip_date_unique"].violations == 1
+
+
+def test_lazy_model_run_and_its_docs_fire_no_job(trips, weather, jobs_in):
+    """Without its freshness and quality stages a model run fires no job,
+    and documenting it reads the lazy plans' schemas: nothing
+    materializes until a consumer reads a model."""
+    box = []
+    assert (
+        jobs_in(
+            lambda: box.append(
+                pipeline.run_models(
+                    trips, weather, run_quality=False, run_freshness=False
+                )
+            )
+        )
+        == 0
+    )
+    assert jobs_in(lambda: docs.generate_manifest(box[0])) == 0
+
+
+def test_refresh_dag_fires_a_pinned_job_count(
+    spark, trips, weather, tmp_path, jobs_in
+):
+    """The whole refresh DAG at sf0.001, with the enriched-trips cache
+    filled outside the count: `run_models` with freshness and quality,
+    `persist_marts`, `run_snapshots` collected, and the forecast chain
+    with its frames collected fire 52 jobs (84 when every consumer
+    re-derived the marts and the suite ran one job per check)."""
+    intermediate.int_trips_enriched(staging.stg_taxi_trips(trips)).cache().count()
+
+    def refresh():
+        run = pipeline.run_models(
+            trips, weather, freshness_as_of="2024-01-01 00:00:00"
+        )
+        pipeline.persist_marts(run, str(tmp_path / "marts"))
+        for snap in pipeline.run_snapshots(run, None, None, datetime(2026, 1, 1)):
+            snap.collect()
+        _tr, fc, ev = pipeline.run_forecast_chain(spark, run)
+        fc.collect()
+        ev.collect()
+
+    assert jobs_in(refresh) == 52
 
 
 def test_sql_surface_over_registered_views(spark, trips, weather):
@@ -227,8 +408,6 @@ def test_docs_manifest_lineage_and_schemas(spark, trips, weather, tmp_path):
     its live schema; edges form a DAG whose topo order places every model
     after its upstreams; files land on disk."""
     import json
-
-    from nyc_taxi_data_warehouse_spark.plans import docs
 
     run = pipeline.run_models(trips, weather, run_quality=False)
     manifest = docs.generate_manifest(run)
