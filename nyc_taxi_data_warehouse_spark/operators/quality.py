@@ -52,6 +52,13 @@ def not_null(df: DataFrame, col: str) -> RowCheck:
 
 
 def unique(df: DataFrame, *cols: str) -> DataFrame:
+    """The key groups seen more than once. One column is dbt's generic
+    ``unique`` test, which filters ``where <col> is not null`` first, so
+    NULL keys never violate it; several columns are
+    ``dbt_utils.unique_combination_of_columns``, which groups NULLs like
+    any other value."""
+    if len(cols) == 1:
+        df = df.where(F.col(cols[0]).isNotNull())
     return (
         df.groupBy(*[F.col(c) for c in cols])
         .agg(F.count(F.lit(1)).alias("n"))

@@ -235,7 +235,8 @@ def test_commit_is_put_if_absent(spark, tmp_path):
     t = str(tmp_path / "tbl")
     iceberg.write_iceberg(spark.range(3).select(F.col("id")), t)
     # a rival commits v2 while this writer still holds base v1: the
-    # pinned-base commit must collide on O_EXCL, not overwrite history
+    # pinned-base commit must lose the put-if-absent (os.link) on v2, not
+    # overwrite history
     s_rival = iceberg.write_iceberg(
         spark.range(10).select(F.col("id")), t, mode="append"
     )

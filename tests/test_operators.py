@@ -72,6 +72,18 @@ def test_quality_checks_pass_and_fail(spark):
     assert ok[0].status == "pass"
 
 
+def test_unique_skips_null_keys_on_one_column_only(spark):
+    """One column: dbt's ``unique`` filters NULL keys out, so NULL, NULL, 1
+    passes. Several columns: ``unique_combination_of_columns`` groups
+    NULLs, so a repeated (NULL, NULL) pair still fails."""
+    df = spark.createDataFrame([(None, None), (None, None), (1, 2)], "d long, e long")
+    one, two = quality.run_checks(
+        {"one": quality.unique(df, "d"), "two": quality.unique(df, "d", "e")}
+    )
+    assert (one.status, one.violations) == ("pass", 0)
+    assert (two.status, two.violations) == ("fail", 1)
+
+
 def test_freshness_sla(spark):
     now = datetime(2024, 1, 2, 0, 0, 0)
     df = spark.createDataFrame([(datetime(2024, 1, 1, 23, 0),)], "ts timestamp")

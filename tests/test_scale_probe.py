@@ -116,6 +116,17 @@ def test_stream_micro_batch_jobs_are_counted(spark, sf_dir):
     assert rec["build_jobs"] >= rec["stream_jobs"]
 
 
+def test_repeat_run_compiles_nothing(spark, sf_dir):
+    """Each phase reports the classes it compiled; a repeat run of a query
+    finds all of them in the session's codegen cache."""
+    import __spark_entry__ as entry_mod
+
+    fn = entry_mod.queries()["q_tpch_q1"]
+    sp.time_query(spark, fn, sf_dir)
+    rec = sp.time_query(spark, fn, sf_dir)
+    assert (rec["build_compiles"], rec["exec_compiles"]) == (0, 0)
+
+
 @pytest.mark.parametrize(
     "path", sorted(glob.glob(os.path.join(TOOLS, "*.py"))), ids=os.path.basename
 )

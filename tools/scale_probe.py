@@ -12,7 +12,11 @@ so every number is a number for the plan that ships.  Per run it reports
   micro-batches run on the stream's own thread under a job group named
   by the query's ``runId``; a listener collects the run ids each phase
   starts and their jobs count toward that phase (``stream_jobs`` is
-  their share).
+  their share);
+- ``build_compiles`` / ``exec_compiles``: the generated classes each
+  phase compiled (the JVM's codegen compile count before and after).  A
+  repeat run of a query whose classes are still in the codegen cache
+  reports 0.
 
 Before timing a multiple it makes one untimed warm call there, so the
 per-sf_dir ``session_memo`` entries (``load_tables`` handles,
@@ -68,7 +72,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 import __spark_entry__ as entry_mod
-from nyc_taxi_data_warehouse_spark.session import get_spark
+from nyc_taxi_data_warehouse_spark.session import codegen_compiles, get_spark
 
 DIMENSIONS = ("region", "nation", "customer", "supplier", "part")
 FACTS = ("orders", "lineitem", "documents", "embeddings", "events")
@@ -174,12 +178,14 @@ class _StreamRuns(StreamingQueryListener):
 
 def _phase(spark: SparkSession, fn):
     """Run ``fn`` under a fresh job group: (result, seconds, jobs, stages,
-    stream jobs), counting the micro-batch jobs of streams it starts."""
+    stream jobs, compiles), counting the micro-batch jobs of streams it
+    starts."""
     sc = spark.sparkContext
     group = f"scale_probe_{uuid.uuid4().hex}"
     streams = _StreamRuns()
     spark.streams.addListener(streams)
     sc.setJobGroup(group, group)
+    c0 = codegen_compiles(spark)
     try:
         t0 = time.perf_counter()
         out = fn()
@@ -187,19 +193,20 @@ def _phase(spark: SparkSession, fn):
     finally:
         spark.streams.removeListener(streams)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
+    compiles = codegen_compiles(spark) - c0
     tracker = sc.statusTracker()
     stream_jobs = [j for r in streams.run_ids for j in tracker.getJobIdsForGroup(r)]
     jobs = (tracker.getJobIdsForGroup(group) or []) + stream_jobs
     infos = [tracker.getJobInfo(j) for j in jobs]
     stages = sum(len(i.stageIds) for i in infos if i is not None)
-    return out, dt, len(jobs), stages, len(stream_jobs)
+    return out, dt, len(jobs), stages, len(stream_jobs), compiles
 
 
 def time_query(spark: SparkSession, fn, sf_dir: str) -> dict:
     """One build + noop-execute of a registry callable, then cache clear
     and GC on both sides so runs start from the same state."""
-    df, build_s, bj, bs, b_stream = _phase(spark, lambda: fn(spark, sf_dir))
-    _, exec_s, xj, xs, x_stream = _phase(
+    df, build_s, bj, bs, b_stream, bc = _phase(spark, lambda: fn(spark, sf_dir))
+    _, exec_s, xj, xs, x_stream, xc = _phase(
         spark, lambda: df.write.mode("overwrite").format("noop").save()
     )
     spark.catalog.clearCache()
@@ -213,6 +220,8 @@ def time_query(spark: SparkSession, fn, sf_dir: str) -> dict:
         "exec_jobs": xj,
         "stream_jobs": b_stream + x_stream,
         "stages": bs + xs,
+        "build_compiles": bc,
+        "exec_compiles": xc,
     }
 
 
