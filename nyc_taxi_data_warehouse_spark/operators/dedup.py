@@ -508,16 +508,6 @@ def group_shingle_overlap(
     )
 
 
-# rounds taken by the most recent connected_components call — test/telemetry
-# observability for the convergence-rate claims (O(diameter) vs O(log n));
-# driver-side coordination state only, never read by the computation itself.
-# SINGLE-THREADED ASSUMPTION: a module-global written by every call, so
-# concurrent connected_components calls in one driver race on it and the
-# value is meaningless; only read it from single-threaded test/telemetry
-# code (tests/test_operators.py does), never for control flow.
-LAST_CC_ROUNDS = 0
-
-
 def _warn_unconverged(algo: str, max_iter: int, stacklevel: int) -> None:
     """Loud exit when a CC loop runs out of rounds before the fixpoint:
     an unconverged large-star edge set can yield centers that are NOT
@@ -589,8 +579,6 @@ def connected_components(
     """
     from pyspark.sql.types import NumericType
 
-    global LAST_CC_ROUNDS
-
     # canonicalize to half-size (lo, hi) pairs BEFORE materializing: one
     # distinct over the small canonical frame, and the bidirectional form
     # is rebuilt by a cheap union over the SHALLOW materialized scan —
@@ -636,9 +624,7 @@ def connected_components(
     prev_sum = (
         labels.agg(F.sum("label")).collect()[0][0] if numeric_ids else None
     )
-    LAST_CC_ROUNDS = 0
-    for _round in range(max_iter):
-        LAST_CC_ROUNDS = _round + 1
+    for _ in range(max_iter):
         prop = edges.join(labels, edges["src"] == labels["node"]).select(
             edges["dst"].alias("node"), labels["label"].alias("label")
         )
@@ -691,7 +677,6 @@ def _cc_two_phase(
     wrong clusters).  Labels: members take their star center, roots and
     isolated nodes take themselves.
     """
-    global LAST_CC_ROUNDS
     # lazy checkpoints: the count probe right after each round IS the
     # materializing action (same one-job-per-round trick as min_label)
     E = (
@@ -700,9 +685,7 @@ def _cc_two_phase(
         .localCheckpoint(eager=False)
     )
     prev_n = E.count()  # materializes E; reused as last round's count
-    LAST_CC_ROUNDS = 0
-    for _round in range(max_iter):
-        LAST_CC_ROUNDS = _round + 1
+    for _ in range(max_iter):
         und = E.unionByName(
             E.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )

@@ -1359,12 +1359,7 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist, batch = _ingest_generations(spark, sf_dir)
     known = hist.select(F.md5("text").alias("content_hash")).distinct(
     ).withColumn("__k", F.lit(1))
-    src = stream_feed(batch, "doc_ingest_feed", sf_dir)
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src)
-    )
+    stream = stream_feed(batch, "doc_ingest_feed", sf_dir)
     s = stream.select(
         (F.col("doc_id") % 16).alias("shard"),
         F.md5("text").alias("content_hash"),
@@ -2248,15 +2243,7 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_type") == "error").alias("is_delete"),
         "value",
     )
-    src = stream_feed(log, "cdc_log_feed", sf_dir)
-    stream = (
-        spark.readStream.schema(
-            "user_id bigint, ts timestamp, event_id bigint,"
-            " is_delete boolean, value double"
-        )
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src)
-    )
+    stream = stream_feed(log, "cdc_log_feed", sf_dir)
     agg = stream.groupBy("user_id").agg(
         F.max(
             F.struct("ts", "event_id", "is_delete", "value")
@@ -7785,8 +7772,6 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     structurally zero).  The oracle rebuilds bits + probes relationally
     from the batch events view: stream and batch bit tables must agree
     bit-for-bit."""
-    from pyspark.sql import types as ST
-
     from .util import stream_feed
 
     m_bits, k_hashes = 1024, 3
@@ -7798,18 +7783,7 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memoized 16-way feed staging: parallel write + a genuine
     # 2-micro-batch replay under maxFilesPerTrigger=8; later calls in
     # the same process (bench reruns) reuse the staged files
-    src = stream_feed(ev, "event_feed_bloom", sf_dir)
-    schema = ST.StructType(
-        [
-            ST.StructField("ts", ST.TimestampType()),
-            ST.StructField("user_id", ST.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src)
-    )
+    stream = stream_feed(ev, "event_feed_bloom", sf_dir)
 
     def _pos(jc, keyc):
         return F.pmod(
@@ -7939,24 +7913,11 @@ def q_stream_cm(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-15 tokens probe the DRAINED counter sink via `cm_lookup`; the
     oracle is literally `_SQL_COUNTMIN_TOPK` — stream counters must
     equal batch counters exactly for the hashes to match."""
-    from pyspark.sql import types as ST
-
     from .operators import sampling, sketches
     from .util import stream_feed
 
     d = _docs(spark, sf_dir).select("doc_id", "text")
-    src = stream_feed(d, "doc_feed_cm", sf_dir, n_files=8)
-    schema = ST.StructType(
-        [
-            ST.StructField("doc_id", ST.LongType()),
-            ST.StructField("text", ST.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src)
-    )
+    stream = stream_feed(d, "doc_feed_cm", sf_dir, n_files=8)
     tok = stream.select(
         F.explode(T.tokens("text")).alias("token"), F.lit(1).alias("cnt")
     )
@@ -8970,8 +8931,6 @@ def q_stream_mg_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-compared.  Skew is planted: keys 0 and 1 each absorb ~25% of
     events (user_id % 4 < 2 folds to the tiny key), everyone else stays
     unique."""
-    from pyspark.sql import types as ST
-
     from .streaming.topk_stream import mg_topk_stream
     from .util import stream_feed
 
@@ -8982,13 +8941,8 @@ def q_stream_mg_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id") % 4 < 2, F.col("user_id") % 4
     ).otherwise(F.col("user_id"))
     feed = ev.select(skey.alias("key"))
-    src = stream_feed(feed, "mg_feed", sf_dir)
     stream = (
-        spark.readStream.schema(
-            ST.StructType([ST.StructField("key", ST.LongType())])
-        )
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src)
+        stream_feed(feed, "mg_feed", sf_dir)
         .withColumn(
             "shard",
             F.pmod(
@@ -10754,8 +10708,6 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ONE row per hour and the availableNow replay is exactly-once);
     the oracle is literally `_SQL_OHLC_BARS` — stream bars must equal
     batch bars bit-for-bit."""
-    from pyspark.sql import types as ST
-
     from .util import stream_feed
 
     ev = load_tables(spark, sf_dir)["events"].where(
@@ -10763,20 +10715,8 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("ts").isNotNull()
         & F.col("value").isNotNull()
     )
-    src = stream_feed(
+    stream = stream_feed(
         ev.select("event_id", "ts", "value"), "purchase_feed_ohlc", sf_dir
-    )
-    schema = ST.StructType(
-        [
-            ST.StructField("event_id", ST.LongType()),
-            ST.StructField("ts", ST.TimestampNTZType()),
-            ST.StructField("value", ST.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src)
     )
     e = stream.select(
         F.date_trunc("hour", "ts").alias("hour_ts"),
@@ -11366,8 +11306,6 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow replay is exactly-once.  The oracle restates the window
     algebra relationally: each event fans out to its two covering
     1h-grid starts."""
-    from pyspark.sql import types as ST
-
     from .util import stream_feed
 
     ev = load_tables(spark, sf_dir)["events"].where(
@@ -11375,20 +11313,8 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("ts").isNotNull()
         & F.col("value").isNotNull()
     )
-    src = stream_feed(
+    stream = stream_feed(
         ev.select("event_id", "ts", "value"), "purchase_feed_slide", sf_dir
-    )
-    schema = ST.StructType(
-        [
-            ST.StructField("event_id", ST.LongType()),
-            ST.StructField("ts", ST.TimestampNTZType()),
-            ST.StructField("value", ST.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src)
     )
     agg = (
         stream.groupBy(F.window("ts", "2 hours", "1 hour").alias("win"))
@@ -11400,9 +11326,10 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = drain_available_now(agg, "q_stream_sliding_sink")
+    # the feed reads ts as TIMESTAMP; the bounds keep the events' NTZ type
     return sink.select(
-        F.col("win.start").alias("win_start"),
-        F.col("win.end").alias("win_end"),
+        F.col("win.start").cast("timestamp_ntz").alias("win_start"),
+        F.col("win.end").cast("timestamp_ntz").alias("win_end"),
         "n_trades",
         "sum_u",
         _rnd(F.col("sum_u") / 100.0 / F.col("n_trades"), 4).alias(
@@ -11986,27 +11913,12 @@ def q_stream_kmins(spark: SparkSession, sf_dir: str) -> DataFrame:
     on one row — no float aggregation order exists to disagree with the
     oracle (ln is engine-exact, NOTES round-3).  Exact per-day distincts
     verify."""
-    from pyspark.sql import types as ST
-
     from .util import stream_feed
 
     ev = load_tables(spark, sf_dir)["events"].where(
         F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     )
-    src = stream_feed(
-        ev.select("user_id", "ts"), "user_feed_kmins", sf_dir
-    )
-    schema = ST.StructType(
-        [
-            ST.StructField("user_id", ST.LongType()),
-            ST.StructField("ts", ST.TimestampNTZType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src)
-    )
+    stream = stream_feed(ev.select("user_id", "ts"), "user_feed_kmins", sf_dir)
 
     def h(j: int):
         return F.conv(

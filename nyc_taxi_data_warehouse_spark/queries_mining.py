@@ -130,8 +130,6 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic re-runs on every refresh.  The oracle recomputes the
     whole chain from the batch events view, so the streamed counts must
     agree exactly with batch counts."""
-    from pyspark.sql import types as ST
-
     from .util import stream_feed
 
     ev = load_tables(spark, sf_dir)["events"].select(
@@ -140,18 +138,7 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memoized 16-file staging: parallel feed write + a 2-micro-batch
     # replay under maxFilesPerTrigger=8 (the q_stream_bloom lesson);
     # bench reruns reuse the staged files
-    src = stream_feed(ev, "event_feed_cusum", sf_dir)
-    schema = ST.StructType(
-        [
-            ST.StructField("ts", ST.TimestampType()),
-            ST.StructField("event_type", ST.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src)
-    )
+    stream = stream_feed(ev, "event_feed_cusum", sf_dir)
     counts = (
         stream.select(
             F.window("ts", "1 day").alias("win"), "event_type"

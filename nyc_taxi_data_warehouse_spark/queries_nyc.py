@@ -2018,11 +2018,9 @@ def q_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming import weather_stream
     from .util import stream_feed
 
-    # memoized SHARED weather feed: hourly/hll/psi replay identical
-    # content, so all three stage it once per (session, sf_dir)
-    src = stream_feed(_weather(spark, sf_dir), "weather_feed", sf_dir, n_files=2)
-
-    stream = weather_stream.read_weather_stream(spark, src)
+    # memoized SHARED weather feed: hourly/hll/histogram/psi replay
+    # identical content, so all four stage it once per (session, sf_dir)
+    stream = stream_feed(_weather(spark, sf_dir), "weather_feed", sf_dir, n_files=2)
     agg = weather_stream.hourly_weather_stream(stream)
     return weather_stream.drain_available_now(agg, "q_stream_hourly_sink").select(
         "observation_hour",
@@ -2057,14 +2055,12 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     w = _weather(spark, sf_dir)
     # originals + every-5th duplicate staged once per (session, sf_dir)
-    src = stream_feed(
+    stream = stream_feed(
         w.unionByName(w.where(F.col("obs_id") % 5 == 0)),
         "dedup_feed",
         sf_dir,
         n_files=2,
     )
-
-    stream = weather_stream.read_weather_stream(spark, src)
     ded = dedup_stream.dedup_within_watermark(
         stream, ["obs_id"], "observed_at", delay="3650 days"
     )
@@ -2196,7 +2192,8 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     `applyInPandasWithState`) — inactivity-gap sessionization whose
     session boundaries are data-dependent, inexpressible by any built-in
     window.  The event feed is staged to a file stream and drained with
-    availableNow in a single micro-batch (≤4 files, no maxFilesPerTrigger),
+    availableNow in a single micro-batch (4 files, under the feed's
+    8-file trigger cap),
     so every CLOSED session is emitted deterministically; the open tail per
     user stays in state by design and the oracle drops each user's last
     session to mirror that.  Gate value: the Arrow state machine itself —
@@ -2206,11 +2203,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = nyc_views.load_tables(spark, sf_dir)
     ev = t["events"].select("user_id", "ts", "value")
-    src = stream_feed(ev, "sessions_feed", sf_dir, n_files=4)
-
-    stream = spark.readStream.schema(
-        "user_id bigint, ts timestamp, value double"
-    ).parquet(src)
+    stream = stream_feed(ev, "sessions_feed", sf_dir, n_files=4)
     sess = sessionize.sessionize_stream(stream, gap_minutes=30)
     return weather_stream.drain_available_now(
         sess, "q_stream_sessions_sink", "update"
@@ -2283,11 +2276,8 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     errs = t["events"].where(F.col("event_type") == "error").select(
         "event_id", "ts"
     )
-    src = stream_feed(errs, "asof_feed_err", sf_dir, n_files=4)
-    stream = (
-        spark.readStream.schema("event_id bigint, ts timestamp")
-        .parquet(src)
-        .withColumn("hour_ts", F.date_trunc("hour", "ts"))
+    stream = stream_feed(errs, "asof_feed_err", sf_dir, n_files=4).withColumn(
+        "hour_ts", F.date_trunc("hour", "ts")
     )
     joined = stream.join(F.broadcast(spine), "hour_ts", "left").select(
         "event_id",
@@ -2347,12 +2337,8 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     errs = t["events"].where(F.col("event_type") == "error").select(
         "event_id", "ts"
     )
-    src_a = stream_feed(errs, "join_feed_err", sf_dir, n_files=4)
-    src_b = stream_feed(wx, "join_feed_wx", sf_dir, n_files=2)
-
     sa = (
-        spark.readStream.schema("event_id bigint, ts timestamp")
-        .parquet(src_a)
+        stream_feed(errs, "join_feed_err", sf_dir, n_files=4)
         .withWatermark("ts", "2 hours")
         .withColumn("bucket", F.date_trunc("hour", "ts"))
     )
@@ -2363,8 +2349,7 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so bucketing obs forward guarantees the matching pair shares
     # hour(ts) exactly once — no duplicates).
     sb = (
-        spark.readStream.schema("obs_id bigint, observed_at timestamp")
-        .parquet(src_b)
+        stream_feed(wx, "join_feed_wx", sf_dir, n_files=2)
         .withWatermark("observed_at", "2 hours")
         .withColumn(
             "bucket",
@@ -2821,14 +2806,13 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .util import stream_feed
 
     # shares q_stream_hourly's memoized weather feed
-    src = stream_feed(_weather(spark, sf_dir), "weather_feed", sf_dir, n_files=2)
+    stream = stream_feed(_weather(spark, sf_dir), "weather_feed", sf_dir, n_files=2)
 
     val = F.concat_ws(
         "|",
         F.floor(F.col("temp_f") * 10 + F.lit(0.5)).cast("long"),
         F.col("humidity_pct").cast("long"),
     )
-    stream = weather_stream.read_weather_stream(spark, src)
     rows = (
         stream.withWatermark("observed_at", "2 hours")
         .where(
@@ -2903,8 +2887,7 @@ def q_stream_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .util import stream_feed
 
     # shares q_stream_hourly's memoized weather feed
-    src = stream_feed(_weather(spark, sf_dir), "weather_feed", sf_dir, n_files=2)
-    stream = weather_stream.read_weather_stream(spark, src)
+    stream = stream_feed(_weather(spark, sf_dir), "weather_feed", sf_dir, n_files=2)
     regs = (
         stream.withWatermark("observed_at", "2 hours")
         .where(
@@ -3069,8 +3052,7 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .util import stream_feed
 
     # shares q_stream_hourly's memoized weather feed
-    src = stream_feed(_weather(spark, sf_dir), "weather_feed", sf_dir, n_files=2)
-    stream = weather_stream.read_weather_stream(spark, src)
+    stream = stream_feed(_weather(spark, sf_dir), "weather_feed", sf_dir, n_files=2)
     counts = (
         stream.withWatermark("observed_at", "2 hours")
         .where(notnull)

@@ -58,6 +58,32 @@ def codegen_compiles(spark: SparkSession) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
+# Runtime-settable conf: every session the engine runs on gets it,
+# whether get_spark built it or a caller handed it to configure_runtime.
+RUNTIME_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE re-partition CACHED plan output too (default false).
+    # persist() otherwise pins the InMemoryRelation at the static
+    # shuffle-partition count, so every persisted KB-scale frame
+    # (signatures, truth sets, store snapshots) materializes 32
+    # partitions and every downstream stage pays 32 near-empty
+    # tasks — measured 2.1 s → 1.0 s on the ingest-dedup near leg
+    # alone (guide §2.2: fewer, larger partitions; the setting is
+    # scale-adaptive by construction — big caches keep their
+    # parallelism, only runtime-small ones coalesce).
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Spark's reader rejects parquet TIMESTAMP(NANOS); read such columns
+    # as long (ns) and convert in load_tables.  The shipped sf dirs store
+    # events.ts as TIMESTAMP(MICROS), which needs no conversion.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
 def get_spark(
     app_name: str = "nyc-taxi-dw-spark",
     master: str | None = None,
@@ -65,63 +91,27 @@ def get_spark(
 ) -> SparkSession:
     if master is None:
         master = f"local[{default_cpus()}]"
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Let AQE re-partition CACHED plan output too (default false).
-        # persist() otherwise pins the InMemoryRelation at the static
-        # shuffle-partition count, so every persisted KB-scale frame
-        # (signatures, truth sets, store snapshots) materializes 32
-        # partitions and every downstream stage pays 32 near-empty
-        # tasks — measured 2.1 s → 1.0 s on the ingest-dedup near leg
-        # alone (guide §2.2: fewer, larger partitions; the setting is
-        # scale-adaptive by construction — big caches keep their
-        # parallelism, only runtime-small ones coalesce).
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
-        )
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", default_driver_mem())
-    )
-    return builder.getOrCreate()
+    conf = {
+        **RUNTIME_CONF,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        # static conf, fixed when the JVM starts
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": default_driver_mem(),
+    }
+    builder = SparkSession.builder.appName(app_name).master(master)
+    return builder.config(map=conf).getOrCreate()
 
 
 def configure_runtime(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable conf to an externally-created session.
+    """Apply :data:`RUNTIME_CONF` to an externally-created session.
 
     The correctness driver hands us its own SparkSession; timestamp
-    semantics (naive/UTC) and AQE must hold there too. Only
-    runtime-mutable keys belong here. Static conf is fixed when the JVM
-    starts, so such a session keeps Spark's 100-entry codegen cache
-    (``CODEGEN_CACHE_ENTRIES`` applies only to ``get_spark`` sessions).
+    semantics (naive/UTC) and AQE must hold there too. Static conf is
+    fixed when the JVM starts, so such a session keeps Spark's 100-entry
+    codegen cache (``CODEGEN_CACHE_ENTRIES`` applies only to
+    ``get_spark`` sessions).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    try:
-        spark.conf.set(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
-        )
-    except Exception:
-        pass  # static on some builds; only affects cached-plan task counts
-    # Spark's reader rejects parquet TIMESTAMP(NANOS); read such columns as
-    # long (ns) and convert in load_tables.  The shipped sf dirs store
-    # events.ts as TIMESTAMP(MICROS), which needs no conversion.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
-        )
-    except Exception:
-        pass  # not runtime-settable on some builds; AQE coalescing covers it
+    for key, value in RUNTIME_CONF.items():
+        spark.conf.set(key, value)
     return spark

@@ -17,6 +17,13 @@ batch setting (32 by default).  At kilobyte state every micro-batch
 still commits one state file per store per partition, so those files are
 pure fixed cost: at 32 partitions the weather drain ran 2×64 state-store
 tasks to aggregate a few hundred rows.
+
+:func:`read_weather_stream` serves the ELT refresh's lake drain and the
+tests: it reads a weather dir that keeps growing, with the fixed
+:data:`WEATHER_STREAM_SCHEMA`.  The `q_stream_*` queries do not use it:
+they replay a staged batch frame through
+:func:`~nyc_taxi_data_warehouse_spark.util.stream_feed`, which reads the
+frame's own schema.
 """
 
 from __future__ import annotations

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import re
 from datetime import datetime, timedelta
 
 import pandas as pd
@@ -908,17 +909,24 @@ def test_connected_components_two_phase_path_graph_log_rounds(spark):
     999, min-label needs ~999 rounds). Two-phase large-star/small-star
     must label the whole path with node 0 within O(log n) rounds —
     max_iter=12 would leave min-label hopelessly unconverged, so a fully
-    correct result here proves the logarithmic convergence claim."""
+    correct result here proves the logarithmic convergence claim; the
+    unconverged-exit RuntimeWarning, made an error here, shows the
+    fixpoint was reached within the 12 rounds."""
+    import warnings
+
     n = 1000
     edges = spark.range(n - 1).selectExpr("id AS doc_a", "id + 1 AS doc_b")
     nodes = spark.range(n).withColumnRenamed("id", "doc_id")
-    out = dedup.connected_components(
-        edges, nodes, max_iter=12, mode="large_star"
-    )
+    with warnings.catch_warnings():
+        warnings.filterwarnings(
+            "error", ".*WITHOUT converging", RuntimeWarning
+        )
+        out = dedup.connected_components(
+            edges, nodes, max_iter=12, mode="large_star"
+        )
     got = out.groupBy("cluster_id").count().collect()
     assert len(got) == 1
     assert got[0].cluster_id == 0 and got[0]["count"] == n
-    assert dedup.LAST_CC_ROUNDS <= 12
 
 
 def test_connected_components_string_ids(spark):
@@ -2934,33 +2942,101 @@ def test_heatmap_grid_bounds_and_share_sums(spark, sf_dir):
         assert 1 <= r.rank_in_dow <= 24
 
 
-def test_stream_feed_memoizes_per_key(spark, tmp_path):
-    """stream_feed writes once per (name, key) and returns the same dir
-    on later calls; a different key re-stages to a different dir."""
+def _feed_dir(stream) -> str:
+    """The dir a file-source stream replays (its ``FileSource[...]`` leaf)."""
+    plan = stream._jdf.queryExecution().analyzed().toString()
+    return re.search(r"FileSource\[(.+?)\]", plan).group(1)
+
+
+def test_stream_feed_memoizes_per_key(spark, monkeypatch):
+    """stream_feed writes once per (name, key) and replays the same dir
+    on later calls; a different key stages to a different dir."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     from nyc_taxi_data_warehouse_spark import util
-
-    df = spark.range(100).selectExpr("id", "id * 2 AS v")
-    d1 = util.stream_feed(df, "ut_feed", "k1", n_files=2)
-    import os
-    import time
-
-    files1 = sorted(os.listdir(d1))
-    mtime1 = max(
-        os.path.getmtime(os.path.join(d1, f)) for f in files1
+    from nyc_taxi_data_warehouse_spark.streaming.weather_stream import (
+        drain_available_now,
     )
-    time.sleep(0.05)
-    d2 = util.stream_feed(
+
+    writes = []
+    parquet = DataFrameWriter.parquet
+
+    def counted(self, path, *args, **kwargs):
+        writes.append(path)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counted)
+    df = spark.range(100).selectExpr("id", "id * 2 AS v")
+    s1 = util.stream_feed(df, "ut_feed", "k1", n_files=2)
+    s2 = util.stream_feed(
         spark.range(5).selectExpr("id", "id AS v"), "ut_feed", "k1"
     )
-    assert d2 == d1
-    # no re-write happened: newest mtime unchanged
-    mtime2 = max(
-        os.path.getmtime(os.path.join(d1, f)) for f in sorted(os.listdir(d1))
+    s3 = util.stream_feed(
+        spark.range(7).selectExpr("id", "id AS v"), "ut_feed", "k2", n_files=2
     )
-    assert mtime2 == mtime1
-    assert spark.read.parquet(d1).count() == 100
-    d3 = util.stream_feed(df, "ut_feed", "k2", n_files=2)
-    assert d3 != d1
+    d1, d3 = _feed_dir(s1), _feed_dir(s3)
+    assert _feed_dir(s2) == d1 and d3 != d1
+    assert writes == [d1, d3]
+    # the second k1 call replays the first call's 100 rows, not its own 5
+    rows = [
+        drain_available_now(s, "ut_feed", "append").count() for s in (s1, s2, s3)
+    ]
+    assert rows == [100, 100, 7]
+
+
+def test_stream_feed_reads_staged_schema_with_ntz_as_timestamp(spark):
+    """The stream is the staged frame's schema, names and order kept,
+    with only TIMESTAMP_NTZ read as TIMESTAMP; under the UTC session
+    the wall-clock values survive."""
+    from pyspark.sql import types as ST
+
+    from nyc_taxi_data_warehouse_spark import util
+    from nyc_taxi_data_warehouse_spark.streaming.weather_stream import (
+        drain_available_now,
+    )
+
+    df = spark.range(3).selectExpr(
+        "id",
+        "TIMESTAMP_NTZ'2024-03-10 05:30:00' + make_dt_interval(0, id) AS ts",
+        "CAST(id AS STRING) AS s",
+        "TIMESTAMP'2024-03-10 05:30:00' AS tz",
+        "CAST(id AS DOUBLE) / 2 AS d",
+    )
+    stream = util.stream_feed(df, "ut_schema", "k", n_files=2)
+    assert stream.isStreaming
+    want = [
+        (f.name, ST.TimestampType())
+        if isinstance(f.dataType, ST.TimestampNTZType)
+        else (f.name, f.dataType)
+        for f in df.schema.fields
+    ]
+    assert [(f.name, f.dataType) for f in stream.schema.fields] == want
+    assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+    got = drain_available_now(stream, "ut_schema", "append").select(
+        "id", F.col("ts").cast("string").alias("ts")
+    )
+    assert sorted(map(tuple, got.collect())) == [
+        (0, "2024-03-10 05:30:00"),
+        (1, "2024-03-10 06:30:00"),
+        (2, "2024-03-10 07:30:00"),
+    ]
+
+
+def test_stream_feed_drains_sixteen_files_in_two_batches(spark):
+    """maxFilesPerTrigger 8: a 16-file feed drains in two non-empty
+    micro-batches, a 4-file feed in one."""
+    from nyc_taxi_data_warehouse_spark import util
+    from nyc_taxi_data_warehouse_spark.streaming import weather_stream
+
+    df = spark.range(160).selectExpr("id", "id % 7 AS v")
+    for n_files, batches in ((16, 2), (4, 1)):
+        stream = util.stream_feed(df, "ut_batches", str(n_files), n_files=n_files)
+        q = weather_stream.run_available_now(
+            stream, util.unique_name("ut_batches"), "append"
+        )
+        assert q.awaitTermination(120)
+        n = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+        assert n == batches, (n_files, n)
 
 
 def test_session_memo_builds_once_under_concurrent_callers(spark, monkeypatch):
