@@ -87,13 +87,11 @@ RUNTIME_CONF = {
 def get_spark(
     app_name: str = "nyc-taxi-dw-spark",
     master: str | None = None,
-    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
 ) -> SparkSession:
     if master is None:
         master = f"local[{default_cpus()}]"
     conf = {
         **RUNTIME_CONF,
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
         # static conf, fixed when the JVM starts
         "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
         "spark.ui.enabled": "false",
@@ -107,7 +105,9 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     """Apply :data:`RUNTIME_CONF` to an externally-created session.
 
     The correctness driver hands us its own SparkSession; timestamp
-    semantics (naive/UTC) and AQE must hold there too. Static conf is
+    semantics (naive/UTC) and AQE must hold there too.
+    ``nyc_views.load_tables`` applies it on its first call per (session,
+    sf_dir), so conf a caller sets afterwards stays. Static conf is
     fixed when the JVM starts, so such a session keeps Spark's 100-entry
     codegen cache (``CODEGEN_CACHE_ENTRIES`` applies only to
     ``get_spark`` sessions).

@@ -35,7 +35,14 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .manifest import commit_next, list_versions
+from .manifest import commit_next, list_versions, write_batch
+from .pruning import (
+    apply_where,
+    check_where,
+    footer_bounds,
+    range_may_match,
+    resolve_local,
+)
 
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 _CHECKPOINT_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
@@ -95,14 +102,10 @@ def _replay_checkpoint(spark: SparkSession, cp_file: str, live: dict, meta: list
 def _add_matches(add: dict, where) -> bool:
     """File-skip decision from the add action's ``stats`` JSON (protocol:
     numRecords/minValues/maxValues per column). No stats ⇒ must read."""
-    import json as _json
-
-    from .pruning import range_may_match
-
     stats = add.get("stats")
     if not stats:
         return True
-    s = _json.loads(stats) if isinstance(stats, str) else stats
+    s = json.loads(stats) if isinstance(stats, str) else stats
     mins = s.get("minValues") or {}
     maxs = s.get("maxValues") or {}
     for col, op, val in where:
@@ -157,8 +160,6 @@ def delta_snapshot(
                 line = line.strip()
                 if line:
                     _apply(live, json.loads(line), meta)
-    from .pruning import check_where
-
     check_where(where)
     files = sorted(
         _data_path(path, p)
@@ -176,8 +177,6 @@ def _data_path(table_path: str, p: str) -> str:
     (add and remove encode identically, so keying is self-consistent);
     decoding happens only here at filesystem resolution."""
     from urllib.parse import unquote
-
-    from .pruning import resolve_local
 
     try:
         return resolve_local(unquote(p), table_path)
@@ -223,53 +222,24 @@ def read_delta(
         # addressed by absolute URIs OUTSIDE the root (legal per the
         # protocol) would make basePath reject the read
         reader = reader.option("basePath", path)
-    df = reader.parquet(*files)
-    from pyspark.sql import functions as F
-
-    for col, op, val in where or []:
-        c = F.col(col)
-        df = df.where(
-            {"=": c == val, "==": c == val, "<": c < val,
-             "<=": c <= val, ">": c > val, ">=": c >= val}[op]
-        )
-    return df
+    return apply_where(reader.parquet(*files), where)
 
 
 def _parquet_stats_json(fp: str) -> str:
     """The add action's ``stats`` JSON (numRecords / minValues /
-    maxValues) from the parquet footer — the data the reader's file
-    skipping runs on. Only JSON-native value types are recorded
-    (int/float/str/bool); columns without footer stats are omitted,
-    which readers must treat as unbounded."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(fp).metadata
-    mins: dict = {}
-    maxs: dict = {}
-    covered: dict = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                continue
-            if not isinstance(st.min, (int, float, str, bool)):
-                continue
-            name = col.path_in_schema
-            covered[name] = covered.get(name, 0) + 1
-            mins[name] = st.min if name not in mins else min(mins[name], st.min)
-            maxs[name] = st.max if name not in maxs else max(maxs[name], st.max)
-    # a column's bound is only valid if EVERY row group reported stats:
-    # a chunk without stats (size-capped strings, NaN doubles) may hold
-    # values outside the others' range, and emitting a partial bound
-    # would let readers prune files that contain matching rows
-    full = {n for n, c in covered.items() if c == md.num_row_groups}
+    maxValues) from :func:`.pruning.footer_bounds` — the data the
+    reader's file skipping runs on. Only JSON-native value types are
+    recorded (int/float/str/bool); other columns are omitted, which
+    readers must treat as unbounded."""
+    n, bounds = footer_bounds(fp)
+    native = {
+        c: b for c, b in bounds.items() if isinstance(b[0], (int, float, str, bool))
+    }
     return json.dumps(
         {
-            "numRecords": md.num_rows,
-            "minValues": {n: v for n, v in mins.items() if n in full},
-            "maxValues": {n: v for n, v in maxs.items() if n in full},
+            "numRecords": n,
+            "minValues": {c: lo for c, (lo, _) in native.items()},
+            "maxValues": {c: hi for c, (_, hi) in native.items()},
         }
     )
 
@@ -293,22 +263,20 @@ def write_delta(df: DataFrame, path: str, mode: str = "append") -> int:
     log_dir = _log_dir(path)
     os.makedirs(log_dir, exist_ok=True)
 
-    batch = f"batch-{uuid.uuid4().hex}"
-    df.write.parquet(os.path.join(path, batch))
+    files = write_batch(df, path)
     now_ms = int(time.time() * 1000)
     adds = [
         {
             "add": {
-                "path": f"{batch}/{f}",
+                "path": os.path.relpath(fp, path),
                 "partitionValues": {},
-                "size": os.path.getsize(os.path.join(path, batch, f)),
+                "size": os.path.getsize(fp),
                 "modificationTime": now_ms,
                 "dataChange": True,
-                "stats": _parquet_stats_json(os.path.join(path, batch, f)),
+                "stats": _parquet_stats_json(fp),
             }
         }
-        for f in sorted(os.listdir(os.path.join(path, batch)))
-        if f.endswith(".parquet")
+        for fp in files
     ]
 
     def commit_payload(head: int) -> str:

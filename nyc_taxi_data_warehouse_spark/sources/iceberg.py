@@ -46,7 +46,14 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from . import avro_io
-from .manifest import list_versions, put_if_absent
+from .manifest import list_versions, put_if_absent, write_batch
+from .pruning import (
+    apply_where,
+    check_where,
+    footer_bounds,
+    range_may_match,
+    resolve_local,
+)
 
 _VMETA_RE = re.compile(r"^v(\d+)\.metadata\.json$")
 
@@ -100,8 +107,6 @@ def _load_metadata(path: str, version: int | None = None) -> dict:
 
 
 def _local_path(uri: str, table_path: str) -> str:
-    from .pruning import resolve_local
-
     try:
         return resolve_local(uri, table_path)
     except ValueError as exc:
@@ -141,10 +146,6 @@ def _bounds_map(raw) -> dict[int, bytes]:
     return {e["key"]: e["value"] for e in raw}
 
 
-from .pruning import check_where as _check_where
-from .pruning import range_may_match as _range_may_match
-
-
 def _file_matches(df_rec: dict, where, by_name: dict[str, dict]) -> bool:
     """Can this data file contain rows matching every (col, op, value)
     predicate? Missing bounds ⇒ must read (prune only on proof)."""
@@ -157,33 +158,26 @@ def _file_matches(df_rec: dict, where, by_name: dict[str, dict]) -> bool:
         fid, t = f["id"], f["type"]
         lo = _deserialize_bound(t, lo_m[fid]) if fid in lo_m else None
         hi = _deserialize_bound(t, hi_m[fid]) if fid in hi_m else None
-        if not _range_may_match(lo, hi, op, val):
+        if not range_may_match(lo, hi, op, val):
             return False
     return True
 
 
-def _live_data_files(
-    meta: dict, snap: dict, table_path: str, where=None
-) -> list[str]:
-    _check_where(where)
-    # schema lookup hoisted out of the per-entry loop (thousands of data
-    # files share one schema; the metadata path must stay cheap)
-    by_name = (
-        {f["name"]: f for f in _schema_fields(meta)} if where else {}
-    )
+def _live_entries(snap: dict, table_path: str):
+    """Yield the ``data_file`` record of every live entry (status !=
+    DELETED) in ``snap``'s manifests: the one manifest walk that reads
+    and counts share. Raises on what it cannot read correctly: delete
+    manifests, position/equality delete files, non-Parquet data files."""
     if "manifest-list" in snap:
         _, mlist = avro_io.read_ocf(_local_path(snap["manifest-list"], table_path))
-        manifests = []
-        for m in mlist:
-            if m.get("content", 0) == 1:
-                raise IcebergProtocolError(
-                    "table has delete manifests (row-level deletes): "
-                    "not supported by this reader"
-                )
-            manifests.append(m["manifest_path"])
+        if any(m.get("content", 0) == 1 for m in mlist):
+            raise IcebergProtocolError(
+                "table has delete manifests (row-level deletes): "
+                "not supported by this reader"
+            )
+        manifests = [m["manifest_path"] for m in mlist]
     else:  # v1 inline manifest array
         manifests = list(snap.get("manifests", []))
-    files: list[str] = []
     for mpath in manifests:
         _, entries = avro_io.read_ocf(_local_path(mpath, table_path))
         for e in entries:
@@ -197,10 +191,23 @@ def _live_data_files(
             fmt = str(df_rec["file_format"]).upper()
             if fmt != "PARQUET":
                 raise IcebergProtocolError(f"unsupported file format {fmt}")
-            if where and not _file_matches(df_rec, where, by_name):
-                continue
-            files.append(_local_path(df_rec["file_path"], table_path))
-    return files
+            yield df_rec
+
+
+def _live_data_files(
+    meta: dict, snap: dict, table_path: str, where=None
+) -> list[str]:
+    check_where(where)
+    # schema lookup hoisted out of the per-entry loop (thousands of data
+    # files share one schema; the metadata path must stay cheap)
+    by_name = (
+        {f["name"]: f for f in _schema_fields(meta)} if where else {}
+    )
+    return [
+        _local_path(df_rec["file_path"], table_path)
+        for df_rec in _live_entries(snap, table_path)
+        if not where or _file_matches(df_rec, where, by_name)
+    ]
 
 
 _ICE_TO_SPARK = {
@@ -246,7 +253,7 @@ def read_iceberg(
     survivors). Pruning is proof-based: files lacking bounds are read.
     The predicate is ALSO applied to the returned frame, so results are
     correct even though pruning is coarse."""
-    _check_where(where)
+    check_where(where)
     meta = _load_metadata(path)
     snap = _pick_snapshot(meta, snapshot_id)
     if snap is None:
@@ -254,16 +261,7 @@ def read_iceberg(
     files = _live_data_files(meta, snap, path, where)
     if not files:
         return _empty_frame(spark, meta)
-    df = spark.read.parquet(*files)
-    from pyspark.sql import functions as F
-
-    for col, op, val in where or []:
-        c = F.col(col)
-        df = df.where(
-            {"=": c == val, "==": c == val, "<": c < val,
-             "<=": c <= val, ">": c > val, ">=": c >= val}[op]
-        )
-    return df
+    return apply_where(spark.read.parquet(*files), where)
 
 
 def snapshots(path: str) -> list[dict]:
@@ -283,23 +281,13 @@ def count_rows(path: str, snapshot_id: int | None = None) -> int:
     """Row count from manifest metadata alone — no data file is opened.
     The aggregate-pushdown trick Iceberg enables at 100 TB: manifests
     carry per-file ``record_count``, so COUNT(*) is a KB-scale metadata
-    read instead of a table scan."""
+    read instead of a table scan. Raises wherever :func:`read_iceberg`
+    raises (delete manifests or files, non-Parquet data)."""
     meta = _load_metadata(path)
     snap = _pick_snapshot(meta, snapshot_id)
     if snap is None:
         return 0
-    total = 0
-    if "manifest-list" in snap:
-        _, mlist = avro_io.read_ocf(_local_path(snap["manifest-list"], path))
-        manifests = [m["manifest_path"] for m in mlist if m.get("content", 0) == 0]
-    else:
-        manifests = list(snap.get("manifests", []))
-    for mpath in manifests:
-        _, entries = avro_io.read_ocf(_local_path(mpath, path))
-        for e in entries:
-            if e["status"] != 2 and e["data_file"].get("content", 0) == 0:
-                total += e["data_file"]["record_count"]
-    return total
+    return sum(df_rec["record_count"] for df_rec in _live_entries(snap, path))
 
 
 def expire_snapshots(path: str, keep_last: int = 1) -> list[str]:
@@ -569,59 +557,27 @@ def write_iceberg(
     else:
         prev_snap = None
 
-    # 1. immutable data batch
-    batch = os.path.join(path, "data", f"batch-{uuid.uuid4().hex}")
-    df.write.parquet(batch)
-    import pyarrow.parquet as pq
-
+    # 1. immutable data batch, with each file's footer bounds encoded
+    # field-id keyed per spec Appendix D (unsupported types are omitted,
+    # which reads as unbounded)
     ice_types = {
         f.name: (_SPARK_TO_ICE.get(f.dataType.typeName()) or "")
         for f in df.schema.fields
     }
     field_ids = {f.name: i for i, f in enumerate(df.schema.fields, start=1)}
-
-    def _footer_bounds(md):
-        """(lower, upper) bound maps from parquet row-group stats —
-        field-id keyed, spec Appendix D serialization. A column is
-        bounded only if EVERY row group reported stats (a statless chunk
-        — size-capped strings, NaN doubles — may hold values outside
-        the others' range, and a partial bound would let the reader
-        prune files containing matching rows); omitted bounds read as
-        unbounded, which is always safe."""
-        lo: dict[str, object] = {}
-        hi: dict[str, object] = {}
-        covered: dict[str, int] = {}
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                col = g.column(ci)
-                st = col.statistics
-                name = col.path_in_schema
-                if st is None or not st.has_min_max or name not in field_ids:
-                    continue
-                covered[name] = covered.get(name, 0) + 1
-                lo[name] = st.min if name not in lo else min(lo[name], st.min)
-                hi[name] = st.max if name not in hi else max(hi[name], st.max)
-        lo_out, hi_out = [], []
-        for name in lo:
-            if covered.get(name, 0) != md.num_row_groups:
-                continue
-            blo = _serialize_bound(ice_types[name], lo[name])
-            bhi = _serialize_bound(ice_types[name], hi[name])
-            if blo is not None and bhi is not None:
-                lo_out.append({"key": field_ids[name], "value": blo})
-                hi_out.append({"key": field_ids[name], "value": bhi})
-        return lo_out or None, hi_out or None
-
     data_files = []
-    for name in sorted(os.listdir(batch)):
-        if name.endswith(".parquet") and not name.startswith("."):
-            fp = os.path.join(batch, name)
-            md = pq.ParquetFile(fp).metadata
-            lo, hi = _footer_bounds(md)
-            data_files.append(
-                (fp, md.num_rows, os.path.getsize(fp), lo, hi)
-            )
+    for fp in write_batch(df, os.path.join(path, "data")):
+        nrows, bounds = footer_bounds(fp)
+        lo, hi = [], []
+        for name, (bmin, bmax) in bounds.items():
+            if name not in field_ids:
+                continue
+            blo = _serialize_bound(ice_types[name], bmin)
+            bhi = _serialize_bound(ice_types[name], bmax)
+            if blo is not None and bhi is not None:
+                lo.append({"key": field_ids[name], "value": blo})
+                hi.append({"key": field_ids[name], "value": bhi})
+        data_files.append((fp, nrows, os.path.getsize(fp), lo or None, hi or None))
 
     snapshot_id = uuid.uuid4().int >> 65  # positive 63-bit
     seq = (prev.get("last-sequence-number", 0) + 1) if prev else 1

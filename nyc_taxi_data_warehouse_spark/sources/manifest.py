@@ -10,7 +10,8 @@ put-if-absent (S3 ``If-None-Match:*`` conditional PUT, GCS
 enough for a Delta/Iceberg-style commit protocol:
 
 - data files are immutable and uniquely named (one ``data/batch-<uuid>/``
-  directory per write) — writers never modify or rename anything;
+  directory per write, laid down by :func:`write_batch`, which the Delta
+  and Iceberg writers share) — writers never modify or rename anything;
 - a table VERSION is the atomic creation of ``_commits/v{N}.json``
   holding the complete file list.  Exactly one writer wins each N
   (put-if-absent); losers re-read the head and retry at N+1 — classic
@@ -121,6 +122,18 @@ def commit_next(
     )
 
 
+def write_batch(df: DataFrame, directory: str) -> list[str]:
+    """Write ``df`` as one immutable, uniquely named ``batch-<uuid>``
+    directory under ``directory`` and return its Parquet files, sorted:
+    never a rename, never an overwrite of an existing key. Every lake
+    writer (this table, Delta, Iceberg) lays its data down here."""
+    batch = os.path.join(directory, f"batch-{uuid.uuid4().hex}")
+    df.write.parquet(batch)
+    return sorted(
+        os.path.join(batch, f) for f in os.listdir(batch) if f.endswith(".parquet")
+    )
+
+
 class ManifestTable:
     def __init__(self, path: str, max_retries: int = _MAX_COMMIT_RACES):
         self.path = path.rstrip("/")
@@ -180,17 +193,6 @@ class ManifestTable:
 
     # -- write --------------------------------------------------------------
 
-    def _write_batch(self, df: DataFrame) -> list[str]:
-        """One immutable uniquely-named batch directory per write — never a
-        rename, never an overwrite of an existing key."""
-        batch = os.path.join(self.data_dir, f"batch-{uuid.uuid4().hex}")
-        df.write.parquet(batch)
-        return sorted(
-            os.path.join(batch, f)
-            for f in os.listdir(batch)
-            if f.endswith(".parquet")
-        )
-
     def _commit(self, build_files, op: str) -> int:
         """Commit the file list :func:`commit_next` builds against the
         current head. ``build_files`` maps the loser's refreshed base file
@@ -224,13 +226,13 @@ class ManifestTable:
 
     def overwrite(self, df: DataFrame) -> int:
         """Full-table replace. Returns the committed version."""
-        new = self._write_batch(df)
+        new = write_batch(df, self.data_dir)
         return self._commit(lambda base: new, "overwrite")
 
     def append(self, df: DataFrame) -> int:
         """Append a batch. Concurrent appends both land (the loser's retry
         recomputes against the winner's manifest). Returns the version."""
-        new = self._write_batch(df)
+        new = write_batch(df, self.data_dir)
         return self._commit(lambda base: base + new, "append")
 
     # -- maintenance --------------------------------------------------------

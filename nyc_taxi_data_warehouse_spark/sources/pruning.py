@@ -1,15 +1,31 @@
-"""File-level min/max predicate pruning — the rule shared by the
-Iceberg manifest-bounds reader and the Delta add.stats reader.
+"""File-level min/max pruning for the lake formats: the rules the
+Iceberg manifest-bounds reader and the Delta add.stats reader share,
+on both the write side and the read side.
 
-One function, one contract: given a file's [lo, hi] range for a column
-(either end may be unknown) and a predicate ``col op value``, decide
-whether the file COULD contain a matching row. Pruning is proof-based:
-an unknown bound never prunes, so a file is skipped only when its known
-range provably excludes the predicate."""
+- :func:`footer_bounds` owns the write side: each writer records the
+  per-file bounds it reads from the Parquet footer, keeping only its own
+  encoding (Delta's JSON ``stats``, Iceberg's Appendix D bytes).
+- :func:`range_may_match` owns the prune decision: given a file's
+  [lo, hi] range for a column (either end may be unknown) and a
+  predicate ``col op value``, could the file contain a matching row?
+  Pruning is proof-based: an unknown bound never prunes, so a file is
+  skipped only when its known range provably excludes the predicate.
+- :func:`apply_where` owns the residual filter: a reader re-applies its
+  ``where`` list to the surviving files, since pruning is per file."""
 
 from __future__ import annotations
 
-WHERE_OPS = ("=", "==", "<", "<=", ">", ">=")
+import operator
+
+_OPS = {
+    "=": operator.eq,
+    "==": operator.eq,
+    "<": operator.lt,
+    "<=": operator.le,
+    ">": operator.gt,
+    ">=": operator.ge,
+}
+WHERE_OPS = tuple(_OPS)
 
 
 def check_where(where) -> None:
@@ -39,6 +55,47 @@ def range_may_match(lo, hi, op: str, val) -> bool:
             return False
         return True
     return True  # unknown op: never prune (callers validate upstream)
+
+
+def apply_where(df, where):
+    """``df`` filtered by every (col, op, value) predicate of ``where``."""
+    from pyspark.sql import functions as F
+
+    for col, op, val in where or []:
+        df = df.where(_OPS[op](F.col(col), val))
+    return df
+
+
+def footer_bounds(fp: str) -> tuple[int, dict[str, tuple]]:
+    """``(num_rows, {column: (min, max)})`` from a Parquet file's footer.
+
+    A column counts as bounded only if EVERY row group reported min/max:
+    a chunk without stats (size-capped strings, NaN doubles) may hold
+    values outside the others' range, and a partial bound would let
+    readers prune files that contain matching rows. Omitted columns read
+    as unbounded, which is always safe."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(fp).metadata
+    bounds: dict[str, tuple] = {}
+    covered: dict[str, int] = {}
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        for ci in range(g.num_columns):
+            col = g.column(ci)
+            st = col.statistics
+            if st is None or not st.has_min_max:
+                continue
+            name = col.path_in_schema
+            covered[name] = covered.get(name, 0) + 1
+            if name in bounds:
+                lo, hi = bounds[name]
+                bounds[name] = (min(lo, st.min), max(hi, st.max))
+            else:
+                bounds[name] = (st.min, st.max)
+    return md.num_rows, {
+        n: b for n, b in bounds.items() if covered[n] == md.num_row_groups
+    }
 
 
 def resolve_local(uri: str, base: str):

@@ -44,19 +44,15 @@ def overwrite_date_partitions(
     future work — `README.md:375`): dynamic partition overwrite replaces
     ONLY the date partitions present in `df`, leaving every other partition
     untouched. This is how a daily transform reprocesses late-arriving days
-    at 100 TB without rewriting the table."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.withColumn(date_col, F.to_date(ts_col))
-            .write.mode("overwrite")
-            .partitionBy(date_col)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    at 100 TB without rewriting the table. The mode is a per-write
+    option, so the session conf (and any concurrent writer) is untouched."""
+    (
+        df.withColumn(date_col, F.to_date(ts_col))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(date_col)
+        .parquet(path)
+    )
 
 
 def write_single_csv(df: DataFrame, path: str) -> None:

@@ -15,7 +15,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", master="local[4]", shuffle_partitions=4)
+    s = get_spark("pytest", master="local[4]")
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

@@ -213,6 +213,20 @@ def test_stats_absent_never_prunes(spark, tmp_path):
     assert files_where == files_all
 
 
+def test_footer_bounds_span_row_groups_and_skip_statless_columns(tmp_path):
+    """Bounds cover every row group; a column written without statistics
+    is absent (unbounded), never bounded by a partial view."""
+    from nyc_taxi_data_warehouse_spark.sources.pruning import footer_bounds
+
+    fp = str(tmp_path / "two_groups.parquet")
+    tbl = pa.table(
+        {"a": [5, 1, 3, 9, 7, 8], "s": list("mkzbqc"), "n": [4, 0, 2, 6, 1, 3]}
+    )
+    pq.write_table(tbl, fp, row_group_size=3, write_statistics=["a", "s"])
+    assert pq.ParquetFile(fp).metadata.num_row_groups == 2
+    assert footer_bounds(fp) == (6, {"a": (1, 9), "s": ("b", "z")})
+
+
 def test_hadoop_single_slash_file_uri_resolves(spark, tmp_path):
     """Hadoop Path.toString renders local absolute URIs as 'file:/abs'
     (single slash); resolution must not join them under the table root."""

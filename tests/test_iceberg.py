@@ -92,6 +92,8 @@ def test_delete_manifests_raise(spark, tmp_path):
     avro_io.write_ocf(mlist, schema, entries)
     with pytest.raises(iceberg.IcebergProtocolError, match="delete manifests"):
         iceberg.read_iceberg(spark, t)
+    with pytest.raises(iceberg.IcebergProtocolError, match="delete manifests"):
+        iceberg.count_rows(t)
 
 
 def test_foreign_format_raises(spark, tmp_path):
@@ -108,6 +110,8 @@ def test_foreign_format_raises(spark, tmp_path):
     avro_io.write_ocf(mpath, schema, entries)
     with pytest.raises(iceberg.IcebergProtocolError, match="file format"):
         iceberg.read_iceberg(spark, t)
+    with pytest.raises(iceberg.IcebergProtocolError, match="file format"):
+        iceberg.count_rows(t)
 
 
 def test_v1_inline_manifests_supported(spark, tmp_path):

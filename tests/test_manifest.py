@@ -42,8 +42,8 @@ def test_concurrent_appends_both_land(spark, tmp_path):
 
     # interleave the race deterministically: both writers stage their data
     # files first, then commit in sequence against the same observed head
-    files_a = t._write_batch(spark.range(10, 15))
-    files_b = t._write_batch(spark.range(15, 20))
+    files_a = M.write_batch(spark.range(10, 15), t.data_dir)
+    files_b = M.write_batch(spark.range(15, 20), t.data_dir)
     base = t.files()
     # writer A commits v1 first
     assert t._commit(lambda b: b + files_a, "append") == 1
@@ -88,7 +88,7 @@ def test_commit_conflict_exhaustion_raises(spark, tmp_path):
     with CommitConflictError instead of spinning forever."""
     t = M.ManifestTable(str(tmp_path / "t"), max_retries=2)
     t.overwrite(spark.range(3))
-    files = t._write_batch(spark.range(3, 6))
+    files = M.write_batch(spark.range(3, 6), t.data_dir)
 
     def always_lose(base):
         # simulate a rival winning every observed head: pre-take the slot
@@ -113,14 +113,14 @@ def test_read_of_vacuumed_version_raises(spark, tmp_path):
 
 
 def test_vacuum_retention_protects_inflight_batches(spark, tmp_path):
-    """A freshly-staged batch (a live writer between _write_batch and
+    """A freshly-staged batch (a live writer between write_batch and
     _commit) survives vacuum under the default retention window, so the
     writer's upcoming commit can't publish dangling files; keep_versions=0
     is rejected (Python's vs[-0:] slice would silently keep everything
     while deleting every manifest)."""
     t = M.ManifestTable(str(tmp_path / "t"))
     t.overwrite(spark.range(5))
-    staged = t._write_batch(spark.range(50, 60))  # in-flight writer
+    staged = M.write_batch(spark.range(50, 60), t.data_dir)  # in-flight writer
     assert t.vacuum(keep_versions=1) == []  # default retention: kept
     assert t._commit(lambda base: base + staged, "append") == 1
     assert _ids(t.read(spark)) == list(range(5)) + list(range(50, 60))
@@ -134,7 +134,7 @@ def test_crashed_writer_orphans_invisible_and_vacuumed(spark, tmp_path):
     every file the retained manifests still reference."""
     t = M.ManifestTable(str(tmp_path / "t"))
     t.overwrite(spark.range(5))
-    t._write_batch(spark.range(100, 200))  # crash: staged, never committed
+    M.write_batch(spark.range(100, 200), t.data_dir)  # crash: staged, never committed
     assert _ids(t.read(spark)) == list(range(5))  # reader snapshot clean
 
     live_before = set(t.files())
@@ -171,7 +171,7 @@ def test_commit_retries_when_base_manifest_vacuumed_under_it(spark, tmp_path):
         return orig_files(version)
 
     t.files = racy_files
-    new = t._write_batch(spark.range(50, 53))
+    new = M.write_batch(spark.range(50, 53), t.data_dir)
     v = t._commit(lambda base: base + new, "append")
     t.files = orig_files
     assert v == 2

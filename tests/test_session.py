@@ -68,3 +68,21 @@ def test_warm_mix_stops_compiling(spark, sf_dir):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
         session.CODEGEN_CACHE_ENTRIES
     )
+
+
+def test_load_tables_keeps_the_callers_conf(spark, sf_dir):
+    """load_tables applies the runtime conf once per (session, sf_dir):
+    conf a caller sets after the first load survives later loads."""
+    from nyc_taxi_data_warehouse_spark.plans.nyc_views import load_tables
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    load_tables(spark, sf_dir)
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        load_tables(spark, sf_dir)
+        assert [spark.conf.get(k) for k in keys] == ["false", "4"]
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -34,8 +34,12 @@ def test_partitioned_write_prunes_on_read(spark, sf_dir, tmp_path):
     assert back.count() == trips.count()
 
 
-def test_incremental_refresh_touches_only_its_partitions(spark, sf_dir, tmp_path):
+def test_incremental_refresh_touches_only_its_partitions(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     import os
+
+    from pyspark.sql.conf import RuntimeConfig
 
     trips = nyc_views.trips_from_events(
         nyc_views.load_tables(spark, sf_dir)["events"]
@@ -59,7 +63,19 @@ def test_incremental_refresh_touches_only_its_partitions(spark, sf_dir, tmp_path
     one_day = trips.where(
         F.to_date("pickup_datetime") == target
     ).where(F.col("passenger_count").isNull() | (F.col("passenger_count") % 2 == 0))
+    # the dynamic mode is a per-write option: the session conf, which
+    # concurrent writers share, is never set
+    set_keys = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        set_keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
     sinks.overwrite_date_partitions(one_day, path, "pickup_datetime")
+    monkeypatch.undo()
+    assert "spark.sql.sources.partitionOverwriteMode" not in set_keys
 
     back = spark.read.parquet(path)
     assert listing(untouched) == before_untouched  # other partitions intact

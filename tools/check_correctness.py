@@ -210,6 +210,16 @@ def _changed_queries(ref: str, qs: dict) -> set[str]:
 
 
 def main() -> int:
+    # PySpark collect() converts TIMESTAMP values with the process's local
+    # zone while DuckDB returns naive values, so off UTC every TIMESTAMP
+    # column would compare 5 h apart (say) and report false FAILs.
+    if time.timezone or time.altzone:
+        print(
+            "check_correctness: the process time zone is not UTC "
+            f"({time.tzname}); rerun with TZ=UTC",
+            file=sys.stderr,
+        )
+        return 2
     args = [a for a in sys.argv[1:] if not a.startswith("--changed")]
     changed_ref = next(
         (a.split("=", 1)[1] for a in sys.argv[1:] if a.startswith("--changed=")),
