@@ -201,15 +201,16 @@ EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 URL_RE = r"https?://[^\s]+"
 
 
-def scrub_emails(text: Column | str, repl: str = "<EMAIL>") -> Column:
-    """Mask email addresses (PII scrubbing). RE2-compatible pattern (no
-    backrefs/lookarounds) so the DuckDB oracle applies it verbatim."""
-    return F.regexp_replace(_col(text), EMAIL_RE, repl)
+def scrub_emails(text: Column | str) -> Column:
+    """Mask email addresses as ``<EMAIL>`` (PII scrubbing). RE2-compatible
+    pattern (no backrefs/lookarounds) so the DuckDB oracle applies it
+    verbatim."""
+    return F.regexp_replace(_col(text), EMAIL_RE, "<EMAIL>")
 
 
-def scrub_urls(text: Column | str, repl: str = "<URL>") -> Column:
-    """Mask URLs."""
-    return F.regexp_replace(_col(text), URL_RE, repl)
+def scrub_urls(text: Column | str) -> Column:
+    """Mask URLs as ``<URL>``."""
+    return F.regexp_replace(_col(text), URL_RE, "<URL>")
 
 
 def normalize_whitespace(text: Column | str) -> Column:

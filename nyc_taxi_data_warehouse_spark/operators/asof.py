@@ -107,7 +107,6 @@ def interval_overlap_join(
     row_end: str,
     period_start: str,
     period_end: str,
-    bucket: str = "1 hour",
 ) -> DataFrame:
     """INNER join of rows to every period whose [start, end] interval
     overlaps the row's — bucket-exploded so it plans as an equi-join.
@@ -117,11 +116,10 @@ def interval_overlap_join(
     same-bucket non-overlaps, and a distinct collapses multi-bucket
     matches. Overlap is closed-interval: touching endpoints match.
     """
-    secs = {"1 hour": 3600, "1 day": 86400}[bucket]
 
     def explode_buckets(df: DataFrame, s: str, e: str, tag: str) -> DataFrame:
-        lo = (F.unix_timestamp(F.col(s)) / secs).cast("long")
-        hi = (F.unix_timestamp(F.col(e)) / secs).cast("long")
+        lo = (F.unix_timestamp(F.col(s)) / 3600).cast("long")
+        hi = (F.unix_timestamp(F.col(e)) / 3600).cast("long")
         return df.select(
             "*", F.explode(F.sequence(lo, hi)).alias(f"__bucket_{tag}")
         )

@@ -155,23 +155,18 @@ def bloom_semi_join(
     key: str,
     num_bits: int = 1 << 20,
     num_hashes: int = 5,
-    exact: bool = True,
 ) -> DataFrame:
     """fact ⋉ dim on ``key``, Bloom-accelerated.
 
-    The broadcast bitset prunes the fact side map-side; with
-    ``exact=True`` (default) a semi-join on the survivors removes Bloom
-    false positives, so the result EQUALS the plain semi-join — the bloom
-    only reduces what reaches the shuffle.  ``exact=False`` skips the
-    confirming join and returns the (superset) survivors — the cheap
-    pre-pruning mode for feeding an expensive downstream operator that
-    tolerates false positives.
+    The broadcast bitset prunes the fact side map-side; a semi-join on
+    the survivors removes Bloom false positives, so the result EQUALS the
+    plain semi-join — the bloom only reduces what reaches the shuffle.
+    A caller that tolerates false positives composes `bloom_build` and
+    `bloom_might_contain` itself.
     """
     bloom_row = bloom_build(dim, key, num_bits, num_hashes)
     tagged = fact.crossJoin(F.broadcast(bloom_row))
     kept = tagged.where(
         bloom_might_contain(F.col(key), F.col("__bloom"), num_bits, num_hashes)
     ).drop("__bloom")
-    if not exact:
-        return kept
     return kept.join(dim.select(key).distinct(), key, "left_semi")

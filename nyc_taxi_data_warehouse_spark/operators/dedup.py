@@ -779,7 +779,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     )
 
 
-def simhash_sql_cte(source: str = "corpus", id_col: str = "doc_id") -> str:
+def simhash_sql_cte(id_col: str = "doc_id") -> str:
     """DuckDB twin of :func:`simhash` (votes + sign bits), as CTE text."""
     votes = ",\n        ".join(
         f"sum(CASE WHEN ((strpos('{_HEX}', substr(h, {j // 4 + 1}, 1)) - 1) >> {j % 4}) & 1 = 1"
@@ -790,7 +790,7 @@ def simhash_sql_cte(source: str = "corpus", id_col: str = "doc_id") -> str:
 simtok AS (
     SELECT {id_col}, md5(unnest(list_distinct(
         list_filter(string_split_regex(text, '\\s+'), t -> t <> '')))) AS h
-    FROM {source}
+    FROM corpus
 ),
 simvotes AS (
     SELECT {id_col},

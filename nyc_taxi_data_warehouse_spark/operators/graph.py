@@ -96,21 +96,20 @@ def pagerank_int(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Weighted PageRank (damping 0.85) over (src, dst, weight) edges;
     returns (node, rank) with rank on the integer ``scale`` lattice.
 
     Per iteration: edges ⋈ ranks on src (the one real shuffle at graph
     scale), per-dst integer partial sums, dangling mass via an anti-join
-    1-row aggregate. With ``checkpoint`` (default) each iteration's rank
-    frame is localCheckpoint-ed — the Pregel discipline: the rank frame
-    is node-sized (small next to edges), and without truncation the
-    lazy plan doubles per iteration (each round re-derives the previous
-    round's whole lineage on both the contribution and dangling
-    branches — audited at 299 exchanges for 3 iterations un-truncated,
-    ~10 with). ``checkpoint=False`` keeps the computation one lazy plan
-    for callers composing further."""
+    1-row aggregate. Each iteration's rank frame is localCheckpoint-ed —
+    the Pregel discipline: the rank frame is node-sized (small next to
+    edges), and without truncation the lazy plan doubles per iteration
+    (each round re-derives the previous round's whole lineage on both
+    the contribution and dangling branches — audited at 299 exchanges
+    for 3 iterations un-truncated, ~10 with). The returned ranks are
+    materialized, so the persisted edge and node frames are released
+    before returning."""
     e = (
         edges.select(
             F.col(src).alias("src"),
@@ -162,14 +161,9 @@ def pagerank_int(
                 ).alias("r"),
             )
         )
-        if checkpoint:
-            r = r.localCheckpoint(eager=True)
-    if checkpoint:
-        # final ranks are materialized; the cached build frames are done
-        # (without checkpointing the caller still holds lazy lineage over
-        # them, so the persists transfer to the caller's lifetime)
-        e.unpersist()
-        nodes.unpersist()
+        r = r.localCheckpoint(eager=True)
+    e.unpersist()
+    nodes.unpersist()
     return r.select("node", F.col("r").alias("rank"))
 
 
@@ -229,7 +223,6 @@ def label_propagation(
     rounds: int = 4,
     src: str = "src",
     dst: str = "dst",
-    broadcast_labels: bool = True,
 ) -> DataFrame:
     """Deterministic SYNCHRONOUS label propagation (Raghavan et al.
     2007): every node starts as its own label; each round EVERY node
@@ -247,9 +240,8 @@ def label_propagation(
     — a fixed horizon is the honest distributed contract); each round is
     one edge⋈label join + one (node, label) count + one per-node top-1,
     every frame graph-sized and ``localCheckpoint``-ed so round plans
-    stay flat (the q_kcore lesson).  ``broadcast_labels`` fits the
-    zone-backbone use (label frame ≪ edge frame); turn it off when the
-    node set is corpus-scale and let AQE pick the join.
+    stay flat (the q_kcore lesson).  The label frame is broadcast: it
+    is node-sized, small next to the edge frame.
 
     Returns (node, lab)."""
     both = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -261,9 +253,7 @@ def label_propagation(
     )
     w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("lab"))
     for _ in range(rounds):
-        lab_b = labels.select(F.col("node").alias("b"), "lab")
-        if broadcast_labels:
-            lab_b = F.broadcast(lab_b)
+        lab_b = F.broadcast(labels.select(F.col("node").alias("b"), "lab"))
         labels = (
             both.join(lab_b, "b")
             .groupBy(F.col("a").alias("node"), "lab")

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# parallelism of quantile_bounds' exact cumulative-count pass: the distinct
+# parallelism of quantile_bounds' cumulative-count pass: the distinct
 # value table splits into this many value-contiguous buckets (rough GK
 # edges; placement only steers balance, never results)
 _CUM_BUCKETS = 32
@@ -486,31 +486,17 @@ def bucketed_value_cumsum(
     ).withColumn("__cle", F.col("__pcum") + F.col("__off"))
 
 
-def quantile_bounds(
-    df: DataFrame, value_col: str, num_bins: int, exact: bool = True
-) -> DataFrame:
+def quantile_bounds(df: DataFrame, value_col: str, num_bins: int) -> DataFrame:
     """The B−1 bin boundaries of :func:`quantile_bins` as ONE row holding a
     sorted ``__bounds`` array — shared by bin assignment here and by any
     operator that must bin a DIFFERENT frame against this frame's
     distribution (e.g. :mod:`.drift`'s PSI, which bins every group against
-    the corpus-wide deciles). NULL values are excluded. Exact path:
-    integer rank-threshold boundaries over the distinct-value table (no
-    float interpolation), with the cumulative counts computed by
-    value-bucketed parallel windows + a tiny offset table — never an
-    unpartitioned global window; ``exact=False``: GK-sketch
-    approx_percentile (cheaper — no distinct-value shuffle at all — at
-    the price of approximate edges)."""
+    the corpus-wide deciles). NULL values are excluded. Integer
+    rank-threshold boundaries over the distinct-value table (no float
+    interpolation), with the cumulative counts computed by value-bucketed
+    parallel windows + a tiny offset table — never an unpartitioned
+    global window."""
     nn = df.where(F.col(value_col).isNotNull())
-    if not exact:
-        probs = [i / num_bins for i in range(1, num_bins)]
-        return nn.agg(
-            F.array_distinct(
-                F.expr(
-                    f"approx_percentile({value_col}, "
-                    f"array({', '.join(map(str, probs))}), 10000)"
-                )
-            ).alias("__bounds")
-        )
     n_tbl = nn.agg(F.count(F.lit(1)).alias("__n"))
     # Cumulative counts in VALUE order without an unpartitioned window
     # (`Window.orderBy` alone = one-task sort — corpus-sized for a
@@ -554,9 +540,7 @@ def quantile_bounds(
     )
 
 
-def quantile_bins(
-    df: DataFrame, value_col: str, num_bins: int = 10, exact: bool = True
-) -> DataFrame:
+def quantile_bins(df: DataFrame, value_col: str, num_bins: int = 10) -> DataFrame:
     """Equal-frequency (quantile) binning WITHOUT a global sort — the
     feature-discretization step of a training pipeline, in the Spark-ML
     QuantileDiscretizer shape but integer-exact and engine-reproducible.
@@ -579,16 +563,10 @@ def quantile_bins(
     equal-frequency semantics.  Adds a ``bin`` column (1..B); NULL values
     are excluded from the boundary computation and get a NULL bin.
 
-    Scale: the exact path's cumulative counts run over DISTINCT values,
-    value-bucketed with per-bucket windows + a broadcast offset table
-    (see :func:`quantile_bounds`) — fully parallel even for a
-    continuous column where every value is distinct.  ``exact=False``
-    trades the distinct-value shuffle for a single ``approx_percentile``
-    aggregation (GK sketch — mergeable across partitions, no shuffle of
-    values at all), assignment is the same broadcast fold.  Same
-    contract, approximate edges (Spark-ML QuantileDiscretizer
-    semantics); prefer it when boundary exactness is not part of the
-    output contract.
+    Scale: the cumulative counts run over DISTINCT values, value-bucketed
+    with per-bucket windows + a broadcast offset table (see
+    :func:`quantile_bounds`) — fully parallel even for a continuous
+    column where every value is distinct.
     """
     if num_bins < 1:
         raise ValueError(f"num_bins must be >= 1, got {num_bins}")
@@ -600,9 +578,7 @@ def quantile_bins(
             "bin",
             F.when(F.col(value_col).isNotNull(), F.lit(1)).cast("int"),
         )
-    barr = quantile_bounds(df, value_col, num_bins, exact=exact)
-    # one shared assignment tail: a semantics change (the strict x > b
-    # comparison, the NULL contract) cannot fork the exact/approx paths
+    barr = quantile_bounds(df, value_col, num_bins)
     x = F.col(value_col)
     fold = F.aggregate(
         "__bounds",

@@ -84,11 +84,11 @@ def _codebook_source(
     src_id: str,
     id_dt,
     vec_col: str,
-    max_inline_cells: int,
 ):
-    """The codebook as a fold-able array-of-structs, by one of two routes:
+    """The codebook as a fold-able array-of-structs, by one of two routes
+    that ``MAX_INLINE_CELLS`` selects from the codebook's k·dim:
 
-    - **inline** (k·dim ≤ ``max_inline_cells``): collect the k rows
+    - **inline** (k·dim ≤ ``MAX_INLINE_CELLS``): collect the k rows
       driver-side (exactly a k-means codebook broadcast) and inline them
       as a literal — the fold then runs in a single narrow map stage with
       ZERO joins and zero extra plan nodes;
@@ -112,7 +112,7 @@ def _codebook_source(
     plan."""
     rows = centroids.select(F.col(src_id), V.as_double(vec_col)).collect()
     dim = len(rows[0][1]) if rows else 0
-    if len(rows) * dim <= max_inline_cells:
+    if len(rows) * dim <= MAX_INLINE_CELLS:
         return (
             F.array(
                 *[
@@ -153,26 +153,23 @@ def assign_cells(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cent_id_col: str = "centroid_id",
-    max_inline_cells: int = MAX_INLINE_CELLS,
 ) -> DataFrame:
     """IVF coarse-quantizer assignment: every vector → its nearest centroid
     by cosine (deterministic ties: smaller centroid id).
 
     Small codebooks are inlined as literals (single narrow map stage: no
     join, no |corpus|×k intermediate, no window shuffle); codebooks past
-    ``max_inline_cells`` k·dim switch to the 1-row broadcast-aggregate
+    ``MAX_INLINE_CELLS`` k·dim switch to the 1-row broadcast-aggregate
     crossJoin automatically — see :func:`_codebook_source`. Either way
     each corpus row folds over the codebook with JVM higher-order
     functions and the results are identical. Iterate with a
     recompute-centroids groupBy for full k-means.
 
     The centroids frame may key its ids as `cent_id_col` (e.g. a
-    `kmeans_fit` codebook) or reuse the vectors' `id_col` name."""
+    `kmeans_fit_exact` codebook) or reuse the vectors' `id_col` name."""
     src_id = cent_id_col if cent_id_col in centroids.columns else id_col
     id_dt = centroids.schema[src_id].dataType
-    codebook, cb_df = _codebook_source(
-        centroids, src_id, id_dt, vec_col, max_inline_cells
-    )
+    codebook, cb_df = _codebook_source(centroids, src_id, id_dt, vec_col)
     v = vectors.select(F.col(id_col), V.as_double(vec_col).alias("__qv"))
     if cb_df is not None:
         v = v.crossJoin(F.broadcast(cb_df))
@@ -191,65 +188,6 @@ def assign_cells(
     )
 
 
-def kmeans_fit(
-    vectors: DataFrame,
-    k: int,
-    n_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Lloyd's k-means over an embedding column — the IVF codebook BUILD
-    step (`assign_cells` is its assign step, `ivf_knn` its query step).
-
-    Per iteration: (1) assign — one narrow map stage folding the inlined
-    codebook per row (no join, no shuffle); (2) recompute — posexplode the
-    assigned vectors and sum per (cell, dim): the classic map-side-combining
-    shape, shuffling only k×dim partials regardless of corpus size. The
-    driver holds nothing but the k-row codebook (the same boundary a
-    broadcast variable occupies). Seeding is deterministic and
-    partition-order independent: the k vectors with smallest md5(id).
-    Empty cells keep their previous centroid. Returns the (centroid_id,
-    `vec_col`) codebook as a DataFrame."""
-    spark = vectors.sparkSession
-    v = vectors.select(F.col(id_col), V.as_double(vec_col).alias("__v")).persist()
-    seeds = (
-        v.withColumn("__h", F.md5(F.col(id_col).cast("string")))
-        .orderBy("__h", id_col)
-        .limit(k)
-        .select(id_col, "__v")
-        .collect()
-    )
-    cents: list[tuple] = [(r[0], list(r[1])) for r in seeds]
-    for _ in range(n_iter):
-        cent_df = spark.createDataFrame(cents, ["centroid_id", "cv"])
-        assigned = assign_cells(
-            v.select(F.col(id_col), F.col("__v").alias("cv")),
-            cent_df,
-            id_col=id_col,
-            vec_col="cv",
-        ).select(id_col, "centroid_id")
-        dims = (
-            v.join(assigned, id_col)
-            .select("centroid_id", F.posexplode("__v").alias("pos", "x"))
-            .groupBy("centroid_id", "pos")
-            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-        )
-        new: dict = {}
-        for r in dims.collect():
-            new.setdefault(r["centroid_id"], {})[r["pos"]] = r["s"] / r["n"]
-        cents = [
-            (
-                cid,
-                [new[cid][i] for i in range(len(vec))] if cid in new else vec,
-            )
-            for cid, vec in cents
-        ]
-    v.unpersist()
-    return spark.createDataFrame(cents, ["centroid_id", "cv"]).select(
-        "centroid_id", F.col("cv").alias(vec_col)
-    )
-
-
 def kmeans_fit_exact(
     vectors: DataFrame,
     k: int,
@@ -257,12 +195,19 @@ def kmeans_fit_exact(
     quant: int = 1000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_inline_cells: int = MAX_INLINE_CELLS,
 ) -> DataFrame:
-    """Bit-reproducible Lloyd's k-means — same shuffle shape as
-    :func:`kmeans_fit` (inlined-codebook assign, k×dim partial-agg
-    recompute) but every iteration is exact-integer, so two engines (or an
-    engine and its SQL oracle) produce the identical codebook:
+    """Lloyd's k-means over an embedding column — the IVF codebook BUILD
+    step (`assign_cells` is its assign step, `ivf_knn` its query step).
+
+    Per iteration: (1) assign — one narrow map stage folding the
+    codebook per row (no join, no shuffle); (2) recompute — posexplode
+    the assigned vectors and sum per (cell, dim): the classic
+    map-side-combining shape, shuffling only k×dim partials regardless of
+    corpus size. The driver holds nothing but the k-row codebook (the
+    same boundary a broadcast variable occupies). Seeding is
+    deterministic and partition-order independent: the k vectors with
+    smallest md5(id). Every iteration is exact-integer, so two engines
+    (or an engine and its SQL oracle) produce the identical codebook:
 
     - vectors quantize to integers up front (``floor(x·quant)``, the SRP
       lesson applied to clustering) so per-cell coordinate SUMS are exact
@@ -302,11 +247,11 @@ def kmeans_fit_exact(
         # assign_cells) but KEEP the vector alongside the winning cell —
         # the recompute then posexplodes in the same narrow stage, so each
         # iteration is one map + one k×dim partial agg: no corpus-sized
-        # shuffle join anywhere. Past max_inline_cells k·dim the literal
+        # shuffle join anywhere. Past MAX_INLINE_CELLS k·dim the literal
         # codebook would bloat every iteration's plan — switch to the
         # 1-row broadcast collect_list codebook (identical integer
         # arithmetic, O(1) plan size; see _codebook_source).
-        if k * dim <= max_inline_cells:
+        if k * dim <= MAX_INLINE_CELLS:
             codebook = F.array(
                 *[
                     F.struct(
@@ -436,71 +381,24 @@ def cosine_pairs(
     )
 
 
-def assign_cells_multiprobe(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    n_probe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cent_id_col: str = "centroid_id",
-    max_inline_cells: int = MAX_INLINE_CELLS,
-) -> DataFrame:
-    """Multi-probe quantizer assignment: one row per (vector, cell) for the
-    vector's `n_probe` NEAREST centroids — the recall knob of IVF blocking.
-    Same codebook fold as :func:`assign_cells` (inline literals or 1-row
-    broadcast past ``max_inline_cells``), followed by `array_sort` +
-    `slice` + `explode` (still one narrow map stage until the explode
-    fan-out of factor n_probe). Centroid ids may live in `cent_id_col` or
-    reuse `id_col`, as in :func:`assign_cells`."""
-    src_id = cent_id_col if cent_id_col in centroids.columns else id_col
-    id_dt = centroids.schema[src_id].dataType
-    codebook, cb_df = _codebook_source(
-        centroids, src_id, id_dt, vec_col, max_inline_cells
-    )
-    v = vectors.select(F.col(id_col), V.as_double(vec_col).alias("__qv"))
-    if cb_df is not None:
-        v = v.crossJoin(F.broadcast(cb_df))
-    scored = F.transform(
-        codebook,
-        lambda c: F.struct(
-            (-V.cosine(F.col("__qv"), c["cv"])).alias("negsim"),
-            c["cid"].alias("cid"),
-        ),
-    )
-    # ascending sort on (−sim, cid) = best-first with smaller-id tie-break
-    top = F.slice(F.array_sort(scored), 1, n_probe)
-    return v.select(
-        F.col(id_col), F.explode(top).alias("__p")
-    ).select(F.col(id_col), F.col("__p.cid").cast(id_dt).alias(cent_id_col))
-
-
 def bucketed_cosine_pairs(
     vecs: DataFrame,
     centroids: DataFrame,
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "v",
-    n_probe: int = 1,
 ) -> DataFrame:
     """Blocked near-dup pairs — the 100 TB shape of `cosine_pairs`.
 
     Every vector is assigned to its nearest centroid (broadcast quantizer,
     no corpus shuffle), then candidates are generated only WITHIN a cell via
     an equi-join Catalyst shuffles on the cell id: O(Σ |cell|²) FLOPs instead
-    of O(n²), and no BroadcastNestedLoopJoin anywhere in the plan. With
-    `n_probe=1` pairs whose members quantize to different cells are not
-    compared (standard ANN recall trade); `n_probe>1` unions each vector's
-    top-p cell assignments — a pair is compared iff the two vectors share
-    ANY probed cell, and duplicates from multi-cell co-occurrence are
-    dropped by a final distinct on the pair key."""
-    if n_probe == 1:
-        cells = assign_cells(vecs, centroids, id_col=id_col, vec_col=vec_col).select(
-            id_col, "centroid_id"
-        )
-    else:
-        cells = assign_cells_multiprobe(
-            vecs, centroids, n_probe, id_col=id_col, vec_col=vec_col
-        )
+    of O(n²), and no BroadcastNestedLoopJoin anywhere in the plan. Pairs
+    whose members quantize to different cells are not compared (the
+    standard single-probe ANN recall trade)."""
+    cells = assign_cells(vecs, centroids, id_col=id_col, vec_col=vec_col).select(
+        id_col, "centroid_id"
+    )
     tagged = vecs.join(cells, id_col)
     a = tagged.select(
         F.col(id_col).alias("id_a"),
@@ -512,11 +410,9 @@ def bucketed_cosine_pairs(
         F.col(vec_col).alias("vb"),
         F.col("centroid_id").alias("cell"),
     )
-    out = (
+    return (
         a.join(b, "cell")
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", V.cosine("va", "vb").alias("sim"))
         .where(F.col("sim") >= threshold)
     )
-    # multi-probe can see the same pair through several shared cells
-    return out.distinct() if n_probe > 1 else out

@@ -35,15 +35,11 @@ def tf_idf(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """(doc, term, tf, df, tfidf) with smoothed idf.
 
-    `broadcast_vocab=False` is the open-vocabulary fallback: when the df
-    table outgrows broadcast (web-scale corpora with unbounded token sets —
-    URLs, code, typos), the tf⋈df join degrades gracefully to a shuffle
-    hash join on `term`; tf is already partitioned by (doc, term) so only
-    the vocabulary side re-shuffles.
+    The df table (one row per vocabulary term) is broadcast into the
+    tf⋈df join.
 
     The corpus size N enters as a 1-row broadcast aggregate crossJoin —
     never a separate `count()` action — so the whole computation is ONE
@@ -54,9 +50,7 @@ def tf_idf(
     # No explicit unpersist (the result is lazy): the ContextCleaner frees
     # the blocks when the caller drops the returned frame.
     tf = term_freqs(docs, id_col, text_col).persist()
-    df_tbl = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    if broadcast_vocab:
-        df_tbl = F.broadcast(df_tbl)
+    df_tbl = F.broadcast(tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")))
     n_tbl = docs.agg(F.count_distinct(F.col(id_col)).alias("__n_docs"))
     return (
         tf.join(df_tbl, "term")

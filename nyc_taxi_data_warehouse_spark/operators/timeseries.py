@@ -41,7 +41,6 @@ def resample_ffill(
     ts_col: str,
     series_cols: Sequence[str],
     value_cols: Sequence[str],
-    bucket: str = "day",
 ) -> DataFrame:
     """Hourly resample with forward-fill: one row per (series, hour) over the
     complete spine; missing values take the most recent earlier observation
@@ -49,7 +48,7 @@ def resample_ffill(
 
     Two-pass bucketed fill (semantics identical to one per-series window):
 
-    1. within-bucket: `last(ignorenulls)` over (series, `bucket`) partitions
+    1. within-bucket: `last(ignorenulls)` over (series, day) partitions
        — the heavy pass, parallel in #series × #buckets;
     2. carry: per-bucket last filled value (one row per series × bucket),
        forward-filled over buckets with strictly-earlier frame, joined back
@@ -66,7 +65,7 @@ def resample_ffill(
     # built as (partitioned series) × (broadcast spine)
     grid = series.crossJoin(F.broadcast(spine))
     joined = grid.join(hourly, [*series_cols, "hour_ts"], "left").withColumn(
-        "__b", F.date_trunc(bucket, "hour_ts")
+        "__b", F.date_trunc("day", "hour_ts")
     )
     w_in = (
         Window.partitionBy(*series_cols, "__b")

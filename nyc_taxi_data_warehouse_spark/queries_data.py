@@ -4714,6 +4714,9 @@ FROM b a JOIN b bb ON a.bucket = bb.bucket AND a.vec_id < bb.vec_id
 WHERE bit_count(xor(a.sig, bb.sig)) <= 2"""
 
 
+_KMEANS_K, _KMEANS_ITERS = 8, 3  # q_kmeans_cells codebook size and rounds
+
+
 def q_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end IVF codebook lifecycle: `kmeans_fit_exact` builds the
     codebook (Lloyd's, deterministic md5-of-id seeding, integer-lattice
@@ -4728,7 +4731,9 @@ def q_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid coordinate is bit-identical across engines — only the final
     avg(sim) needs the epsilon rounding."""
     e = _scale_out(_emb(spark, sf_dir))
-    cb = similarity.kmeans_fit_exact(e, k=8, n_iter=3, quant=_KMEANS_QUANT)
+    cb = similarity.kmeans_fit_exact(
+        e, k=_KMEANS_K, n_iter=_KMEANS_ITERS, quant=_KMEANS_QUANT
+    )
     q = e.select("vec_id", V.quantize("embedding", _KMEANS_QUANT).alias("qv"))
     a = similarity.assign_cells(
         q, cb.withColumnRenamed("embedding", "qv"), vec_col="qv"
@@ -4741,9 +4746,9 @@ def q_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def _sql_kmeans_cells(k: int = 8, n_iter: int = 3, dim: int = 64) -> str:
+def _sql_kmeans_cells() -> str:
     """Unrolled Lloyd's-in-SQL oracle twin of `kmeans_fit_exact` +
-    `assign_cells`: n_iter × (assign, integer-sum recompute with
+    `assign_cells`: _KMEANS_ITERS × (assign, integer-sum recompute with
     empty-cell carryover) then one final assign and the rollup. The cosine
     expression mirrors the engine's op order exactly: int dot products
     cast to double, sqrt per side, one division."""
@@ -4759,16 +4764,16 @@ def _sql_kmeans_cells(k: int = 8, n_iter: int = 3, dim: int = 64) -> str:
     FROM embeddings
 ), c0 AS (
     SELECT vec_id AS cid, q AS cv
-    FROM v ORDER BY md5(CAST(vec_id AS VARCHAR)) ASC, vec_id ASC LIMIT {k}
+    FROM v ORDER BY md5(CAST(vec_id AS VARCHAR)) ASC, vec_id ASC LIMIT {_KMEANS_K}
 )"""
     ]
-    for t in range(1, n_iter + 2):
+    for t in range(1, _KMEANS_ITERS + 2):
         parts.append(f""", sims{t} AS (
     SELECT v.vec_id, c.cid,
            sum(v.q[t.i] * c.cv[t.i]) AS dqc,
            sum(v.q[t.i] * v.q[t.i]) AS dqq,
            sum(c.cv[t.i] * c.cv[t.i]) AS dcc
-    FROM v CROSS JOIN c{t - 1} c CROSS JOIN range(1, {dim + 1}) t(i)
+    FROM v CROSS JOIN c{t - 1} c CROSS JOIN range(1, 65) t(i)
     GROUP BY 1, 2
 ), a{t} AS (
     SELECT vec_id, cid, sim FROM (
@@ -4777,12 +4782,12 @@ def _sql_kmeans_cells(k: int = 8, n_iter: int = 3, dim: int = 64) -> str:
                    PARTITION BY vec_id ORDER BY {sim} DESC, cid ASC) AS rn
         FROM sims{t}) WHERE rn = 1
 )""")
-        if t <= n_iter:
+        if t <= _KMEANS_ITERS:
             parts.append(f""", n{t} AS (
     SELECT cid, list(s ORDER BY pos) AS cv FROM (
         SELECT a.cid, t.i AS pos, CAST(sum(v.q[t.i]) AS BIGINT) AS s
         FROM a{t} a JOIN v USING (vec_id)
-        CROSS JOIN range(1, {dim + 1}) t(i)
+        CROSS JOIN range(1, 65) t(i)
         GROUP BY 1, 2)
     GROUP BY cid
 ), c{t} AS (
@@ -4792,7 +4797,7 @@ def _sql_kmeans_cells(k: int = 8, n_iter: int = 3, dim: int = 64) -> str:
     parts.append(f"""
 SELECT cid AS centroid_id, CAST(count(*) AS BIGINT) AS n_vecs,
        round(1e-9 + avg(sim), 4) AS avg_quant_sim
-FROM a{n_iter + 1} GROUP BY cid""")
+FROM a{_KMEANS_ITERS + 1} GROUP BY cid""")
     return "".join(parts)
 
 
@@ -5320,6 +5325,9 @@ SELECT query_id, neighbor_id, adc_dist, rank FROM (
 _SQL_ANN_INDEX_APPEND = _sql_ann_index_append()
 
 
+_IVFPQ_PROBES = 2  # q_ivfpq_multiprobe's coarse cells scored per query
+
+
 def q_ivfpq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC with ``n_probe=2`` — the standard recall/cost dial: each
     query scores codes in its TWO nearest coarse cells, each probed cell
@@ -5342,7 +5350,7 @@ def q_ivfpq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         coarse_iter=2,
         fine_iter=1,
         quant=_KMEANS_QUANT,
-        n_probe=2,
+        n_probe=_IVFPQ_PROBES,
         index=_ivfpq_index(spark, sf_dir),
     )
     return out.select(
@@ -5350,7 +5358,7 @@ def q_ivfpq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_ivfpq_multiprobe(n_probe: int = 2) -> str:
+def _sql_ivfpq_multiprobe() -> str:
     coarse = _sql_pq_ctes(
         m=1, k=8, n_iter=2, dim=64, prefix="co", src="embeddings",
         vec="embedding", quantize=True,
@@ -5385,7 +5393,7 @@ def _sql_ivfpq_multiprobe(n_probe: int = 2) -> str:
     SELECT vec_id, code_id AS cell FROM (
         SELECT vec_id, code_id, row_number() OVER (
             PARTITION BY vec_id ORDER BY dist ASC, code_id ASC) AS rn
-        FROM qpd) WHERE rn <= {n_probe}
+        FROM qpd) WHERE rn <= {_IVFPQ_PROBES}
 ), qres AS (
     SELECT p.vec_id, p.cell,
            list_transform(range(1, 65),

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions import text as T
-from .operators import graph
+from .operators import graph, zorder
 from .operators.monitor import p2_formula
 from .operators.sampling import bucketed_value_cumsum
 from .plans.nyc_views import load_tables
@@ -2311,9 +2311,8 @@ FROM noised"""
 
 # --- Z-order file-skipping effectiveness ---------------------------------------------
 
-_ZE_BITS = 8          # per-dim grid bits (operators/zorder.BITS)
 _ZE_FILES_SHIFT = 2   # 8-bit grid >> 2 = 64 linear files
-_ZE_Z_SHIFT = 2 * _ZE_BITS - 6  # 16-bit z >> 10 = 64 z-order files
+_ZE_Z_SHIFT = 2 * zorder.BITS - 6  # 16-bit z >> 10 = 64 z-order files
 # predicate windows as integer percent of each key domain
 _ZE_PREDS = (
     (1, 10, 30, 10, 30),
@@ -2341,8 +2340,6 @@ def q_zorder_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     (layout, file) legs via `stack`, one hash aggregation builds the
     ≤128-row stats table, and the 5-predicate suite joins THAT — the
     corpus is never rescanned per predicate."""
-    from .operators import zorder
-
     li = load_tables(spark, sf_dir)["lineitem"].select(
         "l_partkey", "l_suppkey"
     )
@@ -2355,17 +2352,15 @@ def q_zorder_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = li.crossJoin(F.broadcast(bounds)).select(
         "l_partkey",
         "l_suppkey",
-        zorder.grid_expr("l_partkey", F.col("__xlo"), F.col("__xhi"),
-                         _ZE_BITS).alias("xg"),
-        zorder.grid_expr("l_suppkey", F.col("__ylo"), F.col("__yhi"),
-                         _ZE_BITS).alias("yg"),
+        zorder.grid_expr("l_partkey", F.col("__xlo"), F.col("__xhi")).alias("xg"),
+        zorder.grid_expr("l_suppkey", F.col("__ylo"), F.col("__yhi")).alias("yg"),
     )
     z = g.select(
         "l_partkey",
         "l_suppkey",
         F.shiftright("xg", _ZE_FILES_SHIFT).alias("f_lin"),
         F.shiftright(
-            zorder.interleave_expr(F.col("xg"), F.col("yg"), _ZE_BITS),
+            zorder.interleave_expr(F.col("xg"), F.col("yg")),
             _ZE_Z_SHIFT,
         ).alias("f_z"),
     )
@@ -2456,11 +2451,11 @@ def _sql_zorder_effect() -> str:
         "CAST(floor(CAST(({c} - {lo}) AS DOUBLE) * {n} / ({hi} - {lo} + 1))"
         " AS BIGINT)"
     )
-    xg = grid.format(c="l_partkey", lo="xlo", hi="xhi", n=1 << _ZE_BITS)
-    yg = grid.format(c="l_suppkey", lo="ylo", hi="yhi", n=1 << _ZE_BITS)
+    xg = grid.format(c="l_partkey", lo="xlo", hi="xhi", n=1 << zorder.BITS)
+    yg = grid.format(c="l_suppkey", lo="ylo", hi="yhi", n=1 << zorder.BITS)
     z = " + ".join(
         f"(((xg >> {b}) & 1) << {2 * b}) + (((yg >> {b}) & 1) << {2 * b + 1})"
-        for b in range(_ZE_BITS)
+        for b in range(zorder.BITS)
     )
     preds = "\nUNION ALL\n".join(
         f"SELECT {p} AS pred_id, {xl} AS xl, {xh} AS xh,"

@@ -1324,20 +1324,22 @@ def q_zorder_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_zorder_cells(bits: int = 8) -> str:
+def _sql_zorder_cells() -> str:
     """Dialect twin of `zorder.grid_expr` + `interleave_expr`: identical
     double-division grid normalization (exact: non-negative, quotient
-    < 2^bits, fractional distance ≥ 1/(range+1)) and the same unrolled
+    < 2^BITS, fractional distance ≥ 1/(range+1)) and the same unrolled
     shift/mask interleave."""
+    from .operators.zorder import BITS
+
     grid = (
         "CAST(floor(CAST(({c} - {lo}) AS DOUBLE) * {n} / ({hi} - {lo} + 1))"
         " AS BIGINT)"
     )
-    xg = grid.format(c="l_partkey", lo="xlo", hi="xhi", n=1 << bits)
-    yg = grid.format(c="l_suppkey", lo="ylo", hi="yhi", n=1 << bits)
+    xg = grid.format(c="l_partkey", lo="xlo", hi="xhi", n=1 << BITS)
+    yg = grid.format(c="l_suppkey", lo="ylo", hi="yhi", n=1 << BITS)
     z = " + ".join(
         f"(((xg >> {b}) & 1) << {2 * b}) + (((yg >> {b}) & 1) << {2 * b + 1})"
-        for b in range(bits)
+        for b in range(BITS)
     )
     return f"""
 WITH b AS (
@@ -1421,15 +1423,15 @@ def q_hilbert_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_hilbert_cells(bits: int = 8) -> str:
-    from .operators.zorder import hilbert_sql_exprs
+def _sql_hilbert_cells() -> str:
+    from .operators.zorder import BITS, hilbert_sql_exprs
 
     grid = (
         "CAST(floor(CAST(({c} - {lo}) AS DOUBLE) * {n} / ({hi} - {lo} + 1))"
         " AS BIGINT)"
     )
-    xg = grid.format(c="l_partkey", lo="xlo", hi="xhi", n=1 << bits)
-    yg = grid.format(c="l_suppkey", lo="ylo", hi="yhi", n=1 << bits)
+    xg = grid.format(c="l_partkey", lo="xlo", hi="xhi", n=1 << BITS)
+    yg = grid.format(c="l_suppkey", lo="ylo", hi="yhi", n=1 << BITS)
     # cell-grain twin of the engine's dedupe-to-lattice shape: the
     # rotation CTE chain runs over ≤2^16 cells, not corpus rows
     return f"""
@@ -1448,15 +1450,18 @@ WITH b AS (
         FROM lineitem CROSS JOIN b
         GROUP BY 1, 2
     )
-){hilbert_sql_exprs(bits)}
+){hilbert_sql_exprs()}
 SELECT d >> 6 AS h_cell, CAST(sum(n_rows) AS BIGINT) AS n_rows,
        min(min_pk) AS min_pk, max(max_pk) AS max_pk,
        min(min_sk) AS min_sk, max(max_sk) AS max_sk
-FROM h{bits} GROUP BY 1"""
+FROM h{BITS} GROUP BY 1"""
 
 
 _SQL_HILBERT_CELLS = _sql_hilbert_cells()
 
+
+
+_PAGERANK_ITERS, _PAGERANK_SCALE = 3, 10**9  # q_pagerank_zones rounds, rank lattice
 
 
 def q_pagerank_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1477,11 +1482,13 @@ def q_pagerank_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    out = graph.pagerank_int(edges, n_iter=3)
+    out = graph.pagerank_int(
+        edges, n_iter=_PAGERANK_ITERS, scale=_PAGERANK_SCALE
+    )
     return out.select(F.col("node").alias("zone_id"), "rank")
 
 
-def _sql_pagerank_zones(n_iter: int = 3, scale: int = 10**9) -> str:
+def _sql_pagerank_zones() -> str:
     """Unrolled integer-PageRank twin of `graph.pagerank_int`: same
     floor-division lattice arithmetic per iteration (teleport, damped
     contributions, uniform dangling redistribution)."""
@@ -1496,10 +1503,10 @@ def _sql_pagerank_zones(n_iter: int = 3, scale: int = 10**9) -> str:
 ), ow AS (
     SELECT src, CAST(sum(w) AS BIGINT) AS W FROM e GROUP BY 1
 ), r0 AS (
-    SELECT node, CAST({scale} AS BIGINT) // nn.n AS r
+    SELECT node, CAST({_PAGERANK_SCALE} AS BIGINT) // nn.n AS r
     FROM nd CROSS JOIN nn
 )"""]
-    for t in range(1, n_iter + 1):
+    for t in range(1, _PAGERANK_ITERS + 1):
         parts.append(f""",
 ct{t} AS (
     SELECT e.dst AS node, CAST(sum(r.r * e.w // ow.W) AS BIGINT) AS c
@@ -1511,7 +1518,7 @@ ct{t} AS (
     WHERE ow.src IS NULL
 ), r{t} AS (
     SELECT nd.node,
-           CAST(15 AS BIGINT) * CAST({scale} AS BIGINT)
+           CAST(15 AS BIGINT) * CAST({_PAGERANK_SCALE} AS BIGINT)
                // (CAST(100 AS BIGINT) * nn.n)
            + CAST(85 AS BIGINT)
                * (coalesce(c.c, 0) + (d.dang // nn.n)) // 100 AS r
@@ -1564,7 +1571,7 @@ _SQL_PAGERANK_ZONES = _with(
     SQL_TRIPS,
     SQL_STG_TRIPS,
     _sql_pagerank_zones(),
-    select='SELECT node AS zone_id, r AS "rank" FROM r3',
+    select=f'SELECT node AS zone_id, r AS "rank" FROM r{_PAGERANK_ITERS}',
 )
 
 

@@ -20,15 +20,14 @@ def write_partitioned_by_date(
     df: DataFrame,
     path: str,
     ts_col: str,
-    mode: str = "overwrite",
     date_col: str = "p_date",
 ) -> None:
     """Lake-table write partitioned by event date — the engine's fact-table
-    layout. At 100 TB this yields ~1 partition/day/shuffle-task; combine with
+    layout; replaces any table at ``path``. At 100 TB this yields ~1 partition/day/shuffle-task; combine with
     AQE coalescing to avoid small files."""
     (
         df.withColumn(date_col, F.to_date(ts_col))
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy(date_col)
         .parquet(path)
     )
@@ -330,7 +329,6 @@ def atomic_overwrite(
     df: DataFrame,
     path: str,
     lease_ttl: float | None = 600.0,
-    owner: str | None = None,
 ) -> None:
     """Transactional table replace for a path-based parquet table — the
     engine's stand-in for the atomicity of the reference's Snowflake
@@ -372,7 +370,7 @@ def atomic_overwrite(
     import threading
 
     lease = (
-        WriterLease(path, owner=owner, ttl_seconds=lease_ttl).acquire()
+        WriterLease(path, ttl_seconds=lease_ttl).acquire()
         if lease_ttl is not None
         else None
     )

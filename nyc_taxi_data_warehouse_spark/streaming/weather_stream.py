@@ -64,8 +64,9 @@ def read_weather_stream(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def hourly_weather_stream(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Streaming int_weather_hourly: watermarked 1h tumbling window.
+def hourly_weather_stream(stream: DataFrame) -> DataFrame:
+    """Streaming int_weather_hourly: 1h tumbling window under a 2-hour
+    watermark.
 
     `max_by(desc, struct(observed_at, obs_id))` is the same deterministic
     argmax the batch model uses; dedup on obs_id guards re-delivered files
@@ -73,7 +74,7 @@ def hourly_weather_stream(stream: DataFrame, watermark: str = "2 hours") -> Data
     `dropDuplicatesWithinWatermark` keeps the dedup state BOUNDED — plain
     `dropDuplicates` would grow its key set forever on an unbounded feed."""
     w = (
-        stream.withWatermark("observed_at", watermark)
+        stream.withWatermark("observed_at", "2 hours")
         .dropDuplicatesWithinWatermark(["obs_id"])
         .where(F.col("observed_at").isNotNull() & F.col("temp_f").isNotNull())
     )

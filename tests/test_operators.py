@@ -198,7 +198,7 @@ def test_prefix_filter_high_threshold_complete(spark):
     assert out[0].jaccard == 1.0
 
 
-def test_bloom_num_bits_guard():
+def test_bloom_num_bits_guard(spark):
     """num_bits beyond 2^36 would overflow the probe's int array ordinal
     (wrong-but-plausible lookups) — both build and probe must refuse."""
     import pytest as _pytest
@@ -372,12 +372,27 @@ def test_bloom_semi_join_equals_exact_semi_join(spark):
     assert exact.exceptAll(got).count() == 0
 
 
-def test_bloom_prefilter_prunes_but_never_drops_matches(spark):
+def _bloom_prefilter(fact, dim, key, num_bits=1 << 20, num_hashes=5):
+    """The Bloom survivors of ``fact`` (a superset of fact ⋉ dim) — the
+    pruning step `bloom_semi_join` composes, before its confirming join."""
     from nyc_taxi_data_warehouse_spark.operators import bloom
 
+    bits = bloom.bloom_build(dim, key, num_bits, num_hashes)
+    return (
+        fact.crossJoin(F.broadcast(bits))
+        .where(
+            bloom.bloom_might_contain(
+                F.col(key), F.col("__bloom"), num_bits, num_hashes
+            )
+        )
+        .drop("__bloom")
+    )
+
+
+def test_bloom_prefilter_prunes_but_never_drops_matches(spark):
     dim = spark.range(0, 200).select((F.col("id") * 13).alias("k"))
     fact = spark.range(0, 20000).select(F.col("id").alias("k"))
-    pre = bloom.bloom_semi_join(fact, dim, "k", exact=False)
+    pre = _bloom_prefilter(fact, dim, "k")
     true_keys = {r.k for r in fact.join(dim, "k", "left_semi").collect()}
     pre_keys = {r.k for r in pre.collect()}
     assert true_keys <= pre_keys  # no false negatives, ever
@@ -571,36 +586,13 @@ def test_quantile_bins_single_bin_and_nulls(spark):
     assert two[1] == 1 and two[2] == 2 and two[3] == 3
 
 
-def test_quantile_bins_approx_path_close_to_exact(spark):
-    """The scale path (GK-sketch boundaries, no distinct-value window)
-    agrees with the exact path within one bin on a uniform column."""
-    from nyc_taxi_data_warehouse_spark.operators import sampling
-
-    df = spark.range(1, 1001).select(F.col("id").alias("x"))
-    exact = {r.x: r.bin for r in sampling.quantile_bins(df, "x", 10).collect()}
-    approx = {
-        r.x: r.bin
-        for r in sampling.quantile_bins(df, "x", 10, exact=False).collect()
-    }
-    assert all(1 <= b <= 10 for b in approx.values())
-    assert all(abs(approx[x] - exact[x]) <= 1 for x in exact)
-    # NULLs still map to NULL bin on the approx path
-    dfn = spark.createDataFrame([(1,), (None,)], "x long")
-    got = {r.x: r.bin for r in sampling.quantile_bins(dfn, "x", 3, exact=False).collect()}
-    assert got[None] is None
-
-
 def test_bloom_large_bitset_builds_and_prunes(spark):
     """The 2^24-bit configuration (the 'size it up' path: 262k-word dense
     array, 2 MiB broadcast) builds through the word spine and still
     satisfies both contracts: zero false negatives, strong pruning."""
-    from nyc_taxi_data_warehouse_spark.operators import bloom
-
     dim = spark.range(0, 2000).select((F.col("id") * 3).alias("k"))
     fact = spark.range(0, 50000).select(F.col("id").alias("k"))
-    pre = bloom.bloom_semi_join(
-        fact, dim, "k", num_bits=1 << 24, num_hashes=5, exact=False
-    )
+    pre = _bloom_prefilter(fact, dim, "k", num_bits=1 << 24, num_hashes=5)
     pre_keys = {r.k for r in pre.collect()}
     true_keys = {r.k for r in fact.join(dim, "k", "left_semi").collect()}
     assert true_keys <= pre_keys
@@ -608,11 +600,9 @@ def test_bloom_large_bitset_builds_and_prunes(spark):
 
 
 def test_bloom_empty_dim_filters_everything(spark):
-    from nyc_taxi_data_warehouse_spark.operators import bloom
-
     dim = spark.range(0, 10).where(F.lit(False)).select(F.col("id").alias("k"))
     fact = spark.range(0, 100).select(F.col("id").alias("k"))
-    assert bloom.bloom_semi_join(fact, dim, "k", exact=False).count() == 0
+    assert _bloom_prefilter(fact, dim, "k").count() == 0
 
 
 def test_sparse_cosine_identical_and_disjoint(spark):
@@ -1264,23 +1254,6 @@ def _clustered_vectors(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def test_kmeans_fit_recovers_separated_clusters(spark):
-    from nyc_taxi_data_warehouse_spark.operators import similarity
-
-    v = _clustered_vectors(spark)
-    codebook = similarity.kmeans_fit(v, k=3, n_iter=4)
-    assert codebook.count() == 3
-    assigned = similarity.assign_cells(v, codebook, id_col="vec_id",
-                                       vec_col="embedding")
-    # same true cluster -> same centroid, different -> different
-    got = {r.vec_id: r.centroid_id for r in assigned.collect()}
-    by_true = {}
-    for i in range(60):
-        by_true.setdefault(i % 3, set()).add(got[i])
-    assert all(len(s) == 1 for s in by_true.values())
-    assert len(set().union(*by_true.values())) == 3
-
-
 def test_kmeans_fit_exact_clusters_and_is_reproducible(spark):
     """The integer-lattice variant: recovers the same separated clusters AND
     two independent fits produce bit-identical codebooks (the property the
@@ -1306,7 +1279,7 @@ def test_kmeans_fit_exact_clusters_and_is_reproducible(spark):
     assert len(set().union(*by_true.values())) == 3
 
 
-def test_assign_cells_broadcast_codebook_matches_inline_k256(spark):
+def test_assign_cells_broadcast_codebook_matches_inline_k256(spark, monkeypatch):
     """Large-codebook path (k=256, dim=64): the 1-row broadcast collect_list
     codebook must assign bit-identically to the inlined-literal codebook —
     same fold expression over the same doubles — while keeping the plan
@@ -1325,8 +1298,10 @@ def test_assign_cells_broadcast_codebook_matches_inline_k256(spark):
             "transform(sequence(0, 63), d -> cast(cos(id * 0.19 + d * 0.07) AS double))"
         ).alias("embedding"),
     )
-    inline = similarity.assign_cells(vecs, cents, max_inline_cells=10**9)
-    bcast = similarity.assign_cells(vecs, cents, max_inline_cells=0)
+    monkeypatch.setattr(similarity, "MAX_INLINE_CELLS", 10**9)
+    inline = similarity.assign_cells(vecs, cents)
+    monkeypatch.setattr(similarity, "MAX_INLINE_CELLS", 0)
+    bcast = similarity.assign_cells(vecs, cents)
     rows_i = sorted((r.vec_id, r.centroid_id, r.sim) for r in inline.collect())
     rows_b = sorted((r.vec_id, r.centroid_id, r.sim) for r in bcast.collect())
     assert rows_i == rows_b  # exact, not approximate
@@ -1336,58 +1311,25 @@ def test_assign_cells_broadcast_codebook_matches_inline_k256(spark):
     assert "Join" not in inline._jdf.queryExecution().analyzed().toString()
 
 
-def test_multiprobe_broadcast_codebook_matches_inline(spark):
-    from nyc_taxi_data_warehouse_spark.operators import similarity
-
-    v = _clustered_vectors(spark)
-    cents = v.where(F.col("vec_id") % 20 == 0)
-    inline = {
-        (r.vec_id, r.centroid_id)
-        for r in similarity.assign_cells_multiprobe(
-            v, cents, 2, max_inline_cells=10**9
-        ).collect()
-    }
-    bcast = {
-        (r.vec_id, r.centroid_id)
-        for r in similarity.assign_cells_multiprobe(
-            v, cents, 2, max_inline_cells=0
-        ).collect()
-    }
-    assert inline == bcast
-
-
-def test_kmeans_fit_exact_broadcast_codebook_matches_inline(spark):
+def test_kmeans_fit_exact_broadcast_codebook_matches_inline(spark, monkeypatch):
     """Integer-lattice Lloyd's through the broadcast-codebook iterations
     produces the bit-identical codebook to the inline-literal iterations
     (integer sums are order-free in both)."""
     from nyc_taxi_data_warehouse_spark.operators import similarity
 
     v = _clustered_vectors(spark)
-    cb_inline = similarity.kmeans_fit_exact(v, k=3, n_iter=3, max_inline_cells=10**9)
-    cb_bcast = similarity.kmeans_fit_exact(v, k=3, n_iter=3, max_inline_cells=0)
+    monkeypatch.setattr(similarity, "MAX_INLINE_CELLS", 10**9)
+    cb_inline = similarity.kmeans_fit_exact(v, k=3, n_iter=3)
+    monkeypatch.setattr(similarity, "MAX_INLINE_CELLS", 0)
+    cb_bcast = similarity.kmeans_fit_exact(v, k=3, n_iter=3)
     rows_i = sorted((r.centroid_id, list(r.embedding)) for r in cb_inline.collect())
     rows_b = sorted((r.centroid_id, list(r.embedding)) for r in cb_bcast.collect())
     assert rows_i == rows_b
 
 
-def test_multiprobe_assignment_supersets_single_probe(spark):
-    from nyc_taxi_data_warehouse_spark.operators import similarity
-
-    v = _clustered_vectors(spark)
-    cents = v.where(F.col("vec_id") % 20 == 0)  # 3 seed centroids
-    single = {
-        (r.vec_id, r.centroid_id)
-        for r in similarity.assign_cells(v, cents).collect()
-    }
-    multi = {
-        (r.vec_id, r.centroid_id)
-        for r in similarity.assign_cells_multiprobe(v, cents, 2).collect()
-    }
-    assert single <= multi
-    assert len(multi) == 2 * 60
-
-
-def test_multiprobe_pairs_raise_recall_toward_exact(spark):
+def test_bucketed_pairs_subset_of_exact(spark):
+    """Cell blocking only drops candidates: every bucketed pair is an
+    exact pair, even when the centroids split the true clusters."""
     from nyc_taxi_data_warehouse_spark.operators import similarity
 
     v = _clustered_vectors(spark).select(
@@ -1402,14 +1344,7 @@ def test_multiprobe_pairs_raise_recall_toward_exact(spark):
         (r.id_a, r.id_b)
         for r in similarity.bucketed_cosine_pairs(v, cents, 0.99).collect()
     }
-    p3 = {
-        (r.id_a, r.id_b)
-        for r in similarity.bucketed_cosine_pairs(
-            v, cents, 0.99, n_probe=3
-        ).collect()
-    }
-    assert p1 <= p3 <= exact
-    assert len(p3) > len(p1)  # extra probes found cross-cell pairs
+    assert p1 <= exact
 
 
 # --- sampling: deterministic train/val/test split --------------------------

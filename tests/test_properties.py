@@ -256,8 +256,10 @@ def test_bloom_never_false_negative(spark, keys, bits_pow):
     probe = spark.createDataFrame(
         [(k,) for k in keys] + [(k + 1, ) for k in keys], "k long"
     )
-    pre = bloom.bloom_semi_join(
-        probe, dim, "k", num_bits=1 << bits_pow, num_hashes=3, exact=False
+    num_bits = 1 << bits_pow
+    bits = bloom.bloom_build(dim, "k", num_bits, 3)
+    pre = probe.crossJoin(F.broadcast(bits)).where(
+        bloom.bloom_might_contain(F.col("k"), F.col("__bloom"), num_bits, 3)
     )
     surviving = {r.k for r in pre.collect()}
     assert set(keys) <= surviving
