@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .compat import _col
+
 # Tiny per-language stopword lists for the n-gram/stopword language heuristic.
 STOPWORDS = {
     "en": ["the", "a", "of", "and", "to", "in", "is"],
@@ -17,10 +19,6 @@ STOPWORDS = {
     "fr": ["le", "la", "de", "et", "que", "en", "un"],
     "de": ["der", "die", "das", "und", "zu", "in", "ein"],
 }
-
-
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
 
 
 def tokens(text: Column | str) -> Column:
@@ -132,10 +130,6 @@ def type_token_ratio_from_tokens(toks: Column | str) -> Column:
     ).cast("double")
 
 
-def type_token_ratio(text: Column | str) -> Column:
-    return type_token_ratio_from_tokens(tokens(text))
-
-
 def quality_score_from_tokens(text: Column | str, toks: Column | str) -> Column:
     """Composite document-quality score in [0,1]: rewards mid-length docs,
     lexical diversity, and low punctuation noise. Deterministic expression —
@@ -146,10 +140,6 @@ def quality_score_from_tokens(text: Column | str, toks: Column | str) -> Column:
     diversity_term = type_token_ratio_from_tokens(toks)
     noise_term = F.lit(1.0) - F.least(punct_ratio(text) * F.lit(4.0), F.lit(1.0))
     return ((length_term + diversity_term + noise_term) / F.lit(3.0)).cast("double")
-
-
-def quality_score(text: Column | str) -> Column:
-    return quality_score_from_tokens(text, tokens(text))
 
 
 def lang_guess_from_tokens(toks: Column | str) -> Column:

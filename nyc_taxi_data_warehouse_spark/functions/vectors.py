@@ -11,9 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
+from .compat import _col
 
 
 def array_lit(values, sql_type: str) -> Column:

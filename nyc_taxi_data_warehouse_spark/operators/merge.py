@@ -43,7 +43,9 @@ def merge_into_path(
     staged to a sibling path and swapped in by atomic rename
     (:func:`..sources.sinks.atomic_overwrite`), so a failure mid-write never
     corrupts the live table and concurrent readers see old-or-new, never a
-    partial state."""
+    partial state. The swap holds the table's kernel writer lock
+    (:func:`..sources.sinks.writer_lock`): a concurrent writer raises
+    ``LeaseHeldError`` before writing anything."""
     from ..sources.sinks import atomic_overwrite
 
     target = spark.read.parquet(path)

@@ -32,6 +32,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -109,9 +110,21 @@ def _add_matches(add: dict, where) -> bool:
     mins = s.get("minValues") or {}
     maxs = s.get("maxValues") or {}
     for col, op, val in where:
-        if not range_may_match(mins.get(col), maxs.get(col), op, val):
+        lo, hi = mins.get(col), maxs.get(col)
+        if type(val) is date:  # the protocol records dates as YYYY-MM-DD
+            lo, hi = _stat_date(lo), _stat_date(hi)
+        if not range_may_match(lo, hi, op, val):
             return False
     return True
+
+
+def _stat_date(v):
+    """A ``YYYY-MM-DD`` stats value as a ``date``; anything else (absent,
+    or not a plain date string) reads as unbounded."""
+    try:
+        return date.fromisoformat(v)
+    except (TypeError, ValueError):
+        return None
 
 
 def delta_snapshot(
@@ -228,18 +241,24 @@ def read_delta(
 def _parquet_stats_json(fp: str) -> str:
     """The add action's ``stats`` JSON (numRecords / minValues /
     maxValues) from :func:`.pruning.footer_bounds` — the data the
-    reader's file skipping runs on. Only JSON-native value types are
-    recorded (int/float/str/bool); other columns are omitted, which
-    readers must treat as unbounded."""
+    reader's file skipping runs on. JSON-native value types are recorded
+    as they are (int/float/str/bool) and dates as ``YYYY-MM-DD`` strings,
+    as the protocol writes them; other columns (timestamps among them)
+    are omitted, which readers must treat as unbounded."""
     n, bounds = footer_bounds(fp)
-    native = {
+    recorded = {
         c: b for c, b in bounds.items() if isinstance(b[0], (int, float, str, bool))
     }
+    recorded.update(
+        (c, (lo.isoformat(), hi.isoformat()))
+        for c, (lo, hi) in bounds.items()
+        if type(lo) is date  # not datetime, a subclass of date
+    )
     return json.dumps(
         {
             "numRecords": n,
-            "minValues": {c: lo for c, (lo, _) in native.items()},
-            "maxValues": {c: hi for c, (_, hi) in native.items()},
+            "minValues": {c: lo for c, (lo, _) in recorded.items()},
+            "maxValues": {c: hi for c, (_, hi) in recorded.items()},
         }
     )
 

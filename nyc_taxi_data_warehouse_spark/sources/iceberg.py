@@ -42,6 +42,7 @@ import os
 import re
 import time
 import uuid
+from datetime import date, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -471,6 +472,8 @@ _MANIFEST_SCHEMA = {
 
 import struct as _struct
 
+_EPOCH_DAY = date(1970, 1, 1)  # a date bound is int32 days since it
+
 
 def _serialize_bound(ice_type: str, v):
     """Iceberg single-value binary serialization for bound maps."""
@@ -486,6 +489,8 @@ def _serialize_bound(ice_type: str, v):
         return str(v).encode("utf-8")
     if ice_type == "boolean":
         return b"\x01" if v else b"\x00"
+    if ice_type == "date":
+        return _struct.pack("<i", (v - _EPOCH_DAY).days)
     return None  # unsupported: omit the bound (always legal)
 
 
@@ -502,6 +507,8 @@ def _deserialize_bound(ice_type: str, b: bytes):
         return b.decode("utf-8")
     if ice_type == "boolean":
         return b != b"\x00"
+    if ice_type == "date":
+        return _EPOCH_DAY + timedelta(days=_struct.unpack("<i", b)[0])
     return None
 
 

@@ -1,11 +1,11 @@
 """Rename-free manifest-commit table — transactional parquet for object
 stores.
 
-:func:`sinks.atomic_overwrite` + :class:`sinks.WriterLease` give
-Snowflake-MERGE-parity transactionality (`dags/etl_spark_historical.py:
-292,349-386`) on rename-atomic filesystems (POSIX, HDFS). Object stores
-(S3/GCS/ABFS) have no atomic rename — but they DO have atomic
-put-if-absent (S3 ``If-None-Match:*`` conditional PUT, GCS
+:func:`sinks.atomic_overwrite` + :func:`sinks.writer_lock` (a kernel
+``flock``) give Snowflake-MERGE-parity transactionality
+(`dags/etl_spark_historical.py:292,349-386`) on local rename-atomic
+filesystems. Object stores (S3/GCS/ABFS) have no atomic rename — but they
+DO have atomic put-if-absent (S3 ``If-None-Match:*`` conditional PUT, GCS
 ``ifGenerationMatch=0`` preconditions), and that single primitive is
 enough for a Delta/Iceberg-style commit protocol:
 
@@ -24,10 +24,9 @@ Locally the put-if-absent is :func:`put_if_absent` (temp file, fsync,
 ``os.link``) — the same all-or-nothing contract, so every code path here
 runs identically against a real object store with the put swapped behind
 one function.  It is the engine's only commit primitive: the Delta
-writer, the Iceberg writer, the IVF-PQ index store and
-:class:`.sinks.WriterLease` publish through it too, and the versioned
-ones share :func:`commit_next` (the optimistic loop) and
-:func:`list_versions` (the head listing).
+writer, the Iceberg writer and the IVF-PQ index store publish through
+it, and the versioned ones share :func:`commit_next` (the optimistic
+loop) and :func:`list_versions` (the head listing).
 
 Orphans (data written by a writer that crashed before committing, files
 dropped by an ``overwrite``, and the ``*.tmp.*`` file of a commit that

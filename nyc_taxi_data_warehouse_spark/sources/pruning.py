@@ -39,7 +39,16 @@ def check_where(where) -> None:
 
 
 def range_may_match(lo, hi, op: str, val) -> bool:
-    """Could a value x with lo ≤ x ≤ hi satisfy ``x op val``?"""
+    """Could a value x with lo ≤ x ≤ hi satisfy ``x op val``? A value
+    that does not compare with the bounds' type (a string or a datetime
+    against date bounds) never prunes."""
+    try:
+        return _range_may_match(lo, hi, op, val)
+    except TypeError:
+        return True
+
+
+def _range_may_match(lo, hi, op: str, val) -> bool:
     if op in ("=", "=="):
         if lo is not None and val < lo:
             return False

@@ -10,6 +10,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from nyc_taxi_data_warehouse_spark.sources import delta_read as D
 
@@ -286,3 +287,133 @@ def test_diff_queries_stable_under_reinvocation(spark, sf_dir):
         first = sorted(map(tuple, fn(spark, sf_dir).collect()))
         second = sorted(map(tuple, fn(spark, sf_dir).collect()))
         assert first == second and first
+
+
+def _three_date_frame(spark):
+    """3 files, one date per file, beside six columns of the other bound
+    types (int, long, double, string, bool, nullable float)."""
+    from datetime import date
+
+    rows = [
+        (1, 10, 1.5, "a", True, date(2024, 1, 3), None),
+        (2, 20, -2.5, "c", False, date(2024, 1, 3), 0.5),
+        (3, 30, 3.5, "d", True, date(2024, 1, 5), None),
+        (4, 40, 4.5, "e", True, date(2024, 1, 5), None),
+        (5, 50, 5.5, "f", False, date(2024, 1, 9), 2.5),
+        (6, 60, 0.5, "b", False, date(2024, 1, 9), -1.0),
+    ]
+    schema = "i int, l long, x double, s string, b boolean, dt date, f float"
+    return spark.createDataFrame(rows, schema).repartitionByRange(3, "dt")
+
+
+def test_date_predicates_prune_in_both_lake_readers(spark, tmp_path):
+    """Both writers record date bounds (Delta: YYYY-MM-DD strings, Iceberg:
+    int32 days since the epoch), so a date predicate opens 1 of 3 files
+    and returns what the filtered full read returns."""
+    from datetime import date
+
+    from nyc_taxi_data_warehouse_spark.sources import iceberg as I
+
+    df = _three_date_frame(spark)
+    dp, ip = str(tmp_path / "d"), str(tmp_path / "i")
+    D.write_delta(df, dp, mode="overwrite")
+    I.write_iceberg(df, ip)
+    readers = {
+        "delta": lambda where=None: D.read_delta(spark, dp, where=where),
+        "iceberg": lambda where=None: I.read_iceberg(spark, ip, where=where),
+    }
+    d = date(2024, 1, 5)
+    for name, read in readers.items():
+        assert len(read().inputFiles()) == 3, name
+        got = read([("dt", "=", d)])
+        assert len(got.inputFiles()) == 1, name
+        want = read().where(F.col("dt") == d)
+        assert sorted(got.collect()) == sorted(want.collect()) != [], name
+        assert len(read([("dt", ">", date(2024, 1, 5))]).inputFiles()) == 1, name
+
+
+def test_date_bounds_leave_the_other_columns_bounds_unchanged(spark, tmp_path):
+    """The date bounds are the only addition: the Delta stats and the
+    Iceberg bound bytes of the frame's other six columns are the values
+    the writers recorded before dates were bounded."""
+    import struct
+    from datetime import date
+
+    from nyc_taxi_data_warehouse_spark.sources import iceberg as I
+
+    df = _three_date_frame(spark)
+    dp, ip = str(tmp_path / "d"), str(tmp_path / "i")
+    D.write_delta(df, dp, mode="overwrite")
+    I.write_iceberg(df, ip)
+
+    stats = []
+    with open(os.path.join(dp, "_delta_log", f"{0:020d}.json")) as f:
+        for line in f:
+            a = json.loads(line)
+            if "add" in a:
+                stats.append(json.loads(a["add"]["stats"]))
+    stats.sort(key=lambda s: s["minValues"]["dt"])
+    assert [(s["minValues"]["dt"], s["maxValues"]["dt"]) for s in stats] == [
+        ("2024-01-03", "2024-01-03"),
+        ("2024-01-05", "2024-01-05"),
+        ("2024-01-09", "2024-01-09"),
+    ]
+    for s in stats:
+        del s["minValues"]["dt"], s["maxValues"]["dt"]
+    assert stats == [
+        {"numRecords": 2,
+         "minValues": {"i": 1, "l": 10, "x": -2.5, "s": "a", "b": False, "f": 0.5},
+         "maxValues": {"i": 2, "l": 20, "x": 1.5, "s": "c", "b": True, "f": 0.5}},
+        {"numRecords": 2,
+         "minValues": {"i": 3, "l": 30, "x": 3.5, "s": "d", "b": True},
+         "maxValues": {"i": 4, "l": 40, "x": 4.5, "s": "e", "b": True}},
+        {"numRecords": 2,
+         "minValues": {"i": 5, "l": 50, "x": 0.5, "s": "b", "b": False, "f": -1.0},
+         "maxValues": {"i": 6, "l": 60, "x": 5.5, "s": "f", "b": False, "f": 2.5}},
+    ]
+
+    meta = I._load_metadata(ip)
+    bounds = []
+    for rec in I._live_entries(I._pick_snapshot(meta, None), ip):
+        lo = {e["key"]: e["value"].hex() for e in rec["lower_bounds"]}
+        hi = {e["key"]: e["value"].hex() for e in rec["upper_bounds"]}
+        bounds.append((lo, hi))
+    bounds.sort(key=lambda b: b[0][6])
+    days = [(date(2024, 1, n) - date(1970, 1, 1)).days for n in (3, 5, 9)]
+    for (lo, hi), n in zip(bounds, days):
+        assert lo.pop(6) == hi.pop(6) == struct.pack("<i", n).hex()
+    assert bounds == [
+        ({1: "01000000", 2: "0a00000000000000", 3: "00000000000004c0",
+          4: "61", 5: "00", 7: "0000003f"},
+         {1: "02000000", 2: "1400000000000000", 3: "000000000000f83f",
+          4: "63", 5: "01", 7: "0000003f"}),
+        ({1: "03000000", 2: "1e00000000000000", 3: "0000000000000c40",
+          4: "64", 5: "01"},
+         {1: "04000000", 2: "2800000000000000", 3: "0000000000001240",
+          4: "65", 5: "01"}),
+        ({1: "05000000", 2: "3200000000000000", 3: "000000000000e03f",
+          4: "62", 5: "00", 7: "000080bf"},
+         {1: "06000000", 2: "3c00000000000000", 3: "0000000000001640",
+          4: "66", 5: "00", 7: "00002040"}),
+    ]
+
+
+def test_add_matches_reads_protocol_date_strings():
+    """A foreign table's date stats are YYYY-MM-DD strings: a date
+    predicate prunes on them instead of raising on str-vs-date, and a
+    value that does not compare with the bounds never prunes."""
+    from datetime import date, datetime
+
+    from nyc_taxi_data_warehouse_spark.sources.pruning import range_may_match
+
+    add = {"stats": json.dumps({
+        "numRecords": 3,
+        "minValues": {"dt": "2024-01-01"},
+        "maxValues": {"dt": "2024-01-03"},
+    })}
+    assert not D._add_matches(add, [("dt", "=", date(2024, 1, 5))])
+    assert D._add_matches(add, [("dt", "=", date(2024, 1, 2))])
+    assert not D._add_matches(add, [("dt", "<", date(2024, 1, 1))])
+    lo, hi = date(2024, 1, 1), date(2024, 1, 3)
+    assert range_may_match(lo, hi, "=", "2024-01-05")
+    assert range_may_match(lo, hi, ">=", datetime(2024, 1, 5))

@@ -182,43 +182,90 @@ def test_atomic_overwrite_crash_between_renames_recovers(spark, tmp_path):
     assert _ids(spark, path2) == list(range(4))
 
 
-# --- writer lease (concurrent-writer safety) --------------------------------
+def test_atomic_overwrite_repairs_interrupted_swap_before_writing(spark, tmp_path):
+    """A writer crashed between live->gc and stage->live. The next writer
+    repairs the swap under its lock before staging its own image: a
+    merge batch keeps the 9 committed rows instead of writing a new table
+    from the batch alone, and a failing overwrite leaves the promoted
+    image in place instead of no table at all."""
+    import os
+
+    import pytest
+
+    from nyc_taxi_data_warehouse_spark.sources import sinks as S
+    from nyc_taxi_data_warehouse_spark.streaming.merge_sink import (
+        foreach_batch_merge,
+    )
+
+    def crash_between_renames(path):
+        spark.range(5).write.parquet(path)
+        spark.range(9).write.parquet(path + S._STAGE_SUFFIX)  # complete stage
+        os.rename(path, path + S._GC_SUFFIX)
+
+    path = str(tmp_path / "fact")
+    crash_between_renames(path)
+    upsert = foreach_batch_merge(path, ["id"])
+    upsert(spark.createDataFrame([(100,)], "id long"), 0)
+    upsert(spark.createDataFrame([(101,)], "id long"), 1)
+    assert _ids(spark, path) == list(range(9)) + [100, 101]
+    assert S.recover_atomic_overwrite(path) == "noop"
+
+    @F.udf("long")
+    def boom(x):
+        raise ValueError("injected mid-write failure")
+
+    path2 = str(tmp_path / "fact2")
+    crash_between_renames(path2)
+    with pytest.raises(Exception):
+        S.atomic_overwrite(spark.range(3).select(boom("id").alias("id")), path2)
+    assert _ids(spark, path2) == list(range(9))
+
+
+# --- writer lock (concurrent-writer safety) ---------------------------------
 
 def test_racing_writers_one_fails_cleanly_no_data_lost(spark, tmp_path):
-    """Two writers race the same table: exactly one commits, the loser
-    raises LeaseHeldError BEFORE touching anything, and the final table is
-    exactly the winner's image (no interleaved-rename data loss)."""
-    import pytest
+    """Two writers race the same table: the one that finds the lock held
+    raises LeaseHeldError BEFORE touching anything — a rival thread of the
+    same process included — and commits once the holder lets go."""
+    import os
+    import threading
 
     from nyc_taxi_data_warehouse_spark.sources import sinks as S
 
     path = str(tmp_path / "fact")
     spark.range(5).write.parquet(path)
 
-    # writer A holds the lease (simulating an in-flight stage write)
-    a = S.WriterLease(path, owner="writer-a").acquire()
-    with pytest.raises(S.LeaseHeldError):
-        S.atomic_overwrite(spark.range(100).toDF("id"), path)
-    # loser left no stage/gc litter and the table is untouched
-    import os
-    assert not os.path.exists(path + S._STAGE_SUFFIX)
-    assert _ids(spark, path) == list(range(5))
+    outcome = []
 
-    # writer A commits under its lease and releases
-    S.atomic_overwrite(spark.range(9).toDF("id"), path, lease_ttl=None)
-    a.release()
-    assert not os.path.exists(path + S._LEASE_SUFFIX)
+    def rival():
+        try:
+            S.atomic_overwrite(spark.range(100).toDF("id"), path)
+            outcome.append("committed")
+        except S.LeaseHeldError:
+            outcome.append("refused")
+
+    with S.writer_lock(path):  # writer A, mid-swap
+        t = threading.Thread(target=rival)
+        t.start()
+        t.join(timeout=60)
+        assert not t.is_alive()
+        # loser left no stage/gc litter and the table is untouched
+        assert outcome == ["refused"]
+        assert not os.path.exists(path + S._STAGE_SUFFIX)
+        assert _ids(spark, path) == list(range(5))
 
     # the previously-blocked writer now succeeds
     S.atomic_overwrite(spark.range(3).toDF("id"), path)
     assert _ids(spark, path) == list(range(3))
 
 
-def test_stale_lease_takeover_after_crash(spark, tmp_path):
-    """A writer that died holding the lease (crash-injection: lock file
-    left behind, expired TTL) must not wedge the table forever: the next
-    writer takes the lease over and commits."""
-    import time
+def test_killed_holder_releases_lock_at_once(spark, tmp_path):
+    """A writer process SIGKILLed while holding the lock never wedges the
+    table: the kernel drops its lock with the process, so the next writer
+    commits right after the kill, with no timeout to wait out."""
+    import os
+    import subprocess
+    import sys
 
     import pytest
 
@@ -226,39 +273,59 @@ def test_stale_lease_takeover_after_crash(spark, tmp_path):
 
     path = str(tmp_path / "fact")
     spark.range(5).write.parquet(path)
-    dead = S.WriterLease(path, owner="crashed", ttl_seconds=0.2).acquire()
-    # lease still live: writer blocked
-    with pytest.raises(S.LeaseHeldError):
-        S.atomic_overwrite(spark.range(7).toDF("id"), path)
-    time.sleep(0.3)  # TTL expires; 'dead' never releases
+    holder = subprocess.Popen(
+        [
+            sys.executable,
+            "-c",
+            "import sys\n"
+            "from nyc_taxi_data_warehouse_spark.sources.sinks import writer_lock\n"
+            "with writer_lock(sys.argv[1]):\n"
+            "    print('locked', flush=True)\n"
+            "    sys.stdin.read()\n",
+            path,
+        ],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        stdin=subprocess.PIPE,
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+    try:
+        assert holder.stdout.readline().strip() == "locked"
+        with pytest.raises(S.LeaseHeldError):
+            S.atomic_overwrite(spark.range(7).toDF("id"), path)
+        assert _ids(spark, path) == list(range(5))
+    finally:
+        holder.kill()
+        holder.wait()
     S.atomic_overwrite(spark.range(7).toDF("id"), path)
     assert _ids(spark, path) == list(range(7))
-    # the dead writer's release must NOT remove the new holder's lease
-    live = S.WriterLease(path, owner="writer-b").acquire()
-    dead.release()
-    assert S.WriterLease(path)._read()["token"] == live.token
-    live.release()
 
 
 def test_corrupt_empty_lease_file_is_taken_over_not_spun_on(tmp_path):
-    """A zero-byte/garbage lease file (crashed writer under the OLD
-    non-atomic protocol, or manual tampering) must not wedge acquisition:
-    it is treated as expired and broken via the serialized takeover."""
+    """A lock file with any content — a leftover of the old lease-file
+    protocol, or manual tampering — never wedges the table: only the
+    kernel lock counts, and the file is kept after release."""
+    import os
+
+    import pytest
+
     from nyc_taxi_data_warehouse_spark.sources import sinks as S
 
     path = str(tmp_path / "t")
     with open(path + S._LEASE_SUFFIX, "w") as f:
-        f.write("")  # present but unparseable
-    lease = S.WriterLease(path, owner="w").acquire()  # must not spin
-    assert S.WriterLease(path)._read()["token"] == lease.token
-    lease.release()
-    import os
-    assert not os.path.exists(path + S._LEASE_SUFFIX)
+        f.write('{"token": "garbage", "expires_at": 1e18')  # unparseable
+    with S.writer_lock(path):  # must not spin
+        with pytest.raises(S.LeaseHeldError):
+            with S.writer_lock(path):
+                pass
+    assert os.path.exists(path + S._LEASE_SUFFIX)
+    with S.writer_lock(path):  # free again
+        pass
 
 
 def test_recovery_refuses_while_writer_lease_live(spark, tmp_path):
     """recover_atomic_overwrite must not judge a LIVE writer's in-flight
-    stage/gc images: it takes the same lease and raises while held."""
+    stage/gc images: it takes the same lock and raises while held."""
     import os
 
     import pytest
@@ -269,47 +336,55 @@ def test_recovery_refuses_while_writer_lease_live(spark, tmp_path):
     spark.range(5).write.parquet(path)
     spark.range(9).write.parquet(path + S._STAGE_SUFFIX)
     os.rename(path, path + S._GC_SUFFIX)  # writer is mid-swap...
-    holder = S.WriterLease(path, owner="live-writer").acquire()
-    with pytest.raises(S.LeaseHeldError):
-        S.recover_atomic_overwrite(path)
-    holder.release()
+    with S.writer_lock(path):
+        with pytest.raises(S.LeaseHeldError):
+            S.recover_atomic_overwrite(path)
+        assert os.path.exists(path + S._STAGE_SUFFIX)  # nothing judged
     assert S.recover_atomic_overwrite(path) == "promoted-stage"
     assert _ids(spark, path) == list(range(9))
 
 
 def test_lease_takeover_single_winner_under_contention(tmp_path):
-    """N threads race to break one stale lease: exactly one acquires at a
-    time, and every writer eventually gets a turn (no lost wakeups, no
-    double-holds)."""
+    """N threads race for one lock: at most one holds it at a time, and
+    every writer eventually gets a turn (no lost wakeups, no double-holds)."""
+    import sys
     import threading
     import time
 
     from nyc_taxi_data_warehouse_spark.sources import sinks as S
 
     path = str(tmp_path / "t")
-    S.WriterLease(path, owner="stale", ttl_seconds=0.0).acquire()  # dead
-
-    holders = []
+    holders, active, peak = [], [0], [0]
     lock = threading.Lock()
 
     def contend(i):
         while True:
             try:
-                lease = S.WriterLease(path, owner=f"w{i}", ttl_seconds=30).acquire()
-                break
+                with S.writer_lock(path):
+                    with lock:
+                        active[0] += 1
+                        peak[0] = max(peak[0], active[0])
+                        holders.append(i)
+                    time.sleep(0.01)
+                    with lock:
+                        active[0] -= 1
+                return
             except S.LeaseHeldError:
                 time.sleep(0.01)
-        with lock:
-            holders.append(i)
-        time.sleep(0.01)
-        lease.release()
 
     threads = [threading.Thread(target=contend, args=(i,)) for i in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(timeout=30)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads as often as possible
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
     assert sorted(holders) == list(range(8))
+    assert peak[0] == 1
 
 
 def test_schema_evolution_read_unions_old_and_new_files(spark, tmp_path):
@@ -336,134 +411,3 @@ def test_schema_evolution_read_unions_old_and_new_files(spark, tmp_path):
     # plain read of a single old file must NOT see the new column
     n_null = got.where(F.col("quality").isNull()).count()
     assert n_null == 2
-
-
-# --- lease renew / heartbeat (usurpation detection) --------------------------
-
-def test_lease_renew_extends_ttl_and_detects_usurpation(tmp_path):
-    """renew() pushes expires_at out while the lease is ours, and raises
-    LeaseHeldError once the lease carries someone else's token."""
-    import time
-
-    import pytest
-
-    from nyc_taxi_data_warehouse_spark.sources import sinks as S
-
-    path = str(tmp_path / "t")
-    a = S.WriterLease(path, owner="a", ttl_seconds=0.4).acquire()
-    time.sleep(0.25)
-    a.renew()  # still ours: extends
-    time.sleep(0.25)  # 0.5s since acquire — past the ORIGINAL expiry
-    with pytest.raises(S.LeaseHeldError):
-        S.WriterLease(path, owner="b", ttl_seconds=0.4).acquire()
-
-    time.sleep(0.5)  # now the renewed TTL lapses too
-    b = S.WriterLease(path, owner="b", ttl_seconds=30).acquire()  # takeover
-    with pytest.raises(S.LeaseHeldError):
-        a.renew()  # usurped: must refuse, and must NOT touch b's lease
-    assert S.WriterLease(path)._read()["token"] == b.token
-    a.release()  # no-op on b's lease either
-    assert S.WriterLease(path)._read()["token"] == b.token
-    b.release()
-
-
-def test_atomic_overwrite_aborts_if_lease_stolen_mid_write(spark, tmp_path):
-    """The pre-rename re-verify: if the lease stops being ours during the
-    stage write (here: forcibly stolen), atomic_overwrite must raise
-    LeaseHeldError and leave the live table untouched — never interleave
-    its renames with the new holder's."""
-    import os
-    import threading
-    import time
-
-    import pytest
-
-    from nyc_taxi_data_warehouse_spark.sources import sinks as S
-
-    path = str(tmp_path / "fact")
-    spark.range(5).write.parquet(path)
-
-    def steal():
-        time.sleep(1.0)  # mid-stage-write
-        os.unlink(path + S._LEASE_SUFFIX)  # simulate operator tampering
-        S.WriterLease(path, owner="rival", ttl_seconds=600).acquire()
-
-    @F.udf("long")
-    def slow(x):
-        time.sleep(3.0)
-        return x
-
-    thief = threading.Thread(target=steal)
-    thief.start()
-    with pytest.raises(S.LeaseHeldError):
-        S.atomic_overwrite(
-            spark.range(3).select(slow("id").alias("id")), path, lease_ttl=600.0
-        )
-    thief.join()
-    assert _ids(spark, path) == list(range(5))  # live table untouched
-
-
-def test_heartbeat_keeps_slow_write_alive_past_ttl(spark, tmp_path):
-    """A stage write LONGER than the lease TTL: the heartbeat renews the
-    lease, so a rival probing after the original TTL stays blocked and the
-    slow writer commits — the silent-takeover window is closed."""
-    import threading
-    import time
-
-    from nyc_taxi_data_warehouse_spark.sources import sinks as S
-
-    path = str(tmp_path / "fact")
-    spark.range(5).write.parquet(path)
-    rival_outcome = []
-
-    def rival():
-        time.sleep(1.5)  # well past the 1.0s TTL, write still running
-        try:
-            S.WriterLease(path, owner="rival", ttl_seconds=30).acquire()
-            rival_outcome.append("acquired")
-        except S.LeaseHeldError:
-            rival_outcome.append("blocked")
-
-    @F.udf("long")
-    def slow(x):
-        time.sleep(3.0)
-        return x
-
-    t = threading.Thread(target=rival)
-    t.start()
-    S.atomic_overwrite(
-        spark.range(9).select(slow("id").alias("id")), path, lease_ttl=1.0
-    )
-    t.join()
-    assert rival_outcome == ["blocked"]
-    assert _ids(spark, path) == list(range(9))
-
-
-def test_breaker_unlink_spares_rival_after_expiry_takeover(tmp_path):
-    """If the breaker holder stalls past the breaker TTL and a rival breaks
-    and re-creates it, the stalled holder's cleanup must NOT unlink the
-    rival's live breaker (token-guarded unlink)."""
-    import json
-    import os
-    import time
-
-    from nyc_taxi_data_warehouse_spark.sources import sinks as S
-
-    path = str(tmp_path / "t")
-    lease = S.WriterLease(path, owner="w")
-    breaker = lease.lock_path + ".breaker"
-
-    def stall_and_get_replaced():
-        # simulate: our breaker expired and a rival replaced it while we ran
-        os.unlink(breaker)
-        with open(breaker, "w") as f:
-            json.dump(
-                {"owner": "rival", "token": "rival-token",
-                 "expires_at": time.time() + 30.0},
-                f,
-            )
-
-    lease._with_breaker(stall_and_get_replaced)
-    with open(breaker) as f:
-        assert json.load(f)["token"] == "rival-token"  # rival survived
-    os.unlink(breaker)
