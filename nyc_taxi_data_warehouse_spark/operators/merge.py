@@ -45,9 +45,13 @@ def merge_into_path(
     corrupts the live table and concurrent readers see old-or-new, never a
     partial state. The swap holds the table's kernel writer lock
     (:func:`..sources.sinks.writer_lock`): a concurrent writer raises
-    ``LeaseHeldError`` before writing anything."""
-    from ..sources.sinks import atomic_overwrite
+    ``LeaseHeldError`` before writing anything. A swap a crashed writer
+    left half done is repaired first (``recover_atomic_overwrite``), so
+    the MERGE reads the committed image; with no image at all it raises
+    ``FileNotFoundError``."""
+    from ..sources.sinks import atomic_overwrite, recover_atomic_overwrite
 
+    recover_atomic_overwrite(path)
     target = spark.read.parquet(path)
     atomic_overwrite(merge_insert_only(target, staging, key), path)
 

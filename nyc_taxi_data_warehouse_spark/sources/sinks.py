@@ -86,7 +86,7 @@ def compact(spark, path: str, target_files: int) -> int:
     readers never observe a missing or partial table and a mid-rewrite crash
     is recoverable. Returns the resulting file count."""
     df = spark.read.parquet(path).repartition(target_files)
-    atomic_overwrite(df, path.rstrip("/"))
+    atomic_overwrite(df, path)
     return len(spark.read.parquet(path).inputFiles())
 
 
@@ -180,7 +180,11 @@ def atomic_overwrite(df: DataFrame, path: str) -> None:
     concurrent writer raises :class:`LeaseHeldError` before writing
     anything, so racing jobs can never interleave their renames and
     last-rename-wins data loss cannot occur.
+
+    A trailing ``/`` on ``path`` is dropped, so the stage, gc and lock
+    files are siblings of the table, never entries inside it.
     """
+    path = path.rstrip("/")
     with writer_lock(path):
         stage, gc = path + _STAGE_SUFFIX, path + _GC_SUFFIX
         try:
@@ -211,7 +215,9 @@ def recover_atomic_overwrite(path: str) -> str:
     Recovery takes the same :func:`writer_lock` as the writer: repairing
     while a live writer is mid-swap would wrongly judge its in-flight
     stage/gc images, so a held lock raises :class:`LeaseHeldError` — retry
-    after the writer finishes (or dies, which frees the lock at once)."""
+    after the writer finishes (or dies, which frees the lock at once).
+    A trailing ``/`` on ``path`` is dropped, as in :func:`atomic_overwrite`."""
+    path = path.rstrip("/")
     with writer_lock(path):
         return _recover(path)
 

@@ -127,6 +127,15 @@ def test_repeat_run_compiles_nothing(spark, sf_dir):
     assert (rec["build_compiles"], rec["exec_compiles"]) == (0, 0)
 
 
+def test_phases_report_jit_time(spark, sf_dir):
+    """Each phase reports the JIT compile milliseconds it spent; the
+    counter only grows, so both fields are present and never negative."""
+    import __spark_entry__ as entry_mod
+
+    rec = sp.time_query(spark, entry_mod.queries()["q_tpch_q1"], sf_dir)
+    assert rec["build_jit_ms"] >= 0 and rec["exec_jit_ms"] >= 0
+
+
 @pytest.mark.parametrize(
     "path", sorted(glob.glob(os.path.join(TOOLS, "*.py"))), ids=os.path.basename
 )

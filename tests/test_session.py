@@ -1,5 +1,6 @@
-"""Session defaults derive from the host unless the env overrides them, and
-a session keeps the code it generated compiled."""
+"""Session defaults derive from the host unless the env overrides them, a
+session keeps the code it generated compiled, and its JVM runs with the
+engine's JIT thresholds."""
 
 from __future__ import annotations
 
@@ -86,3 +87,18 @@ def test_load_tables_keeps_the_callers_conf(spark, sf_dir):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
+
+
+def test_session_jvm_runs_with_the_jit_options(spark):
+    """get_spark starts the JVM with JIT_OPTIONS: each C2 threshold the
+    running JVM reports equals the value the constant passes."""
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    want = dict(
+        opt.removeprefix("-XX:").split("=") for opt in session.JIT_OPTIONS.split()
+    )
+    assert len(want) == 4
+    assert {k: bean.getVMOption(k).getValue() for k in want} == want
+    assert session.jit_compile_ms(spark) > 0

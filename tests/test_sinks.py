@@ -221,6 +221,41 @@ def test_atomic_overwrite_repairs_interrupted_swap_before_writing(spark, tmp_pat
     assert _ids(spark, path2) == list(range(9))
 
 
+def test_merge_into_path_repairs_a_half_swapped_table(spark, tmp_path):
+    """A crash between live->gc and stage->live leaves no live directory;
+    the MERGE repairs the swap before reading the table, so it merges into
+    the 9 committed stage rows instead of failing with PATH_NOT_FOUND."""
+    import os
+
+    from nyc_taxi_data_warehouse_spark.operators.merge import merge_into_path
+
+    path = str(tmp_path / "fact")
+    spark.range(5).write.parquet(path)
+    spark.range(9).write.parquet(path + sinks._STAGE_SUFFIX)  # complete stage
+    os.rename(path, path + sinks._GC_SUFFIX)
+    merge_into_path(spark, path, spark.range(100, 101), ["id"])
+    assert _ids(spark, path) == list(range(9)) + [100]
+    assert not os.path.exists(path + sinks._GC_SUFFIX)
+
+
+def test_merge_into_path_with_trailing_slash_swaps_beside_the_table(
+    spark, tmp_path
+):
+    """``path + "/"`` names the same table: the swap's stage, gc and lock
+    files are its siblings, and none is left inside the live directory."""
+    import os
+
+    from nyc_taxi_data_warehouse_spark.operators.merge import merge_into_path
+
+    path = str(tmp_path / "fact")
+    spark.range(5).write.parquet(path)
+    merge_into_path(spark, path + "/", spark.range(3, 8), ["id"])
+    assert _ids(spark, path) == list(range(8))
+    assert not [n for n in os.listdir(path) if n.startswith(".__")]
+    assert not os.path.exists(path + sinks._STAGE_SUFFIX)
+    assert os.path.exists(path + sinks._LEASE_SUFFIX)
+
+
 # --- writer lock (concurrent-writer safety) ---------------------------------
 
 def test_racing_writers_one_fails_cleanly_no_data_lost(spark, tmp_path):

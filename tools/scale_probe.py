@@ -16,7 +16,11 @@ so every number is a number for the plan that ships.  Per run it reports
 - ``build_compiles`` / ``exec_compiles``: the generated classes each
   phase compiled (the JVM's codegen compile count before and after).  A
   repeat run of a query whose classes are still in the codegen cache
-  reports 0.
+  reports 0;
+- ``build_jit_ms`` / ``exec_jit_ms``: the milliseconds the JVM's JIT
+  compilers spent during each phase (``CompilationMXBean`` total before
+  and after; compiler threads run beside the query, so this is
+  compiler-thread time the phase paid, not wall it waited).
 
 Before timing a multiple it makes one untimed warm call there, so the
 per-sf_dir ``session_memo`` entries (``load_tables`` handles,
@@ -72,7 +76,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 import __spark_entry__ as entry_mod
-from nyc_taxi_data_warehouse_spark.session import codegen_compiles, get_spark
+from nyc_taxi_data_warehouse_spark.session import (
+    codegen_compiles,
+    get_spark,
+    jit_compile_ms,
+)
 
 DIMENSIONS = ("region", "nation", "customer", "supplier", "part")
 FACTS = ("orders", "lineitem", "documents", "embeddings", "events")
@@ -178,14 +186,14 @@ class _StreamRuns(StreamingQueryListener):
 
 def _phase(spark: SparkSession, fn):
     """Run ``fn`` under a fresh job group: (result, seconds, jobs, stages,
-    stream jobs, compiles), counting the micro-batch jobs of streams it
-    starts."""
+    stream jobs, compiles, JIT ms), counting the micro-batch jobs of
+    streams it starts."""
     sc = spark.sparkContext
     group = f"scale_probe_{uuid.uuid4().hex}"
     streams = _StreamRuns()
     spark.streams.addListener(streams)
     sc.setJobGroup(group, group)
-    c0 = codegen_compiles(spark)
+    c0, jit0 = codegen_compiles(spark), jit_compile_ms(spark)
     try:
         t0 = time.perf_counter()
         out = fn()
@@ -194,19 +202,20 @@ def _phase(spark: SparkSession, fn):
         spark.streams.removeListener(streams)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     compiles = codegen_compiles(spark) - c0
+    jit_ms = jit_compile_ms(spark) - jit0
     tracker = sc.statusTracker()
     stream_jobs = [j for r in streams.run_ids for j in tracker.getJobIdsForGroup(r)]
     jobs = (tracker.getJobIdsForGroup(group) or []) + stream_jobs
     infos = [tracker.getJobInfo(j) for j in jobs]
     stages = sum(len(i.stageIds) for i in infos if i is not None)
-    return out, dt, len(jobs), stages, len(stream_jobs), compiles
+    return out, dt, len(jobs), stages, len(stream_jobs), compiles, jit_ms
 
 
 def time_query(spark: SparkSession, fn, sf_dir: str) -> dict:
     """One build + noop-execute of a registry callable, then cache clear
     and GC on both sides so runs start from the same state."""
-    df, build_s, bj, bs, b_stream, bc = _phase(spark, lambda: fn(spark, sf_dir))
-    _, exec_s, xj, xs, x_stream, xc = _phase(
+    df, build_s, bj, bs, b_stream, bc, bjit = _phase(spark, lambda: fn(spark, sf_dir))
+    _, exec_s, xj, xs, x_stream, xc, xjit = _phase(
         spark, lambda: df.write.mode("overwrite").format("noop").save()
     )
     spark.catalog.clearCache()
@@ -222,6 +231,8 @@ def time_query(spark: SparkSession, fn, sf_dir: str) -> dict:
         "stages": bs + xs,
         "build_compiles": bc,
         "exec_compiles": xc,
+        "build_jit_ms": bjit,
+        "exec_jit_ms": xjit,
     }
 
 
