@@ -40,6 +40,8 @@ def entry(spark: SparkSession) -> DataFrame:
 #      so the stalest evidence is refreshed first and a new query (no row,
 #      round 0) lands in the window without an edit.
 _PRIORITY = [
+    # signature store moved onto the Delta writer
+    "q_neardup_store_roundtrip", "q_store_time_travel",
     # connected-components materialization now always localCheckpoint
     "q_dedup_cluster", "q_cluster_split",
     # memory-sink drains moved onto weather_stream.drain_available_now

@@ -1054,25 +1054,26 @@ def neardup_store_ingest(
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
 ) -> tuple[DataFrame, int]:
     """The LAKE-TABLE generation of :func:`incremental_neardup`: the
-    signature store lives as a versioned :class:`~..sources.manifest.
-    ManifestTable` at ``path``.  The FIRST ingest initializes the store
-    with the batch's own signatures (every doc reports 'new'); each later
-    ingest dedups the batch against the CURRENT committed snapshot and
-    APPENDS only the accepted docs' signature records — an append-only
-    commit (never a store rewrite), safe under the manifest's
-    optimistic-commit protocol, and the relational anti-join inside the
-    decide step is what keeps the append insert-only.  Returns
-    ``(report, committed_version)``.  Re-ingesting a batch appends an
-    empty record set (every doc reports exact_dup) — idempotent by
-    content.  This is the production shape: a daily 100 TB ingest reads
-    kilobyte-scale signatures of history, never history's text, and
-    grows the store by exactly the accepted delta."""
-    from ..sources.manifest import ManifestTable
+    signature store is a Delta table at ``path``, written by
+    :func:`~..sources.delta_read.write_delta` and read back by
+    :func:`~..sources.delta_read.read_delta`.  The FIRST ingest
+    initializes the store with the batch's own signatures (every doc
+    reports 'new'); each later ingest dedups the batch against the
+    CURRENT committed snapshot and APPENDS only the accepted docs'
+    signature records — an append-only commit (never a store rewrite),
+    safe under the Delta log's put-if-absent optimistic-commit rule, and
+    the relational anti-join inside the decide step is what keeps the
+    append insert-only.  Returns ``(report, committed_version)``;
+    versions start at 0.  Re-ingesting a batch appends an empty record
+    set (every doc reports exact_dup) — idempotent by content.  This is
+    the production shape: a daily 100 TB ingest reads kilobyte-scale
+    signatures of history, never history's text, and grows the store by
+    exactly the accepted delta."""
+    from ..sources.delta_read import latest_delta_version, read_delta, write_delta
 
-    tbl = ManifestTable(path)
-    if tbl.latest_version() < 0:
+    if latest_delta_version(path) < 0:
         brec = signature_records(batch, id_col, text_col, num_hashes)
-        ver = tbl.append(brec)
+        ver = write_delta(brec, path)
         report = brec.select(
             F.col(id_col),
             "content_hash",
@@ -1081,7 +1082,7 @@ def neardup_store_ingest(
             F.lit("new").alias("decision"),
         )
         return report, ver
-    store = tbl.read(spark)
+    store = read_delta(spark, path)
     report, brec, scache = _incremental_report(
         batch, store, id_col, text_col, num_hashes, max_bucket
     )
@@ -1091,7 +1092,7 @@ def neardup_store_ingest(
     # without making the returned report recompute its joins.
     report = report.persist()
     accepted = report.where(F.col("decision") == "new").select(id_col)
-    ver = tbl.append(brec.join(accepted, id_col))
+    ver = write_delta(brec.join(accepted, id_col), path)
     brec.unpersist()
     scache.unpersist()
     return report, ver
@@ -1139,14 +1140,15 @@ def bucketed_store_ingest(
     only remaining shuffles are output-sized (candidate-pair distinct).
     Appends preserve the layout — each accepted delta writes its own
     per-bucket files (append-only, no rewrite), which is exactly the
-    "free at write time" property the manifest store's probe documented;
+    "free at write time" property the versioned store's probe documented;
     fold the accumulating small files with
     :func:`bucketed_store_compact`.  Spark's bucket metadata lives in
-    the catalog, so this generation trades the ManifestTable's
-    time-travel for partitioning awareness — a lake format with both
-    (Delta/Iceberg) is the production synthesis; this container has
-    neither, so the two properties are demonstrated by the two
-    generations separately (same decide semantics, same oracle family).
+    the catalog, so this generation trades the Delta store's time travel
+    for partitioning awareness.  A lake format carrying both is the
+    production synthesis, but the engine's Delta and Iceberg writers
+    write unpartitioned tables with no bucket spec, so the two
+    properties are demonstrated by the two generations separately (same
+    decide semantics, same oracle family).
 
     Decision semantics are IDENTICAL to :func:`incremental_neardup`
     (exact leg wins ties, combined-occupancy hot-bucket cap, 'new' docs

@@ -377,10 +377,11 @@ def q_neardup_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`dedup.neardup_store_ingest`) — the artifact treatment the ANN index
     got in round 11 (`q_ann_index_persist`/`q_ann_index_append`), applied
     to the other half of the incremental-ingest story: generation 1
-    initializes the versioned ManifestTable store (v0), generation 2
+    initializes the Delta-table store (`write_delta`, v0), generation 2
     dedups against the LOADED v0 snapshot and commits the accepted
-    delta append-only (v1), generation 3 dedups against v2's merged
-    snapshot (v2 = v1 + nothing if gen 3 rejects everything).  Every
+    delta append-only (v1), generation 3 dedups against v1's merged
+    snapshot and commits v2 (an empty append if gen 3 rejects
+    everything).  Every
     ingest reads history's kilobyte-scale signatures from disk, never
     history's text — the reference's MERGE-idempotent ingest (S8,
     `dags/etl_spark_historical.py:349-380`) completed at the artifact
@@ -535,11 +536,14 @@ FROM rep3"""
 
 
 def _tt_store(spark: SparkSession, sf_dir: str) -> str:
-    """Two-generation ManifestTable store for the read-only time-travel
-    query, built once per (session, sf_dir) through ``session_memo`` —
-    unlike the roundtrip query, nothing mutates the store after v1, so
-    re-runs can (and should) reuse the committed artifact, and two
-    threads asking at once cannot both ingest into its fixed path."""
+    """Two-generation Delta-table signature store for the read-only
+    time-travel query, built once per (session, sf_dir) through
+    ``session_memo`` — unlike the roundtrip query, nothing mutates the
+    store after v1, so re-runs can (and should) reuse the committed
+    artifact, and two threads asking at once cannot both ingest into it.
+    Each build writes a fresh ``unique_name`` path: a new SparkContext in
+    the same process rebuilds, and ingesting into the previous session's
+    store would append both generations again as v2 and v3."""
     import hashlib as _h
     import os as _o
 
@@ -547,7 +551,7 @@ def _tt_store(spark: SparkSession, sf_dir: str) -> str:
 
     def build() -> str:
         tag = _h.md5(sf_dir.encode()).hexdigest()[:8]
-        path = _o.path.join(session_tmpdir("tt_store"), f"tt_{tag}")
+        path = _o.path.join(session_tmpdir("tt_store"), unique_name(f"tt_{tag}"))
         g1, g2, _g3 = _store_generations(spark, sf_dir)
         dedup.neardup_store_ingest(
             spark, path, g1, num_hashes=_NH, max_bucket=_MAX_BUCKET
@@ -562,20 +566,20 @@ def _tt_store(spark: SparkSession, sf_dir: str) -> str:
 
 def q_store_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time travel over the versioned signature store — the audit read
-    the ManifestTable's snapshot isolation exists for (the Delta/Iceberg
-    `VERSION AS OF` idiom, on the engine's own artifact): read v0 and v1
-    of the two-generation store and tag every CURRENT row with the FIRST
-    version that contains it (an anti-join of adjacent snapshots — the
-    commit provenance a compliance audit asks for: *when did this
-    signature enter the store?*).  Versions are immutable committed
-    manifests, so the query is read-only and re-runs reuse the artifact.
+    the Delta log's snapshot isolation exists for (`VERSION AS OF`, via
+    `read_delta(..., version=)`, on the engine's own artifact): read v0
+    and v1 of the two-generation store and tag every CURRENT row with the
+    FIRST version that contains it (an anti-join of adjacent snapshots —
+    the commit provenance a compliance audit asks for: *when did this
+    signature enter the store?*).  Versions are immutable Delta commits,
+    so the query is read-only and re-runs reuse the artifact.
     Oracle: gen-1 docs carry version 0; gen-2 docs ACCEPTED against the
     gen-1 store (the rep2 decision recompute) carry version 1."""
-    from .sources.manifest import ManifestTable
+    from .sources.delta_read import read_delta
 
-    tbl = ManifestTable(_tt_store(spark, sf_dir))
-    v0 = tbl.read(spark, version=0).select("doc_id", "content_hash")
-    v1 = tbl.read(spark, version=1).select("doc_id", "content_hash")
+    path = _tt_store(spark, sf_dir)
+    v0 = read_delta(spark, path, version=0).select("doc_id", "content_hash")
+    v1 = read_delta(spark, path, version=1).select("doc_id", "content_hash")
     delta = v1.join(v0.select("doc_id"), "doc_id", "left_anti")
     return v0.select(
         "doc_id", "content_hash", F.lit(0).cast("int").alias("first_version")
@@ -611,10 +615,10 @@ def q_neardup_store_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_round13.py pins the plan; the hot-bucket occupancy
     count is exchange-free on the store side too).  Same three
     generations and decide semantics as `q_neardup_store_roundtrip`
-    (which gates the VERSIONED manifest generation of the same store —
-    Delta/Iceberg would unify the two properties; this container has
-    neither).  Oracle: the two-level nested corpus recompute, minus the
-    version tags."""
+    (which gates the VERSIONED Delta-table generation of the same store;
+    the engine's lake writers keep no bucket spec, so no one table
+    carries both properties).  Oracle: the two-level nested corpus
+    recompute, minus the version tags."""
     import hashlib as _h
 
     g1, g2, g3 = _store_generations(spark, sf_dir)

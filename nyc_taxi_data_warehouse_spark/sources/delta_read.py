@@ -1,11 +1,13 @@
-"""Read-only Delta Lake table support — log replay per the public
-Delta transaction protocol (https://github.com/delta-io/delta/blob/master/PROTOCOL.md).
+"""Delta Lake table support — log replay per the public Delta
+transaction protocol (https://github.com/delta-io/delta/blob/master/PROTOCOL.md)
+and a minimal writer.
 
-The engine's own transactional formats are :mod:`.sinks`
-(rename-atomic filesystems) and :mod:`.manifest` (object stores); this
-module lets a user POINT the engine at an existing Delta table — the
-interop gap a warehouse migration actually hits — without requiring the
-delta-spark runtime jar:
+:mod:`.sinks` is the engine's rename-atomic table swap; this module is
+its versioned table format.  :func:`write_delta` commits through the
+:mod:`.manifest` primitives (the near-dup signature store is written
+this way), and :func:`read_delta` lets a user POINT the engine at an
+existing Delta table — the interop gap a warehouse migration actually
+hits — without requiring the delta-spark runtime jar:
 
 - a Delta table is a parquet directory plus ``_delta_log/`` holding one
   ``%020d.json`` per commit; each line of a commit is one ACTION object:
@@ -265,14 +267,17 @@ def _parquet_stats_json(fp: str) -> str:
 
 def write_delta(df: DataFrame, path: str, mode: str = "append") -> int:
     """Minimal protocol-conformant Delta writer (append / overwrite of an
-    unpartitioned table): immutable uniquely-named data batch + one
-    atomically-published commit JSON per version. Commits use the same
-    put-if-absent primitive as :class:`.manifest.ManifestTable` (Delta's
-    own commit rule — exactly one writer wins ``N.json``), with
-    optimistic retry recomputing the head (and, for overwrite, the remove
-    set) on conflict. Emits protocol 1/2 + metaData on the first commit,
-    so the table is readable by a real Delta runtime as well as
-    :func:`read_delta`. Returns the committed version."""
+    unpartitioned table): immutable uniquely-named data batch
+    (:func:`.manifest.write_batch`) + one atomically-published commit
+    JSON per version. Commits go through :func:`.manifest.commit_next`
+    (put-if-absent, Delta's own commit rule — exactly one writer wins
+    ``N.json``), whose optimistic retry recomputes the head (and, for
+    overwrite, the remove set) on conflict. Emits protocol 1/2 +
+    metaData on the first commit, so the table is readable by a real
+    Delta runtime as well as :func:`read_delta`. A batch written but
+    never committed stays invisible to readers. Returns the committed
+    version, starting at 0; ``dedup.neardup_store_ingest`` appends its
+    signature records through here."""
     import time
     import uuid
 

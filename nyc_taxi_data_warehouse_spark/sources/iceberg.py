@@ -545,7 +545,7 @@ def write_iceberg(
     manifest, a manifest list, and commits ``v{N}.metadata.json``
     put-if-absent — racing writers: exactly one wins, the loser raises
     FileExistsError and can retry on the new base (the same commit
-    primitive as the Delta writer and the manifest table).
+    primitive as the Delta writer).
 
     The base version is resolved ONCE (or pinned via ``base_version``)
     and the commit targets base+1, so a rival that commits base+1 first

@@ -156,6 +156,21 @@ def test_write_delta_concurrent_appends_both_land(spark, tmp_path):
     assert _ids(D.read_delta(spark, t)) == [0, 10, 11, 20, 21]
 
 
+def test_uncommitted_batch_is_invisible(spark, tmp_path):
+    """A writer that staged its batch but died before committing leaves
+    an orphan ``batch-<uuid>`` dir: no commit names it, so neither the
+    head nor a time-travel read returns its rows."""
+    from nyc_taxi_data_warehouse_spark.sources.manifest import write_batch
+
+    t = str(tmp_path / "orphan")
+    D.write_delta(spark.range(5).toDF("id"), t)
+    orphan = write_batch(spark.range(100, 110).toDF("id"), t)
+    assert orphan and all(os.path.exists(f) for f in orphan)
+    assert D.latest_delta_version(t) == 0
+    assert _ids(D.read_delta(spark, t)) == [0, 1, 2, 3, 4]
+    assert _ids(D.read_delta(spark, t, version=0)) == [0, 1, 2, 3, 4]
+
+
 def test_url_encoded_paths_resolve(spark, tmp_path):
     """Protocol: add/remove paths are URL-encoded relative paths — a
     partition dir with a space arrives as %20 and must decode before

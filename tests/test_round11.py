@@ -154,31 +154,51 @@ def test_stream_ingest_dedup_matches_batch(spark):
 
 def test_neardup_store_ingest_lifecycle(spark, corpus, tmp_path):
     """Three-generation lifecycle of the versioned signature store:
-    init ingest (all new, v1) -> second ingest (decisions; append-only
-    v2 grows by exactly the accepted delta) -> re-ingest (all rejected,
+    init ingest (all new, v0) -> second ingest (decisions; append-only
+    v1 grows by exactly the accepted delta) -> re-ingest (all rejected,
     store content unchanged)."""
+    from nyc_taxi_data_warehouse_spark.sources.delta_read import read_delta
+
     hist, batch = corpus
     path = str(tmp_path / "sig_store")
     r1, v1 = dedup.neardup_store_ingest(spark, path, hist)
-    assert v1 == 0  # ManifestTable versions start at 0
+    assert v1 == 0
     assert {r.decision for r in r1.collect()} == {"new"}
 
     r2, v2 = dedup.neardup_store_ingest(spark, path, batch)
     assert v2 == 1
     d = {r.doc_id: r.decision for r in r2.collect()}
     assert d == {4: "exact_dup", 5: "new", 6: "near_dup", 7: "new"}
-    from nyc_taxi_data_warehouse_spark.sources.manifest import ManifestTable
-
-    ids = {r.doc_id for r in ManifestTable(path).read(spark).collect()}
+    ids = {r.doc_id for r in read_delta(spark, path).collect()}
     assert ids == {1, 2, 3, 5, 7}  # history + accepted delta only
 
     r3, v3 = dedup.neardup_store_ingest(spark, path, batch)
     d3 = {r.doc_id: r.decision for r in r3.collect()}
     assert d3[4] == "exact_dup" and d3[5] == "exact_dup"
     assert d3[7] == "exact_dup" and d3[6] != "new"
-    ids3 = {r.doc_id for r in ManifestTable(path).read(spark).collect()}
+    ids3 = {r.doc_id for r in read_delta(spark, path).collect()}
     assert ids3 == ids  # empty append: content unchanged
     assert v3 == 2
+
+
+def test_tt_store_rebuild_writes_a_fresh_store(spark, sf_dir):
+    """A rebuild of the time-travel store (a new SparkContext in the same
+    process misses the memo) writes a fresh path: each store holds
+    exactly versions 0 and 1, never the previous store plus the two
+    generations appended again."""
+    import os
+
+    from nyc_taxi_data_warehouse_spark import queries_data, util
+    from nyc_taxi_data_warehouse_spark.sources.delta_read import _COMMIT_RE
+    from nyc_taxi_data_warehouse_spark.sources.manifest import list_versions
+
+    first = queries_data._tt_store(spark, sf_dir)
+    util._BUILDS.pop((spark.sparkContext.applicationId, "tt_store", sf_dir))
+    second = queries_data._tt_store(spark, sf_dir)
+    assert first != second
+    for path in (first, second):
+        log = os.path.join(path, "_delta_log")
+        assert list_versions(log, _COMMIT_RE) == [0, 1]
 
 
 # --- hypothesis properties for the round-11 operator cores -------------------

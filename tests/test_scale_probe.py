@@ -136,6 +136,16 @@ def test_phases_report_jit_time(spark, sf_dir):
     assert rec["build_jit_ms"] >= 0 and rec["exec_jit_ms"] >= 0
 
 
+def test_plan_writer_writes_a_formatted_plan(spark, tmp_path):
+    """``--plans`` writes the frame's formatted plan, making the tag dir."""
+    path = sp.write_plan(
+        spark.range(3).where("id > 0"), str(tmp_path / "tag" / "q_x_m1.txt")
+    )
+    with open(path) as f:
+        txt = f.read()
+    assert txt.startswith("== Physical Plan ==") and "Filter" in txt
+
+
 @pytest.mark.parametrize(
     "path", sorted(glob.glob(os.path.join(TOOLS, "*.py"))), ids=os.path.basename
 )

@@ -25,10 +25,13 @@ so every number is a number for the plan that ships.  Per run it reports
 Before timing a multiple it makes one untimed warm call there, so the
 per-sf_dir ``session_memo`` entries (``load_tables`` handles,
 ``stream_feed`` staging, the ANN/PQ indexes and stores) are equally warm
-at 1x and at 8x.  Between runs
+at 1x and at 8x.  With ``--plans=<tag>`` the warm call's frame also has
+its ``explain("formatted")`` plan written to
+``plans/<tag>/<query>_m<mult>.txt``.  Between runs
 the cache is cleared and both heaps are collected.
 
-Usage:  python tools/scale_probe.py [sf_dir] [--mults=1,4,8] [--runs=N] q_name ...
+Usage:  python tools/scale_probe.py [sf_dir] [--mults=1,4,8] [--runs=N]
+                                    [--plans=TAG] q_name ...
         (defaults: /root/testdata/sf0.1, --mults=1,4,8, --runs=3)
 
 Prints one ``PROBE`` JSON line per (query, multiple) as it finishes, then
@@ -211,10 +214,28 @@ def _phase(spark: SparkSession, fn):
     return out, dt, len(jobs), stages, len(stream_jobs), compiles, jit_ms
 
 
-def time_query(spark: SparkSession, fn, sf_dir: str) -> dict:
+def write_plan(df: DataFrame, path: str) -> str:
+    """Write ``df``'s ``explain("formatted")`` plan to ``path``, creating
+    its directory; returns ``path``."""
+    txt = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as f:
+        f.write(txt)
+    return path
+
+
+def time_query(
+    spark: SparkSession, fn, sf_dir: str, plan_path: str | None = None
+) -> dict:
     """One build + noop-execute of a registry callable, then cache clear
-    and GC on both sides so runs start from the same state."""
+    and GC on both sides so runs start from the same state. With
+    ``plan_path`` the built frame's plan is written there between the
+    two phases."""
     df, build_s, bj, bs, b_stream, bc, bjit = _phase(spark, lambda: fn(spark, sf_dir))
+    if plan_path:
+        write_plan(df, plan_path)
     _, exec_s, xj, xs, x_stream, xc, xjit = _phase(
         spark, lambda: df.write.mode("overwrite").format("noop").save()
     )
@@ -236,13 +257,18 @@ def time_query(spark: SparkSession, fn, sf_dir: str) -> dict:
     }
 
 
-def probe(spark: SparkSession, fn, dirs: dict[int, str], runs: int):
+def probe(
+    spark: SparkSession, fn, dirs: dict[int, str], runs: int,
+    plan_prefix: str | None = None,
+):
     """Yield ``(mult, record)`` per multiple: one warm call, then the
     medians of ``runs`` timed runs (and the raw run totals).  Last yields
-    ``("growth", ratios)``: last multiple over first, per phase."""
+    ``("growth", ratios)``: last multiple over first, per phase.  With
+    ``plan_prefix`` the warm call writes its plan to
+    ``<plan_prefix>_m<mult>.txt``."""
     report = {}
     for m, d in dirs.items():
-        time_query(spark, fn, d)
+        time_query(spark, fn, d, plan_prefix and f"{plan_prefix}_m{m}.txt")
         samples = [time_query(spark, fn, d) for _ in range(runs)]
         rec = {k: statistics.median(s[k] for s in samples) for k in samples[0]}
         rec["runs_total_s"] = [s["total_s"] for s in samples]
@@ -258,11 +284,14 @@ def probe(spark: SparkSession, fn, dirs: dict[int, str], runs: int):
 
 def main() -> None:
     sf_dir, mults, runs, names = "/root/testdata/sf0.1", (1, 4, 8), 3, []
+    plans = None
     for a in sys.argv[1:]:
         if a.startswith("--mults="):
             mults = tuple(sorted({int(x) for x in a.split("=", 1)[1].split(",")}))
         elif a.startswith("--runs="):
             runs = int(a.split("=", 1)[1])
+        elif a.startswith("--plans="):
+            plans = a.split("=", 1)[1]
         elif a.startswith("q_"):
             names.append(a)
         else:
@@ -271,7 +300,8 @@ def main() -> None:
     unknown = [n for n in names if n not in qs]
     if unknown or not names or runs < 1:
         raise SystemExit(
-            "usage: scale_probe.py [sf_dir] [--mults=1,4,8] [--runs=N] q_name ..."
+            "usage: scale_probe.py [sf_dir] [--mults=1,4,8] [--runs=N]"
+            " [--plans=TAG] q_name ..."
             + (f"\nunknown queries: {unknown}" if unknown else "")
         )
     spark = get_spark("scale_probe")
@@ -280,7 +310,8 @@ def main() -> None:
     summary: dict = {}
     for name in names:
         summary[name] = {}
-        for m, rec in probe(spark, qs[name], dirs, runs):
+        prefix = plans and os.path.join(REPO, "plans", plans, name)
+        for m, rec in probe(spark, qs[name], dirs, runs, prefix):
             summary[name][str(m)] = rec
             print("PROBE " + json.dumps({"query": name, "mult": m, **rec}), flush=True)
     print(json.dumps({
