@@ -40,6 +40,10 @@ def entry(spark: SparkSession) -> DataFrame:
 #      so the stalest evidence is refreshed first and a new query (no row,
 #      round 0) lands in the window without an edit.
 _PRIORITY = [
+    # both SCD2 strategies run on one merge core with presence markers
+    "q_scd2_check", "q_scd2_timestamp",
+    # Count-Min and Bloom slots come from one sketches.hash_slot
+    "q_countmin_topk", "q_bloom_portable", "q_cm_join_size",
     # signature store moved onto the Delta writer
     "q_neardup_store_roundtrip", "q_store_time_travel",
     # connected-components materialization now always localCheckpoint

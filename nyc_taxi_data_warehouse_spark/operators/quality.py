@@ -17,7 +17,6 @@ structured results.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from datetime import datetime, timedelta
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -29,9 +28,8 @@ VIOLATION_CAP = 1001
 @dataclass
 class CheckResult:
     name: str
-    status: str  # 'pass' | 'warn' | 'fail'
+    status: str  # 'pass' | 'fail'
     violations: int
-    detail: str = ""
 
 
 @dataclass(frozen=True, eq=False)
@@ -83,54 +81,12 @@ def accepted_range(
     return RowCheck(df, c.isNotNull() & cond)
 
 
-def freshness(
-    df: DataFrame,
-    ts_col: str,
-    warn_after: timedelta,
-    error_after: timedelta,
-    now: datetime | None = None,
-) -> CheckResult:
-    """Source-freshness SLA: age of max(ts) vs warn/error thresholds
-    (trips: warn 24h/error 48h; weather: warn 2h/error 4h). ``now=None``
-    evaluates against the wall clock (UTC, naive — matching the session's
-    UTC timestamps), which is the `dbt source freshness` operational mode;
-    pass a pinned instant for reproducible tests/oracles."""
-    if now is None:
-        # wall-clock mode compares EPOCH SECONDS, both sides engine-free
-        # of timezone rendering: collect() converts TimestampType via the
-        # driver's SYSTEM timezone (not the session's UTC), so naive
-        # datetime arithmetic against UTC now() mis-ages sources by the
-        # system-TZ offset on any non-UTC driver. unix_timestamp()
-        # evaluates under the session timezone and returns a TZ-free long.
-        import time
-
-        row = df.agg(
-            F.max(ts_col).alias("max_ts"),
-            F.unix_timestamp(F.max(ts_col)).alias("max_epoch"),
-        ).collect()[0]
-        age = (
-            None
-            if row.max_ts is None
-            else timedelta(seconds=time.time() - row.max_epoch)
-        )
-    else:
-        row = df.agg(F.max(ts_col).alias("max_ts")).collect()[0]
-        age = None if row.max_ts is None else now - row.max_ts
-    if age is None:
-        return CheckResult("freshness", "fail", 0, "source empty")
-    if age > error_after:
-        return CheckResult("freshness", "fail", 1, f"age={age}")
-    if age > warn_after:
-        return CheckResult("freshness", "warn", 1, f"age={age}")
-    return CheckResult("freshness", "pass", 0, f"age={age}")
-
-
 def freshness_report(
     sources: list[tuple[str, DataFrame, str, int, int]], as_of: str | None = None
 ) -> DataFrame:
-    """The dbt `source freshness` stage as one relational report — the
-    driver-free sibling of :func:`freshness`, so it can run inside the
-    oracle gate and on a schedule without collecting scalars.
+    """The dbt `source freshness` stage as one relational report, so it
+    can run inside the oracle gate and on a schedule without collecting
+    scalars.
 
     `sources` rows are (name, df, ts_col, warn_hours, error_hours); `as_of`
     is the injectable evaluation instant (reference SLAs: trips 24/48h,
@@ -161,7 +117,7 @@ def freshness_report(
                 # an EMPTY source (max(ts) NULL → age NULL) is the dead-feed
                 # condition the SLA exists to catch: every comparison with
                 # NULL is false, so without this branch it would fall through
-                # to 'pass' (the scalar freshness() already fails it)
+                # to 'pass'
                 F.when(F.col("latest_ts").isNull(), F.lit("fail"))
                 .when(F.col("age_hours") > err_h, F.lit("fail"))
                 .when(F.col("age_hours") > warn_h, F.lit("warn"))

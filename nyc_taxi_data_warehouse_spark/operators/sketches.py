@@ -43,6 +43,19 @@ def _h60(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("long")
 
 
+def hash_slot(j: Column, key: Column, n: int, hex_digits: int) -> Column:
+    """Slot of ``key`` under hash function ``j`` in a table of ``n`` slots:
+    ``pmod(conv(substr(md5(j || '#' || key), 1, hex_digits), 16, 10), n)``.
+    The one md5 hashing family of the Count-Min counters (8 hex digits)
+    and the Bloom bit tables (12); any SQL engine computes the same slot."""
+    return F.pmod(
+        F.conv(
+            F.substring(F.md5(F.concat_ws("#", j, key)), 1, hex_digits), 16, 10
+        ).cast("long"),
+        F.lit(n),
+    )
+
+
 # --- HyperLogLog -----------------------------------------------------------
 
 def hll_registers(
@@ -273,14 +286,7 @@ def cm_counters(
         F.col(cnt_col).cast("long").alias("__c"),
         F.explode(F.array(*[F.lit(j) for j in range(depth)])).alias("j"),
     )
-    slot = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat_ws("#", F.col("j"), F.col("__t"))), 1, 8),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(width),
-    )
+    slot = hash_slot(F.col("j"), F.col("__t"), width, 8)
     return (
         rows.select("j", slot.cast("int").alias("slot"), "__c")
         .groupBy("j", "slot")
@@ -339,14 +345,7 @@ def cm_lookup(
     expanded = probes.select(
         "*", F.explode(F.array(*[F.lit(j) for j in range(depth)])).alias("j")
     )
-    slot = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat_ws("#", F.col("j"), F.col(token_col))), 1, 8),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(width),
-    )
+    slot = hash_slot(F.col("j"), F.col(token_col), width, 8)
     # LEFT join + coalesce-to-0: a probe token never seen by the sketch
     # hashes into counters that were simply never materialised (the
     # counter table stores only non-zero slots), and Count-Min defines
@@ -383,14 +382,7 @@ def bloom_bits(
         F.col(key_col).cast("string").alias("__k"),
         F.explode(F.array(*[F.lit(j) for j in range(k_hashes)])).alias("j"),
     )
-    pos = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat_ws("#", F.col("j"), F.col("__k"))), 1, 12),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(m_bits),
-    )
+    pos = hash_slot(F.col("j"), F.col("__k"), m_bits, 12)
     return rows.select(pos.alias("bit")).distinct()
 
 
@@ -417,22 +409,7 @@ def bloom_probe(
     flags = []
     bit_tbl = bits.select("bit").distinct()
     for j in range(k_hashes):
-        pos_j = F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "#", F.lit(j), F.col(key_col).cast("string")
-                        )
-                    ),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(m_bits),
-        )
+        pos_j = hash_slot(F.lit(j), F.col(key_col).cast("string"), m_bits, 12)
         b = F.broadcast(
             bit_tbl.select(
                 F.col("bit").alias(f"__b{j}"), F.lit(1).alias(f"__s{j}")

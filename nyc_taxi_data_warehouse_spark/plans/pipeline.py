@@ -186,27 +186,20 @@ def run_snapshots(
         as_of=as_of,
         invalidate_hard_deletes=True,
     )
-    daily_src = run.mart_daily_metrics.select(
-        "trip_date",
+    daily_key = ["trip_date"]
+    daily_checks = [
         "trip_count",
         "total_revenue",
         "avg_fare",
         "avg_distance",
         "weekend_trip_count",
         "weekday_trip_count",
-    )
+    ]
     snp_daily = scd.snapshot_check(
         prev_daily_snap,
-        daily_src,
-        key=["trip_date"],
-        check_cols=[
-            "trip_count",
-            "total_revenue",
-            "avg_fare",
-            "avg_distance",
-            "weekend_trip_count",
-            "weekday_trip_count",
-        ],
+        run.mart_daily_metrics.select(*daily_key, *daily_checks),
+        key=daily_key,
+        check_cols=daily_checks,
         as_of=as_of,
     )
     return snp_weather, snp_daily
@@ -262,9 +255,11 @@ def persist_marts(run: ModelRun, base_path: str) -> None:
     run.mart_daily_metrics.write.mode("overwrite").parquet(
         f"{base_path}/mart_daily_metrics"
     )
-    run.mart_zone_analysis.write.mode("overwrite").parquet(
-        f"{base_path}/mart_zone_analysis"
-    )
+    # the mart is a join of two aggregates in no fixed order; sorting on
+    # its key makes the same rows write the same bytes on every run
+    run.mart_zone_analysis.sortWithinPartitions(
+        "pickup_zone_id", "dropoff_zone_id"
+    ).write.mode("overwrite").parquet(f"{base_path}/mart_zone_analysis")
     run.fare_daily_features.write.mode("overwrite").parquet(
         f"{base_path}/fare_daily_features"
     )

@@ -7784,6 +7784,7 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     structurally zero).  The oracle rebuilds bits + probes relationally
     from the batch events view: stream and batch bit tables must agree
     bit-for-bit."""
+    from .operators import sketches
     from .util import stream_feed
 
     m_bits, k_hashes = 1024, 3
@@ -7797,19 +7798,13 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same process (bench reruns) reuse the staged files
     stream = stream_feed(ev, "event_feed_bloom", sf_dir)
 
-    def _pos(jc, keyc):
-        return F.pmod(
-            F.conv(
-                F.substring(F.md5(F.concat_ws("#", jc, keyc)), 1, 12), 16, 10
-            ).cast("long"),
-            F.lit(m_bits),
-        )
-
     rows = stream.select(
         F.window("ts", "1 day").alias("win"),
         F.col("user_id").cast("string").alias("__k"),
         F.explode(F.array(*[F.lit(j) for j in range(k_hashes)])).alias("j"),
-    ).select("win", _pos(F.col("j"), F.col("__k")).alias("bit"))
+    ).select(
+        "win", sketches.hash_slot(F.col("j"), F.col("__k"), m_bits, 12).alias("bit")
+    )
     bits = rows.groupBy("win", "bit").agg(F.max(F.lit(1)).alias("__set"))
     sink = drain_available_now(bits, "q_stream_bloom_sink").select(
         F.col("win.start").alias("day"), "bit", "__set"
@@ -7831,7 +7826,9 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.array(*[F.lit(j) for j in range(k_hashes)])).alias("j"),
     ).select(
         "user_id",
-        _pos(F.col("j"), F.col("user_id").cast("string")).alias("bit"),
+        sketches.hash_slot(
+            F.col("j"), F.col("user_id").cast("string"), m_bits, 12
+        ).alias("bit"),
     )
     days = du.select("day").distinct()
     hit = (

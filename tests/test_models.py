@@ -102,6 +102,41 @@ def test_zone_analysis_having_floor(spark, trips):
     assert mza.where(~F.col("peak_hour").between(0, 23)).count() == 0
 
 
+def test_persisted_zone_mart_part_files_are_in_key_order(
+    spark, trips, weather, tmp_path
+):
+    """`persist_marts` sorts `mart_zone_analysis` on its key inside each
+    part file, so a run's bytes do not depend on the order its last stage
+    emits the rows in. The sf0.001 mart is empty (no zone pair reaches 10
+    trips), so the mart here is its schema over 20 rows in descending key
+    order."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    run = pipeline.run_models(trips, weather, run_quality=False, run_freshness=False)
+    schema = run.mart_zone_analysis.schema
+    rows = [
+        tuple(float(z) if f.dataType.typeName() == "double" else z for f in schema)
+        for z in range(20, 0, -1)
+    ]
+    zone = spark.createDataFrame(rows, schema).coalesce(1)
+    pipeline.persist_marts(
+        SimpleNamespace(
+            mart_trips_weather=run.mart_trips_weather,
+            mart_daily_metrics=run.mart_daily_metrics,
+            mart_zone_analysis=zone,
+            fare_daily_features=run.fare_daily_features,
+        ),
+        str(tmp_path),
+    )
+    parts = glob.glob(str(tmp_path / "mart_zone_analysis" / "part-*.parquet"))
+    assert len(parts) == 1
+    t = pq.read_table(parts[0], columns=["pickup_zone_id", "dropoff_zone_id"])
+    keys = list(zip(*(t.column(c).to_pylist() for c in t.column_names)))
+    assert keys == [(z, z) for z in range(1, 21)]
+
+
 def test_pipeline_run_models_quality_green(spark, trips, weather):
     run = pipeline.run_models(trips, weather, run_quality=True)
     failing = [r for r in run.quality_results if r.status == "fail"]

@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import re
-from datetime import datetime, timedelta
+from datetime import datetime
 
 import pandas as pd
 import pytest
@@ -86,14 +86,14 @@ def test_unique_skips_null_keys_on_one_column_only(spark):
 
 
 def test_freshness_sla(spark):
-    now = datetime(2024, 1, 2, 0, 0, 0)
-    df = spark.createDataFrame([(datetime(2024, 1, 1, 23, 0),)], "ts timestamp")
-    r = quality.freshness(df, "ts", timedelta(hours=2), timedelta(hours=4), now)
-    assert r.status == "pass"
-    r2 = quality.freshness(df, "ts", timedelta(minutes=30), timedelta(hours=4), now)
-    assert r2.status == "warn"
-    r3 = quality.freshness(df, "ts", timedelta(minutes=5), timedelta(minutes=30), now)
-    assert r3.status == "fail"
+    # the feed is 3 h old at the pinned instant
+    df = spark.createDataFrame([(datetime(2024, 1, 1, 21, 0),)], "ts timestamp")
+    report = quality.freshness_report(
+        [("pass", df, "ts", 4, 8), ("warn", df, "ts", 2, 4), ("fail", df, "ts", 1, 2)],
+        as_of="2024-01-02 00:00:00",
+    )
+    got = {r.source: (r.age_hours, r.status) for r in report.collect()}
+    assert got == {"pass": (3, "pass"), "warn": (3, "warn"), "fail": (3, "fail")}
 
 
 # --- dedup wave ------------------------------------------------------------

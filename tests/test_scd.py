@@ -91,3 +91,37 @@ def test_check_snapshot_idempotent_on_unchanged_batch(spark):
     s2 = scd.snapshot_check(s1, b, ["trip_date"], ["trip_count", "avg_fare"], as_of=T1)
     rows = s2.collect()
     assert len(rows) == 1 and rows[0].dbt_valid_from == T0
+
+
+def test_timestamp_snapshot_keeps_null_updated_at_row_open(spark):
+    # dbt compares `updated_at` with `>`, so a NULL never supersedes and
+    # the row stays one open version; presence must not be read off the
+    # NULL `updated_at` itself
+    src = _wrows(spark, [("NY", T0, 40.0, T0), ("BOS", T0, 35.0, None)])
+    key = ["city", "observed_at"]
+    snap1 = scd.snapshot_timestamp(None, src, key, "load_ts")
+    for hard_deletes in (False, True):
+        snap2 = scd.snapshot_timestamp(
+            snap1, src, key, "load_ts",
+            as_of=T2, invalidate_hard_deletes=hard_deletes,
+        )
+        rows = sorted(snap2.collect(), key=lambda r: r.city)
+        assert [(r.city, r.temp_f, r.load_ts, r.dbt_valid_to) for r in rows] == [
+            ("BOS", 35.0, None, None),
+            ("NY", 40.0, T0, None),
+        ], hard_deletes
+
+
+def test_check_snapshot_all_null_check_cols_stay_one_open_version(spark):
+    from datetime import date
+
+    d1 = date(2024, 1, 1)
+    b = spark.createDataFrame([(d1, None, None)], DSCHEMA)
+    checks = ["trip_count", "avg_fare"]
+    s1 = scd.snapshot_check(None, b, ["trip_date"], checks, as_of=T0)
+    s2 = scd.snapshot_check(s1, b, ["trip_date"], checks, as_of=T1)
+    rows = s2.collect()
+    assert len(rows) == 1
+    r = rows[0]
+    assert (r.trip_date, r.trip_count, r.avg_fare) == (d1, None, None)
+    assert r.dbt_valid_from == T0 and r.dbt_valid_to is None
